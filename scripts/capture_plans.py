@@ -1,12 +1,13 @@
 """Capture .explain("formatted") for headline + heavy queries.
 
 Usage:
-    python scripts/capture_plans.py <suffix> [query ...]
+    python scripts/capture_plans.py <out_dir> <suffix> [query ...]
 
-Writes plans/r14/<query>_<suffix>.txt for every named query (default: all
-headline + heavy bench keys). Session config mirrors bench.py so the plans
-match what the bench actually executes (AQE initial plan; the judge reads
-Exchange count / join strategy / PushedFilters from these).
+Writes <out_dir>/<query>_<suffix>.txt for every named query (default: all
+headline + heavy bench keys), e.g. ``plans/r16 after``. Session config
+mirrors bench.py so the plans match what the bench actually executes (AQE
+initial plan; the judge reads Exchange count / join strategy /
+PushedFilters from these).
 """
 
 from __future__ import annotations
@@ -40,8 +41,11 @@ BENCH_KEYS = [
 
 
 def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or BENCH_KEYS
+    if len(sys.argv) < 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or BENCH_KEYS
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -67,11 +71,6 @@ def main() -> int:
     _zip_fixture_dir(sf_dir)
     queries = all_queries()
 
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r14",
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     jvm = spark._jvm

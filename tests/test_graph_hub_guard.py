@@ -20,6 +20,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from zip_to_parquet_spark.plans import scidata
 from zip_to_parquet_spark.plans.scidata import HUB_DEG_CAP, hub_centers
 
 # Planted topology: hub node 0 adjacent to spokes 1..HUB_DEG; a clean
@@ -140,100 +141,89 @@ def test_linkpred_oracles_use_absolute_cap(key):
     assert "n_nodes" not in sql and "250" not in sql
 
 
-def test_array_pair_wedges_match_join_formulation(spark):
-    """The r11 physical optimization (per-center sorted-array pair
-    explosion, used by both link-prediction keys) must produce the SAME
-    (cu, cv) -> count relation as the naive wedge self-join it replaced —
-    checked on the planted topology where expected counts are known."""
-    e = spark.createDataFrame(_edges(), "u long, v long")
+# A 4-cycle 301-302-303-304 added for the kernel tests: its two diagonals
+# are non-edges with 2 common neighbors each, all centers deg 2, so the
+# kernel's output is non-empty at every cap the tests use.
+_CYCLE = [(301, 302), (302, 303), (303, 304), (301, 304)]
+_RA_WEIGHT = "1000000 div deg"
+
+
+def _kernel_rows(spark, monkeypatch, cap: int, weighted: bool = False):
+    """(sorted nonedge rows, sorted (node, deg) rows) from the SHIPPED
+    common-neighbor kernel with the hub cap monkeypatched to ``cap``."""
+    monkeypatch.setattr(scidata, "HUB_DEG_CAP", cap)
+    e = spark.createDataFrame(_edges() + _CYCLE, "u long, v long")
+    w_v = F.expr(_RA_WEIGHT) if weighted else None
+    nonedge, deg = scidata._common_neighbors(spark, e, w_v)
+    return (
+        sorted(tuple(r) for r in nonedge.collect()),
+        sorted((r.node, r.deg) for r in deg.collect()),
+    )
+
+
+def _reference(spark, cap: int):
+    """The naive formulation the kernel replaced: a separate degree
+    groupBy, the hub_centers anti-join, the und ⋈ und wedge self-join
+    on the center, minus existing edges. Returns sorted (u, v, n_common,
+    RA-weighted sum) rows and the counted (node, deg) rows."""
+    e = spark.createDataFrame(_edges() + _CYCLE, "u long, v long")
     und = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = und.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
-    undg = und.join(F.broadcast(hub_centers(deg, TEST_CAP)), "v", "left_anti")
-    join_cn = sorted(
-        tuple(r)
-        for r in undg.alias("x")
+    undg = und.join(F.broadcast(hub_centers(deg, cap)), "v", "left_anti")
+    wedges = (
+        undg.alias("x")
         .join(undg.alias("y"), F.col("x.v") == F.col("y.v"))
         .filter(F.col("x.u") < F.col("y.u"))
-        .groupBy(F.col("x.u").alias("cu"), F.col("y.u").alias("cv"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    adj = undg.groupBy("v").agg(F.sort_array(F.collect_list("u")).alias("us"))
-    array_cn = sorted(
-        tuple(r)
-        for r in adj.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(us, (x, i) ->"
-                    " transform(slice(us, i + 2, size(us) - i - 1),"
-                    " y -> struct(x AS cu, y AS cv))))"
-                )
-            ).alias("p")
+        .join(deg, F.col("x.v") == F.col("node"))
+        .select(
+            F.col("x.u").alias("u"),
+            F.col("y.u").alias("v"),
+            F.expr(_RA_WEIGHT).cast("long").alias("w"),
         )
-        .select("p.cu", "p.cv")
-        .groupBy("cu", "cv")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
     )
-    assert array_cn == join_cn and array_cn  # equal and non-empty
-
-
-def test_fused_adjacency_size_filter_matches_anti_join_prune(spark):
-    """r15 fused adjacency: the shipped pipeline prunes hub CENTERS with a
-    ``size(us) <= cap`` filter on the collected neighbor lists instead of
-    the r14 hub_centers anti-join (one und exchange instead of two). On
-    the planted topology the two formulations must produce the SAME
-    (cu, cv) -> count relation — including the boundary (deg == cap
-    survives, deg > cap is cut) — and the fused degree table
-    (size(us) over the UNPRUNED adjacency) must equal the groupBy count."""
-    pairs_expr = (
-        "flatten(transform(us, (x, i) ->"
-        " transform(slice(us, i + 2, size(us) - i - 1),"
-        " y -> struct(x AS cu, y AS cv))))"
+    cn = wedges.groupBy("u", "v").agg(
+        F.count(F.lit(1)).cast("long").alias("n_common"),
+        F.sum("w").cast("long").alias("w"),
     )
-    e = spark.createDataFrame(_edges(), "u long, v long")
-    und = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    # r14 formulation: separate degree pass + hub anti-join.
-    deg = und.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-    undg = und.join(F.broadcast(hub_centers(deg, TEST_CAP)), "v", "left_anti")
-    adj_r14 = undg.groupBy("v").agg(
-        F.sort_array(F.collect_list("u")).alias("us")
-    )
-    cn_r14 = sorted(
-        tuple(r)
-        for r in adj_r14.select(F.explode(F.expr(pairs_expr)).alias("p"))
-        .select("p.cu", "p.cv")
-        .groupBy("cu", "cv")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+    nonedge = cn.join(e, ["u", "v"], "left_anti")
+    return (
+        sorted(tuple(r) for r in nonedge.collect()),
+        sorted((r.node, r.deg) for r in deg.collect()),
     )
 
-    # r15 fused formulation: one adjacency, size-filtered.
-    adjf = und.groupBy("v").agg(
-        F.sort_array(F.collect_list("u")).alias("us")
-    )
-    cn_fused = sorted(
-        tuple(r)
-        for r in adjf.filter(F.size("us") <= TEST_CAP)
-        .select(F.explode(F.expr(pairs_expr)).alias("p"))
-        .select("p.cu", "p.cv")
-        .groupBy("cu", "cv")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    assert cn_fused == cn_r14 and cn_fused
 
-    # Degree parity: size(us) over the UNPRUNED adjacency == groupBy count.
-    fused_deg = sorted(
-        (r.node, r.deg)
-        for r in adjf.select(
-            F.col("v").alias("node"), F.size("us").cast("long").alias("deg")
-        ).collect()
-    )
-    counted_deg = sorted((r.node, r.deg) for r in deg.collect())
-    assert fused_deg == counted_deg
+def test_array_pair_wedges_match_join_formulation(spark, monkeypatch):
+    """The shipped kernel (r11 array-pair wedges over the r15 fused,
+    size-filtered adjacency) must produce the SAME (u, v) -> n_common
+    (and weighted sum) relation as the hub_centers self-join reference
+    minus existing edges — at the boundary cap where the mid center
+    survives (deg == cap) and one below it, where it is pruned."""
+    for cap in (MID_DEG, MID_DEG - 1):
+        want, _ = _reference(spark, cap)
+        weighted, _ = _kernel_rows(spark, monkeypatch, cap, weighted=True)
+        counted, _ = _kernel_rows(spark, monkeypatch, cap)
+        assert weighted == want and want, cap
+        assert counted == [r[:3] for r in want], cap
+
+
+def test_fused_adjacency_size_filter_matches_anti_join_prune(
+    spark, monkeypatch
+):
+    """r15 fused adjacency: the kernel prunes hub CENTERS with a
+    ``size(us) <= cap`` filter instead of the r14 hub_centers anti-join.
+    On the planted topology the planted hub never contributes a pair,
+    the boundary holds (deg == cap survives, deg > cap is cut), and the
+    kernel's degree table (size(us) over the UNPRUNED adjacency) equals
+    the groupBy count — hubs included."""
+    spokes = set(range(1, HUB_DEG + 1))
+    leaves = set(range(201, 201 + MID_DEG))
+    for cap, mid_survives in ((MID_DEG, True), (MID_DEG - 1, False)):
+        rows, deg = _kernel_rows(spark, monkeypatch, cap)
+        _, counted = _reference(spark, cap)
+        assert deg == counted and (0, HUB_DEG) in deg
+        pairs = {(u, v) for u, v, _ in rows}
+        assert not any(u in spokes and v in spokes for u, v in pairs)
+        leaf_pairs = {(u, v) for u, v in pairs if u in leaves and v in leaves}
+        assert len(leaf_pairs) == (comb(MID_DEG, 2) if mid_survives else 0)

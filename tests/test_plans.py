@@ -11,6 +11,8 @@ import contextlib
 import io
 import re
 
+import pytest
+
 from zip_to_parquet_spark.plans import all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -1575,9 +1577,9 @@ def test_boilerplate_hash_keys_narrow_shuffle_and_value_identity(spark):
 def test_linkpred_pair_agg_is_joinless_and_smj_free(spark):
     # r12 plan locks for the re-planned wedge pipeline (VERDICT r11 ask
     # #3), re-pinned r14 for the measured wide+packed+raw-exchange
-    # rewrite (scidata.WEDGE_PAIR_ENCODING) and r15 for the fused
-    # adjacency (deg/hub derive from size(us) over the checkpointed
-    # neighbor lists), all three link-prediction keys:
+    # rewrite and r15 for the fused adjacency (deg/hub derive from
+    # size(us) over the checkpointed neighbor lists), all three
+    # link-prediction keys — one kernel, scidata._common_neighbors:
     #   1. the candidate anti-join holds the shuffle_hash hint — a
     #      SortMergeJoin would sort the ~10^8-row candidate side;
     #   2. array-pair wedge generation — the pair aggregation sits on a
@@ -1587,15 +1589,18 @@ def test_linkpred_pair_agg_is_joinless_and_smj_free(spark):
     #      and r14: the RAW packed pairs exchange BEFORE the
     #      aggregation (Generate → Exchange → HashAggregate), so the
     #      explode stage streams into shuffle writers instead of
-    #      building ~10^8-entry map-side partial-agg hash tables;
-    #   3. the pair rides the PACKED single-long encoding by default
-    #      (r14 A/B: branch-free shiftleft/or — see the measurement
-    #      history at scidata.WEDGE_PAIR_ENCODING);
+    #      building ~10^8-entry map-side partial-agg hash tables (any
+    #      number of Projects may sit between Generate and Filter —
+    #      Spark stacks two on the weighted keys' in-row weight);
+    #   3. the pair rides the PACKED single-long encoding whenever node
+    #      ids fit 31 bits (r14 A/B: branch-free shiftleft/or — see the
+    #      measurement history at scidata.PACK_MAX_NODE);
     #   4. the hub-center cap literal reaches the adjacency size filter
     #      — anchored to the Filter condition text, not a bare substring
     #      ("1024" also appears as expression ids / size stats; ADVICE
     #      r12), and derived from HUB_DEG_CAP so a cap change re-pins
-    #      the lock.
+    #      the lock. Spark 4.1 renders size's legacy flag either way
+    #      (``size(us#N, false)``), so the lock accepts true or false.
     # r13: graph_adamic_adar shares _weighted_linkpred with RA — same
     # locks apply.
     from zip_to_parquet_spark.plans.scidata import HUB_DEG_CAP
@@ -1613,7 +1618,7 @@ def test_linkpred_pair_agg_is_joinless_and_smj_free(spark):
             r"[\s:+-]*Exchange \(\d+\)\s*\n"
             r"(?:[\s:+-]*Project \(\d+\)\s*\n)?"
             r"[\s:+-]*Generate \(\d+\)\s*\n"
-            r"(?:[\s:+-]*Project \(\d+\)\s*\n)?"
+            r"(?:[\s:+-]*Project \(\d+\)\s*\n)*"
             r"[\s:+-]*Filter \(\d+\)\s*\n"
             r"[\s:+-]*Scan ExistingRDD",
             plan,
@@ -1622,7 +1627,7 @@ def test_linkpred_pair_agg_is_joinless_and_smj_free(spark):
             f"{name}: default encoding must be packed"
         )
         assert re.search(
-            rf"size\(us#\d+(?:, true)?\) <= {HUB_DEG_CAP}", plan
+            rf"size\(us#\d+(?:, (?:true|false))?\) <= {HUB_DEG_CAP}", plan
         ), f"{name}: hub cap size filter missing"
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
@@ -1642,7 +1647,9 @@ def test_linkpred_precision_eval_tail_streams_heldout(spark):
 
     plan = plan_of(spark, "linkpred_precision_at_k")
     assert "ShuffledHashJoin LeftAnti" in plan
-    assert re.search(rf"size\(us#\d+(?:, true)?\) <= {HUB_DEG_CAP}", plan)
+    assert re.search(
+        rf"size\(us#\d+(?:, (?:true|false))?\) <= {HUB_DEG_CAP}", plan
+    )
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
     raw = (
@@ -1698,22 +1705,35 @@ def test_linkpred_degree_dims_size_aware_fallback(spark, monkeypatch):
         ], name
 
 
-def test_linkpred_struct_pair_fallback_same_values(spark, monkeypatch):
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_jaccard_linkpred",
+        "graph_resource_allocation",
+        "graph_adamic_adar",
+        "linkpred_precision_at_k",
+    ],
+)
+def test_linkpred_struct_pair_fallback_same_values(spark, monkeypatch, name):
     # The struct pair encoding (the automatic fallback for node ids
     # ≥ 2³¹, where the single-long pack would collide) must produce the
-    # SAME top-20 as the default packed encoding — packing is an
-    # encoding choice, never a semantic one — and must hold the
-    # shuffle_hash hint on its two-key anti-join.
+    # SAME rows as the packed encoding — packing is an encoding choice,
+    # never a semantic one — and must hold the shuffle_hash hint on its
+    # two-key anti-join. Driven through the kernel's real selection
+    # (_max_node(deg) < PACK_MAX_NODE) for every caller of
+    # _common_neighbors, since each consumes its output differently.
     from zip_to_parquet_spark.plans import scidata
 
-    q = all_queries()["graph_resource_allocation"]
+    q = all_queries()[name]
     packed_rows = [tuple(r) for r in q(spark, SF).collect()]
-    monkeypatch.setattr(scidata, "WEDGE_PAIR_ENCODING", "struct")
+    monkeypatch.setattr(scidata, "PACK_MAX_NODE", 0)
     struct_df = q(spark, SF)
     plan_buf = io.StringIO()
     with contextlib.redirect_stdout(plan_buf):
         struct_df.explain("formatted")
     plan = plan_buf.getvalue()
     assert not re.search(r"Keys \[\d\]: \[pk#", plan)  # struct path taken
-    assert "SortMergeJoin" not in plan  # shuffle_hash holds there too
+    assert "ShuffledHashJoin LeftAnti" in plan  # shuffle_hash holds there
+    assert "SortMergeJoin LeftAnti" not in plan
     assert [tuple(r) for r in struct_df.collect()] == packed_rows
+    assert packed_rows

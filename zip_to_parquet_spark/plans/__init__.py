@@ -36,44 +36,30 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed than the window holds, every slot must at least be spent on a
 # changed key.
 #
-# ROUND-14 pin (VERDICT r13 ask #1). The judge's "50 re-staled keys" was
-# recomputed this round against the actual sweep-time tree (a44831a — the
-# commit whose new graph_adamic_adar key IS green in CORRECTNESS_r13, so
-# the sweep ran at or after it): only THREE keys' closures reach units the
-# post-sweep guard commits changed — dedup_minhash_lsh, dedup_simhash,
-# dedup_embedding_cosine (the caps live in simhash_pairs /
-# minhash_lsh_pairs / cosine_lsh_pairs / lsh_params_for; no other window
-# key's reference graph touches them). The window therefore keeps the r13
-# pin — re-greening those 3 on shipped code plus the 44 keys whose r13
-# greens stand — and spends exactly 3 swapped slots on this round's
-# changed keys:
-#   linkpred_precision_at_k — NEW (r13 ask #7: holdout-split precision@k
-#     closing the link-prediction evaluation loop; ration 1 of ≤5);
-#   agg_approx_count_distinct, agg_approx_percentile — full-oracle
-#     promotion (r13 ask #5, option b: exact value + in-plan integer
-#     error-bound flag, hash-compared);
-# graph_adamic_adar (ADVICE r13 docstring note), dedup_simhash (r13 ask
-# #3: corpus-sized Manku block tables via simhash_params_for), and
-# dedup_embedding_cosine (ADVICE r13: raw-scan count probe) changed too
-# and were already in the window. Swapped out to make room (all three
-# r13-green on closures the post-sweep commits did NOT touch):
-# window_time_range_sum, events_funnel_partitioned, scalar_array_battery.
-#
-# FREEZE RULE (r13 ask #1, the three-round treadmill ender): engine-code
-# commits (zip_to_parquet_spark/**) land BEFORE the round's driver sweep;
-# once the sweep has run, commits may touch only docs, tests, scripts,
-# and the bench harness. A post-sweep engine commit re-stales every key
-# whose closure it touches with zero driver evidence on the shipped
-# tree — if one is unavoidable, the next round's window MUST lead with
-# the re-staled keys (recompute with scripts/window_pin.py --blame
-# against the sweep-time commit, not the round-end commit).
-# All keys outside the window remain value-verified by the sf0.001
-# oracle-parity suite on every test run plus the round-end sf0.01 sweep
-# and the type+overflow audit (scripts/audit_oracle_types.py).
+# Pin basis: ``python scripts/window_pin.py --list`` on the tree that
+# folds the four link-prediction keys onto scidata._common_neighbors.
+# 44 keys changed since their last green driver row, all inside the
+# window, led by the oldest green:
+# - 7 keys last green in r13 (the ANN/dedup keys and the Jaccard and RA
+#   link-prediction keys);
+# - 37 scidata keys last green in r15. Their closures reference ``os``,
+#   and scidata's unused ``import os`` (present at r15, absent at r13)
+#   was dropped. graph_adamic_adar and linkpred_precision_at_k also
+#   changed through the kernel.
+# The same drop returns 6 scidata keys last green in r13 to their r13
+# source, so they left the changed set. The last 6 slots top up with
+# frozen keys, oldest green first. Engine commits land before the
+# driver sweep (README "Round discipline"); keys outside the window stay
+# value-verified by the sf0.001 oracle-parity suite on every test run.
 set_priority([
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_embedding_cosine",
+    "ann_cosine_topk",
+    "ann_nprobe_curve",
+    "graph_jaccard_linkpred",
+    "graph_resource_allocation",
     "linkpred_precision_at_k",
-    "retrieval_mmr_rerank",
-    "vector_matryoshka_recall",
     "ts_changepoint_binary",
     "sample_ht_estimate",
     "sample_effective_size",
@@ -103,24 +89,19 @@ set_priority([
     "sample_systematic_interval",
     "privacy_dp_geometric_counts",
     "experiment_power_mde",
-    "agg_approx_percentile",
     "stats_levene_bf",
     "ts_ljung_box",
     "sample_class_balanced",
-    "agg_approx_count_distinct",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "ann_recall_eval",
-    "ann_ivf_trained",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "dedup_semantic",
-    "retrieval_rrf_fusion",
     "graph_adamic_adar",
-    "ann_ndcg_eval",
     "stats_anova_f",
     "dq_referential_integrity",
     "experiment_cuped_adjust",
+    "events_timeseries_gapfill",
+    "events_minmax_scaled",
+    "q14_promo_revenue",
+    "q19_disjunctive_revenue",
+    "dedup_incremental_vs_snapshot",
+    "dedup_clusters_star",
 ])
 
 __all__ = ["all_queries", "all_oracle_sql", "query", "set_priority"]

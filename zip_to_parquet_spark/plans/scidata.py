@@ -21,8 +21,6 @@ training-data-pipeline family on the synthetic fixture tables.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1152,25 +1150,22 @@ DEG_BROADCAST_MAX = 2_000_000
 
 # Wedge-pair packing (VERDICT r11 ask #4; r12 measured the multiply
 # encoding as a LOSS, r14 re-measured a bitwise encoding as the WIN):
-# a candidate pair (cu, cv) shuffles as ONE long ``shiftleft(cu, 32) |
-# cv`` instead of a two-long struct whenever every node id fits 31 bits
-# (cu < 2³¹ keeps the packed long positive, so the arithmetic
-# shiftright decode is exact; cv < 2³² then holds a fortiori) —
-# narrowing the key of the registry's most expensive shuffle, the
-# ~10⁸-pair → ~10⁸-group hash aggregation. The r12 A/B packed with an
-# ANSI overflow-CHECKED ``cu * 2³² + cv`` inside the interpreted
-# higher-order-function lambda and lost (Jaccard 49.5 s packed vs
-# 42.7 s struct); the r14 A/B (interleaved, same-session, sf0.1 —
-# scripts/ab_heavy.py) packs with branch-free shiftleft/or and WINS,
-# and compounds with the wide wedge stage + raw-pair exchange below:
-# base struct pipeline 47.2/50.5 s vs wide+packed+raw-exchange
-# 15.28/15.39 s across passes. Packed is therefore the DEFAULT; the
-# struct path remains the fallback for wider-than-31-bit ids (TPC-H
-# partkeys reach 2³¹ around SF ≈ 10⁴, ~1 PB; the bound is probed
-# per-run from the real data — never a silent collision) and is still
-# value-parity-tested in test_plans.py.
-WEDGE_PAIR_ENCODING = "packed"  # struct fallback auto-fires at ids ≥ 2³¹
-PACK_SHIFT = 4294967296  # 2³²
+# a candidate pair (u, v) shuffles as ONE long ``shiftleft(u, 32) | v``
+# instead of a two-long struct whenever every node id fits 31 bits
+# (u < 2³¹ keeps the packed long positive, so the arithmetic shiftright
+# decode is exact; v < 2³² then holds a fortiori) — narrowing the key of
+# the registry's most expensive shuffle, the ~10⁸-pair → ~10⁸-group hash
+# aggregation. The r12 A/B packed with an ANSI overflow-CHECKED
+# ``u * 2³² + v`` inside the interpreted higher-order-function lambda and
+# lost (Jaccard 49.5 s packed vs 42.7 s struct); the r14 A/B
+# (interleaved, same-session, sf0.1 — OPTIMIZATION_r14.md) packs with
+# branch-free shiftleft/or and WINS, and compounds with the wide wedge
+# stage + raw-pair exchange in _common_neighbors: base struct pipeline
+# 47.2/50.5 s vs wide+packed+raw-exchange 15.28/15.39 s across passes.
+# The struct encoding is taken only when the data demands it — node ids
+# ≥ 2³¹, probed per-run from the real degree table by _max_node, never a
+# silent collision (TPC-H partkeys reach 2³¹ around SF ≈ 10⁴, ~1 PB) —
+# and is value-parity-tested in test_plans.py.
 PACK_MAX_NODE = 2147483648  # 2³¹
 
 
@@ -1184,10 +1179,10 @@ def _max_node(deg: DataFrame) -> int:
 
 # C(deg, 2) ordered wedge pairs from a center's capped sorted neighbor
 # list, generated JVM-side in one whole-stage-codegen projection (the r11
-# array-pairs strategy — see graph_jaccard_linkpred's docstring). Two
-# interchangeable pair encodings, same pair set by construction (the
-# packed lambda is branch-free bitwise — no ANSI overflow check runs per
-# wedge row, the r12-vs-r14 difference recorded at WEDGE_PAIR_ENCODING):
+# array-pairs strategy — see _common_neighbors). Two interchangeable pair
+# encodings, same pair set by construction (the packed lambda is
+# branch-free bitwise — no ANSI overflow check runs per wedge row, the
+# r12-vs-r14 difference recorded at PACK_MAX_NODE):
 _WEDGE_PAIRS_PACKED = (
     "flatten(transform(us, (x, i) ->"
     " transform(slice(us, i + 2, size(us) - i - 1),"
@@ -1196,37 +1191,123 @@ _WEDGE_PAIRS_PACKED = (
 _WEDGE_PAIRS_STRUCT = (
     "flatten(transform(us, (x, i) ->"
     " transform(slice(us, i + 2, size(us) - i - 1),"
-    " y -> struct(x AS cu, y AS cv))))"
+    " y -> struct(x AS u, y AS v))))"
 )
-
-
-def _wedge_width(spark: SparkSession) -> int:
-    """Partition width for the wedge-explode stage (guide §2.2/§2.5).
-
-    AQE sizes the adjacency groupBy's exchange on the PRE-explode bytes
-    (a few MB of neighbor arrays at sf0.1) and coalesces it to ~12
-    partitions — but the stage's output is the C(deg,2) wedge explode,
-    ~1000× larger, so the coalesced width serializes the registry's
-    single most expensive stage on a sliver of the machine (r14 measured:
-    12 tasks × ~12M pairs each). An explicit hash repartition on the
-    center key pins the stage at full parallelism; the groupBy reuses
-    that exchange, so the partition count changes and the exchange count
-    does not. Scale-adaptive: tracks defaultParallelism (= the
-    SPARK_GRAFT_CPUS master locally, the executor-core total on a
-    cluster); SPARK_GRAFT_WEDGE_WIDTH overrides for cluster tuning."""
-    env = os.environ.get("SPARK_GRAFT_WEDGE_WIDTH")
-    return int(env) if env else spark.sparkContext.defaultParallelism
 
 
 def hub_centers(deg: DataFrame, cap: int = HUB_DEG_CAP) -> DataFrame:
     """Nodes pruned as wedge CENTERS from the link-prediction pipelines:
     ``deg > cap``, mirrored verbatim in every consuming oracle's hub CTE.
-    r15: the shipped pipelines prune with the equivalent
-    ``size(us) <= cap`` filter on the fused adjacency (one exchange
-    instead of two); this helper remains the REFERENCE formulation the
-    planted-hub property tests in tests/test_graph_hub_guard.py compare
-    against."""
+    _common_neighbors prunes with the equivalent ``size(us) <= cap``
+    filter on the fused adjacency; this helper remains the REFERENCE
+    formulation the planted-hub property tests in
+    tests/test_graph_hub_guard.py compare the kernel against."""
     return deg.filter(F.col("deg") > cap).select(F.col("node").alias("v"))
+
+
+def _common_neighbors(
+    spark: SparkSession, e: DataFrame, w_v=None
+) -> tuple[DataFrame, DataFrame]:
+    """The one common-neighbor kernel behind the four link-prediction keys.
+
+    Takes the distinct ``u < v`` edge set ``e`` and returns ``(nonedge,
+    deg)``: ``nonedge`` holds every NON-adjacent pair ``(u, v, n_common)``
+    with ``u < v`` that shares at least one non-hub neighbor, plus
+    ``w`` = Σ w(z) over those shared neighbors when a per-center weight
+    ``w_v`` (a Column over ``deg``) is given; ``deg`` is the UNPRUNED
+    ``(node, deg)`` table, so scores that need true degrees (Jaccard's
+    union) see hubs at full size.
+
+    Fused adjacency (r15, guide §2.4 "remove shuffles outright"): ONE wide
+    exchange of the undirected edges builds each center's sorted neighbor
+    list; the degree table, the hub-center prune, the in-row weight, and
+    the max-node encoding probe all derive from ``size(us)`` — the r14
+    shape exchanged the edges TWICE (a separate deg groupBy + eager
+    checkpoint, then the hub anti-join feeding the adjacency exchange).
+    deg(v) == size(us) exactly: ``e`` is distinct, so each neighbor
+    appears once per direction, and the hub prune keeps centers with
+    ``size(us) <= HUB_DEG_CAP`` — the same set hub_centers excludes and
+    the oracles' ``deg > cap`` hub CTE mirrors. The adjacency checkpoint
+    (Σdeg = 2|e| longs — edge-sized payload in node-sized rows, the same
+    class as e's own checkpoint) feeds every consumer: the max-node probe,
+    the degree table, and the wedge explode.
+
+    Array-pair wedges (r11, measured ~2x at sf0.1): instead of the
+    und ⋈ und self-equi-join on the center (which materializes deg² rows
+    per center and filters half away), each center's CAPPED list —
+    ≤HUB_DEG_CAP longs, ≤8 KB — explodes into its C(deg, 2) ordered pairs
+    JVM-side in one whole-stage-codegen transform/slice/flatten
+    projection: no join, no over-generation. A weighted caller's
+    per-center weight is computed ONCE per center and rides the wedge
+    rows, so the corpus-shaped stage only sums a ready column.
+
+    Wide wedge stage + raw-pair exchange (r14, measured 47.2 → 15.3 s
+    interleaved at sf0.1 — OPTIMIZATION_r14.md): AQE sizes the adjacency
+    exchange on the PRE-explode bytes (a few MB of neighbor arrays at
+    sf0.1) and coalesces it to ~12 partitions, but the stage's output is
+    the C(deg, 2) explode, ~1000× larger — r14 measured 12 tasks × ~12M
+    pairs each. The explicit hash repartition on the center pins the
+    stage at W = defaultParallelism (the local master's cores, the
+    executor-core total on a cluster); the groupBy reuses that exchange,
+    so the partition count changes and the exchange count does not. The
+    RAW packed pairs then exchange at 2·W before the count aggregation
+    instead of partial-aggregating map-side: at ~1.47 raw-to-group
+    duplication the partial agg's ~10⁸-entry per-task hash tables cost
+    far more than the ~30% byte reduction saves (guide §2.3 "aggregate
+    before you shuffle" assumes the aggregation actually reduces), and
+    the 8-byte packed key makes the raw exchange SMALLER than the
+    partially-aggregated struct one (the weight column adds 8 bytes per
+    raw pair; the trade held in the interleaved heavy re-measurement).
+
+    Existing edges leave through one equi anti-join with the
+    ``shuffle_hash`` hint: its left side is the ~|pairs|-row candidate
+    relation (101M at sf0.1) — a sort-merge join would SORT it; hashing
+    the edge partitions instead probes without sorting and stays
+    scale-safe (no broadcast of a corpus-sized edge set)."""
+    width = spark.sparkContext.defaultParallelism
+    und = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    adjf = (
+        und.repartition(width, "v")
+        .groupBy("v")
+        .agg(F.sort_array(F.collect_list("u")).alias("us"))
+        .localCheckpoint(eager=True)
+    )
+    deg = adjf.select(
+        F.col("v").alias("node"), F.size("us").cast("long").alias("deg")
+    )
+    adj = adjf.filter(F.size("us") <= HUB_DEG_CAP)
+    carry, aggs = [], [F.count(F.lit(1)).cast("long").alias("n_common")]
+    if w_v is not None:
+        adj = adj.withColumn("deg", F.size("us").cast("long")).select(
+            "us", w_v.cast("long").alias("w")
+        )
+        carry = ["w"]
+        aggs.append(F.sum("w").cast("long").alias("w"))
+    if _max_node(deg) < PACK_MAX_NODE:
+        pk = F.explode(F.expr(_WEDGE_PAIRS_PACKED)).alias("pk")
+        cn = (
+            adj.select(*carry, pk)
+            .repartition(2 * width, "pk")
+            .groupBy("pk")
+            .agg(*aggs)
+        )
+        ep = e.select(F.shiftleft("u", 32).bitwiseOR(F.col("v")).alias("pk"))
+        nonedge = cn.join(ep.hint("shuffle_hash"), "pk", "left_anti").select(
+            F.shiftright("pk", 32).alias("u"),
+            F.expr("pk & 4294967295").alias("v"),
+            "n_common",
+            *carry,
+        )
+    else:
+        p = F.explode(F.expr(_WEDGE_PAIRS_STRUCT)).alias("p")
+        cn = (
+            adj.select(*carry, p)
+            .select("p.u", "p.v", *carry)
+            .groupBy("u", "v")
+            .agg(*aggs)
+        )
+        nonedge = cn.join(e.hint("shuffle_hash"), ["u", "v"], "left_anti")
+    return nonedge, deg
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1319,50 +1400,35 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the wedge join on the shared-neighbor key is the
     Σdeg² candidate bound inherent to exact common-neighbor counting —
     and because that is quadratic PER CENTER, hub centers above the
-    ABSOLUTE per-center degree cap are guarded OFF (r15: one
-    ``size(us) <= HUB_DEG_CAP`` filter on the collected neighbor lists —
-    the same set hub_centers excludes, mirrored as the ``deg > cap`` hub
-    CTE in the oracle; planted-hub property test in
-    tests/test_graph_hub_guard.py). The
-    r10-era corpus-relative threshold (250‰ of nodes) provably never
-    fired on realistic sparse graphs — a skewed-graph shuffle bomb the
-    guard was supposed to prevent and did not (VERDICT r10 finding #1);
-    the absolute cap bounds wedge output at cap² rows per center at ANY
-    graph size. Recall contract: a pair whose ONLY common neighbors are
-    above-cap hubs is missed — the same trade every production "also
-    bought" candidate generator makes, since hub-mediated pairs score
-    near-zero Jaccard anyway (the union term stays the TRUE degree sum:
-    scoring uses unguarded degrees — size(us) over the UNPRUNED
-    adjacency). Existing edges drop out via one equi anti-join; top-20
-    is TakeOrdered, never a global sort. The degree dims are
-    NODE-cardinality — they broadcast only under
-    runtime.size_aware_side's bounded probe (DEG_BROADCAST_MAX) and
-    otherwise join as plain shuffle joins
-    (VERDICT r11 finding #1: 10⁸–10⁹ nodes at 100 TB would OOM an
-    unconditional broadcast; the candidate side is already
-    hash-partitioned, so the fallback is one extra node-keyed shuffle,
-    never a nested loop). r13: the EDGE generation ahead of all of this
-    — C(basket, 2) pairs per order — is basket-capped the same way the
-    wedge stage is hub-capped (operators.graph.BASKET_CAP via
-    _copurchase_edges, mirrored in the oracle; VERDICT r12 finding #1:
-    one pathological 10⁶-item basket was 5×10¹¹ pairs in one task).
+    ABSOLUTE per-center degree cap are guarded OFF (HUB_DEG_CAP, mirrored
+    as the ``deg > cap`` hub CTE in the oracle; planted-hub property
+    tests in tests/test_graph_hub_guard.py). The r10-era corpus-relative
+    threshold (250‰ of nodes) provably never fired on realistic sparse
+    graphs — a skewed-graph shuffle bomb the guard was supposed to
+    prevent and did not (VERDICT r10 finding #1); the absolute cap bounds
+    wedge output at cap² rows per center at ANY graph size. Recall
+    contract: a pair whose ONLY common neighbors are above-cap hubs is
+    missed — the same trade every production "also bought" candidate
+    generator makes, since hub-mediated pairs score near-zero Jaccard
+    anyway (the union term stays the TRUE degree sum: scoring uses the
+    kernel's unpruned degrees). Top-20 is TakeOrdered, never a global
+    sort. The degree dims are NODE-cardinality — they broadcast only
+    under runtime.size_aware_side's bounded probe (DEG_BROADCAST_MAX) and
+    otherwise join as plain shuffle joins (VERDICT r11 finding #1: 10⁸–10⁹
+    nodes at 100 TB would OOM an unconditional broadcast; the candidate
+    side is already hash-partitioned, so the fallback is one extra
+    node-keyed shuffle, never a nested loop). r13: the EDGE generation
+    ahead of all of this — C(basket, 2) pairs per order — is
+    basket-capped the same way the wedge stage is hub-capped
+    (operators.graph.BASKET_CAP via _copurchase_edges, mirrored in the
+    oracle; VERDICT r12 finding #1: one pathological 10⁶-item basket was
+    5×10¹¹ pairs in one task).
 
-    Physical wedge strategy (r11, measured ~2x at sf0.1): instead of the
-    und ⋈ und self-equi-join on the center (which materializes deg² rows
-    per center and filters half away), each center's CAPPED neighbor
-    list is collected sorted — ≤HUB_DEG_CAP longs, ≤8 KB, bounded by the
-    guard — and the C(deg,2) ordered pairs are generated JVM-side in one
-    whole-stage-codegen transform/slice/flatten projection feeding the
-    pair partial aggregation directly: one shuffle to the center, one
-    shuffle of the partially-aggregated pair counts, no join, no
-    over-generation. Pair encoding: r12 A/B-measured an ANSI
-    overflow-checked ``cu·2³² + cv`` arithmetic pack and it LOST to the
-    struct pair; the r14 branch-free ``shiftleft(cu,32)|cv`` pack wins
-    (see the measurement history at WEDGE_PAIR_ENCODING) and is now the
-    default, with the struct encoding the automatic fallback for node
-    ids ≥ 2³¹ (probed per-run via _max_node — never a silent collision),
-    value-parity-tested. The oracle keeps the equivalent wedge JOIN in
-    SQL — same pair set by construction."""
+    Physical wedge strategy: _common_neighbors, shared with the other
+    three link-prediction keys — it records the measured rationale
+    (r11 array pairs, r14 wide stage + packed raw exchange, r15 fused
+    adjacency). The oracle keeps the equivalent wedge JOIN in SQL — same
+    pair set by construction."""
     # Local imports: binding these at module level would change the
     # module's import-bind units and transitively flag every
     # spread-using scidata key in the stale-closure differ (the
@@ -1370,80 +1436,16 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delta scoped to the keys that actually changed.
     from zip_to_parquet_spark.runtime import size_aware_side
 
-    e = _copurchase_edges(spark, sf_dir)
-    und = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # Fused adjacency (r15, guide §2.4 "remove shuffles outright"): ONE
-    # wide exchange of und builds the neighbor lists; the degree table,
-    # the hub-center prune, and the max-node encoding probe all derive
-    # from ``size(us)`` — the r14 shape exchanged und TWICE (a separate
-    # deg groupBy + eager checkpoint, then the hub anti-join feeding the
-    # adjacency exchange). deg(v) == size(us) exactly: e is distinct, so
-    # each neighbor appears once per direction, and the hub prune keeps
-    # centers with size(us) <= cap — the same set hub_centers excluded.
-    # The adjacency checkpoint replaces the degree checkpoint (Σdeg = 2|e|
-    # longs — edge-sized payload in node-sized rows, the same class as
-    # e's own checkpoint); every downstream consumer (max-node probe,
-    # degree dims, wedge explode) reads the materialized lists.
-    #
-    # Wide wedge stage + raw-pair exchange (r14, measured 47.2 → 15.3 s
-    # interleaved at sf0.1 — scripts/ab_heavy.py): pin the explode stage
-    # at full width (_wedge_width), and exchange the RAW packed pairs
-    # before the count aggregation instead of partial-aggregating them
-    # map-side — at ~1.47 raw-to-group duplication the partial agg's
-    # ~10⁸-entry per-task hash tables cost far more than the ~30% byte
-    # reduction saves (guide §2.3 "aggregate before you shuffle" assumes
-    # the aggregation actually reduces), and the 8-byte packed key makes
-    # the raw exchange SMALLER than the partially-aggregated struct one.
-    W = _wedge_width(spark)
-    adjf = (
-        und.repartition(W, "v")
-        .groupBy("v")
-        .agg(F.sort_array(F.collect_list("u")).alias("us"))
-        .localCheckpoint(eager=True)
-    )
-    deg = adjf.select(
-        F.col("v").alias("node"), F.size("us").cast("long").alias("deg")
-    )
-    adj = adjf.filter(F.size("us") <= HUB_DEG_CAP)
-    if WEDGE_PAIR_ENCODING == "packed" and _max_node(deg) < PACK_MAX_NODE:
-        cn = (
-            adj.select(F.explode(F.expr(_WEDGE_PAIRS_PACKED)).alias("pk"))
-            .repartition(2 * W, "pk")
-            .groupBy("pk")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-        )
-        ep = e.select(F.shiftleft("u", 32).bitwiseOR(F.col("v")).alias("pk"))
-        # shuffle_hash hint: the anti-join's left side is the ~|pairs|-row
-        # candidate relation (101M at sf0.1) — a sort-merge join would
-        # SORT it; hashing the edge partitions instead probes without
-        # sorting and stays scale-safe (no broadcast of a corpus-sized
-        # edge set).
-        nonedge = cn.join(ep.hint("shuffle_hash"), "pk", "left_anti").select(
-            F.shiftright("pk", 32).alias("cu"),
-            F.expr("pk & 4294967295").alias("cv"),
-            "n_common",
-        )
-    else:
-        cn = (
-            adj.select(F.explode(F.expr(_WEDGE_PAIRS_STRUCT)).alias("p"))
-            .select("p.cu", "p.cv")
-            .groupBy("cu", "cv")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-        )
-        nonedge = cn.join(
-            e.hint("shuffle_hash"),
-            (e.u == cn.cu) & (e.v == cn.cv),
-            "left_anti",
-        )
+    nonedge, deg = _common_neighbors(spark, _copurchase_edges(spark, sf_dir))
     deg_side = size_aware_side(deg, deg, DEG_BROADCAST_MAX)
-    dx = deg_side.select(F.col("node").alias("cu"), F.col("deg").alias("du"))
-    dy = deg_side.select(F.col("node").alias("cv"), F.col("deg").alias("dv"))
+    dx = deg_side.select(F.col("node").alias("u"), F.col("deg").alias("du"))
+    dy = deg_side.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
     scored = (
-        nonedge.join(dx, "cu")
-        .join(dy, "cv")
+        nonedge.join(dx, "u")
+        .join(dy, "v")
         .select(
-            F.col("cu").alias("u"),
-            F.col("cv").alias("v"),
+            "u",
+            "v",
             "n_common",
             F.expr("(n_common * 1000) div (du + dv - n_common)").alias(
                 "jaccard_permille"
@@ -2412,96 +2414,19 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _weighted_linkpred(
     spark: SparkSession, sf_dir: str, w_v, score: str
 ) -> DataFrame:
-    """Shared capped-wedge pipeline for the degree-WEIGHTED link-prediction
-    family — resource allocation and Adamic-Adar are the SAME plan with a
-    different per-node weight: score(u, v) = Σ_{z ∈ N(u)∩N(v)} w(z), w
-    pre-computed once per CENTER (``w_v``, a Column over ``deg`` — r15:
-    evaluated in-row on the fused adjacency, deg == size(us)) so the
-    corpus-shaped wedge stage only SUMS a ready column. Everything the
-    two keys' docstrings promise lives here once: basket-capped edges
-    (_copurchase_edges), the absolute hub-center cap (the
-    ``size(us) <= HUB_DEG_CAP`` filter — the same set hub_centers
-    excludes, mirrored as the oracle's hub CTE), the joinless array-pair
-    wedge generation, the shuffle_hash anti-join, and the measured
-    struct-vs-packed pair encoding (WEDGE_PAIR_ENCODING)."""
+    """Top-20 of the degree-WEIGHTED link-prediction family — resource
+    allocation and Adamic-Adar are the SAME plan with a different
+    per-node weight: score(u, v) = Σ_{z ∈ N(u)∩N(v)} w(z), with ``w_v`` a
+    Column over ``deg`` evaluated once per CENTER inside
+    _common_neighbors (basket-capped edges via _copurchase_edges, then
+    the shared hub-capped wedge kernel)."""
     e = _copurchase_edges(spark, sf_dir)
-    und = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # Fused adjacency (r15, guide §2.4 — see graph_jaccard_linkpred for
-    # the full rationale): ONE wide exchange of und builds the neighbor
-    # lists; deg(v) == size(us) exactly, so the hub prune is a size
-    # filter and the per-center weight is computed IN-ROW from the
-    # collected list — the r14 shape's separate deg groupBy+checkpoint,
-    # hub anti-join, AND the node-sized pre-divided weight dim join all
-    # disappear (the weight stays pre-divided ONCE PER CENTER, exactly
-    # as the dim computed it — same values, zero joins on the und path).
-    #
-    # Array-pairs wedge strategy (r11, shared with the Jaccard key — see
-    # its docstring): the center's capped sorted neighbor list explodes
-    # into C(deg,2) ordered pairs JVM-side, each carrying the center's
-    # pre-divided weight — no self-join, no deg²-then-filter
-    # over-generation. r14: wide wedge stage + raw-pair exchange, shared
-    # rationale and A/B numbers at graph_jaccard_linkpred (the weight
-    # column adds 8 bytes per raw pair; the trade held in the
-    # interleaved heavy re-measurement).
-    W = _wedge_width(spark)
-    adjf = (
-        und.repartition(W, "v")
-        .groupBy("v")
-        .agg(F.sort_array(F.collect_list("u")).alias("us"))
-        .localCheckpoint(eager=True)
+    nonedge, _ = _common_neighbors(spark, e, w_v)
+    return (
+        nonedge.withColumnRenamed("w", score)
+        .orderBy(F.col(score).desc(), "u", "v")
+        .limit(20)
     )
-    deg = adjf.select(
-        F.col("v").alias("node"), F.size("us").cast("long").alias("deg")
-    )
-    adj = (
-        adjf.filter(F.size("us") <= HUB_DEG_CAP)
-        .withColumn("deg", F.size("us").cast("long"))
-        .select("us", w_v.cast("long").alias("w"))
-    )
-    if WEDGE_PAIR_ENCODING == "packed" and _max_node(deg) < PACK_MAX_NODE:
-        cn = (
-            adj.select(
-                F.col("w"), F.explode(F.expr(_WEDGE_PAIRS_PACKED)).alias("pk")
-            )
-            .repartition(2 * W, "pk")
-            .groupBy("pk")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_common"),
-                F.sum("w").cast("long").alias(score),
-            )
-        )
-        ep = e.select(F.shiftleft("u", 32).bitwiseOR(F.col("v")).alias("pk"))
-        # shuffle_hash: see graph_jaccard_linkpred — probe 101M candidates
-        # against hashed edge partitions instead of sorting them.
-        nonedge = cn.join(ep.hint("shuffle_hash"), "pk", "left_anti").select(
-            F.shiftright("pk", 32).alias("u"),
-            F.expr("pk & 4294967295").alias("v"),
-            "n_common",
-            score,
-        )
-    else:
-        cn = (
-            adj.select(
-                F.col("w"), F.explode(F.expr(_WEDGE_PAIRS_STRUCT)).alias("p")
-            )
-            .select("p.cu", "p.cv", "w")
-            .groupBy("cu", "cv")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_common"),
-                F.sum("w").cast("long").alias(score),
-            )
-        )
-        nonedge = cn.join(
-            e.hint("shuffle_hash"),
-            (e.u == cn.cu) & (e.v == cn.cv),
-            "left_anti",
-        ).select(
-            F.col("cu").alias("u"),
-            F.col("cv").alias("v"),
-            "n_common",
-            score,
-        )
-    return nonedge.orderBy(F.col(score).desc(), "u", "v").limit(20)
 
 
 # Shared oracle skeleton for the weighted link-prediction family — the
@@ -2568,24 +2493,14 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the Jaccard key — basket-capped edge
     generation (operators.graph.BASKET_CAP via _copurchase_edges, r13:
-    VERDICT r12 finding #1), then the wedge stage's Σdeg² bound under
-    the SAME absolute per-center degree cap (r15: the
-    ``size(us) <= HUB_DEG_CAP`` filter on the fused adjacency — the set
-    hub_centers excludes, mirrored as the oracle's hub CTE; a hub-only
-    pair is missed, and under RA such a pair scores ≈ 0 by
-    construction — Σ 1/deg(hub) — so the cap and the score agree about
-    what matters; planted-hub test in tests/test_graph_hub_guard.py,
+    VERDICT r12 finding #1), then _common_neighbors under the SAME
+    absolute per-center degree cap (HUB_DEG_CAP, mirrored as the oracle's
+    hub CTE; a hub-only pair is missed, and under RA such a pair scores
+    ≈ 0 by construction — Σ 1/deg(hub) — so the cap and the score agree
+    about what matters; planted-hub test in tests/test_graph_hub_guard.py,
     planted-jumbo-basket test in tests/test_basket_cap_guard.py). The
-    center's weight rides the wedge rows, computed IN-ROW from
-    deg == size(us) on the fused adjacency (r15 — the former node-sized
-    pre-divided weight-dim join and the hub anti-join are gone; no
-    post-aggregation re-join either); existing edges drop via one
-    anti-join; top-20 is TakeOrdered, never a global sort.
-    The wedge pair ships
-    packed (the r14 default — branch-free ``shiftleft(cu,32)|cv``) with
-    the struct encoding the automatic fallback at node ids ≥ 2³¹ — see
-    WEDGE_PAIR_ENCODING for the full A/B history and the cluster-side
-    revisit condition. The whole pipeline is _weighted_linkpred, shared
+    center's weight rides the wedge rows; top-20 is TakeOrdered, never a
+    global sort. The whole pipeline is _weighted_linkpred, shared
     verbatim with Adamic-Adar."""
     return _weighted_linkpred(
         spark, sf_dir, F.expr("1000000 div deg"), "ra_micro"
@@ -2633,10 +2548,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge row, where deg ≥ 2 always holds.
 
     Scale shape: _weighted_linkpred, shared verbatim with
-    graph_resource_allocation — basket-capped edges, absolute hub cap
-    as a size filter on the fused adjacency, in-row per-center weights,
-    joinless array-pair wedges, shuffle_hash anti-join, TakeOrdered
-    top-20."""
+    graph_resource_allocation — see _common_neighbors."""
     return _weighted_linkpred(
         spark,
         sf_dir,
@@ -2721,65 +2633,18 @@ def linkpred_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the held-out edges.
 
     Scale shape: identical to graph_jaccard_linkpred — the same
-    basket-capped edge generation (_copurchase_edges, reused verbatim),
-    hub-capped joinless array-pair wedge stage on the r15 fused
-    adjacency, and shuffle_hash anti-join; the evaluation tail (rank ≤
-    100 rows, one broadcast k-grid join) is constant-size at any corpus.
-    Precision is measured at the top-100 TakeOrdered — never a global
-    sort. The denominator is k itself even when fewer than k predictions
-    exist (n_preds makes that visible), mirrored in the oracle."""
+    basket-capped edge generation (_copurchase_edges, reused verbatim)
+    and _common_neighbors over the TRAINING edges, so the anti-join drops
+    training edges only; the evaluation tail (rank ≤ 100 rows, one
+    broadcast k-grid join) is constant-size at any corpus. Precision is
+    measured at the top-100 TakeOrdered — never a global sort. The
+    denominator is k itself even when fewer than k predictions exist
+    (n_preds makes that visible), mirrored in the oracle."""
     e = _copurchase_edges(spark, sf_dir)
     is_test = (F.col("u") + F.col("v")) % _LINKPRED_HOLDOUT_MOD == 0
     train = e.filter(~is_test).localCheckpoint(eager=True)
     test = e.filter(is_test)
-    und = train.unionAll(
-        train.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    # r15 fused adjacency over the TRAINING graph (guide §2.4 — full
-    # rationale at graph_jaccard_linkpred): one wide exchange builds the
-    # neighbor lists; deg == size(us), the hub prune is a size filter,
-    # and the separate deg groupBy+checkpoint and hub anti-join are gone.
-    # r14: wide wedge stage + packed raw-pair exchange, shared rationale
-    # and A/B numbers at graph_jaccard_linkpred; anti-join runs against
-    # the TRAINING edges here, packed the same way.
-    W = _wedge_width(spark)
-    adjf = (
-        und.repartition(W, "v")
-        .groupBy("v")
-        .agg(F.sort_array(F.collect_list("u")).alias("us"))
-        .localCheckpoint(eager=True)
-    )
-    deg = adjf.select(
-        F.col("v").alias("node"), F.size("us").cast("long").alias("deg")
-    )
-    adj = adjf.filter(F.size("us") <= HUB_DEG_CAP)
-    if WEDGE_PAIR_ENCODING == "packed" and _max_node(deg) < PACK_MAX_NODE:
-        cn = (
-            adj.select(F.explode(F.expr(_WEDGE_PAIRS_PACKED)).alias("pk"))
-            .repartition(2 * W, "pk")
-            .groupBy("pk")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-        )
-        ep = train.select(
-            F.shiftleft("u", 32).bitwiseOR(F.col("v")).alias("pk")
-        )
-        nonedge = cn.join(ep.hint("shuffle_hash"), "pk", "left_anti").select(
-            F.shiftright("pk", 32).alias("u"),
-            F.expr("pk & 4294967295").alias("v"),
-            "n_common",
-        )
-    else:
-        cn = (
-            adj.select(F.explode(F.expr(_WEDGE_PAIRS_STRUCT)).alias("p"))
-            .select("p.cu", "p.cv")
-            .groupBy("cu", "cv")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-        )
-        nonedge = cn.join(
-            train.hint("shuffle_hash"),
-            (train.u == cn.cu) & (train.v == cn.cv),
-            "left_anti",
-        ).select(F.col("cu").alias("u"), F.col("cv").alias("v"), "n_common")
+    nonedge, _ = _common_neighbors(spark, train)
     topk = nonedge.orderBy(F.col("n_common").desc(), "u", "v").limit(
         max(_LINKPRED_EVAL_K)
     )
