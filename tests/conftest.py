@@ -9,10 +9,12 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    # One session, and one JVM, for the whole pytest process (a JVM per
+    # test module costs ~10s each); stopped at the end so no Spark JVM
+    # outlives the run.
     s = get_spark("zip-to-parquet-spark-tests")
     yield s
-    # Leave the session running for the whole pytest process; stopping and
-    # restarting a JVM per test module costs ~10s each.
+    s.stop()
 
 
 @pytest.fixture(scope="session")

@@ -425,7 +425,9 @@ def test_streaming_offsets_bounded_watermark(tmp_path):
     start = r.initialOffset()
     end1 = r.latestOffset()
     # First batch enumerates and processes the whole backfill.
-    assert sorted(p.path for p in r.partitions(start, end1)) == sorted(backfill)
+    first = r.partitions(start, end1)
+    assert all(len(p.slices) == 1 for p in first)  # one partition per archive
+    assert sorted(p.slices[0].path for p in first) == sorted(backfill)
 
     # Steady state: one fresh archive → next offset holds only the
     # lateness window (the fresh file plus the file *at* the previous
@@ -433,7 +435,7 @@ def test_streaming_offsets_bounded_watermark(tmp_path):
     fresh = touch("fresh.zip", 0)
     end2 = r.latestOffset()
     assert {p for _, p in end2["seen"]} == {fresh, backfill[0]}
-    assert [p.path for p in r.partitions(end1, end2)] == [fresh]
+    assert [p.slices[0].path for p in r.partitions(end1, end2)] == [fresh]
 
     # Driver restart: a fresh reader re-enumerates once, but the start
     # offset's horizon excludes everything already processed.
@@ -445,7 +447,7 @@ def test_streaming_offsets_bounded_watermark(tmp_path):
     fresh2 = touch("fresh2.zip", 0)
     end4 = r2.latestOffset()
     assert {p for _, p in end4["seen"]} == {fresh, fresh2}
-    assert [p.path for p in r2.partitions(end3, end4)] == [fresh2]
+    assert [p.slices[0].path for p in r2.partitions(end3, end4)] == [fresh2]
 
     # A file landing with an mtime older than the lateness allowance is
     # dropped as too late.
@@ -637,7 +639,11 @@ def test_jumbo_archive_splits_into_partitions(spark, tmp_path):
     )
     parts = rdr.partitions()
     assert len(parts) == 3
-    assert [(p.start, p.end) for p in parts] == [(0, 50), (50, 100), (100, 120)]
+    assert [[(s.start, s.end) for s in p.slices] for p in parts] == [
+        [(0, 50)],
+        [(50, 100)],
+        [(100, 120)],
+    ]
 
     # End-to-end: split output bag == unsplit output bag.
     def bag(df):
@@ -661,7 +667,145 @@ def test_small_archive_never_splits(spark, tmp_path):
     zp = make_zip(tmp_path / "small.zip", BASIC)
     rdr = ZipMembersReader({"paths": json.dumps([zp])})
     parts = rdr.partitions()
-    assert len(parts) == 1 and parts[0].start == 0 and parts[0].end is None
+    assert len(parts) == 1 and parts[0].slices == [(zp, 0, None)]
+
+
+def test_small_archives_pack_in_path_order(tmp_path):
+    """Whole archives pack into read partitions by Spark's file-split rule,
+    next-fit in path order: every archive lands exactly once and bundles
+    keep the input order. A jumbo archive's member ranges keep one
+    partition each and close the bundle before them. The target is
+    min(maxPartitionBytes, max(openCost, Σ(size + openCost) / minPartitions))."""
+    import json
+    import os
+
+    from zip_to_parquet_spark.sources.zipsource import ZipMembersReader
+
+    small = [
+        make_zip(
+            tmp_path / f"a{i:02d}.zip", [(f"m{i:02d}.txt", b"x" * 100)], zipfile.ZIP_STORED
+        )
+        for i in range(10)
+    ]
+    jumbo = make_zip(tmp_path / "j.zip", [(f"j{i:03d}.txt", b"") for i in range(30)])
+    size = os.path.getsize(small[0])
+    cost = 1000
+
+    def layout(paths, max_bytes, min_partitions):
+        rdr = ZipMembersReader(
+            {
+                "paths": json.dumps(paths),
+                "split_members": "10",
+                "max_partition_bytes": str(max_bytes),
+                "open_cost_bytes": str(cost),
+                "min_partitions": str(min_partitions),
+            }
+        )
+        return [
+            [(os.path.basename(s.path), s.start, s.end) for s in p.slices]
+            for p in rdr.partitions()
+        ]
+
+    def whole(*idx):
+        return [(f"a{i:02d}.zip", 0, None) for i in idx]
+
+    # maxPartitionBytes binds: three archives fit (3·size + 2·cost).
+    got = layout(small[:5] + [jumbo] + small[5:], 3 * size + 2 * cost, 1)
+    assert got == [
+        whole(0, 1, 2),
+        whole(3, 4),
+        [("j.zip", 0, 10)],
+        [("j.zip", 10, 20)],
+        [("j.zip", 20, 30)],
+        whole(5, 6, 7),
+        whole(8, 9),
+    ]
+    flat = [s for p in got for s in p if s[0] != "j.zip"]
+    assert flat == whole(*range(10))  # each archive once, in path order
+
+    # Σ(size + cost) / minPartitions binds: 10 archives over 2 partitions.
+    assert layout(small, 1 << 30, 2) == [whole(0, 1, 2, 3, 4), whole(5, 6, 7, 8, 9)]
+    # The open cost is the floor: more partitions wanted than archives
+    # gives one archive per partition, never an empty one.
+    assert layout(small, 1 << 30, 20) == [whole(i) for i in range(10)]
+
+
+def _equal_archives(tmp_path, n):
+    """``n`` stored archives of identical byte size, named in path order."""
+    return [
+        make_zip(
+            tmp_path / f"p{i:03d}.zip",
+            [(f"p{i:03d}/m{j}.txt", f"body-{i:03d}-{j}".encode()) for j in range(3)],
+            compression=zipfile.ZIP_STORED,
+        )
+        for i in range(n)
+    ]
+
+
+def test_open_cost_above_max_partition_bytes_unpacks(spark, tmp_path):
+    """Packing changes the task count, never the rows: with
+    spark.sql.files.openCostInBytes above maxPartitionBytes every archive
+    gets its own partition (as in Spark's own file sources), and the output
+    bag and the single-file parquet bytes equal the packed run's."""
+    from zip_to_parquet_spark.sinks import write_single_parquet_file
+    from zip_to_parquet_spark.sources.zipsource import _conf_bytes
+
+    dp = spark.sparkContext.defaultParallelism
+    n = 3 * dp
+    _equal_archives(tmp_path, n)
+
+    def run(tag):
+        df = read_zip_members(spark, str(tmp_path / "*.zip"))
+        out = str(tmp_path / f"{tag}.parquet")
+        write_single_parquet_file(df, out, row_group_rows=4)
+        bag = sorted(
+            (r["source"], r["name"], bytes(r["body"]), r["hash"]) for r in df.collect()
+        )
+        with open(out, "rb") as fh:
+            return df.rdd.getNumPartitions(), bag, fh.read()
+
+    packed = run("packed")
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(2 * _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")))
+    try:
+        unpacked = run("unpacked")
+    finally:
+        spark.conf.set(key, prev)
+    # Equal archives, total / defaultParallelism = 3 archives' cost: three
+    # per partition.
+    assert packed[0] == dp
+    assert unpacked[0] == n
+    assert len(packed[1]) == 3 * n
+    assert unpacked[1] == packed[1]
+    assert unpacked[2] == packed[2]
+
+
+def test_on_error_skip_inside_packed_partition(spark, tmp_path):
+    """A corrupt archive packed between two good ones drops alone: the
+    archive after it in the same partition still emits its rows, and the
+    skip counter counts exactly one archive."""
+    from pyspark.sql import functions as F
+
+    dp = spark.sparkContext.defaultParallelism
+    paths = _equal_archives(tmp_path, 3 * dp)
+    bad = paths[1]
+    raw = bytearray(open(bad, "rb").read())
+    at = raw.find(b"body-001-0")
+    raw[at] ^= 0xFF  # same size, but the member CRC no longer matches
+    open(bad, "wb").write(bytes(raw))
+
+    acc = spark.sparkContext.accumulator(0)
+    df = read_zip_members(
+        spark, str(tmp_path / "*.zip"), on_error="skip", skip_counter=acc
+    )
+    pids: dict[str, set] = {}
+    for r in df.select("source", F.spark_partition_id().alias("pid")).collect():
+        pids.setdefault(r["source"], set()).add(r["pid"])
+    assert acc.value == 1
+    assert sorted(pids) == sorted(p for p in paths if p != bad)
+    # The archives on both sides of the bad one share its partition.
+    assert pids[paths[0]] == pids[paths[2]] and len(pids[paths[0]]) == 1
 
 
 def test_central_directory_scan_no_decompression(spark, tmp_path):
@@ -916,7 +1060,8 @@ def test_zip64_eocd_member_count(tmp_path):
         {"paths": json.dumps([zp]), "split_members": "10000"}
     )
     parts = rdr.partitions()
-    spans = sorted((p.start, p.end) for p in parts)
+    assert all(len(p.slices) == 1 for p in parts)
+    spans = sorted((s.start, s.end) for p in parts for s in p.slices)
     assert spans[0][0] == 0 and spans[-1][1] == n
     assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
     assert len(parts) == -(-n // 10000)  # ceil: 7 partitions

@@ -70,7 +70,9 @@ def _package_zip() -> str:
         h.update(open(f, "rb").read())
     zpath = f"/tmp/z2ps_pkg_{h.hexdigest()[:16]}.zip"
     if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
+        # Per-process temp name: concurrent first builds of the same zip
+        # each write their own file, and the atomic replace lets any win.
+        tmp = f"{zpath}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
             for f in files:
                 zf.write(f, os.path.relpath(f, root))

@@ -12,7 +12,11 @@ file or stdout, builder.rs:232-278). A single file is inherently a driver
 funnel, so these stream ``toLocalIterator()`` through a pyarrow writer with
 an exact row-group row cap (the reference's ``--row-group-size``, default
 100, main.rs:41-43) instead of silently ``coalesce(1)``-ing the cluster —
-opt-in only, never the default (SURVEY §7 risk 4).
+opt-in only, never the default (SURVEY §7 risk 4). ``toLocalIterator()``
+holds one partition at a time in the driver JVM; over the zip source that
+is one *packed* partition, the members of at most
+``spark.sql.files.maxPartitionBytes`` of compressed archives unless a
+single archive is larger (``sources/zipsource.py`` scale notes).
 """
 
 from __future__ import annotations

@@ -2,9 +2,11 @@
 
 Reference semantics re-expressed (SURVEY.md §2 A1/A2/A3, B1/B2, F1/F2):
 
-- one zip archive → one unit of parallelism (the reference spawns one thread
-  per archive, /root/reference/src/builder.rs:54-73; we emit one
-  InputPartition per archive so a 1000-executor cluster fans out naturally);
+- one zip archive → one unit of work (the reference spawns one thread per
+  archive, builder.rs:54-73); whole archives are packed into size-balanced
+  read partitions the way Spark's own file sources pack small files, so a
+  1000-executor cluster still fans out over a large corpus while a small
+  one is not paid for task by task;
 - one compressed member → one output row of the fixed 4-column schema
   (name, source, body, hash), /root/reference/src/builder.rs:256-274;
 - member-name glob filter applied inside the scan before materializing the
@@ -28,15 +30,25 @@ unpickle the reader.
 
 Scale notes: members are decompressed one at a time and flushed in bounded
 Arrow batches, so peak memory per task ≈ one decompressed member + one batch
-(mirrors the reference's bounded-channel posture, builder.rs:53,188-190).
-Many-archive inputs parallelize one task per archive; a JUMBO archive (more
-than ``split_members`` central-directory entries) additionally splits into
-member-index-range partitions — the central directory is random-access, so
-each task opens the file independently and reads only its slice, bounding
-per-task time by the range size instead of the largest archive. The member
-count comes from the end-of-central-directory record alone (an O(comment)
-tail read, no CD parse), gated on file size so small archives cost the
-driver nothing beyond the stat it already does.
+(mirrors the reference's bounded-channel posture, builder.rs:53,188-190);
+a packed partition reads its archives one after another, each with its own
+buffers, so the bound holds per archive. Many-archive inputs pack whole
+archives, in path order, by ``FilePartition.maxSplitBytes``' rule: each
+archive costs its size plus ``spark.sql.files.openCostInBytes``, and the
+target is that total over ``defaultParallelism``, clamped between the open
+cost and ``spark.sql.files.maxPartitionBytes``. Many small archives thus
+pack into about ``defaultParallelism`` tasks, and a large corpus into
+partitions of at most ``maxPartitionBytes`` of compressed input. Path
+order keeps rows in the same order as one partition per archive. A task
+costs a Python worker round trip before it reads a byte, so on small
+inputs the task count, not the member work, sets the scan time. A JUMBO archive (more than ``split_members``
+central-directory entries) splits into member-index-range partitions that
+are never packed — the central directory is random-access, so each task
+opens the file independently and reads only its slice, bounding per-task
+time by the range size instead of the largest archive. The member count
+comes from the end-of-central-directory record alone (an O(comment) tail
+read, no CD parse), gated on file size so small archives cost the driver
+nothing beyond the stat it already does.
 
 Divergences by design (SURVEY §2 H): empty input glob raises at plan time
 (the reference silently writes an empty file — its NoInputsFound error is
@@ -53,6 +65,7 @@ import json
 import re
 import zipfile
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
@@ -175,14 +188,56 @@ def _eocd_member_count(path: str) -> int:
     return total
 
 
-@dataclass
-class _ZipPartition(InputPartition):
+class _ZipSlice(NamedTuple):
     path: str
     # Half-open member-index range [start, end) into the central
     # directory's infolist order; end=None means "to the last member".
     # (0, None) — the default — is the whole archive.
     start: int = 0
     end: int | None = None
+
+
+@dataclass
+class _ZipPartition(InputPartition):
+    # The archive slices one task reads, in order: several whole small
+    # archives packed together, or one member range of a jumbo archive.
+    slices: list[_ZipSlice]
+
+
+def _pack(sized: list[tuple[list[_ZipSlice], int]], max_bytes: int,
+          open_cost: int, min_partitions: int) -> list[_ZipPartition]:
+    """Bin-pack archives into read partitions by Spark's file-split rule
+    (``FilePartition.maxSplitBytes`` / ``getFilePartitions``): the target
+    is ``min(max_bytes, max(open_cost, Σ(size + open_cost) / min_partitions))``
+    and a partition closes when the next archive would push it past that.
+    Unlike Spark's next-fit-decreasing, archives keep their input order,
+    so rows come out in the same order as one partition per archive.
+    ``sized`` pairs each archive's slices with its file size; an archive
+    split into several member ranges keeps one partition per range (the
+    split exists to spread work, so packing never merges it)."""
+    total = sum(size + open_cost for _, size in sized)
+    target = min(max_bytes, max(open_cost, total // min_partitions))
+    parts: list[_ZipPartition] = []
+    bin_: list[_ZipSlice] = []
+    filled = 0
+
+    def close():
+        nonlocal bin_, filled
+        if bin_:
+            parts.append(_ZipPartition(bin_))
+        bin_, filled = [], 0
+
+    for slices, size in sized:
+        if len(slices) > 1:
+            close()
+            parts.extend(_ZipPartition([sl]) for sl in slices)
+            continue
+        if filled + size > target:
+            close()
+        bin_ += slices
+        filled += size + open_cost
+    close()
+    return parts
 
 
 class ZipMembersReader(DataSourceReader):
@@ -206,6 +261,11 @@ class ZipMembersReader(DataSourceReader):
         # central directory lists more members than this split into
         # member-index-range partitions.
         self.split_members = int(options.get("split_members", "65536"))
+        # Packing inputs (see _pack): read_zip_members passes the session's
+        # confs; a reader built without them gets Spark's defaults.
+        self.max_partition_bytes = int(options.get("max_partition_bytes", str(128 << 20)))
+        self.open_cost_bytes = int(options.get("open_cost_bytes", str(4 << 20)))
+        self.min_partitions = int(options.get("min_partitions", "1"))
 
         # Populated by pushFilters (Catalyst filter pushdown, Spark 4.1+):
         # per-member name predicates evaluated before decompression, and
@@ -254,47 +314,61 @@ class ZipMembersReader(DataSourceReader):
                 yield f
 
     def partitions(self):
-        # One partition per archive == the reference's one-thread-per-archive
-        # (builder.rs:64). Executors each open only their own local/shared
-        # file; nothing is centralized on the driver. Pushed source
-        # predicates prune archives here, before any task launches.
+        # Whole archives pack into size-balanced partitions by Spark's
+        # file-split rule (_pack): executors each open only their own
+        # local/shared files, and nothing is centralized on the driver.
+        # Pushed source predicates prune archives here, before any task
+        # launches.
         #
-        # Jumbo archives additionally split into member-index ranges so the
-        # largest archive no longer bounds per-task time. The size gate
-        # (an archive under split_members·46 bytes CANNOT list that many
-        # CD entries) keeps the driver cost at the stat it already pays;
-        # only plausibly-jumbo files get the O(comment) EOCD tail read.
-        # A file unreadable here falls through to a single partition so
-        # the error surfaces in the task, where on_error applies.
+        # Jumbo archives split into member-index ranges so the largest
+        # archive no longer bounds per-task time. The size gate (an archive
+        # under split_members·46 bytes CANNOT list that many CD entries)
+        # keeps the driver cost at the stat it already pays; only
+        # plausibly-jumbo files get the O(comment) EOCD tail read. A file
+        # unreadable here falls through to a single slice so the error
+        # surfaces in the task, where on_error applies.
         import os
 
         paths = self.paths
         if self.source_preds:
             pred = self._compile(self.source_preds)
             paths = [p for p in paths if pred(p)]
-        parts: list[_ZipPartition] = []
+        sized: list[tuple[list[_ZipSlice], int]] = []
         for p in paths:
+            try:
+                size = os.path.getsize(p)
+            except OSError:
+                size = 0
             n = None
-            if self.split_members > 0:
+            if self.split_members > 0 and size > self.split_members * _MIN_CD_ENTRY:
                 try:
-                    if os.path.getsize(p) > self.split_members * _MIN_CD_ENTRY:
-                        n = _eocd_member_count(p)
+                    n = _eocd_member_count(p)
                 except (OSError, zipfile.BadZipFile):
                     n = None
             if n is not None and n > self.split_members:
-                parts.extend(
-                    _ZipPartition(p, s, min(s + self.split_members, n))
+                slices = [
+                    _ZipSlice(p, s, min(s + self.split_members, n))
                     for s in range(0, n, self.split_members)
-                )
+                ]
             else:
-                parts.append(_ZipPartition(p))
-        return parts
+                slices = [_ZipSlice(p)]
+            sized.append((slices, size))
+        return _pack(
+            sized, self.max_partition_bytes, self.open_cost_bytes, self.min_partitions
+        )
 
     def read(self, partition: _ZipPartition):
-        import pyarrow as pa
-
         pattern = re.compile(self.member_regex) if self.member_regex else None
         name_pred = self._compile(self.name_preds) if self.name_preds else None
+        for sl in partition.slices:
+            yield from self._read_slice(sl, pattern, name_pred)
+
+    def _read_slice(self, sl: _ZipSlice, pattern, name_pred):
+        """One archive (or one member range of it): its own Arrow buffers
+        and its own error handling, so on_error and the memory bound stay
+        per archive inside a packed partition."""
+        import pyarrow as pa
+
         need_decompress = self.with_body or self.with_hash
 
         names: list[str] = []
@@ -319,10 +393,10 @@ class ZipMembersReader(DataSourceReader):
             return batch
 
         try:
-            with open(partition.path, "rb") as fh, zipfile.ZipFile(fh) as zf:
+            with open(sl.path, "rb") as fh, zipfile.ZipFile(fh) as zf:
                 infos = zf.infolist()
-                if partition.start or partition.end is not None:
-                    infos = infos[partition.start : partition.end]
+                if sl.start or sl.end is not None:
+                    infos = infos[sl.start : sl.end]
                 for info in infos:
                     if pattern is not None and not pattern.match(info.filename):
                         continue
@@ -330,19 +404,19 @@ class ZipMembersReader(DataSourceReader):
                         continue
                     if need_decompress and not info.is_dir():
                         if info.compress_type == _ZSTD_METHOD:
-                            data = _read_zstd_member(fh, info, partition.path)
+                            data = _read_zstd_member(fh, info, sl.path)
                         elif info.compress_type not in _SUPPORTED_METHODS:
                             raise ZipFormatError(
                                 f"unsupported zip compression (method "
                                 f"{info.compress_type}) for member "
-                                f"{info.filename!r} in {partition.path}"
+                                f"{info.filename!r} in {sl.path}"
                             )
                         else:
                             data = zf.read(info)
                     else:
                         data = b""
                     names.append(info.filename)
-                    sources.append(partition.path if self.with_source else None)
+                    sources.append(sl.path if self.with_source else None)
                     if self.with_hash:
                         h = hashlib.sha256(data)
                         hashes.append(
@@ -378,15 +452,15 @@ class ZipMembersReader(DataSourceReader):
                 import sys
 
                 # Count once per ARCHIVE, not per split range: whole-archive
-                # corruption fails every range, but only the start==0 task
+                # corruption fails every range, but only the start==0 slice
                 # increments, keeping the "archives skipped" semantic exact.
                 # (A mid-range CRC failure in a later split logs without
                 # counting — that archive already emitted earlier ranges, a
                 # case the best-effort caveat above covers either way.)
-                if self.skip_acc is not None and partition.start == 0:
+                if self.skip_acc is not None and sl.start == 0:
                     self.skip_acc.add(1)
                 print(
-                    f"zipmembers: skipping unreadable archive {partition.path}: {exc}",
+                    f"zipmembers: skipping unreadable archive {sl.path}: {exc}",
                     file=sys.stderr,
                 )
                 return
@@ -471,7 +545,7 @@ class ZipMembersStreamReader(DataSourceStreamReader):
         new = sorted(
             p for mt, p in end.get("seen", []) if p not in done and mt >= horizon
         )
-        return [_ZipPartition(p) for p in new]
+        return [_ZipPartition([_ZipSlice(p)]) for p in new]
 
     def read(self, partition: _ZipPartition):
         return self._batch.read(partition)
@@ -524,6 +598,16 @@ def _expand_patterns(patterns: list[str] | str) -> list[str]:
     return paths
 
 
+_BYTE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40,
+               "p": 1 << 50}
+
+
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size conf as Spark reads it: "134217728b", "64m", "4kb", "4096"."""
+    num, unit = re.fullmatch(r"(\d+)([a-z]?)b?", spark.conf.get(key).strip().lower()).groups()
+    return int(num) * _BYTE_UNITS[unit]
+
+
 def read_zip_members(
     spark: SparkSession,
     patterns: list[str] | str,
@@ -557,7 +641,9 @@ def read_zip_members(
     ``split_members``: archives whose central directory lists more than
     this many members split into member-index-range partitions (0
     disables) — per-task time is bounded by the range, not the largest
-    archive; see the module docstring's scale notes.
+    archive. Whole archives pack into read partitions by the session's
+    ``spark.sql.files.maxPartitionBytes``, ``spark.sql.files.openCostInBytes``
+    and ``defaultParallelism``; see the module docstring's scale notes.
     """
     from zip_to_parquet_spark.runtime import ensure_shipped
 
@@ -576,9 +662,15 @@ def read_zip_members(
             {"_skip_acc": skip_counter},
         )
     spark.dataSource.register(source_cls)
+    # Packing inputs: Spark's own file-split confs (see _pack).
+    max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
+    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes")
     return (
         spark.read.format("zipmembers")
         .option("paths", json.dumps(paths))
+        .option("max_partition_bytes", str(max_bytes))
+        .option("open_cost_bytes", str(open_cost))
+        .option("min_partitions", str(spark.sparkContext.defaultParallelism))
         .option("member_regex", member_regex)
         .option("body", "true" if body else "false")
         .option("source", "true" if source else "false")
