@@ -37,70 +37,63 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed key.
 #
 # Pin basis: ``python scripts/window_pin.py --list`` on the tree whose
-# zip source packs archives into size-balanced read partitions. That
-# change flags 9 keys that read zips through ``read_zip_members`` (the
-# zip-parity keys and sink_parquet_roundtrip); they lead the window. The
-# other 41 slots keep the keys the common-neighbor kernel change flagged,
-# oldest green first; stats_anova_f, dq_referential_integrity and
-# experiment_cuped_adjust (last green r15) drop out, since 53 real
-# changes exceed the window. The same tree gives ``runtime._package_zip``
-# a per-process temp file name, and that helper is in every key's
-# closure, so the policy tool now counts all 317 keys as changed; this
-# pin was taken from its suggestion just before that one-line edit.
-# Engine commits land before the correctness sweep (README "Round
-# discipline"); keys outside the window stay value-verified by the
+# get_spark sessions start Python workers from the zip-caching daemon.
+# session.py and runtime._package_zip are in every key's closure, so the
+# tool counts all 317 keys as changed and the pin is its oldest-green-first
+# rotation. Engine commits land before the correctness sweep (README
+# "Round discipline"); keys outside the window stay value-verified by the
 # sf0.001 oracle-parity suite on every test run.
 set_priority([
-    "sink_parquet_roundtrip",
-    "zip_explode_hash",
-    "zip_glob_members",
-    "zip_count_members",
-    "zip_union_sources",
-    "zip_null_projection",
-    "zip_csv_members",
-    "zip_jsonl_members",
-    "zip_federated_join",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "ann_cosine_topk",
-    "ann_nprobe_curve",
-    "graph_jaccard_linkpred",
-    "graph_resource_allocation",
-    "linkpred_precision_at_k",
-    "ts_changepoint_binary",
-    "sample_ht_estimate",
-    "sample_effective_size",
-    "ts_pinball_loss",
-    "ts_seasonal_strength",
-    "stats_dispersion_index",
-    "experiment_srm_check",
-    "events_locf_fill",
-    "experiment_lift_t2",
-    "stats_bh_fdr_cells",
-    "stats_conformal_coverage",
-    "privacy_l_diversity",
-    "experiment_group_sequential",
-    "stats_kruskal_wallis",
-    "select_coreset_kcenter",
-    "tokenizer_vocab_coverage",
-    "text_lexical_diversity",
-    "ts_rolling_median",
-    "stats_theil_sen_daily",
-    "stats_zipf_fit",
-    "sample_poisson_replicate",
-    "sketch_count_min",
-    "stats_runs_test",
-    "privacy_randomized_response",
-    "feature_target_encode_loo",
-    "sample_stratified_exact",
-    "sample_systematic_interval",
-    "privacy_dp_geometric_counts",
-    "experiment_power_mde",
-    "stats_levene_bf",
-    "ts_ljung_box",
-    "sample_class_balanced",
-    "graph_adamic_adar",
+    "events_timeseries_gapfill",
+    "events_minmax_scaled",
+    "q14_promo_revenue",
+    "q19_disjunctive_revenue",
+    "dedup_incremental_vs_snapshot",
+    "dedup_clusters_star",
+    "text_chunk_windows_udtf",
+    "mapinarrow_text_metrics",
+    "text_collocations_pmi",
+    "mixture_source_entropy",
+    "zip_incremental_ingest",
+    "tar_explode_hash",
+    "stream_static_enrich",
+    "stream_stream_left_outer",
+    "events_markov_transitions",
+    "matview_incremental_refresh",
+    "cluster_kmeans_embeddings",
+    "quality_distill_classifier",
+    "layout_zorder_files",
+    "layout_pruning_eval",
+    "bpe_tokenize_stats",
+    "q13_order_distribution",
+    "q17_small_qty_revenue",
+    "q22_idle_balance",
+    "q11_important_share",
+    "agg_bitmap_distinct",
+    "join_bloom_prefilter",
+    "stats_outlier_zscore",
+    "join_existence_mark",
+    "agg_histogram_equiwidth",
+    "join_null_safe",
+    "global_rank_two_pass",
+    "spatial_grid_neighbors",
+    "agg_mode_exact",
+    "skew_diagnosis_report",
+    "join_interval_overlap",
+    "skyline_orders_pareto",
+    "stats_outlier_mad",
+    "sketch_set_algebra",
+    "join_point_in_time_scd2",
+    "scan_schema_evolution",
+    "sample_weighted_aes",
+    "json_variant_shredding",
+    "q4_priority_count",
+    "q10_returned_items",
+    "join_lateral_top1",
+    "set_ops_all",
+    "agg_kmv_distinct",
+    "dq_expectations_report",
+    "agg_sampled_percentiles",
 ])
 
 __all__ = ["all_queries", "all_oracle_sql", "query", "set_priority"]

@@ -12,6 +12,15 @@ locally:
   ``applyInPandas`` — Arrow batch transfer is the only acceptable Python seam.
 - ``maxPartitionBytes`` left at default 128 MB: parquet scans split by byte
   range, which is what keeps a 100 TB scan at ~800k well-sized tasks.
+- Python task workers start from ``_worker/z2ps_daemon.py``, not
+  ``pyspark.daemon``: before every task pyspark calls
+  ``importlib.invalidate_caches()``, which on Python 3.10-3.12 makes each
+  cached zipimporter re-read ``pyspark.zip`` and the spark-core jar (~0.2 s
+  a task). The daemon re-reads an archive only when its
+  ``(st_ino, st_mtime_ns, st_size)`` stamp changed since that importer's
+  last read. Spark still starts the workers that plan Python data sources
+  from ``pyspark.daemon``, so planning keeps that cost. Delete the daemon
+  once the worker Python is 3.13 or newer.
 """
 
 from __future__ import annotations
@@ -21,6 +30,9 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+# Holds only z2ps_daemon.py, so the worker path gains that one module.
+_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
 
 
 def get_spark(app_name: str = "zip-to-parquet-spark") -> SparkSession:
@@ -58,6 +70,12 @@ def get_spark(app_name: str = "zip-to-parquet-spark") -> SparkSession:
         # compiling and every later stage runs interpreted at 4-10x cost.
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
         .config("spark.ui.enabled", "false")
+        # Both are static confs: a session someone else already built (the
+        # caller of __spark_entry__, bench.py) ignores them through
+        # getOrCreate, and the master built here is always local, so the
+        # workers see this directory.
+        .config("spark.python.daemon.module", "z2ps_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _DAEMON_DIR)
     )
     return builder.getOrCreate()
 
