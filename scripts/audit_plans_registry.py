@@ -44,6 +44,8 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import _harness  # noqa: E402
+
 # Hand-reviewed acceptable hits: (key, pathology) pairs.
 # SMJ on bounded eval-tail relations is fine (plan-locked elsewhere).
 WHITELIST: set[tuple[str, str]] = set()
@@ -54,22 +56,7 @@ NODE_LINE = re.compile(r"^\(\d+\) ([A-Za-z]+)", re.MULTILINE)
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.appName("z2ps-audit-plans-registry")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "12g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _harness.bench_session("z2ps-audit-plans-registry")
 
     from zip_to_parquet_spark.plans import all_queries
 

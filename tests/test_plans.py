@@ -78,7 +78,7 @@ def test_minhash_candidates_materialized_once(spark):
     # consumers (pair join + both cand_ids legs) re-expanded the
     # corpus-signature subtree, 10 ArrowEvalPython copies in the static
     # plan (plans/r14/dedup_minhash_lsh_before.txt; measured 1.87 →
-    # 1.55 s steal-clean at sf0.1, scripts/ab_minhash.py). The final
+    # 1.55 s steal-clean at sf0.1, OPTIMIZATION_r14.md §4). The final
     # plan must read the materialized candidates (ExistingRDD) and hold
     # ZERO banding-UDF evaluations — the signature pass runs exactly
     # once, at checkpoint time, still inside the timed query call.
@@ -88,7 +88,7 @@ def test_minhash_candidates_materialized_once(spark):
 
 
 def test_lsh_signature_materialized_and_distinct_narrow(spark):
-    # r14 (guide §8 fingerprint-table shape, A/B scripts/ab_lsh.py
+    # r14 (guide §8 fingerprint-table shape, A/B OPTIMIZATION_r14.md §6
     # 1.37 → 1.24 s): the signed corpus localCheckpoints once — before,
     # the hyperplane-signature subtree expanded 4× in the static plan —
     # and the candidate distinct runs over bare (q_id, n_id) pairs, with

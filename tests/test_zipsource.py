@@ -853,6 +853,19 @@ def test_extract_member_hashes_scoped(spark, tmp_path):
     }
 
 
+def test_extract_member_hashes_decodes_zstd_like_read_zip_members(spark, tmp_path):
+    """Scoped extraction decodes a zstd (method 93) member through the same
+    decoder as the full read, so both report the same hash."""
+    from zip_to_parquet_spark.sources.zipsource import extract_member_hashes
+
+    p = make_zstd_zip(tmp_path / "zstd.zip", [("a.txt", b"zstd " * 500), ("b.txt", b"x")])
+    full = {r["name"]: r["hash"] for r in read_zip_members(spark, p).collect()}
+    want = spark.createDataFrame([(p, "a.txt")], "source string, name string")
+    got = {r["name"]: r["hash"] for r in extract_member_hashes(want).collect()}
+    assert got == {"a.txt": full["a.txt"]}
+    assert got["a.txt"] == hashlib.sha256(b"zstd " * 500).hexdigest()
+
+
 # ---------------------------------------------------------------------------
 # Partitioned sink: layout, dynamic overwrite, pruning
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import re
 
-__all__ = ["glob_to_regex", "glob_match_expr"]
+__all__ = ["glob_to_regex"]
 
 
 def glob_to_regex(pattern: str) -> str:
@@ -82,12 +82,3 @@ def _compile_body(pattern: str) -> str:
             out.append(re.escape(c))
             i += 1
     return "".join(out)
-
-
-def glob_match_expr(column, pattern: str):
-    """Column predicate: does ``column`` match ``pattern``? JVM-side rlike —
-    no Python in the row path."""
-    from pyspark.sql import functions as F
-
-    col = F.col(column) if isinstance(column, str) else column
-    return col.rlike(glob_to_regex(pattern))

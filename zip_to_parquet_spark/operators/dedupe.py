@@ -445,7 +445,7 @@ def minhash_lsh_pairs_docs(
     # the banding ArrowEvalPython, and AQE stage reuse does not collapse
     # them all. Materializing the (duplicate-density-sized, tiny) pair
     # set truncates the subtree for every consumer: measured 1.87 → 1.55 s
-    # at sf0.1 (interleaved steal-clean A/B, scripts/ab_minhash.py),
+    # at sf0.1 (interleaved steal-clean A/B, OPTIMIZATION_r14.md §4),
     # identical pair output. localCheckpoint, not persist() — same
     # ContextCleaner rationale as semantic_dedup_pairs in vectors.py.
     cand = cand.localCheckpoint(eager=True)

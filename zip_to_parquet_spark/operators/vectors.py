@@ -16,7 +16,6 @@ __all__ = [
     "dot",
     "l2_norm",
     "cosine",
-    "hyperplane_signature_udf",
     "hyperplane_multitable_udf",
     "cosine_lsh_pairs",
     "train_ivf_codebook",
@@ -56,32 +55,6 @@ def cosine(a: Column, b: Column) -> Column:
     zero vectors are similar to nothing, not similar to everything.
     """
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
-
-
-def hyperplane_signature_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    """Returns a pandas UDF mapping array<float> → bigint LSH signature.
-
-    Fixed-seed Gaussian hyperplanes; bit i = sign(v · pᵢ). One numpy matmul
-    per Arrow batch — at 100 TB this runs embarrassingly parallel per
-    partition with no shuffle; the signature then drives a cheap
-    groupBy-bucket instead of an O(n²) cross join.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    if n_planes > 63:
-        raise ValueError("signature must fit a signed 64-bit integer")
-
-    @pandas_udf("long")
-    def signature(v: pd.Series) -> pd.Series:
-        planes = np.random.RandomState(seed).standard_normal((dim, n_planes))
-        mat = np.vstack(v.to_numpy())  # (batch, dim)
-        bits = (mat @ planes) > 0  # (batch, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    return signature
 
 
 def hyperplane_multitable_udf(

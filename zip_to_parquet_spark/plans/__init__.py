@@ -36,8 +36,8 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed than the window holds, every slot must at least be spent on a
 # changed key.
 #
-# Pin basis: ``python scripts/window_pin.py --list`` on the tree whose
-# get_spark sessions start Python workers from the zip-caching daemon.
+# Pin basis: ``python scripts/window_pin.py --list`` on the tree where
+# zipsource's readers share one member decoder (``_member_bytes``).
 # session.py and runtime._package_zip are in every key's closure, so the
 # tool counts all 317 keys as changed and the pin is its oldest-green-first
 # rotation. Engine commits land before the correctness sweep (README

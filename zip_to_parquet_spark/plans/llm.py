@@ -615,7 +615,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).select("vec_id", "v", l2_norm(F.col("v")).alias("nrm"), sig(F.col("v")).alias("buckets"))
-    # r14 guide-§8 fingerprint-table shape (A/B: scripts/ab_lsh.py, base
+    # r14 guide-§8 fingerprint-table shape (A/B: OPTIMIZATION_r14.md §6, base
     # 1.37 s vs this 1.24 s at sf0.1, identical 400-row output): the
     # signed corpus materializes ONCE (before: the signature subtree
     # expanded 4× in the static plan — q/c legs under two consumers);

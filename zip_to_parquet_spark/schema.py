@@ -22,7 +22,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-__all__ = ["ZIP_MEMBER_SCHEMA", "FIXTURE_TABLES", "load_table", "load_tables"]
+__all__ = ["ZIP_MEMBER_SCHEMA", "FIXTURE_TABLES", "load_table"]
 
 # The reference's one output relation (builder.rs:256-274; README.md:5-9).
 # name is never null (UnzippedFile.name: String, builder.rs:157); the other
@@ -177,7 +177,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             df = df.withColumn("ts", F.to_utc_timestamp(F.col("ts"), "UTC"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}

@@ -29,7 +29,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 # Holds only z2ps_daemon.py, so the worker path gains that one module.
 _DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
@@ -78,9 +78,3 @@ def get_spark(app_name: str = "zip-to-parquet-spark") -> SparkSession:
         .config("spark.executorEnv.PYTHONPATH", _DAEMON_DIR)
     )
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

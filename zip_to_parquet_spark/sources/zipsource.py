@@ -156,6 +156,20 @@ def _read_zstd_member(fh, info: zipfile.ZipInfo, path: str) -> bytes:
     return data
 
 
+def _member_bytes(fh, zf: zipfile.ZipFile, info: zipfile.ZipInfo, path: str) -> bytes:
+    """One member's decoded bytes: zstd through _read_zstd_member, the
+    native codecs through zipfile, anything else a ZipFormatError. ``fh`` is
+    the file object ``zf`` reads from."""
+    if info.compress_type == _ZSTD_METHOD:
+        return _read_zstd_member(fh, info, path)
+    if info.compress_type not in _SUPPORTED_METHODS:
+        raise ZipFormatError(
+            f"unsupported zip compression (method {info.compress_type}) "
+            f"for member {info.filename!r} in {path}"
+        )
+    return zf.read(info)
+
+
 # Minimum possible central-directory entry: 46-byte fixed header + a
 # nonempty filename. Lets partitions() skip the EOCD tail read entirely
 # for any archive too small to exceed the split threshold.
@@ -403,16 +417,7 @@ class ZipMembersReader(DataSourceReader):
                     if name_pred is not None and not name_pred(info.filename):
                         continue
                     if need_decompress and not info.is_dir():
-                        if info.compress_type == _ZSTD_METHOD:
-                            data = _read_zstd_member(fh, info, sl.path)
-                        elif info.compress_type not in _SUPPORTED_METHODS:
-                            raise ZipFormatError(
-                                f"unsupported zip compression (method "
-                                f"{info.compress_type}) for member "
-                                f"{info.filename!r} in {sl.path}"
-                            )
-                        else:
-                            data = zf.read(info)
+                        data = _member_bytes(fh, zf, info, sl.path)
                     else:
                         data = b""
                     names.append(info.filename)
@@ -814,9 +819,10 @@ def extract_member_hashes(to_extract: DataFrame) -> DataFrame:
     def ex(key, pdf):
         path = key[0]
         hashes = []
-        with zipfile.ZipFile(path) as zf:
+        with open(path, "rb") as fh, zipfile.ZipFile(fh) as zf:
             for nm in pdf["name"]:
-                hashes.append(hashlib.sha256(zf.read(nm)).hexdigest())
+                data = _member_bytes(fh, zf, zf.getinfo(nm), path)
+                hashes.append(hashlib.sha256(data).hexdigest())
         return _pd.DataFrame(
             {"name": pdf["name"], "source": path, "hash": hashes}
         )
