@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from zip_to_parquet_spark.operators.dedupe import (
     exact_dedup,
-    minhash_lsh_pairs,
+    minhash_lsh_pairs_docs,
     ngram_jaccard_pairs,
     shingle_sets,
     simhash,
@@ -85,23 +85,23 @@ def test_ngram_jaccard_pairs(spark, docs):
 
 
 def test_minhash_lsh_finds_exact_and_near(spark, docs):
-    sh = shingle_sets(docs)
     pairs = {(r["doc_a"], r["doc_b"]) for r in
-             minhash_lsh_pairs(sh, threshold=0.7).collect()}
+             minhash_lsh_pairs_docs(docs, threshold=0.7).collect()}
     assert (1, 2) in pairs and (1, 3) in pairs and (2, 3) in pairs
     assert not any(4 in p for p in pairs)
 
 
-def test_minhash_text_path_identical_to_shingled_path(spark, docs):
-    # The text-first UDF (Python shingling) must reproduce the shingled
-    # path bit-for-bit: same hash family, same buckets, same jaccard.
-    from zip_to_parquet_spark.operators.dedupe import minhash_lsh_pairs_docs
-
-    via_shingles = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in
-                    minhash_lsh_pairs(shingle_sets(docs), threshold=0.7).collect()}
+def test_minhash_lsh_pairs_equal_exact_jaccard_pairs(spark, docs):
+    # On near-duplicates this dense, banding must miss nothing: the LSH
+    # pairs (Python shingling in the UDF, Catalyst shingle_sets in the
+    # verify) equal the unguarded exact inverted-index pairs, jaccard
+    # values included.
     via_text = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in
                 minhash_lsh_pairs_docs(docs, threshold=0.7).collect()}
-    assert via_text == via_shingles and via_text
+    exact = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in
+             ngram_jaccard_pairs(shingle_sets(docs), 0.7,
+                                 max_shingle_permille=None).collect()}
+    assert via_text == exact and via_text
 
 
 def test_simhash_identical_and_different(spark, docs):
@@ -150,13 +150,13 @@ def test_minhash_and_jaccard_survive_empty_docs(spark):
         (5, "hi"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = shingle_sets(docs)
     lsh = {(r["doc_a"], r["doc_b"]) for r in
-           minhash_lsh_pairs(sh, threshold=0.7).collect()}
+           minhash_lsh_pairs_docs(docs, threshold=0.7).collect()}
     assert lsh == {(1, 2)}
     exact = {(r["doc_a"], r["doc_b"]) for r in
              ngram_jaccard_pairs(
-                 sh, threshold=0.1, max_shingle_permille=None).collect()}
+                 shingle_sets(docs), threshold=0.1,
+                 max_shingle_permille=None).collect()}
     assert exact == {(1, 2)}
 
 
@@ -300,7 +300,7 @@ def test_glob_semantics(pattern, matches, rejects):
 def test_connected_components_known_graph(spark):
     from pyspark.sql import Row
 
-    from zip_to_parquet_spark.operators.dedupe import connected_components
+    from zip_to_parquet_spark.operators.graph import connected_components_star
 
     # Components: {1,2,3,4} (chain), {7,9}, singleton edges only — no
     # isolated nodes appear since nodes come from the edge list.
@@ -308,7 +308,7 @@ def test_connected_components_known_graph(spark):
         [Row(doc_a=1, doc_b=2), Row(doc_a=3, doc_b=2), Row(doc_a=3, doc_b=4),
          Row(doc_a=9, doc_b=7)]
     )
-    got = {r.node: r.comp for r in connected_components(edges).collect()}
+    got = {r.node: r.comp for r in connected_components_star(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 9: 7}
 
 
@@ -1642,10 +1642,27 @@ def test_bpe_training_deterministic_and_compressive(spark):
 
 
 # ---------------------------------------------------------------------------
-# Large-star/small-star connected components (dedup_clusters_star)
+# Large-star/small-star connected components (graph.connected_components_star)
 # ---------------------------------------------------------------------------
+def _union_find_components(edges):
+    """Reference labeling: node → min node id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return sorted((x, find(x)) for x in parent)
+
+
 def test_star_cc_matches_label_propagation(spark):
-    from zip_to_parquet_spark.operators.dedupe import connected_components
     from zip_to_parquet_spark.operators.graph import connected_components_star
 
     # Long chain (the diameter case star-contraction exists for), a
@@ -1654,8 +1671,7 @@ def test_star_cc_matches_label_propagation(spark):
              (10, 11), (11, 12), (10, 12), (20, 21), (31, 30)]
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     star = sorted((r.node, r.comp) for r in connected_components_star(df).collect())
-    prop = sorted((r.node, r.comp) for r in connected_components(df).collect())
-    assert star == prop
+    assert star == _union_find_components(edges)
     assert ([c for _, c in star if c == 1] and [c for _, c in star if c == 10]
             and [c for _, c in star if c == 20] and [c for _, c in star if c == 30])
 
@@ -1760,7 +1776,6 @@ def test_bpe_chain_equals_python_on_random_words(spark):
 def test_star_cc_equals_label_propagation_on_random_graphs(spark):
     import random
 
-    from zip_to_parquet_spark.operators.dedupe import connected_components
     from zip_to_parquet_spark.operators.graph import connected_components_star
 
     for seed in (1, 7):
@@ -1773,9 +1788,26 @@ def test_star_cc_equals_label_propagation_on_random_graphs(spark):
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
         star = sorted((r.node, r.comp)
                       for r in connected_components_star(df).collect())
-        prop = sorted((r.node, r.comp)
-                      for r in connected_components(df).collect())
-        assert star == prop, seed
+        assert star == _union_find_components(edges), seed
+
+
+def test_star_cc_long_path_is_one_component(spark):
+    # Diameter 63: a one-hop-per-round labeling capped at 20 rounds leaves
+    # most of this path mislabeled; star contraction needs O(log² n)
+    # rounds.
+    from zip_to_parquet_spark.operators.graph import connected_components_star
+
+    edges = [(i + 1, i) for i in range(63)]
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {r.node: r.comp for r in connected_components_star(df).collect()}
+    assert got == {i: 0 for i in range(64)}
+
+
+def test_star_cc_empty_edge_set(spark):
+    from zip_to_parquet_spark.operators.graph import connected_components_star
+
+    df = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert connected_components_star(df).count() == 0
 
 
 def test_hot_shingle_guard_small_corpus_no_cliff(spark):

@@ -356,7 +356,9 @@ def compute_changed_keys(
     keys = list(qs)
     modules = key_modules()
     closure = _import_closure()
-    green = _last_green_rounds()
+    # Driver rows of deleted keys stay in the CORRECTNESS history; only
+    # registered keys have code to diff or a window slot to claim.
+    green = {k: r for k, r in _last_green_rounds().items() if k in qs}
     graph = _RefGraph()
 
     # Per round: which units changed between the round's driver commit and
@@ -479,6 +481,21 @@ def test_changed_keys_are_inside_driver_window():
     changed, _green, keys = compute_changed_keys()
     verdict = policy_verdict(changed, keys)
     assert verdict is None, verdict
+
+
+def test_set_priority_rejects_unregistered_key():
+    """A pin naming a deleted key would silently cost the driver window a
+    slot; set_priority must refuse it and keep the shipped pin."""
+    import pytest
+
+    from zip_to_parquet_spark.plans import registry
+
+    shipped = list(registry._PRIORITY)
+    assert len(shipped) == WINDOW
+    with pytest.raises(ValueError, match="no_such_query_key"):
+        registry.set_priority([*shipped[1:], "no_such_query_key"])
+    assert registry._PRIORITY == shipped
+    assert list(registry.all_queries())[:WINDOW] == shipped
 
 
 def test_missing_round_commit_marks_all_its_keys_changed(monkeypatch):

@@ -26,12 +26,8 @@ from zip_to_parquet_spark.operators.textops import word_shingles, words
 
 __all__ = [
     "shingle_sets",
-    "connected_components",
-    "minhash_band_hashes_udf",
     "exact_dedup",
     "ngram_jaccard_pairs",
-    "minhash_signature",
-    "minhash_lsh_pairs",
     "minhash_band_hashes_from_text_udf",
     "minhash_lsh_pairs_docs",
     "simhash",
@@ -268,97 +264,24 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature(shingled: DataFrame, k: int = 128, seed: int = 42) -> DataFrame:
-    """(doc_id, sh, sig) with sig = k-element MinHash signature array.
-
-    Entirely Catalyst: xxhash64 per shingle, then k array_min(transform(...))
-    expressions — one codegen'd projection, no shuffle, no Python.
-    """
-    coeffs = _minhash_coeffs(k, seed)
-    hashed = shingled.withColumn(
-        "h32",
-        F.transform(
-            "sh", lambda s: F.xxhash64(s).bitwiseAND(F.lit((1 << 32) - 1))
-        ),
-    )
-
-    # Factory closure, NOT default-arg capture: PySpark derives the HOF's
-    # arity from the lambda's full parameter list, so `lambda h, a=a: ...`
-    # would be bound as a (nonexistent) 2-arg transform.
-    def perm_min(a: int, b: int):
-        return F.array_min(
-            F.transform("h32", lambda h: F.pmod(a * h + b, F.lit(_MERSENNE_P)))
-        )
-
-    sig = F.array(*[perm_min(a, b) for a, b in coeffs])
-    return hashed.select("doc_id", "sh", sig.alias("sig"))
-
-
-def minhash_band_hashes_udf(k: int = 128, bands: int = 32, seed: int = 42):
-    """Arrow-batched numpy MinHash banding: array<string> shingles →
-    array<long> of ``bands`` LSH band hashes.
-
-    One (k × |shingles|) vectorized modmul per document replaces k
-    unrolled Catalyst aggregate expressions — measured ~2.6× faster end to
-    end at sf0.1 AND it avoids megabytes of generated code (which both
-    costs seconds of Janino compile per JVM and pressures the JIT code
-    cache — see session.py). The base hash is crc32 (deterministic,
-    C-speed); the (a·h+b) mod P family matches minhash_signature's, so the
-    recall analysis is identical. Candidate quality only affects recall —
-    precision always comes from the exact verify join downstream.
-    """
-    import zlib
-
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    assert k % bands == 0
-    r = k // bands
-    coeffs = _minhash_coeffs(k, seed)
-    a_vec = np.array([a for a, _ in coeffs], dtype=np.uint64)
-    b_vec = np.array([b for _, b in coeffs], dtype=np.uint64)
-    p = np.uint64(_MERSENNE_P)
-
-    @pandas_udf("array<long>")
-    def band_hashes(shingles: pd.Series) -> pd.Series:
-        out = []
-        for arr in shingles:
-            h = np.fromiter(
-                (zlib.crc32(s.encode()) for s in arr),
-                dtype=np.uint64,
-                count=len(arr),
-            )
-            if h.size == 0:
-                out.append([0] * bands)
-                continue
-            mins = ((a_vec[:, None] * h[None, :] + b_vec[:, None]) % p).min(
-                axis=1
-            ).astype(np.int64)
-            out.append(
-                [int(zlib.crc32(mins[i * r : (i + 1) * r].tobytes())) for i in range(bands)]
-            )
-        return pd.Series(out)
-
-    return band_hashes
-
-
 def minhash_band_hashes_from_text_udf(
     k: int = 128, bands: int = 32, seed: int = 42, n: int = 3
 ):
     """Arrow-batched numpy MinHash banding straight from text: string →
     array<long> of ``bands`` LSH band hashes, building the distinct n-word
-    shingle set in Python on the way.
+    shingle set in Python on the way. The one MinHash banding kernel.
 
-    Same hash family and band encoding as ``minhash_band_hashes_udf``
-    (bit-identical output), but skips materializing the shingle arrays as
-    Catalyst values for the whole corpus — profiling at sf0.1 showed the
-    HOF shingling (slice + array_join + array_distinct per shingle) was
-    ~2/3 of the whole pipeline's CPU. Shingle semantics mirror
-    ``shingle_sets`` exactly: ``split(text, ' ')`` (keeping empty tokens,
-    like Spark's split), windows of n, space-joined, de-duplicated.
-    Documents with fewer than n words get no shingles and must be filtered
-    out upstream (same contract as the shingled path)."""
+    Per document: crc32 of each shingle, then k (a·h + b) mod P
+    permutations (``_minhash_coeffs``) as one vectorized (k × |shingles|)
+    numpy modmul, the per-permutation minimum, and crc32 over each band of
+    k/bands minima. Shingling in Python instead of as Catalyst arrays
+    matters: profiling at sf0.1 showed the HOF shingling (slice +
+    array_join + array_distinct per shingle) was ~2/3 of the pipeline's
+    CPU, and k unrolled Catalyst expressions cost seconds of Janino
+    compile per JVM. Shingle semantics mirror ``shingle_sets`` exactly:
+    ``split(text, ' ')`` (keeping empty tokens, like Spark's split),
+    windows of n, space-joined, de-duplicated. Documents with fewer than
+    n words get no shingles and must be filtered out upstream."""
     import zlib
 
     import numpy as np
@@ -407,24 +330,26 @@ def minhash_lsh_pairs_docs(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs from raw documents — the corpus-
-    scale variant of ``minhash_lsh_pairs``.
+    """MinHash+LSH near-duplicate pairs from raw documents,
+    exact-verified — the one MinHash-LSH operator.
 
-    Two structural wins over banding a pre-shingled DataFrame:
-    (1) the full-corpus pass is ONE Arrow-batched UDF from text (shingling
-    + crc32 + minhash in a single numpy kernel per batch) — no Catalyst
-    shingle arrays materialize for the 99.9% of documents that never
-    become candidates; (2) the exact-verify join builds shingle sets only
-    for documents that appear in a candidate pair (an equi-join with the
-    distinct candidate-id set), so verify cost scales with duplicate
-    density, not corpus size. Output is identical to
-    ``minhash_lsh_pairs(shingle_sets(docs), ...)``: same hash family, same
-    buckets, same exact-jaccard verification.
+    sign+band (one Arrow-batched numpy UDF from text) → bucket-then-expand
+    on (band_idx, band_hash) → exact Jaccard verify. Buckets expand pairs
+    in-row instead of a self-join, so the banding runs once; a boilerplate
+    mega-bucket falls back to the linear star above LSH_BUCKET_CAP (see
+    ``_bucket_pairs``). Two structural wins over banding a pre-shingled
+    DataFrame: (1) no Catalyst shingle arrays materialize for the 99.9% of
+    documents that never become candidates; (2) the exact-verify join
+    builds shingle sets only for documents that appear in a candidate pair
+    (an equi-join with the distinct candidate-id set), so verify cost
+    scales with duplicate density, not corpus size. Recall at
+    j ≥ threshold is 1-(1-j^r)^bands (≈1-5e-8 at j=0.8 with k=128/b=32,
+    r = k/bands); precision is exact — every pair is ``jaccard >=
+    threshold`` on the full shingle sets, as in ``ngram_jaccard_pairs``.
     """
     sig = minhash_band_hashes_from_text_udf(k=k, bands=bands, seed=seed, n=n)
-    # Same contract as the shingled path: docs with < n words have no
-    # shingles, can't be near-duplicates, and would otherwise form one
-    # degenerate all-zeros mega-bucket.
+    # Docs with < n words have no shingles, can't be near-duplicates, and
+    # would otherwise form one degenerate all-zeros mega-bucket.
     base = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).filter(F.size(words(F.col("text"))) >= n)
@@ -457,63 +382,6 @@ def minhash_lsh_pairs_docs(
     sh_cand = shingle_sets(base.join(cand_ids, "doc_id"), n=n)
     sa = sh_cand.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sh_cand.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_lsh_pairs(
-    shingled: DataFrame,
-    threshold: float,
-    k: int = 128,
-    bands: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs, exact-verified.
-
-    sign+band (numpy, map-only) → bucket join on (band_idx, band_hash) →
-    exact Jaccard verify. The only shuffles are the band-bucket join and
-    the verify join; candidate volume scales with true duplicate density,
-    not n². Recall at j≥threshold is 1-(1-j^r)^bands (≈1-5e-8 at j=0.8
-    with k=128/b=32); precision is exact.
-    """
-    sig = minhash_band_hashes_udf(k=k, bands=bands, seed=seed)
-    # Drop docs with no shingles (< n words) BEFORE banding: they all hash
-    # to the same [0]*bands signature, which (a) forms one degenerate
-    # mega-bucket that expands O(n²) pairs at scale and (b) feeds 0/0 into
-    # the jaccard verify. They can't be near-duplicates at any positive
-    # threshold, so excluding them is semantics-preserving.
-    shingled = shingled.filter(F.size("sh") > 0)
-    banded = shingled.select(
-        "doc_id", F.posexplode(sig("sh"))
-    ).select(
-        "doc_id", F.col("pos").alias("band_idx"), F.col("col").alias("band_hash")
-    )
-    # Bucket-then-expand instead of a self-join: one groupBy computes the
-    # banding exactly once (a self-join would evaluate the signature UDF on
-    # both sides unless ReuseExchange happens to fire) and pairs expand
-    # in-row per bucket. LSH buckets are near-duplicate cliques and stay
-    # small on ordinary corpora (run exact_dedup first so identical
-    # documents can't seed one), but "small" is data-dependent — a
-    # boilerplate mega-bucket falls back to the linear star expansion
-    # above LSH_BUCKET_CAP (r13; see _bucket_pairs).
-    cand = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    sa = shingled.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = shingled.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -725,9 +593,10 @@ def simhash_pairs(
             )
         ).alias("band"),
     ).select("doc_id", "simhash", "band.band_idx", "band.band_val")
-    # Same bucket-then-expand shape as minhash_lsh_pairs: one aggregation,
-    # no self-join; each bucket expands its (doc_id, simhash) structs to
-    # pairs in-row, then the exact Hamming filter runs on the pair.
+    # Same bucket-then-expand shape as minhash_lsh_pairs_docs: one
+    # aggregation, no self-join; each bucket expands its (doc_id, simhash)
+    # structs to pairs in-row, then the exact Hamming filter runs on the
+    # pair.
     members = F.array_sort(
         F.collect_list(F.struct(F.col("doc_id"), F.col("simhash")))
     )
@@ -915,60 +784,6 @@ def span_dedup(
             F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
         )
     )
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components over an undirected pair graph → (node, comp)
-    with comp = min node id reachable. The dedup-clustering step: group
-    mutually-near-duplicate documents, keep comp as the canonical survivor.
-
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels; converges in O(component
-    diameter) rounds (near-dup clusters are tiny and dense, so 2-3 rounds
-    in practice; ``max_iter`` bounds adversarial chains). Each round is one
-    shuffle-bounded join + groupBy; ``localCheckpoint`` truncates the
-    lineage so the plan doesn't grow exponentially with iterations — the
-    standard Spark idiom for iterative graph algorithms.
-    """
-    sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    sym = sym.distinct().localCheckpoint(eager=False)
-    labels = (
-        sym.select(F.col("u").alias("node")).distinct().withColumn("comp", F.col("node"))
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["u"] == labels["node"])
-            .groupBy(F.col("v").alias("node2"))
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
 
 
 def word_prefix_encoding(text_col: Column, prefix_words: int) -> Column:

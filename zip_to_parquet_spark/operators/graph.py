@@ -1,13 +1,13 @@
 """Iterative graph algorithms over edge DataFrames.
 
-Companion to ``operators.dedupe.connected_components`` (min-label
-propagation): same Spark idioms — per-iteration keyed join + groupBy,
-``localCheckpoint`` to truncate lineage — applied to link-analysis
-scoring. The reference has no graph surface (SURVEY §2.C: no joins at
-all); this extends the LLM-pipeline library, where link-graph scores
-(PageRank over a host/citation graph) are a standard corpus-quality
-signal (e.g. Common Crawl host ranking feeding crawl frontier and
-quality weighting).
+Connected components (``connected_components_star``, the one CC operator —
+it also clusters the near-duplicate pair graphs of the dedup keys), BFS,
+PageRank, triangle counts. Shared Spark idioms: per-iteration keyed join +
+groupBy, ``localCheckpoint`` to truncate lineage. The reference has no
+graph surface (SURVEY §2.C: no joins at all); this extends the
+LLM-pipeline library, where link-graph scores (PageRank over a
+host/citation graph) are a standard corpus-quality signal (e.g. Common
+Crawl host ranking feeding crawl frontier and quality weighting).
 """
 
 from __future__ import annotations
@@ -159,7 +159,7 @@ def pagerank_integer(
     is the known caveat; AQE skew-join or salting applies unchanged) and
     one groupBy(dst) with map-side combine. ``localCheckpoint`` after
     each step keeps the plan from growing with ``iters`` — the standard
-    Spark iterative-algorithm idiom (same as connected_components).
+    Spark iterative-algorithm idiom (same as connected_components_star).
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
@@ -206,11 +206,11 @@ def connected_components_star(
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014) → (node, comp), comp = min node id of the component.
 
-    Second physical strategy for the same semantics as
-    ``dedupe.connected_components`` (min-label propagation). Why it
-    exists: label propagation converges in O(diameter) rounds — fine for
-    tiny dense near-dup clusters, quadratic pain on long chains (the
-    pathological crawl-graph shape). Star operations contract the graph
+    The one connected-components operator: ``dedup_clusters``,
+    ``split_group_aware`` and ``dedup_cluster_keep_best`` cluster their
+    near-duplicate pair graphs with it. Min-label propagation needs
+    O(diameter) rounds, so a long chain (the pathological crawl-graph
+    shape) outruns any fixed round cap; star operations contract the graph
     toward a star in O(log² n) rounds REGARDLESS of diameter, each round
     two node-keyed shuffles:
 
@@ -226,8 +226,8 @@ def connected_components_star(
     fingerprint (count + bit_xor of xxhash64), one tiny agg per round;
     ``localCheckpoint`` truncates lineage; non-convergence within
     ``max_iter`` raises instead of returning a non-star (and therefore
-    corrupt) labeling. Output covers every node that appears in an edge
-    (same domain as the label-propagation operator).
+    corrupt) labeling. Output covers every node that appears in a
+    non-self-loop edge; an empty edge set gives no rows.
     """
     def canon(df: DataFrame) -> DataFrame:
         """One canonical orientation (u > v) for the undirected edge set —

@@ -168,9 +168,10 @@ def cosine_lsh_pairs(
 
     Shape: one numpy matmul per Arrow batch computes 32 bucket keys per
     vector; buckets group on (table_idx, bucket) and expand pairs in-row
-    (same bucket-then-expand idiom as minhash_lsh_pairs — no self-join, no
-    cartesian); the exact `cosine ≥ threshold` predicate then decides every
-    surviving pair, so precision is exact and only recall is probabilistic.
+    (same bucket-then-expand idiom as minhash_lsh_pairs_docs — no
+    self-join, no cartesian); the exact `cosine ≥ threshold` predicate then
+    decides every surviving pair, so precision is exact and only recall is
+    probabilistic.
     Bucket count per table is FIXED at 2^n_planes, so bucket size grows
     linearly with the corpus — n_planes must scale with log2(corpus) on a
     real deployment, and mis-sizing is bounded rather than fatal: above
@@ -274,12 +275,14 @@ def ivf_sample_modulus(n: int, k: int, sample_per_centroid: int) -> int:
     return max(n // max(k * sample_per_centroid, k), 1)
 
 
-def lloyds_codebook(x, k: int, iters: int = 10, seed: int = 42):
-    """Pure-numpy Lloyd's k-means over an (n, dim) float64 sample —
-    deterministic (fixed init from the first k rows, fixed re-seed
-    RandomState), so the SAME array trains the SAME codebook anywhere it
-    runs: the driver-side oracle generator replays this exact function to
-    inline centroids as SQL literals."""
+def _lloyds(x, k: int, iters: int, seed: int, assign_fn):
+    """Pure-numpy Lloyd's k-means over an (n, dim) float64 sample;
+    ``assign_fn(x, cents)`` → per-row centroid index is the only step the
+    two public trainers vary. Deterministic (fixed init from the first k
+    rows, an empty cluster re-seeds from a fixed-seed RandomState), so the
+    SAME array trains the SAME codebook anywhere it runs: the driver-side
+    oracle generators replay the public trainers to inline centroids as
+    SQL literals."""
     import numpy as np
 
     if len(x) < k:
@@ -287,10 +290,7 @@ def lloyds_codebook(x, k: int, iters: int = 10, seed: int = 42):
     rng = np.random.RandomState(seed)
     cents = x[:k].copy()  # deterministic init: first k sampled ids
     for _ in range(iters):
-        # Cosine assignment == euclidean on normalized vectors.
-        xn = x / np.linalg.norm(x, axis=1, keepdims=True).clip(min=1e-12)
-        cn = cents / np.linalg.norm(cents, axis=1, keepdims=True).clip(min=1e-12)
-        assign = (xn @ cn.T).argmax(axis=1)
+        assign = assign_fn(x, cents)
         for j in range(k):
             members = x[assign == j]
             if len(members):
@@ -298,6 +298,26 @@ def lloyds_codebook(x, k: int, iters: int = 10, seed: int = 42):
             else:
                 cents[j] = x[rng.randint(len(x))]
     return [[float(v) for v in c] for c in cents]
+
+
+def _cosine_assign(x, cents):
+    import numpy as np
+
+    # Cosine assignment == euclidean on normalized vectors.
+    xn = x / np.linalg.norm(x, axis=1, keepdims=True).clip(min=1e-12)
+    cn = cents / np.linalg.norm(cents, axis=1, keepdims=True).clip(min=1e-12)
+    return (xn @ cn.T).argmax(axis=1)
+
+
+def _l2_assign(x, cents):
+    d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=-1)
+    return d.argmin(axis=1)  # first-min ties == lowest code
+
+
+def lloyds_codebook(x, k: int, iters: int = 10, seed: int = 42):
+    """Cosine Lloyd's k-means (the IVF coarse trainer): each round assigns
+    rows by normalized-cosine argmax. See ``_lloyds``."""
+    return _lloyds(x, k, iters, seed, _cosine_assign)
 
 
 def train_ivf_codebook(
@@ -433,25 +453,10 @@ def lloyds_codebook_l2(x, k: int, iters: int = 10, seed: int = 42):
     """Euclidean Lloyd's k-means over an (n, dim) float64 sample — the PQ
     sub-quantizer trainer (raw subvectors, L2 assignment: unlike the
     cosine variant above, PQ must preserve magnitudes because ADC sums
-    un-normalized partial inner products). Deterministic exactly like
-    ``lloyds_codebook`` (first-k init, fixed RandomState), so the oracle
-    generator replays it bit-for-bit."""
-    import numpy as np
-
-    if len(x) < k:
-        raise ValueError(f"sample of {len(x)} rows cannot seed {k} centroids")
-    rng = np.random.RandomState(seed)
-    cents = x[:k].copy()
-    for _ in range(iters):
-        d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=-1)
-        assign = d.argmin(axis=1)  # first-min ties == lowest code
-        for j in range(k):
-            members = x[assign == j]
-            if len(members):
-                cents[j] = members.mean(axis=0)
-            else:
-                cents[j] = x[rng.randint(len(x))]
-    return [[float(v) for v in c] for c in cents]
+    un-normalized partial inner products). Same deterministic loop as
+    ``lloyds_codebook`` (``_lloyds``), so the oracle generator replays it
+    bit-for-bit."""
+    return _lloyds(x, k, iters, seed, _l2_assign)
 
 
 def train_pq_codebooks(

@@ -36,10 +36,11 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed than the window holds, every slot must at least be spent on a
 # changed key.
 #
-# Pin basis: ``python scripts/window_pin.py --list`` on the tree where
-# zipsource's readers share one member decoder (``_member_bytes``).
+# Pin basis: ``python scripts/window_pin.py --list`` on the tree that
+# deleted the ``dedup_clusters_star`` key (its slot went to the next key in
+# the rotation; ``set_priority`` raises on an unregistered key).
 # session.py and runtime._package_zip are in every key's closure, so the
-# tool counts all 317 keys as changed and the pin is its oldest-green-first
+# tool counts all 316 keys as changed and the pin is its oldest-green-first
 # rotation. Engine commits land before the correctness sweep (README
 # "Round discipline"); keys outside the window stay value-verified by the
 # sf0.001 oracle-parity suite on every test run.
@@ -49,7 +50,6 @@ set_priority([
     "q14_promo_revenue",
     "q19_disjunctive_revenue",
     "dedup_incremental_vs_snapshot",
-    "dedup_clusters_star",
     "text_chunk_windows_udtf",
     "mapinarrow_text_metrics",
     "text_collocations_pmi",
@@ -94,6 +94,7 @@ set_priority([
     "agg_kmv_distinct",
     "dq_expectations_report",
     "agg_sampled_percentiles",
+    "join_null_aware_anti",
 ])
 
 __all__ = ["all_queries", "all_oracle_sql", "query", "set_priority"]

@@ -689,20 +689,18 @@ def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivor selection by QUALITY, not id: per near-dup cluster
-    (connected components over exact j>=0.8 pairs, as dedup_clusters),
-    keep the longest document (n_chars, doc_id tie-break) — the policy
-    real pipelines use (keep the best-quality copy, not the
-    lowest-numbered one). Spark side: one aggregation with a struct
-    argmax over the components join — no window over the corpus."""
-    from zip_to_parquet_spark.operators.dedupe import (
-        connected_components,
-        ngram_jaccard_pairs,
-    )
+    (large-star/small-star connected components over exact j>=0.8 pairs,
+    as dedup_clusters), keep the longest document (n_chars, doc_id
+    tie-break) — the policy real pipelines use (keep the best-quality
+    copy, not the lowest-numbered one). Spark side: one aggregation with a
+    struct argmax over the components join — no window over the corpus."""
+    from zip_to_parquet_spark.operators.dedupe import ngram_jaccard_pairs
+    from zip_to_parquet_spark.operators.graph import connected_components_star
 
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     sh = shingle_sets(docs)
     pairs = ngram_jaccard_pairs(sh, threshold=0.8).select("doc_a", "doc_b")
-    comps = connected_components(pairs).select(
+    comps = connected_components_star(pairs).select(
         F.col("node").alias("doc_id"), "comp"
     )
     joined = comps.join(docs.select("doc_id", "n_chars"), "doc_id")

@@ -1565,10 +1565,9 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(media)
 
 
-# Shared by dedup_clusters and dedup_clusters_star: two physical
-# strategies (min-label propagation vs large-star/small-star), ONE
-# hash-verified semantics — the events_funnel / events_funnel_partitioned
-# precedent applied to graph contraction.
+# dedup_clusters' oracle: the same components as
+# graph.connected_components_star, computed as a recursive transitive
+# closure — tractable because fixture near-dup clusters are tiny.
 from zip_to_parquet_spark.operators.dedupe import duck_hot_having_sql as _hot_sql
 
 _CLUSTERS_ORACLE = """
@@ -1613,16 +1612,16 @@ _CLUSTERS_ORACLE = """
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clustering: connected components over the exact near-dup
     pair graph (j≥0.8); comp = min doc_id of the cluster = the canonical
-    survivor. Spark side is iterative min-label propagation (one
-    shuffle-bounded join+groupBy per round, localCheckpoint-truncated
-    lineage); the oracle computes the same components with a recursive
-    transitive-closure CTE — tractable because near-dup clusters are tiny,
-    which is also why the Spark loop converges in 2-3 rounds."""
-    from zip_to_parquet_spark.operators.dedupe import connected_components
+    survivor. Spark side is large-star/small-star contraction
+    (graph.connected_components_star: O(log² n) rounds whatever the
+    cluster's diameter, each two node-keyed shuffles, localCheckpoint-
+    truncated lineage); the oracle computes the same components with a
+    recursive transitive-closure CTE."""
+    from zip_to_parquet_spark.operators.graph import connected_components_star
 
     sh = shingle_sets(_documents_spread(spark, sf_dir))
     pairs = ngram_jaccard_pairs(sh, threshold=0.8).select("doc_a", "doc_b")
-    return connected_components(pairs).select(
+    return connected_components_star(pairs).select(
         F.col("node").alias("doc_id"), "comp"
     )
 
@@ -2594,25 +2593,6 @@ def corpus_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return snapshot_delta(docs, simulated_refresh(docs))
-
-
-@query("dedup_clusters_star", oracle=_CLUSTERS_ORACLE)
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clustering via alternating large-star/small-star
-    contraction (Kiveris et al. SoCC 2014,
-    operators/graph.connected_components_star) — the O(log² n)-round
-    algorithm whose round count does NOT depend on component diameter,
-    i.e. the strategy that survives pathological long-chain near-dup
-    graphs where min-label propagation needs O(diameter) rounds. Same
-    input pair graph and IDENTICAL oracle as dedup_clusters: two
-    physical strategies, one hash-verified semantics."""
-    from zip_to_parquet_spark.operators.graph import connected_components_star
-
-    sh = shingle_sets(_documents_spread(spark, sf_dir))
-    pairs = ngram_jaccard_pairs(sh, threshold=0.8).select("doc_a", "doc_b")
-    return connected_components_star(pairs).select(
-        F.col("node").alias("doc_id"), "comp"
-    )
 
 
 @query("text_chunk_windows_udtf", oracle=_CHUNK_ORACLE)
@@ -4045,21 +4025,22 @@ def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset_split, applied to the representative instead of the row.
 
     Exactness: the cluster id is exact (guarded inverted-index Jaccard
-    pairs + min-label components, both already hash-verified keys);
-    md5 bucketing and group stats are engine-neutral integers/strings.
+    pairs + star-contraction components, as in the hash-verified
+    dedup_clusters); md5 bucketing and group stats are engine-neutral
+    integers/strings.
 
     Scale shape: reuses the dedup family's bounded machinery (df-capped
-    inverted index, candidate-scoped verify, 2-3 round min-label
-    propagation over tiny components), then one groupBy on group_rep
+    inverted index, candidate-scoped verify, large-star/small-star
+    contraction in O(log² n) rounds), then one groupBy on group_rep
     and one broadcast-size join back (components cover only the
     near-dup minority, so the cc relation is small; the LEFT join is
     doc_id-keyed either way). No corpus-wide windows, no collect."""
-    from zip_to_parquet_spark.operators.dedupe import connected_components
+    from zip_to_parquet_spark.operators.graph import connected_components_star
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     sh = shingle_sets(_documents_spread(spark, sf_dir))
     pairs = ngram_jaccard_pairs(sh, threshold=0.8).select("doc_a", "doc_b")
-    cc = connected_components(pairs).select(
+    cc = connected_components_star(pairs).select(
         F.col("node").alias("doc_id"), "comp"
     )
     rep = d.join(cc, "doc_id", "left").select(

@@ -66,10 +66,15 @@ def set_priority(keys: list[str]) -> None:
     iteration order; round 1 showed registration order silently starved the
     reference-parity (``zip_*``), streaming, temporal, and LLM-tail queries of
     any oracle row. The priority list puts those first. Keys not listed keep
-    their registration order after the prioritized block; unknown keys are
-    ignored (they may be pruned later without touching the list).
+    their registration order after the prioritized block. A key that is not
+    registered raises ``ValueError``: a pin naming a deleted key would
+    silently shrink the driver window by one slot. Call it after every
+    query module has registered.
     """
     global _PRIORITY
+    unknown = [k for k in keys if k not in _QUERIES]
+    if unknown:
+        raise ValueError(f"set_priority: unregistered query keys {unknown}")
     _PRIORITY = list(keys)
 
 

@@ -613,6 +613,24 @@ def _conf_bytes(spark: SparkSession, key: str) -> int:
     return int(num) * _BYTE_UNITS[unit]
 
 
+def _register_source(spark: SparkSession, skip_counter) -> None:
+    """Register the ``zipmembers`` data source for both readers: ship this
+    package (workers must import this module to unpickle the source), and
+    with a ``skip_counter`` register a dynamic subclass carrying it —
+    pickled by value, accumulator included."""
+    from zip_to_parquet_spark.runtime import ensure_shipped
+
+    ensure_shipped(spark)
+    source_cls = ZipMembersDataSource
+    if skip_counter is not None:
+        source_cls = type(
+            "ZipMembersDataSourceCounted",
+            (ZipMembersDataSource,),
+            {"_skip_acc": skip_counter},
+        )
+    spark.dataSource.register(source_cls)
+
+
 def read_zip_members(
     spark: SparkSession,
     patterns: list[str] | str,
@@ -650,23 +668,12 @@ def read_zip_members(
     ``spark.sql.files.maxPartitionBytes``, ``spark.sql.files.openCostInBytes``
     and ``defaultParallelism``; see the module docstring's scale notes.
     """
-    from zip_to_parquet_spark.runtime import ensure_shipped
-
     paths = _expand_patterns(patterns)
     member_regex = glob_to_regex(member_glob) if member_glob else ""
-    ensure_shipped(spark)  # workers must import this module to unpickle
+    _register_source(spark, skip_counter)
     # Runtime conf (the driver harness owns its session): without it Spark
     # refuses a reader that implements pushFilters.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    source_cls = ZipMembersDataSource
-    if skip_counter is not None:
-        # Dynamic subclass → pickled by value, accumulator included.
-        source_cls = type(
-            "ZipMembersDataSourceCounted",
-            (ZipMembersDataSource,),
-            {"_skip_acc": skip_counter},
-        )
-    spark.dataSource.register(source_cls)
     # Packing inputs: Spark's own file-split confs (see _pack).
     max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes")
@@ -705,18 +712,8 @@ def read_zip_members_stream(
     ``skip_counter``: as in the batch reader — with ``on_error='skip'``
     each dropped archive adds 1; the count accumulates ACROSS micro-batches
     (a monitoring counter, not a per-batch metric)."""
-    from zip_to_parquet_spark.runtime import ensure_shipped
-
     member_regex = glob_to_regex(member_glob) if member_glob else ""
-    ensure_shipped(spark)
-    source_cls = ZipMembersDataSource
-    if skip_counter is not None:
-        source_cls = type(
-            "ZipMembersDataSourceCounted",
-            (ZipMembersDataSource,),
-            {"_skip_acc": skip_counter},
-        )
-    spark.dataSource.register(source_cls)
+    _register_source(spark, skip_counter)
     return (
         spark.readStream.format("zipmembers")
         .option("stream_glob", pattern)
