@@ -36,6 +36,7 @@ commit.
 from __future__ import annotations
 
 import importlib.util
+import signal
 import sys
 from pathlib import Path
 
@@ -172,4 +173,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    # A reader that closes early (`| head`) ends the report quietly, as it
+    # does for any Unix filter, instead of with a BrokenPipeError traceback.
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)
     main()

@@ -31,8 +31,30 @@ def test_only_the_harness_and_degenerate_sweep_build_a_session():
     assert builders == ["_harness.py", "degenerate_sweep.py"]
 
 
+_NO_HISTORY = _git("rev-parse", "--verify", "HEAD").returncode != 0
+
+
+@pytest.mark.skipif(_NO_HISTORY, reason="window_pin.py reads the git history")
+def test_window_pin_exits_quietly_when_its_reader_closes():
+    """`window_pin.py | head -2` must not end in a BrokenPipeError
+    traceback. The reader here closes before reading a line, so every
+    write of the report hits a closed pipe."""
+    proc = subprocess.Popen(
+        [sys.executable, str(SCRIPTS / "window_pin.py")],
+        cwd=REPO,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+    )
+    proc.stdout.close()
+    err = proc.stderr.read()
+    proc.wait(timeout=120)
+    assert "Traceback" not in err, err
+    assert "BrokenPipeError" not in err, err
+
+
 @pytest.mark.skipif(
-    _git("rev-parse", "--verify", "HEAD").returncode != 0,
+    _NO_HISTORY,
     reason="ab.py compares git trees; this checkout has no git history",
 )
 def test_ab_self_comparison_passes_parity_and_removes_its_worktree():

@@ -3,8 +3,11 @@ must reproduce the batch answers (full oracle parity at sf0.001)."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from zip_to_parquet_spark.plans import all_oracle_sql, all_queries
 from zip_to_parquet_spark.runtime import ensure_shipped
+from zip_to_parquet_spark.schema import load_table
 from zip_to_parquet_spark.streaming import (
     read_events_stream,
     run_stream_to_memory,
@@ -81,7 +84,6 @@ def test_foreachbatch_parquet_sink_exactly_once(spark, sf_dir, tmp_path):
     batch-id-partitioned parquet with dynamic overwrite. Last-writer-wins
     read-back must equal the complete-mode final state, and a re-run on
     the same checkpoint must process nothing (no duplicates)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
     from zip_to_parquet_spark.streaming import (
         read_events_stream_staged,
@@ -116,22 +118,16 @@ def test_foreachbatch_parquet_sink_exactly_once(spark, sf_dir, tmp_path):
     # here). Same window/agg expressions as the streaming plan.
     import os
 
-    scratch = os.path.join(
-        "/tmp/z2ps_stream_late",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
+    from zip_to_parquet_spark.runtime import session_scratch
+    from zip_to_parquet_spark.schema import decode_events_ts
+
+    scratch = session_scratch(spark, "z2ps_stream_late", sf_dir)
+    ontime = decode_events_ts(
+        spark,
+        lambda: spark.read.parquet(
+            *(os.path.join(scratch, f"b{i}.parquet") for i in range(3))
+        ),
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ontime = spark.read.parquet(
-        *(os.path.join(scratch, f"b{i}.parquet") for i in range(3))
-    )
-    if dict(ontime.dtypes)["ts"] == "bigint":
-        ontime = ontime.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    else:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        ontime = ontime.withColumn("ts", F.to_utc_timestamp(F.col("ts"), "UTC"))
     expected = (
         ontime.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -165,7 +161,6 @@ def test_transform_with_state_running_totals(spark, sf_dir):
     below, so the suite runs skip-free either way."""
     import pytest
 
-    from pyspark.sql import functions as F
     from zip_to_parquet_spark.streaming import (
         read_events_stream_staged,
         rocksdb_state_store,
@@ -198,8 +193,6 @@ def test_transform_with_state_running_totals(spark, sf_dir):
         )
         .collect()
     }
-    from zip_to_parquet_spark.schema import load_table
-
     want = {
         tuple(r)
         for r in load_table(spark, sf_dir, "events")
@@ -262,8 +255,6 @@ def test_jsonl_stream_writer_epoch_exactly_once(spark, sf_dir, tmp_path):
     import json
     import os
 
-    from pyspark.sql import functions as F
-
     from zip_to_parquet_spark.sources.jsonlsink import JsonlShardsDataSource
     from zip_to_parquet_spark.streaming.streams import (
         read_events_stream_ordered,
@@ -275,7 +266,7 @@ def test_jsonl_stream_writer_epoch_exactly_once(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def run_once():
-        df = read_events_stream_ordered(spark, sf_dir, n_batches=3).select(
+        df = read_events_stream_ordered(spark, sf_dir).select(
             "event_id", "event_type", F.unix_micros("ts").alias("us")
         )
         q = (
@@ -307,19 +298,8 @@ def test_jsonl_stream_writer_epoch_exactly_once(spark, sf_dir, tmp_path):
     )
     want = sorted(
         (r["event_id"], r["event_type"], r["us"])
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select(
-            "event_id",
-            "event_type",
-            F.unix_micros(
-                F.timestamp_micros(F.expr("ts div 1000"))
-                if dict(
-                    spark.read.parquet(f"{sf_dir}/events.parquet").dtypes
-                )["ts"]
-                == "bigint"
-                else F.to_utc_timestamp(F.col("ts"), "UTC")
-            ).alias("us"),
-        )
+        for r in load_table(spark, sf_dir, "events")
+        .select("event_id", "event_type", F.unix_micros("ts").alias("us"))
         .collect()
     )
     assert got == want and len(got) > 0
@@ -332,3 +312,55 @@ def test_jsonl_stream_writer_epoch_exactly_once(spark, sf_dir, tmp_path):
     assert sorted(
         (r["event_id"], r["event_type"], r["us"]) for r in committed_rows()
     ) == want
+
+
+def _sorted_us(df) -> list[int]:
+    return sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+
+
+def _drained_us(stream) -> list[int]:
+    return _sorted_us(run_stream_to_memory(stream.select("ts"), "append", "us"))
+
+
+def test_events_stream_reads_spark_written_directory(spark, sf_dir, tmp_path):
+    """Spark writes a table as a directory of part files; the stream
+    reader must load it as the batch reader does, not match nothing."""
+    ensure_shipped(spark)
+    load_table(spark, sf_dir, "events").coalesce(2).write.parquet(
+        f"{tmp_path}/events.parquet"
+    )
+    want = _sorted_us(load_table(spark, str(tmp_path), "events"))
+    assert len(want) == load_table(spark, sf_dir, "events").count() > 0
+    assert _drained_us(read_events_stream(spark, str(tmp_path))) == want
+
+
+def test_nanos_events_decode_alike_on_every_path(spark, sf_dir, tmp_path):
+    """events.ts stored as TIMESTAMP(NANOS) (one encoding the fixture
+    generator has shipped) lands on the fixture's µs instants through the
+    batch read, the fixture stream and both replays."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zip_to_parquet_spark.streaming.streams import (
+        read_events_stream_ordered,
+        read_events_stream_staged,
+    )
+
+    ensure_shipped(spark)
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    pq.write_table(
+        t.set_column(i, "ts", t["ts"].cast(pa.timestamp("ns"))),
+        f"{tmp_path}/events.parquet",
+    )
+    assert pq.read_schema(f"{tmp_path}/events.parquet").field("ts").type.unit == "ns"
+    nanos_dir = str(tmp_path)
+    want = _sorted_us(load_table(spark, sf_dir, "events"))
+    assert len(want) > 0
+    assert _sorted_us(load_table(spark, nanos_dir, "events")) == want
+    for reader in (
+        read_events_stream,
+        read_events_stream_staged,
+        read_events_stream_ordered,
+    ):
+        assert _drained_us(reader(spark, nanos_dir)) == want, reader.__name__

@@ -367,7 +367,7 @@ def stream_pattern_strict_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         strict_pairs_stateful,
     )
 
-    ev = read_events_stream_ordered(spark, sf_dir, n_batches=3)
+    ev = read_events_stream_ordered(spark, sf_dir)
     matches = run_stream_to_memory(
         strict_pairs_stateful(ev), "update", "strict_pairs"
     )

@@ -21,44 +21,49 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zip_to_parquet_spark.plans.registry import query
+from zip_to_parquet_spark.runtime import build_once, session_scratch
 from zip_to_parquet_spark.sources.zipsource import read_zip_members
 
 _N_ARCHIVES = 8
 _FIXED_DATE = (2020, 1, 1, 0, 0, 0)
 
 
-def _zip_fixture_dir(sf_dir: str) -> str:
-    """Build (once per sf_dir per machine) the deterministic zip mirror of
-    the documents table. Cached under /tmp keyed by the sf path."""
+def _fixture_dir(kind: str, sf_dir: str, build) -> str:
+    """The build-once cache of one deterministic archive mirror of
+    ``sf_dir``: ``/tmp/z2ps_fixture_<kind>_<sha of sf_dir>``, filled by
+    ``build(dir)`` through ``runtime.build_once`` (once per machine)."""
     key = hashlib.sha256(sf_dir.encode()).hexdigest()[:16]
-    out_dir = f"/tmp/z2ps_zipfix_{key}"
-    marker = os.path.join(out_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return out_dir
+    return build_once(f"/tmp/z2ps_fixture_{kind}_{key}", build)
 
-    import pyarrow.parquet as pq
 
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    docs = sorted(
-        zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist())
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    writers = [
-        zipfile.ZipFile(
-            os.path.join(out_dir, f"part{i}.zip"), "w", zipfile.ZIP_DEFLATED
+def _zip_fixture_dir(sf_dir: str) -> str:
+    """The deterministic zip mirror of the documents table."""
+
+    def build(out_dir: str) -> None:
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(
+            f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
         )
-        for i in range(_N_ARCHIVES)
-    ]
-    try:
-        for doc_id, text in docs:
-            zi = zipfile.ZipInfo(f"doc_{doc_id:06d}.txt", date_time=_FIXED_DATE)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            writers[doc_id % _N_ARCHIVES].writestr(zi, text.encode("utf-8"))
-    finally:
-        for w in writers:
-            w.close()
-    open(marker, "w").close()
-    return out_dir
+        docs = sorted(
+            zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist())
+        )
+        writers = [
+            zipfile.ZipFile(
+                os.path.join(out_dir, f"part{i}.zip"), "w", zipfile.ZIP_DEFLATED
+            )
+            for i in range(_N_ARCHIVES)
+        ]
+        try:
+            for doc_id, text in docs:
+                zi = zipfile.ZipInfo(f"doc_{doc_id:06d}.txt", date_time=_FIXED_DATE)
+                zi.compress_type = zipfile.ZIP_DEFLATED
+                writers[doc_id % _N_ARCHIVES].writestr(zi, text.encode("utf-8"))
+        finally:
+            for w in writers:
+                w.close()
+
+    return _fixture_dir("zip", sf_dir, build)
 
 
 def _members(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
@@ -187,13 +192,10 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     one file per partition — exercised by the distributed-write pytest
     battery. The verification aggregate itself is one map-side-combinable
     pass over the read-back scan."""
-    import hashlib as _hl
-
     from zip_to_parquet_spark.operators.layout import md5_low_bytes_sql
     from zip_to_parquet_spark.sinks import write_single_parquet_file
 
-    key = _hl.sha256(sf_dir.encode()).hexdigest()[:16]
-    out_dir = f"/tmp/z2ps_sinkrt_{key}"
+    out_dir = session_scratch(spark, "z2ps_sinkrt", sf_dir)
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, "members.parquet")
     df = _members(spark, sf_dir, source=False).select("name", "body", "hash")
@@ -228,54 +230,48 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _record_fixture_dir(sf_dir: str, kind: str) -> str:
     """Deterministic zip mirror of documents METADATA as structured
     records: 4 archives, each one member ``docs_<shard>.{csv,jsonl}``
-    holding the rows with doc_id % 4 == shard, doc_id-sorted. Same
-    build-once-per-sf caching as _zip_fixture_dir."""
-    import json as jsonmod
+    holding the rows with doc_id % 4 == shard, doc_id-sorted."""
 
-    key = hashlib.sha256(f"{sf_dir}:{kind}".encode()).hexdigest()[:16]
-    out_dir = f"/tmp/z2ps_recfix_{key}"
-    marker = os.path.join(out_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return out_dir
+    def build(out_dir: str) -> None:
+        import json as jsonmod
 
-    import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-    tbl = pq.read_table(
-        f"{sf_dir}/documents.parquet",
-        columns=["doc_id", "lang", "source", "n_chars"],
-    )
-    rows = sorted(
-        zip(
-            tbl.column("doc_id").to_pylist(),
-            tbl.column("lang").to_pylist(),
-            tbl.column("source").to_pylist(),
-            tbl.column("n_chars").to_pylist(),
+        tbl = pq.read_table(
+            f"{sf_dir}/documents.parquet",
+            columns=["doc_id", "lang", "source", "n_chars"],
         )
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    n_arch = 4
-    bodies = [[] for _ in range(n_arch)]
-    for doc_id, lang, src, n_chars in rows:
-        if kind == "csv":
-            bodies[doc_id % n_arch].append(f"{doc_id},{lang},{n_chars}")
-        else:
-            bodies[doc_id % n_arch].append(
-                jsonmod.dumps(
-                    {"doc_id": doc_id, "source": src, "n_chars": n_chars},
-                    sort_keys=True,
-                )
+        rows = sorted(
+            zip(
+                tbl.column("doc_id").to_pylist(),
+                tbl.column("lang").to_pylist(),
+                tbl.column("source").to_pylist(),
+                tbl.column("n_chars").to_pylist(),
             )
-    ext = "csv" if kind == "csv" else "jsonl"
-    header = ["doc_id,lang,n_chars"] if kind == "csv" else []
-    for i in range(n_arch):
-        with zipfile.ZipFile(
-            os.path.join(out_dir, f"part{i}.zip"), "w", zipfile.ZIP_DEFLATED
-        ) as zf:
-            zi = zipfile.ZipInfo(f"docs_{i}.{ext}", date_time=_FIXED_DATE)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(zi, "\n".join(header + bodies[i]) + "\n")
-    open(marker, "w").close()
-    return out_dir
+        )
+        n_arch = 4
+        bodies = [[] for _ in range(n_arch)]
+        for doc_id, lang, src, n_chars in rows:
+            if kind == "csv":
+                bodies[doc_id % n_arch].append(f"{doc_id},{lang},{n_chars}")
+            else:
+                bodies[doc_id % n_arch].append(
+                    jsonmod.dumps(
+                        {"doc_id": doc_id, "source": src, "n_chars": n_chars},
+                        sort_keys=True,
+                    )
+                )
+        ext = "csv" if kind == "csv" else "jsonl"
+        header = ["doc_id,lang,n_chars"] if kind == "csv" else []
+        for i in range(n_arch):
+            with zipfile.ZipFile(
+                os.path.join(out_dir, f"part{i}.zip"), "w", zipfile.ZIP_DEFLATED
+            ) as zf:
+                zi = zipfile.ZipInfo(f"docs_{i}.{ext}", date_time=_FIXED_DATE)
+                zi.compress_type = zipfile.ZIP_DEFLATED
+                zf.writestr(zi, "\n".join(header + bodies[i]) + "\n")
+
+    return _fixture_dir(kind, sf_dir, build)
 
 
 # Extension of A2: members are STRUCTURED RECORDS, parsed to typed columns
@@ -400,8 +396,6 @@ def zip_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.format_string("doc_%06d.txt", "doc_id").alias("name"),
         F.crc32(F.encode(prior_text, "utf-8")).alias("prior_crc"),
     )
-    from zip_to_parquet_spark.runtime import session_scratch
-
     base = session_scratch(spark, "z2ps_manifest", sf_dir)
     manifest.write.parquet(base, mode="overwrite")
     man = spark.read.parquet(base)
@@ -436,45 +430,40 @@ def zip_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _tar_fixture_dir(sf_dir: str) -> str:
     """Deterministic tar.gz mirror of the documents table (4 archives by
-    doc_id % 4, fixed mtime, gzip mtime pinned to 0) — same
-    build-once-per-sf caching as _zip_fixture_dir."""
-    import gzip
-    import tarfile as tarmod
+    doc_id % 4, fixed mtime, gzip mtime pinned to 0)."""
 
-    key = hashlib.sha256(sf_dir.encode()).hexdigest()[:16]
-    out_dir = f"/tmp/z2ps_tarfix_{key}"
-    marker = os.path.join(out_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return out_dir
+    def build(out_dir: str) -> None:
+        import gzip
+        import io
+        import tarfile as tarmod
 
-    import io
+        import pyarrow.parquet as pq
 
-    import pyarrow.parquet as pq
+        tbl = pq.read_table(
+            f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
+        )
+        docs = sorted(
+            zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist())
+        )
+        n_arch = 4
+        sinks = [io.BytesIO() for _ in range(n_arch)]
+        writers = [tarmod.open(fileobj=s, mode="w") for s in sinks]
+        try:
+            for doc_id, text in docs:
+                data = text.encode("utf-8")
+                ti = tarmod.TarInfo(f"doc_{doc_id:06d}.txt")
+                ti.size = len(data)
+                ti.mtime = 1577836800  # 2020-01-01, matches _FIXED_DATE
+                writers[doc_id % n_arch].addfile(ti, io.BytesIO(data))
+        finally:
+            for w in writers:
+                w.close()
+        for i, s in enumerate(sinks):
+            with open(os.path.join(out_dir, f"part{i}.tar.gz"), "wb") as f:
+                with gzip.GzipFile(fileobj=f, mode="wb", mtime=0) as gz:
+                    gz.write(s.getvalue())
 
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    docs = sorted(
-        zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist())
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    n_arch = 4
-    sinks = [io.BytesIO() for _ in range(n_arch)]
-    writers = [tarmod.open(fileobj=s, mode="w") for s in sinks]
-    try:
-        for doc_id, text in docs:
-            data = text.encode("utf-8")
-            ti = tarmod.TarInfo(f"doc_{doc_id:06d}.txt")
-            ti.size = len(data)
-            ti.mtime = 1577836800  # 2020-01-01, matches _FIXED_DATE
-            writers[doc_id % n_arch].addfile(ti, io.BytesIO(data))
-    finally:
-        for w in writers:
-            w.close()
-    for i, s in enumerate(sinks):
-        with open(os.path.join(out_dir, f"part{i}.tar.gz"), "wb") as f:
-            with gzip.GzipFile(fileobj=f, mode="wb", mtime=0) as gz:
-                gz.write(s.getvalue())
-    open(marker, "w").close()
-    return out_dir
+    return _fixture_dir("tar", sf_dir, build)
 
 
 @query(

@@ -11,9 +11,12 @@ mechanism, applied at runtime. Idempotent per SparkContext.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
+import shutil
 import zipfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,6 +83,39 @@ def _package_zip() -> str:
     return zpath
 
 
+def build_once(out_dir: str, build: Callable[[str], None]) -> str:
+    """Return ``out_dir``, first filling it with ``build(tmp_dir)`` if it
+    does not exist yet. The build writes into a per-process temp directory
+    that is renamed into place, so a concurrent first build never exposes
+    half-written files: the first rename wins and the loser's copy is
+    dropped."""
+    if not os.path.isdir(out_dir):
+        tmp = f"{out_dir}.{os.getpid()}.tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        build(tmp)
+        try:
+            os.rename(tmp, out_dir)
+        except OSError:  # another build renamed its copy first
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out_dir
+
+
+@contextlib.contextmanager
+def pinned_conf(spark: SparkSession, key: str, value: str):
+    """Set the runtime conf ``key`` to ``value`` for the enclosed block;
+    afterwards restore the value it had, or unset it if it had none."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     sc = spark.sparkContext
     key = sc.applicationId
@@ -99,8 +135,6 @@ def session_scratch(
     is older than ``max_age_hours`` are pruned best-effort, so a box
     running the driver round after round no longer accumulates one
     scratch set per application forever."""
-    import os
-    import shutil
     import time
 
     root = f"/tmp/{prefix}"

@@ -57,10 +57,6 @@ def get_spark(app_name: str = "zip-to-parquet-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Keep timestamp semantics aligned with the parquet fixtures.
         .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet stores TIMESTAMP(NANOS) which Spark 4 rejects
-        # (PARQUET_TYPE_ILLEGAL); read as long, normalized to µs timestamps
-        # in schema.load_table (matches DuckDB's ns→µs truncation).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Broadcast threshold: dims (region/nation/customer/supplier/part at
         # test SFs) broadcast; at 100 TB the big fact tables never qualify.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

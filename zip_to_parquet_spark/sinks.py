@@ -26,6 +26,8 @@ from typing import BinaryIO
 
 from pyspark.sql import DataFrame
 
+from zip_to_parquet_spark.runtime import pinned_conf
+
 __all__ = [
     "write_parquet",
     "write_orc",
@@ -208,7 +210,6 @@ def write_partitioned(
     """
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
     keys = [F.col(c) for c in partition_cols]
     if files_per_partition > 1:
         # pmod, not %: xxhash64 is signed and Spark's % keeps the sign,
@@ -217,10 +218,9 @@ def write_partitioned(
         dist = df.repartition(*(keys + [salt]))
     else:
         dist = df.repartition(*keys)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        if dynamic:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with pinned_conf(
+        df.sparkSession,
+        "spark.sql.sources.partitionOverwriteMode",
+        "dynamic" if dynamic else "static",
+    ):
         dist.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

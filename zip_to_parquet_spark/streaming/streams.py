@@ -12,6 +12,13 @@ group key (window/event_type, user_id) — Spark's streaming state store
 partitions by that key, so a 1000-executor cluster shards state naturally.
 Watermarks bound state size; nothing accumulates unbounded driver-side.
 
+Reading: every events stream is built by ``_events_stream`` (one
+``readStream``; ``ts`` decoded by ``schema.decode_events_ts``, the same
+decoder batch reads use). ``read_events_stream`` reads the fixture; the two
+replays, ``read_events_stream_staged`` (a deliberately late band) and
+``read_events_stream_ordered`` (time-ordered spans), split it through one
+splitter, ``_replay_stream``, and differ only in their row masks.
+
 Testability: each stream can be run with ``Trigger.AvailableNow`` over the
 bounded events fixture and drained to a memory sink, making the final
 result deterministic and DuckDB-oracle-checkable (the fixture arrives as
@@ -21,7 +28,8 @@ one file → one micro-batch, so update-mode emissions equal final state).
 from __future__ import annotations
 
 import itertools
-from collections.abc import Iterator
+import os
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,8 +43,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from zip_to_parquet_spark.runtime import build_once, pinned_conf, session_scratch
+from zip_to_parquet_spark.schema import decode_events_ts
+
 if TYPE_CHECKING:
     import pandas as pd
+    import pyarrow as pa
 
 __all__ = [
     "read_events_stream",
@@ -53,53 +65,32 @@ __all__ = [
     "rocksdb_state_store",
 ]
 
-def _events_stream_schema(ts_dtype: str) -> StructType:
-    """Streaming reads declare the schema explicitly (file streams cannot
-    infer). The fixture generator has shipped ``ts`` as TIMESTAMP(NANOS)
-    (read as long under nanosAsLong) and as TIMESTAMP(MICROS, NTZ) across
-    rounds — declare whichever physical type the file actually carries and
-    normalize after (schema.load_table documents the same dual path)."""
-    from pyspark.sql.types import TimestampNTZType
 
-    ts_field = (
-        StructField("ts", LongType())
-        if ts_dtype == "bigint"
-        else StructField("ts", TimestampNTZType())
-    )
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            ts_field,
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
+def _events_stream(spark: SparkSession, path: str, **options) -> DataFrame:
+    """The one ``readStream`` over an events parquet ``path``: a directory
+    (a Spark-written table, a replay's split files) loads directly; a
+    single file loads through ``pathGlobFilter`` on its parent, because a
+    file stream source takes only directories. File streams cannot infer,
+    so the schema comes from a batch read of the same path (footer only,
+    no job); ``schema.decode_events_ts`` then lands ``ts`` as a TIMESTAMP
+    whichever encoding the files carry."""
+
+    def read() -> DataFrame:
+        schema = spark.read.parquet(path).schema
+        reader = spark.readStream.schema(schema).options(**options)
+        if os.path.isdir(path):
+            return reader.parquet(path)
+        parent, name = os.path.split(path)
+        return reader.option("pathGlobFilter", name).parquet(parent)
+
+    return decode_events_ts(spark, read)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-based stream over the events fixture (one parquet → one
-    micro-batch under AvailableNow; a directory of arriving files in
-    production)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Schema-only batch read (no job) to detect the file's ts encoding.
-    ts_dtype = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
-    raw = (
-        spark.readStream.schema(_events_stream_schema(ts_dtype))
-        .format("parquet")
-        # File streams take a directory; the glob filter selects the events
-        # table out of the fixture dir (in production: the landing dir).
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    if ts_dtype == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # The NTZ→TIMESTAMP cast inside to_utc_timestamp resolves against the
-    # SESSION timezone; pin UTC so driver-owned non-UTC sessions cannot
-    # shift the instant (same contract as schema.load_table).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return raw.withColumn("ts", F.to_utc_timestamp(F.col("ts"), "UTC"))
+    """File-based stream over the events fixture: one micro-batch per file
+    under AvailableNow (one for the single-file fixture; a directory of
+    arriving files in production)."""
+    return _events_stream(spark, f"{sf_dir}/events.parquet")
 
 
 def windowed_counts(
@@ -257,25 +248,24 @@ def clicks_to_purchases_join(
 _SINK_IDS = itertools.count()
 
 
+# Stateful streaming CANNOT use AQE: the shuffle-partition count is pinned
+# into the checkpoint as the state-store count, one store per partition per
+# stateful operator, each with open/commit/snapshot overhead every
+# micro-batch. Sizing it to the state's cardinality is the standard
+# Structured Streaming deployment rule (it cannot change after the first
+# checkpoint). The fixture's aggregations carry thousands of keys, so 8
+# stores; a production topic with billions of keys sizes this to the
+# cluster, not to AQE.
+_STATE_PARTITIONS = "8"
+
+
 def run_stream_to_memory(
-    df: DataFrame,
-    output_mode: str,
-    name_hint: str = "stream",
-    state_partitions: int | None = 8,
+    df: DataFrame, output_mode: str, name_hint: str = "stream"
 ) -> DataFrame:
     """Drain a (bounded) stream with Trigger.AvailableNow into a memory
-    sink and return the result as a batch DataFrame.
-
-    ``state_partitions`` sizes ``spark.sql.shuffle.partitions`` for the
-    stream's lifetime (restored after): stateful streaming CANNOT use AQE,
-    so the shuffle-partition count is pinned into the checkpoint as the
-    state-store count — one store per partition per stateful operator,
-    each with open/commit/snapshot overhead every micro-batch. Sizing it
-    to the state's cardinality is the standard Structured Streaming
-    deployment rule (it cannot be changed after the first checkpoint).
-    The fixture's aggregations carry thousands of keys → 8 stores; a
-    production topic with billions of keys sizes this to the cluster, not
-    to AQE. ``None`` leaves the session value untouched.
+    sink and return the result as a batch DataFrame. The session's
+    ``spark.sql.shuffle.partitions`` is ``_STATE_PARTITIONS`` for the
+    stream's lifetime and restored after.
 
     Test/oracle harness only — the memory sink collects to the driver. The
     production path is ``df.writeStream.format("parquet")`` (or kafka etc.)
@@ -283,27 +273,78 @@ def run_stream_to_memory(
     """
     spark = df.sparkSession
     name = f"z2ps_{name_hint}_{next(_SINK_IDS)}"
-
-    def _drain():
-        q = (
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", _STATE_PARTITIONS):
+        (
             df.writeStream.trigger(availableNow=True)
             .format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-
-    if state_partitions is None:
-        _drain()  # genuinely touch-free: no conf read or write
-    else:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-            _drain()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
+
+
+def _replay_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    masks: Callable[[pa.Array, int, int], tuple[pa.Array, ...]],
+) -> DataFrame:
+    """Events replayed as one split file per ``masks`` entry, one
+    micro-batch each, in mask order. The split set is built once per
+    session under ``runtime.session_scratch(spark, tag, sf_dir)``.
+
+    ``masks(us, mn, mx)`` gets the integer µs of every event (floor for
+    ns, matching DuckDB's truncation) and their min and max (0 and 0 for
+    empty events) and returns the boolean row masks of the files. The
+    split files are written driver-side with pyarrow (bounded: the events
+    fixture; production never does this — real streams are files
+    arriving over time). pyarrow reads a single file or a Spark-written
+    directory alike. Every split carries ``ts`` as a µs-precision naive
+    timestamp (the oracle's ``epoch_us`` truncation) with the source's
+    schema metadata dropped, so Spark always reads one known physical
+    type. Under ``maxFilesPerTrigger=1`` + AvailableNow the files process
+    in mtime order, pinned 100 s apart."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def split(out_dir: str) -> None:
+        t = pq.read_table(f"{sf_dir}/events.parquet")
+        ts = t["ts"]
+        if str(ts.type) == "int64" or getattr(ts.type, "unit", None) == "ns":
+            us = pc.divide(pc.cast(ts, "int64"), 1000)
+        else:
+            us = pc.cast(pc.cast(ts, "timestamp[us]"), "int64")
+        t = t.set_column(
+            t.schema.get_field_index("ts"), "ts", pc.cast(us, pa.timestamp("us"))
+        ).replace_schema_metadata(None)
+        mn = pc.min(us).as_py()
+        mx = pc.max(us).as_py()
+        if mn is None:  # empty events: empty batches, no time span
+            mn = mx = 0
+        for i, mask in enumerate(masks(us, mn, mx)):
+            path = os.path.join(out_dir, f"b{i}.parquet")
+            pq.write_table(t.filter(mask), path)
+            os.utime(path, (1_000_000 + 100 * i, 1_000_000 + 100 * i))
+
+    scratch = build_once(session_scratch(spark, tag, sf_dir), split)
+    return _events_stream(spark, scratch, maxFilesPerTrigger=1)
+
+
+def _late_band_masks(us: pa.Array, mn: int, mx: int) -> tuple[pa.Array, ...]:
+    import pyarrow.compute as pc
+
+    t1 = mn + (mx - mn) * 6 // 10
+    t2 = mn + (mx - mn) * 9 // 10
+    t3 = mn + (mx - mn) * 95 // 100
+    return (
+        pc.less(us, t1),  # on time
+        pc.and_(pc.greater_equal(us, t2), pc.less(us, t3)),  # newer
+        pc.greater_equal(us, t3),  # newest (outruns the late band)
+        pc.and_(pc.greater_equal(us, t1), pc.less(us, t2)),  # late
+    )
 
 
 def read_events_stream_staged(
@@ -323,84 +364,21 @@ def read_events_stream_staged(
     integer MICROSECONDS from the events' (min, max) — the same
     arithmetic a SQL oracle can reproduce exactly.
 
-    Under ``maxFilesPerTrigger=1`` + AvailableNow the files process in
-    mtime order (pinned 100 s apart). Measured Spark semantics (pinned
-    here because they are NOT the naive reading of the docs): the
-    watermark used to FILTER batch N's input is computed from data
-    through batch N−2 (one-batch update lag), while end-of-batch
-    EVICTION/emission uses data through N−1. Hence the late file must
-    trail the data that outruns it by TWO batches: batch 3's input
-    filter runs at max(file 0 ∪ file 1) − delay ≈ t3 − delay, which is
-    ≈5% of the span (≫ the 10-min delay) above every file-3 window —
-    ALL of file 3 is dropped as late. A 2- or 3-file split drops
+    Measured Spark semantics (pinned here because they are NOT the naive
+    reading of the docs): the watermark used to FILTER batch N's input is
+    computed from data through batch N−2 (one-batch update lag), while
+    end-of-batch EVICTION/emission uses data through N−1. Hence the late
+    file must trail the data that outruns it by TWO batches: batch 3's
+    input filter runs at max(file 0 ∪ file 1) − delay ≈ t3 − delay,
+    which is ≈5% of the span (≫ the 10-min delay) above every file-3
+    window — ALL of file 3 is dropped as late. A 2- or 3-file split drops
     nothing (verified empirically) because of that same lag.
-
-    The split files are written driver-side with pyarrow (bounded: the
-    events fixture; production never does this — real streams are files
-    arriving over time), preserving the fixture's physical ts encoding so
-    the dual NANOS/NTZ read path stays exercised.
     """
-    import os
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    scratch = os.path.join(
-        "/tmp/z2ps_stream_late",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(scratch, "_SPLIT_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(scratch, exist_ok=True)
-        t = pq.read_table(f"{sf_dir}/events.parquet")
-        ts = t["ts"]
-        unit = ts.type.unit if hasattr(ts.type, "unit") else None
-        # Integer µs per row (floor for ns — matches DuckDB's truncation).
-        if unit == "ns" or str(ts.type) == "int64":
-            us = pc.divide(pc.cast(ts, "int64"), 1000)
-        else:
-            us = pc.cast(pc.cast(ts, "timestamp[us]"), "int64")
-        mn = pc.min(us).as_py()
-        mx = pc.max(us).as_py()
-        if mn is None:  # empty events: four empty batches, no time span
-            mn = mx = 0
-        t1 = mn + (mx - mn) * 6 // 10
-        t2 = mn + (mx - mn) * 9 // 10
-        t3 = mn + (mx - mn) * 95 // 100
-        splits = (
-            pc.less(us, t1),  # on time
-            pc.and_(pc.greater_equal(us, t2), pc.less(us, t3)),  # newer
-            pc.greater_equal(us, t3),  # newest (outruns the late band)
-            pc.and_(pc.greater_equal(us, t1), pc.less(us, t2)),  # late
-        )
-        for i, mask in enumerate(splits):
-            path = os.path.join(scratch, f"b{i}.parquet")
-            pq.write_table(t.filter(mask), path)
-            os.utime(path, (1_000_000 + 100 * i, 1_000_000 + 100 * i))
-        with open(marker, "w") as f:
-            f.write("ok")
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_dtype = dict(spark.read.parquet(scratch).dtypes)["ts"]
-    raw = (
-        spark.readStream.schema(_events_stream_schema(ts_dtype))
-        .format("parquet")
-        .option("pathGlobFilter", "b*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(scratch)
-    )
-    if ts_dtype == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return raw.withColumn("ts", F.to_utc_timestamp(F.col("ts"), "UTC"))
+    return _replay_stream(spark, sf_dir, "z2ps_stream_late", _late_band_masks)
 
 
 def stream_to_parquet_foreachbatch(
-    df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    state_partitions: int | None = 8,
+    df: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> None:
     """Production sink pattern: UPDATE-mode emissions land in parquet via
     ``foreachBatch``, partitioned by micro-batch id with DYNAMIC partition
@@ -430,27 +408,17 @@ def stream_to_parquet_foreachbatch(
             .parquet(out_dir)
         )
 
-    spark = df.sparkSession
-
-    def _drain() -> None:
-        q = (
+    with pinned_conf(
+        df.sparkSession, "spark.sql.shuffle.partitions", _STATE_PARTITIONS
+    ):
+        (
             df.writeStream.foreachBatch(write_batch)
             .trigger(availableNow=True)
             .outputMode("update")
             .option("checkpointLocation", checkpoint_dir)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-
-    if state_partitions is None:
-        _drain()
-        return
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        _drain()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def tws_running_totals(events: DataFrame):
@@ -534,110 +502,41 @@ def tws_running_totals(events: DataFrame):
     )
 
 
-import contextlib as _contextlib
-
-
-@_contextlib.contextmanager
 def rocksdb_state_store(spark: SparkSession):
     """Pin the RocksDB state store provider for the enclosed streaming
     query (transformWithState requires it; it is also the provider that
     holds production-scale state off-heap). Restores the prior provider
     after."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
+    return pinned_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming."
         "state.RocksDBStateStoreProvider",
     )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
-def read_events_stream_ordered(
-    spark: SparkSession, sf_dir: str, n_batches: int = 3
-) -> DataFrame:
-    """Events replayed as ``n_batches`` TIME-ORDERED micro-batches
-    (equal spans of the [min, max] event-time range, files arriving in
-    order under ``maxFilesPerTrigger=1`` with pinned mtimes) — the
-    landing-dir contract an ORDER-SENSITIVE stateful operator assumes:
-    a file that arrives later never contains earlier events. Contrast
-    read_events_stream_staged, which deliberately delivers a late band
-    to exercise watermark drops; pattern automata need this reader.
-
-    Same scratch/marker mechanics as the staged reader, but the split
-    files NORMALIZE ts to µs-precision naive timestamps (the oracle's
-    ``epoch_us`` truncation) and drop foreign schema metadata — the
-    splitter accepts every fixture encoding (NANOS, NTZ micros, and
-    Spark-written INT96/ns synthetics) and always hands Spark one known
-    physical type, so the read path has a single branch instead of the
-    staged reader's probe."""
-    import os
-
-    import pyarrow as pa
+def _ordered_masks(us: pa.Array, mn: int, mx: int) -> tuple[pa.Array, ...]:
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    scratch = os.path.join(
-        "/tmp/z2ps_stream_ordered",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)),
+    # (prev_cut, cut] in integer µs: equal-timestamp rows can never
+    # straddle a cut.
+    c1 = mn + (mx - mn) // 3
+    c2 = mn + (mx - mn) * 2 // 3
+    return (
+        pc.less_equal(us, c1),
+        pc.and_(pc.greater(us, c1), pc.less_equal(us, c2)),
+        pc.greater(us, c2),
     )
-    marker = os.path.join(scratch, "_SPLIT_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(scratch, exist_ok=True)
-        t = pq.read_table(f"{sf_dir}/events.parquet")
-        ts = t["ts"]
-        unit = ts.type.unit if hasattr(ts.type, "unit") else None
-        if unit == "ns" or str(ts.type) == "int64":
-            us = pc.divide(pc.cast(ts, "int64"), 1000)
-        else:
-            us = pc.cast(pc.cast(ts, "timestamp[us]"), "int64")
-        us = pc.cast(us, "int64")
-        # One canonical physical encoding: µs-precision naive timestamp,
-        # no tz, no stale embedded Spark schema from the source file.
-        t = t.set_column(
-            t.schema.get_field_index("ts"),
-            "ts",
-            pc.cast(us, pa.timestamp("us")),
-        ).replace_schema_metadata(None)
-        mn = pc.min(us).as_py()
-        mx = pc.max(us).as_py()
-        if mn is None:  # empty events: n empty batches, no time span
-            mn = mx = 0
-        cuts = [
-            mn + (mx - mn) * i // n_batches for i in range(1, n_batches)
-        ]
-        bounds = [mn - 1] + cuts + [mx + 1]
-        for i in range(n_batches):
-            # Buckets are (prev_cut, cut] in integer µs: equal-timestamp
-            # rows can never straddle a cut.
-            mask = pc.and_(
-                pc.greater(us, bounds[i]) if i else pc.greater_equal(us, mn),
-                pc.less_equal(us, bounds[i + 1])
-                if i < n_batches - 1
-                else pc.less_equal(us, mx),
-            )
-            path = os.path.join(scratch, f"b{i}.parquet")
-            pq.write_table(t.filter(mask), path)
-            os.utime(path, (1_000_000 + 100 * i, 1_000_000 + 100 * i))
-        with open(marker, "w") as f:
-            f.write("ok")
 
-    raw = (
-        spark.readStream.schema(_events_stream_schema("timestamp_ntz"))
-        .format("parquet")
-        .option("pathGlobFilter", "b*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(scratch)
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return raw.withColumn("ts", F.to_utc_timestamp(F.col("ts"), "UTC"))
+
+def read_events_stream_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events replayed as three TIME-ORDERED micro-batches (equal spans of
+    the [min, max] event-time range, arriving in order) — the landing-dir
+    contract an ORDER-SENSITIVE stateful operator assumes: a file that
+    arrives later never contains earlier events. Contrast
+    read_events_stream_staged, which deliberately delivers a late band
+    to exercise watermark drops; pattern automata need this reader."""
+    return _replay_stream(spark, sf_dir, "z2ps_stream_ordered", _ordered_masks)
 
 
 _PAIR_OUT_SCHEMA = StructType(
