@@ -227,28 +227,28 @@ def test_cli_orc_requires_distributed(tmp_path):
     assert "requires" in proc.stderr
 
 
-def test_cli_tar_input(tmp_path):
-    import hashlib
+def _tar_gz(path, members):
     import io
-    import subprocess
-    import sys
     import tarfile
 
+    with tarfile.open(path, "w:gz") as tf:
+        for name, data in members:
+            ti = tarfile.TarInfo(name)
+            ti.size = len(data)
+            tf.addfile(ti, io.BytesIO(data))
+
+
+def test_cli_tar_input(tmp_path):
     import pyarrow.parquet as pq
 
     d = tmp_path / "tars"
     d.mkdir()
-    with tarfile.open(d / "a.tar.gz", "w:gz") as tf:
-        for name, data in [("x.txt", b"hello"), ("y.log", b"world")]:
-            ti = tarfile.TarInfo(name)
-            ti.size = len(data)
-            tf.addfile(ti, io.BytesIO(data))
+    _tar_gz(d / "a.tar.gz", [("x.txt", b"hello"), ("y.log", b"world")])
     out = tmp_path / "out.parquet"
     res = subprocess.run(
         [sys.executable, "-m", "zip_to_parquet_spark.cli",
-         "-i", f"{d}/*.tar.gz", "-o", str(out),
-         "--input-format", "tar", "-g", "**/*.txt"],
-        capture_output=True, text=True, cwd="/root/repo",
+         "-i", f"{d}/*.tar.gz", "-o", str(out), "-g", "**/*.txt"],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
     assert res.returncode == 0, res.stderr[-2000:]
     t = pq.read_table(out)
@@ -256,18 +256,58 @@ def test_cli_tar_input(tmp_path):
     assert t.column("hash").to_pylist() == [hashlib.sha256(b"hello").hexdigest()]
 
 
-def test_cli_tar_rejects_skip_mode(tmp_path):
-    import subprocess
-    import sys
+def test_cli_tar_skip_mode_counts_truncated_archive(tmp_path):
+    """--on-error skip covers tar inputs: a .tar.gz cut off inside a
+    member's compressed data is dropped and counted, the good one is
+    written."""
+    import os
 
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "tars"
+    d.mkdir()
+    _tar_gz(d / "good.tar.gz", [("g.txt", b"good")])
+    _tar_gz(d / "cut.tar.gz", [("c.bin", os.urandom(8192))])
+    whole = (d / "cut.tar.gz").read_bytes()
+    (d / "cut.tar.gz").write_bytes(whole[: len(whole) // 2])
+    out = tmp_path / "out.parquet"
     res = subprocess.run(
         [sys.executable, "-m", "zip_to_parquet_spark.cli",
-         "-i", "x/*.tar", "-o", str(tmp_path / "o.parquet"),
-         "--input-format", "tar", "--on-error", "skip"],
-        capture_output=True, text=True, cwd="/root/repo",
+         "-i", f"{d}/*.tar.gz", "-o", str(out), "--on-error", "skip"],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
-    assert res.returncode == 2
-    assert "tar" in res.stderr
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert "skipped 1 unreadable archive(s)" in res.stderr
+    t = pq.read_table(out)
+    assert t.column("name").to_pylist() == ["g.txt"]
+    assert t.column("body").to_pylist() == [b"good"]
+
+
+def test_cli_mixed_zip_and_tar_inputs(tmp_path):
+    """One run over ``-i '*.zip' -i '*.tar.gz'``: each path's suffix picks
+    its reader, rows of both formats land in one file in input order."""
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "in"
+    src.mkdir()
+    with zipfile.ZipFile(src / "a.zip", "w") as z:
+        z.writestr("z1.txt", b"zip-one")
+        z.writestr("z2.txt", b"zip-two")
+    _tar_gz(src / "b.tar.gz", [("t1.txt", b"tar-one")])
+    out = tmp_path / "out.parquet"
+    res = subprocess.run(
+        [sys.executable, "-m", "zip_to_parquet_spark.cli",
+         "-i", f"{src}/*.zip", "-i", f"{src}/*.tar.gz", "-o", str(out)],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    rows = pq.read_table(out).to_pylist()
+    assert [(r["name"], r["body"], r["source"]) for r in rows] == [
+        ("z1.txt", b"zip-one", f"{src}/a.zip"),
+        ("z2.txt", b"zip-two", f"{src}/a.zip"),
+        ("t1.txt", b"tar-one", f"{src}/b.tar.gz"),
+    ]
+    assert all(r["hash"] == hashlib.sha256(r["body"]).hexdigest() for r in rows)
 
 
 def test_cli_jsonl_output(tmp_path):

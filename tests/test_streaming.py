@@ -364,3 +364,23 @@ def test_nanos_events_decode_alike_on_every_path(spark, sf_dir, tmp_path):
         read_events_stream_ordered,
     ):
         assert _drained_us(reader(spark, nanos_dir)) == want, reader.__name__
+
+
+def test_replay_splits_are_keyed_by_full_fixture_path(spark, sf_dir, tmp_path):
+    """Two fixture dirs with the same basename get their own replay split
+    sets in one session: each drains its own events, not the first one's."""
+    import pyarrow.parquet as pq
+
+    from zip_to_parquet_spark.streaming.streams import read_events_stream_staged
+
+    ensure_shipped(spark)
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    want = {}
+    for parent, events in (("a", t), ("b", t.slice(0, t.num_rows // 2))):
+        d = tmp_path / parent / "sfX"
+        d.mkdir(parents=True)
+        pq.write_table(events, d / "events.parquet")
+        want[str(d)] = events.num_rows - events["ts"].null_count
+    assert len(set(want.values())) == 2
+    for d, n in want.items():
+        assert len(_drained_us(read_events_stream_staged(spark, d))) == n, d

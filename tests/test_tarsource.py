@@ -1,4 +1,5 @@
-"""Tar/tar.gz member source: round-trip, member glob, flag semantics."""
+"""Tar/tar.gz members through the one archive reader, read_zip_members:
+round-trip, member glob, flag semantics."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import tarfile
 
 import pytest
 
-from zip_to_parquet_spark.sources.tarsource import read_tar_members
+from zip_to_parquet_spark.sources.zipsource import read_zip_members
 
 
 @pytest.fixture(scope="module")
@@ -43,7 +44,7 @@ def tar_dir(tmp_path_factory):
 
 
 def test_tar_roundtrip_bodies_and_hashes(spark, tar_dir):
-    rows = read_tar_members(spark, f"{tar_dir}/*.tar*").collect()
+    rows = read_zip_members(spark, f"{tar_dir}/*.tar*").collect()
     got = sorted((r.name, bytes(r.body), r.hash) for r in rows)
     want = sorted(
         [
@@ -61,12 +62,12 @@ def test_tar_roundtrip_bodies_and_hashes(spark, tar_dir):
 
 
 def test_tar_member_glob_filters_inside_the_pass(spark, tar_dir):
-    rows = read_tar_members(spark, f"{tar_dir}/*.tar*", member_glob="**/*.log").collect()
+    rows = read_zip_members(spark, f"{tar_dir}/*.tar*", member_glob="**/*.log").collect()
     assert sorted(r.name for r in rows) == ["sub/b.log"]
 
 
 def test_tar_flag_semantics_null_values_not_columns(spark, tar_dir):
-    df = read_tar_members(
+    df = read_zip_members(
         spark, f"{tar_dir}/plain.tar", body=False, sha=False, source=False
     )
     assert df.columns == ["name", "source", "body", "hash"]
@@ -78,4 +79,4 @@ def test_tar_flag_semantics_null_values_not_columns(spark, tar_dir):
 
 def test_tar_empty_glob_errors_at_plan_time(spark, tmp_path):
     with pytest.raises(ValueError, match="no input archives"):
-        read_tar_members(spark, f"{tmp_path}/nothing/*.tar")
+        read_zip_members(spark, f"{tmp_path}/nothing/*.tar")

@@ -12,6 +12,10 @@ in SURVEY.md §2:
 - ``--no-*`` null the column values, never drop columns;
 - empty input glob / invalid member glob error out at plan time instead of
   silently writing an empty file / panicking (SURVEY §2 H);
+- ``-i`` takes zip and tar inputs alike, mixed in one run: paths ending
+  ``.tar``, ``.tar.gz``/``.tgz``, ``.tar.bz2``/``.tbz2`` or ``.tar.xz``/``.txz``
+  are read as tar (an extension; the reference reads zip only), every
+  other path as zip, with the same flags and error semantics for both;
 - hash is standard sha256 hex (SURVEY §2 F1); ``--strict-hash`` reproduces
   the reference's quote-wrapped unpadded encoding bit-for-bit;
 - ``-o`` writes ONE parquet file with exact ``--row-group-size`` row groups
@@ -28,14 +32,15 @@ import sys
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="zip-to-parquet-spark",
-        description="Convert zip archive members to parquet rows (Spark).",
+        description="Convert zip/tar archive members to parquet rows (Spark).",
     )
     p.add_argument(
         "-i",
         "--input",
         action="append",
         required=True,
-        help="input zip glob (repeatable), e.g. 'data/**/*.zip'",
+        help="input archive glob (repeatable), e.g. 'data/**/*.zip'; "
+        "tar suffixes (.tar, .tar.gz, .tgz, ...) are read as tar",
     )
     p.add_argument("-o", "--output", help="output parquet path")
     p.add_argument(
@@ -69,13 +74,6 @@ def build_parser() -> argparse.ArgumentParser:
         "(builder.rs:196-209) instead of standard sha256 hex",
     )
     p.add_argument("--simple", action="store_true", help="plain progress lines")
-    p.add_argument(
-        "--input-format",
-        choices=["zip", "tar"],
-        default="zip",
-        help="archive format of the inputs: zip (reference surface) or "
-        "tar/tar.gz (extension; requires default on_error/hash modes)",
-    )
     p.add_argument(
         "--format",
         choices=["parquet", "orc", "jsonl"],
@@ -146,13 +144,6 @@ def main(argv: list[str] | None = None) -> int:
             file=sys.stderr,
         )
         return 2
-    if args.input_format == "tar" and (args.on_error != "fail" or args.strict_hash):
-        print(
-            "error: --input-format tar supports only the default "
-            "--on-error fail / standard hash modes",
-            file=sys.stderr,
-        )
-        return 2
 
     from zip_to_parquet_spark.session import get_spark
     from zip_to_parquet_spark.sinks import (
@@ -170,37 +161,17 @@ def main(argv: list[str] | None = None) -> int:
         skip_acc = (
             spark.sparkContext.accumulator(0) if args.on_error == "skip" else None
         )
-        if args.input_format == "tar":
-            from functools import reduce
-
-            from zip_to_parquet_spark.sources.tarsource import read_tar_members
-
-            df = reduce(
-                lambda a, b: a.unionByName(b),
-                (
-                    read_tar_members(
-                        spark,
-                        pat,
-                        member_glob=args.glob,
-                        body=not args.no_body,
-                        source=not args.no_source,
-                        sha=not args.no_hash,
-                    )
-                    for pat in args.input
-                ),
-            )
-        else:
-            df = read_zip_members(
-                spark,
-                args.input,
-                member_glob=args.glob,
-                body=not args.no_body,
-                source=not args.no_source,
-                sha=not args.no_hash,
-                on_error=args.on_error,
-                strict_hash=args.strict_hash,
-                skip_counter=skip_acc,
-            )
+        df = read_zip_members(
+            spark,
+            args.input,
+            member_glob=args.glob,
+            body=not args.no_body,
+            source=not args.no_source,
+            sha=not args.no_hash,
+            on_error=args.on_error,
+            strict_hash=args.strict_hash,
+            skip_counter=skip_acc,
+        )
         import contextlib
 
         reporter = _ProgressReporter(spark) if args.simple else contextlib.nullcontext()

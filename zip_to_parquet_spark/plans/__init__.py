@@ -36,9 +36,9 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed than the window holds, every slot must at least be spent on a
 # changed key.
 #
-# Pin basis: ``python scripts/window_pin.py --list`` on the tree that folded
-# the events-stream readers into one path (same list and order as the pin
-# before it; ``set_priority`` raises on an unregistered key).
+# Pin basis: ``python scripts/window_pin.py --list`` on the tree that made
+# the zip source the one archive reader, tar included (same list and order
+# as the pin before it; ``set_priority`` raises on an unregistered key).
 # session.py and runtime._package_zip are in every key's closure, so the
 # tool counts all 316 keys as changed and the pin is its oldest-green-first
 # rotation. Engine commits land before the correctness sweep (README

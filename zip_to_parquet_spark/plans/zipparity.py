@@ -477,14 +477,13 @@ def _tar_fixture_dir(sf_dir: str) -> str:
 )
 def tar_explode_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tar.gz ingestion parity: explode the documents-mirror tar.gz
-    archives through sources/tarsource.read_tar_members (binaryFile scan →
-    one sequential Arrow-batched pass per archive — the only access
-    pattern tar's index-less format admits) and hash-check every member
-    body against sha256(text) recomputed from the table."""
-    from zip_to_parquet_spark.sources.tarsource import read_tar_members
-
+    archives through read_zip_members — the one archive-member reader,
+    which reads a ``.tar.gz`` path in one sequential ``tarfile`` stream
+    pass (the only access pattern tar's index-less format admits) — and
+    hash-check every member body against sha256(text) recomputed from the
+    table."""
     d = _tar_fixture_dir(sf_dir)
-    m = read_tar_members(spark, f"{d}/part*.tar.gz")
+    m = read_zip_members(spark, f"{d}/part*.tar.gz")
     return m.select(
         "name",
         F.regexp_extract("source", "[^/]+$", 0).alias("archive"),

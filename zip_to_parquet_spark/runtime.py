@@ -128,8 +128,10 @@ def ensure_shipped(spark: SparkSession) -> None:
 def session_scratch(
     spark: SparkSession, prefix: str, sf_dir: str, max_age_hours: int = 6
 ) -> str:
-    """Per-session scratch path ``/tmp/<prefix>/<appId>/<sf-basename>`` —
-    the ONE definition of the pattern (was triplicated across plans).
+    """Per-session scratch path ``/tmp/<prefix>/<appId>/<sf-basename>_<key>``
+    — the ONE definition of the pattern (was triplicated across plans).
+    ``key`` is 16 hex digits of the sha256 of ``sf_dir``'s absolute path,
+    so two fixture dirs that share a basename get separate scratch sets.
     appId keying prevents concurrent sessions on the same sf from
     overwriting each other mid-read-back; sibling appId dirs whose mtime
     is older than ``max_age_hours`` are pruned best-effort, so a box
@@ -147,4 +149,6 @@ def session_scratch(
                 shutil.rmtree(p, ignore_errors=True)
     except OSError:
         pass
-    return os.path.join(root, app, os.path.basename(os.path.normpath(sf_dir)))
+    base = os.path.basename(os.path.normpath(sf_dir))
+    key = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
+    return os.path.join(root, app, f"{base}_{key}")

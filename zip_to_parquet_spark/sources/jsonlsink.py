@@ -47,6 +47,39 @@ class _ShardCommit(WriterCommitMessage):
     n_rows: int
 
 
+def _write_temp_shard(path: str, iterator) -> _ShardCommit:
+    """One task's rows as a ``_tmp_<uuid>.jsonl`` shard under ``path``;
+    the commit message names it for the driver's rename. Shared by the
+    batch and the streaming writer."""
+    os.makedirs(path, exist_ok=True)
+    tmp = f"_tmp_{uuid.uuid4().hex}.jsonl"
+    n = 0
+    with open(os.path.join(path, tmp), "w") as f:
+        for row in iterator:
+            f.write(
+                json.dumps(
+                    row.asDict(recursive=True),
+                    sort_keys=True,
+                    separators=(",", ":"),
+                    default=_json_value,
+                )
+            )
+            f.write("\n")
+            n += 1
+    return _ShardCommit(tmp_name=tmp, n_rows=n)
+
+
+def _sweep_temp_shards(path: str) -> None:
+    """Abort: remove every ``_tmp_*`` shard under ``path``. It scans the
+    directory instead of reading the commit messages, because on task
+    failure Spark passes None for tasks that produced no message."""
+    if not os.path.isdir(path):
+        return  # job failed before any task created the sink dir
+    for f in os.listdir(path):
+        if f.startswith("_tmp_"):
+            os.remove(os.path.join(path, f))
+
+
 class JsonlShardWriter(DataSourceWriter):
     def __init__(self, options):
         self.path = options.get("path")
@@ -54,22 +87,7 @@ class JsonlShardWriter(DataSourceWriter):
             raise ValueError("jsonl_shards sink requires a path")
 
     def write(self, iterator) -> _ShardCommit:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = f"_tmp_{uuid.uuid4().hex}.jsonl"
-        n = 0
-        with open(os.path.join(self.path, tmp), "w") as f:
-            for row in iterator:
-                f.write(
-                    json.dumps(
-                        row.asDict(recursive=True),
-                        sort_keys=True,
-                        separators=(",", ":"),
-                        default=_json_value,
-                    )
-                )
-                f.write("\n")
-                n += 1
-        return _ShardCommit(tmp_name=tmp, n_rows=n)
+        return _write_temp_shard(self.path, iterator)
 
     def commit(self, messages) -> None:
         # Two-phase finalize, old data intact until here: (1) rename only
@@ -95,11 +113,7 @@ class JsonlShardWriter(DataSourceWriter):
             f.write("")
 
     def abort(self, messages) -> None:
-        if not os.path.isdir(self.path):
-            return  # job failed before any task created the sink dir
-        for f in os.listdir(self.path):
-            if f.startswith("_tmp_"):
-                os.remove(os.path.join(self.path, f))
+        _sweep_temp_shards(self.path)
 
 
 class JsonlShardsDataSource(DataSource):
@@ -196,22 +210,7 @@ class JsonlStreamShardWriter(DataSourceStreamWriter):
             raise ValueError("jsonl_shards sink requires a path")
 
     def write(self, iterator) -> _ShardCommit:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = f"_tmp_{uuid.uuid4().hex}.jsonl"
-        n = 0
-        with open(os.path.join(self.path, tmp), "w") as f:
-            for row in iterator:
-                f.write(
-                    json.dumps(
-                        row.asDict(recursive=True),
-                        sort_keys=True,
-                        separators=(",", ":"),
-                        default=_json_value,
-                    )
-                )
-                f.write("\n")
-                n += 1
-        return _ShardCommit(tmp_name=tmp, n_rows=n)
+        return _write_temp_shard(self.path, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         epoch = os.path.join(self.path, f"batch-{batchId:05d}")
@@ -229,12 +228,4 @@ class JsonlStreamShardWriter(DataSourceStreamWriter):
             f.write("")
 
     def abort(self, messages, batchId: int) -> None:
-        # Mirror the batch writer's abort: on task failure Spark passes
-        # None for tasks that produced no commit message, so we cannot
-        # dereference msg.tmp_name — scan the sink root for leftover
-        # temp shards instead.
-        if not os.path.isdir(self.path):
-            return
-        for f in os.listdir(self.path):
-            if f.startswith("_tmp_"):
-                os.remove(os.path.join(self.path, f))
+        _sweep_temp_shards(self.path)

@@ -1,4 +1,5 @@
-"""Zip-archive member source — the reference's core capability, Spark-first.
+"""Archive member source (zip and tar) — the reference's core capability,
+Spark-first.
 
 Reference semantics re-expressed (SURVEY.md §2 A1/A2/A3, B1/B2, F1/F2):
 
@@ -22,11 +23,11 @@ Reference semantics re-expressed (SURVEY.md §2 A1/A2/A3, B1/B2, F1/F2):
   SURVEY §2 F1).
 
 Implementation: a PySpark 4 Python Data Source yielding Arrow RecordBatches.
-The zip bytes are read directly by the Python worker that owns the partition
-(no JVM→Python re-shipping of archive bytes). On a real cluster the archive
-paths must be on shared storage visible to executors (the same contract as
-any file-based source); ship this package via ``--py-files`` so workers can
-unpickle the reader.
+The archive bytes are read directly by the Python worker that owns the
+partition (no JVM→Python re-shipping of archive bytes). On a real cluster
+the archive paths must be on shared storage visible to executors (the same
+contract as any file-based source); ship this package via ``--py-files`` so
+workers can unpickle the reader.
 
 Scale notes: members are decompressed one at a time and flushed in bounded
 Arrow batches, so peak memory per task ≈ one decompressed member + one batch
@@ -41,14 +42,27 @@ pack into about ``defaultParallelism`` tasks, and a large corpus into
 partitions of at most ``maxPartitionBytes`` of compressed input. Path
 order keeps rows in the same order as one partition per archive. A task
 costs a Python worker round trip before it reads a byte, so on small
-inputs the task count, not the member work, sets the scan time. A JUMBO archive (more than ``split_members``
-central-directory entries) splits into member-index-range partitions that
-are never packed — the central directory is random-access, so each task
-opens the file independently and reads only its slice, bounding per-task
-time by the range size instead of the largest archive. The member count
-comes from the end-of-central-directory record alone (an O(comment) tail
-read, no CD parse), gated on file size so small archives cost the driver
-nothing beyond the stat it already does.
+inputs the task count, not the member work, sets the scan time. A JUMBO
+archive (more than ``split_members`` central-directory entries) splits
+into member-index-range partitions that are never packed — the central
+directory is random-access, so each task opens the file independently and
+reads only its slice, bounding per-task time by the range size instead of
+the largest archive. The member count comes from the end-of-central-
+directory record alone (an O(comment) tail read, no CD parse), gated on
+file size so small archives cost the driver nothing beyond the stat it
+already does.
+
+Tar archives (paths ending ``.tar``, ``.tar.gz``/``.tgz``, ``.tar.bz2``/
+``.tbz2``, ``.tar.xz``/``.txz``; every other path is read as a zip) go
+through the same reader with a different member iterator. Tar has no
+central directory — it is a sequence of 512-byte header blocks, usually
+inside one compressed stream — so an archive is read in ONE sequential pass
+(``tarfile`` stream mode) that yields regular files only, in stream order.
+There are no member ranges: a tar is always one slice, packed like any
+small zip. Name filters still run before a member's body is read, but a
+compressed tar must inflate the skipped bytes to advance. Glob, null flags,
+hashing, ``strict_hash``, ``on_error`` and the one-member-plus-one-batch
+memory bound are the zip path's.
 
 Divergences by design (SURVEY §2 H): empty input glob raises at plan time
 (the reference silently writes an empty file — its NoInputsFound error is
@@ -60,9 +74,9 @@ from __future__ import annotations
 
 import glob as _pyglob
 import hashlib
-import io
 import json
 import re
+import tarfile
 import zipfile
 from dataclasses import dataclass
 from typing import NamedTuple
@@ -218,6 +232,39 @@ class _ZipPartition(InputPartition):
     slices: list[_ZipSlice]
 
 
+# Suffixes read as tar (compression auto-detected by tarfile's "r|*"); every
+# other path is read as a zip — the per-file format pick of Hadoop's
+# suffix-keyed codec lookup.
+_TAR_SUFFIXES = (".tar", ".tar.gz", ".tgz", ".tar.bz2", ".tbz2", ".tar.xz", ".txz")
+
+
+def _is_tar(path: str) -> bool:
+    return path.lower().endswith(_TAR_SUFFIXES)
+
+
+def _zip_members(fh, sl: _ZipSlice):
+    """``(name, read)`` per member of a zip slice, in central-directory
+    order: ``read()`` returns the decoded bytes, ``None`` marks a directory
+    entry (kept as a row with an empty body)."""
+    with zipfile.ZipFile(fh) as zf:
+        infos = zf.infolist()
+        if sl.start or sl.end is not None:
+            infos = infos[sl.start : sl.end]
+        for info in infos:
+            yield info.filename, (
+                None if info.is_dir() else lambda i=info: _member_bytes(fh, zf, i, sl.path)
+            )
+
+
+def _tar_members(fh, sl: _ZipSlice):
+    """``(name, read)`` per regular-file member of a tar, in stream order:
+    one sequential pass, so ``read`` is valid only until the next member."""
+    with tarfile.open(fileobj=fh, mode="r|*") as tf:
+        for m in tf:
+            if m.isfile():
+                yield m.name, lambda m=m: tf.extractfile(m).read()
+
+
 def _pack(sized: list[tuple[list[_ZipSlice], int]], max_bytes: int,
           open_cost: int, min_partitions: int) -> list[_ZipPartition]:
     """Bin-pack archives into read partitions by Spark's file-split rule
@@ -334,13 +381,14 @@ class ZipMembersReader(DataSourceReader):
         # Pushed source predicates prune archives here, before any task
         # launches.
         #
-        # Jumbo archives split into member-index ranges so the largest
-        # archive no longer bounds per-task time. The size gate (an archive
-        # under split_members·46 bytes CANNOT list that many CD entries)
-        # keeps the driver cost at the stat it already pays; only
-        # plausibly-jumbo files get the O(comment) EOCD tail read. A file
-        # unreadable here falls through to a single slice so the error
-        # surfaces in the task, where on_error applies.
+        # Jumbo zips split into member-index ranges so the largest archive
+        # no longer bounds per-task time; a tar has no index, so it is
+        # always one slice. The size gate (an archive under
+        # split_members·46 bytes CANNOT list that many CD entries) keeps
+        # the driver cost at the stat it already pays; only plausibly-jumbo
+        # zips get the O(comment) EOCD tail read. A file unreadable here
+        # falls through to a single slice so the error surfaces in the
+        # task, where on_error applies.
         import os
 
         paths = self.paths
@@ -354,7 +402,8 @@ class ZipMembersReader(DataSourceReader):
             except OSError:
                 size = 0
             n = None
-            if self.split_members > 0 and size > self.split_members * _MIN_CD_ENTRY:
+            if (self.split_members > 0 and size > self.split_members * _MIN_CD_ENTRY
+                    and not _is_tar(p)):
                 try:
                     n = _eocd_member_count(p)
                 except (OSError, zipfile.BadZipFile):
@@ -378,9 +427,10 @@ class ZipMembersReader(DataSourceReader):
             yield from self._read_slice(sl, pattern, name_pred)
 
     def _read_slice(self, sl: _ZipSlice, pattern, name_pred):
-        """One archive (or one member range of it): its own Arrow buffers
-        and its own error handling, so on_error and the memory bound stay
-        per archive inside a packed partition."""
+        """One archive (or one member range of a zip): its own Arrow
+        buffers and its own error handling, so on_error and the memory
+        bound stay per archive inside a packed partition. The path's suffix
+        picks the member iterator (_is_tar); everything after it is shared."""
         import pyarrow as pa
 
         need_decompress = self.with_body or self.with_hash
@@ -406,21 +456,16 @@ class ZipMembersReader(DataSourceReader):
             pending_bytes = 0
             return batch
 
+        members = _tar_members if _is_tar(sl.path) else _zip_members
         try:
-            with open(sl.path, "rb") as fh, zipfile.ZipFile(fh) as zf:
-                infos = zf.infolist()
-                if sl.start or sl.end is not None:
-                    infos = infos[sl.start : sl.end]
-                for info in infos:
-                    if pattern is not None and not pattern.match(info.filename):
+            with open(sl.path, "rb") as fh:
+                for name, read in members(fh, sl):
+                    if pattern is not None and not pattern.match(name):
                         continue
-                    if name_pred is not None and not name_pred(info.filename):
+                    if name_pred is not None and not name_pred(name):
                         continue
-                    if need_decompress and not info.is_dir():
-                        data = _member_bytes(fh, zf, info, sl.path)
-                    else:
-                        data = b""
-                    names.append(info.filename)
+                    data = read() if need_decompress and read is not None else b""
+                    names.append(name)
                     sources.append(sl.path if self.with_source else None)
                     if self.with_hash:
                         h = hashlib.sha256(data)
@@ -438,7 +483,8 @@ class ZipMembersReader(DataSourceReader):
                         bodies.append(None)
                     if len(names) >= self.batch_rows or pending_bytes >= self.batch_bytes:
                         yield flush()
-        except (zipfile.BadZipFile, ZipFormatError, OSError) as exc:
+        except (zipfile.BadZipFile, ZipFormatError, OSError, tarfile.TarError,
+                EOFError) as exc:
             # ZipFormatError (unsupported compression method, missing zstd
             # codec) must take the same skip path as structural corruption:
             # permissive mode means "convert what this engine can read",
@@ -644,7 +690,8 @@ def read_zip_members(
     skip_counter=None,
     split_members: int = 65536,
 ) -> DataFrame:
-    """Read zip archives as one DataFrame row per member (reference A1+A2).
+    """Read zip and tar archives as one DataFrame row per member (reference
+    A1+A2); a path's suffix picks its format (see the module docstring).
 
     Multiple patterns/archives concatenate with UNION ALL bag semantics —
     duplicates kept, order undefined (SURVEY §2 C). ``member_glob`` filters
@@ -732,7 +779,8 @@ def count_members(
     member_glob: str | None = None,
 ) -> int:
     """Reference A3/D1: count glob-matching members without decompressing
-    anything (central-directory-only scan). The reference runs this as a
+    any zip member (central-directory-only scan; a tar still takes its one
+    sequential pass). The reference runs this as a
     separate sequential pre-pass that re-opens every archive
     (builder.rs:24-41); here it is the same distributed scan with the
     body/hash projection pushed down."""
