@@ -1267,6 +1267,40 @@ def test_merge_upsert_random_property(spark):
     assert got == expected
 
 
+def _funnel_greedy(rows, steps):
+    """Pure-Python funnel: per user, events sorted by (us, type) like the
+    fold's struct sort, matched greedily with strict > between matched
+    stages. → {stage: users_reached}."""
+    per_user: dict[int, list] = {}
+    for u, us, t in rows:
+        per_user.setdefault(u, []).append((us, t))
+    reached = {s: 0 for s in range(1, len(steps) + 1)}
+    for evs in per_user.values():
+        stage, last = 0, -1
+        for us, t in sorted(evs):
+            if stage < len(steps) and t == steps[stage] and us > last:
+                stage, last = stage + 1, us
+        for s in range(1, stage + 1):
+            reached[s] += 1
+    return reached
+
+
+def _funnel_spark(spark, rows, steps):
+    from zip_to_parquet_spark.operators.temporal import funnel_stage_counts
+
+    df = spark.createDataFrame(
+        rows, "user_id long, us long, event_type string"
+    ).select(
+        "user_id",
+        F.timestamp_micros(F.col("us")).alias("ts"),
+        "event_type",
+    )
+    return {
+        r["stage"]: r["users_reached"]
+        for r in funnel_stage_counts(df, steps=steps).collect()
+    }
+
+
 def test_funnel_random_property(spark):
     """Random event streams: the one-shuffle fold state machine equals a
     Python greedy simulation of strict-after earliest matching."""
@@ -1279,35 +1313,7 @@ def test_funnel_random_property(spark):
     for u in range(40):
         for _ in range(rnd.randrange(0, 25)):
             rows.append((u, rnd.randrange(0, 10**6), rnd.choice(types)))
-    # Python greedy sim (events sorted by (us, type) like the fold's
-    # struct sort; strict > between matched stages).
-    per_user: dict[int, list] = {}
-    for u, us, t in rows:
-        per_user.setdefault(u, []).append((us, t))
-    reached = {1: 0, 2: 0, 3: 0}
-    for u, evs in per_user.items():
-        stage, last = 0, -1
-        for us, t in sorted(evs):
-            if stage < 3 and t == steps[stage] and us > last:
-                stage, last = stage + 1, us
-        for s in range(1, stage + 1):
-            reached[s] += 1
-
-    from zip_to_parquet_spark.operators.temporal import funnel_stage_counts
-
-    df = spark.createDataFrame(
-        [(u, us, t) for u, us, t in rows],
-        "user_id long, us long, event_type string",
-    ).select(
-        "user_id",
-        F.timestamp_micros(F.col("us")).alias("ts"),
-        "event_type",
-    )
-    got = {
-        r["stage"]: r["users_reached"]
-        for r in funnel_stage_counts(df, steps=steps).collect()
-    }
-    assert got == reached
+    assert _funnel_spark(spark, rows, steps) == _funnel_greedy(rows, steps)
 
 
 def test_word_edit_pairs_random_completeness(spark):
@@ -1356,17 +1362,11 @@ def test_word_edit_pairs_random_completeness(spark):
     assert got == planted
 
 
-def test_funnel_partitioned_equals_direct(spark):
-    """The hierarchical FSM-composition funnel must equal the direct fold
-    on random streams — including a hot user whose events span many tiny
-    chunks (chunk_us small enough to force real cross-chunk
-    composition), and boundary-equal timestamps."""
+def test_funnel_hot_user_and_tied_timestamps_match_greedy(spark):
+    """The fold equals the greedy reference on random streams with a hot
+    user (400 events in one fold) and ties at equal timestamps: a click
+    and a purchase at the same µs cannot both advance the funnel."""
     import random
-
-    from zip_to_parquet_spark.operators.temporal import (
-        funnel_stage_counts,
-        funnel_stage_counts_partitioned,
-    )
 
     rnd = random.Random(99)
     steps = ["view", "click", "purchase"]
@@ -1375,28 +1375,11 @@ def test_funnel_partitioned_equals_direct(spark):
     for u in range(25):
         for _ in range(rnd.randrange(0, 20)):
             rows.append((u, rnd.randrange(0, 10_000), rnd.choice(types)))
-    # hot user: 400 events across the whole range
     for _ in range(400):
         rows.append((999, rnd.randrange(0, 10_000), rnd.choice(types)))
-    # exact chunk-boundary timestamps (chunk_us=1000 below)
     rows += [(7, 1000, "view"), (7, 2000, "click"), (7, 2000, "purchase"),
              (7, 3000, "purchase")]
-    df = spark.createDataFrame(
-        rows, "user_id long, us long, event_type string"
-    ).select(
-        "user_id", F.timestamp_micros(F.col("us")).alias("ts"), "event_type"
-    )
-    direct = {
-        r["stage"]: r["users_reached"]
-        for r in funnel_stage_counts(df, steps=steps).collect()
-    }
-    parted = {
-        r["stage"]: r["users_reached"]
-        for r in funnel_stage_counts_partitioned(
-            df, steps=steps, chunk_us=1000
-        ).collect()
-    }
-    assert parted == direct
+    assert _funnel_spark(spark, rows, steps) == _funnel_greedy(rows, steps)
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ Queries without an oracle get a rows-run smoke check instead.
 from __future__ import annotations
 
 import os
+from collections import defaultdict
 
 import pytest
 
@@ -38,6 +39,25 @@ def test_rows_only(spark, name):
 
 def test_every_oracle_key_has_query():
     assert set(ORACLES) <= set(QUERIES)
+
+
+# Keys that share an oracle on purpose: each pair runs one aggregation on
+# the batch engine and on Structured Streaming.
+BATCH_STREAM_PAIRS = {
+    ("events_ohlc_bars", "stream_ohlc_bars"),
+    ("events_pattern_strict_funnel", "stream_pattern_strict_funnel"),
+    ("events_tumbling_window", "stream_tumbling_window"),
+}
+
+
+def test_only_batch_stream_pairs_share_an_oracle():
+    # Two keys with one oracle are one semantics run twice; outside the
+    # batch/stream pairs that is a twin implementation to delete.
+    groups = defaultdict(list)
+    for name, sql in ORACLES.items():
+        groups[" ".join(sql.split())].append(name)
+    shared = {tuple(sorted(g)) for g in groups.values() if len(g) > 1}
+    assert shared == BATCH_STREAM_PAIRS
 
 
 def test_entry_smoke(spark):

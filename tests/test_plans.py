@@ -395,10 +395,11 @@ def test_exact_verify_dedup_hot_shingle_guard_on_by_default(spark):
 
 
 def test_funnel_single_fold_shuffle(spark):
-    # One groupBy(user) for the fold + one tiny stage rollup — a stage
-    # added to the funnel must not add a per-stage join/shuffle.
+    # One groupBy(user) for the fold + one tiny stage rollup (Spark 4.1
+    # renders exactly these two) — a stage added to the funnel must not
+    # add a per-stage join/shuffle.
     plan = plan_of(spark, "events_funnel")
-    assert n_shuffles(plan) <= 2
+    assert n_shuffles(plan) == 2
     assert "CartesianProduct" not in plan
 
 
@@ -484,14 +485,6 @@ def test_gapfill_no_cartesian_calendar(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Generate" in plan  # the in-row date explode
-
-
-def test_funnel_partitioned_two_level_shuffles(spark):
-    # (user, chunk) then user then the tiny stage rollup — at most 3
-    # keyed exchanges, no per-stage join, no cartesian.
-    plan = plan_of(spark, "events_funnel_partitioned")
-    assert n_shuffles(plan) <= 3
-    assert "CartesianProduct" not in plan
 
 
 def test_federated_join_single_shuffle(spark):
@@ -595,15 +588,6 @@ def test_dq_fk_check_broadcasts_anti_join(spark):
     plan = plan_of(spark, "dq_expectations_report")
     assert re.search(r"BroadcastHashJoin .*LeftAnti", plan)
     assert "CartesianProduct" not in plan
-
-
-def test_udtf_chunking_mechanism(spark):
-    # The UDTF variant must actually go through the Python UDTF evaluator
-    # (mechanism coverage), stay shuffle-free like the HOF key, and both
-    # share one oracle so the hash proves mechanism-independence.
-    plan = plan_of(spark, "text_chunk_windows_udtf")
-    assert re.search(r"PythonUDTF|ArrowEvalPythonUDTF|BatchEvalPythonUDTF", plan), plan
-    assert "Exchange" not in plan
 
 
 def test_q14_broadcast_part_exact_decimal_sums(spark):

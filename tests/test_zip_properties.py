@@ -5,19 +5,23 @@ directly over random archive sets — zips with stored, deflated, empty and
 directory members and non-ASCII names (one of them over a lowered
 ``split_members``), mixed with tar, tar.gz/tgz, tar.bz2 and tar.xz
 archives — under random packing confs, and checked against a stdlib
-``zipfile``/``tarfile`` reference.
+``zipfile``/``tarfile`` reference. Damaged tars (one flipped bit, or a
+cut) must read as the reference, be skipped once, or fail.
 """
 
 from __future__ import annotations
 
+import gzip
 import hashlib
 import io
 import json
+import lzma
 import os
 import random
 import tarfile
 import tempfile
 import zipfile
+import zlib
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -210,3 +214,119 @@ def test_truncated_archive_is_skipped_once_or_fails(specs, bad, split, packing):
 
         with pytest.raises((zipfile.BadZipFile, tarfile.TarError, OSError, EOFError)):
             _read_all({**options, "on_error": "fail"})
+
+
+def _tar_data_bytes(path: str) -> set[int]:
+    """Offsets of a plain tar's data bytes: member data, and the data of a
+    member's extended (pax) headers between its first header block and its
+    last. Tar checksums only header blocks, so a flip in these bytes is
+    the one damage no reader can see."""
+    out = set()
+    with tarfile.open(path) as tf:
+        for m in tf.getmembers():
+            out.update(range(m.offset + tarfile.BLOCKSIZE, m.offset_data - tarfile.BLOCKSIZE))
+            out.update(range(m.offset_data, m.offset_data + m.size))
+    return out
+
+
+def _read_or_error(options: dict):
+    """(rows, skips) of one read, or None when it raised an archive error."""
+    skips = _Counter()
+    try:
+        return _read_all(options, skip_acc=skips), skips.value
+    except (tarfile.TarError, OSError, EOFError, zlib.error, lzma.LZMAError, UnicodeError):
+        return None
+
+
+@settings(max_examples=200, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(spec=_tar_spec(), damage=st.data())
+def test_damaged_tar_reads_reference_rows_skips_once_or_fails(spec, damage):
+    suffix, members = spec
+    with tempfile.TemporaryDirectory() as d:
+        [path] = _write_set(d, [(suffix, members)])
+        want = _reference(path)
+        raw = open(path, "rb").read()
+        exempt = _tar_data_bytes(path) if suffix == ".tar" else set()
+        if damage.draw(st.booleans(), label="flip (else cut)"):
+            at = damage.draw(st.integers(0, len(raw) - 1), label="byte")
+            bit = damage.draw(st.integers(0, 7), label="bit")
+            bad = raw[:at] + bytes([raw[at] ^ (1 << bit)]) + raw[at + 1:]
+        else:
+            at = damage.draw(st.integers(0, len(raw) - 1), label="cut")
+            bad = raw[:at]
+        with open(path, "wb") as f:
+            f.write(bad)
+        options = {"paths": json.dumps([path])}
+
+        failed = _read_or_error({**options, "on_error": "fail"})
+        skipped = _read_or_error({**options, "on_error": "skip"})
+        if at in exempt and len(bad) == len(raw):
+            # The hit member's name or body may differ; its row may not go.
+            assert skipped == ([], 1) or (len(skipped[0]), skipped[1]) == (len(want), 0)
+            return
+        assert failed is None or failed == (want, 0)
+        assert skipped in ((want, 0), ([], 1))
+
+
+def _three_member_tar(path: str) -> list[tuple]:
+    _write(path, [(f"m{i}", _NOISE[:100 * (i + 1)]) for i in range(3)])
+    return _reference(path)
+
+
+def test_plain_tar_cut_at_a_header_boundary_is_not_a_shorter_archive(tmp_path):
+    # tarfile ends its iteration without an error at a short header block.
+    path = str(tmp_path / "a.tar")
+    _three_member_tar(path)
+    with open(path, "r+b") as f:
+        f.truncate(1024)
+    options = {"paths": json.dumps([path])}
+    assert _read_or_error({**options, "on_error": "skip"}) == ([], 1)
+    with pytest.raises(tarfile.ReadError):
+        _read_all({**options, "on_error": "fail"})
+
+
+def test_damaged_header_of_an_empty_last_member_fails(tmp_path):
+    # The damaged header is a full block that ends tarfile's iteration,
+    # and only NUL padding follows it: the end block must be a zero block.
+    path = str(tmp_path / "a.tar")
+    _write(path, [("a", b"x"), ("b", b"")])
+    raw = bytearray(open(path, "rb").read())
+    with tarfile.open(path) as tf:
+        raw[tf.getmember("b").offset] ^= 1
+    open(path, "wb").write(raw)
+    with pytest.raises(tarfile.ReadError):
+        _read_all({"paths": json.dumps([path]), "on_error": "fail"})
+
+
+def test_tar_gz_cut_to_three_bytes_is_skipped(tmp_path):
+    # tarfile's own gzip header parser raised TypeError on this input.
+    path = str(tmp_path / "a.tar.gz")
+    _three_member_tar(path)
+    with open(path, "r+b") as f:
+        f.truncate(3)
+    options = {"paths": json.dumps([path])}
+    assert _read_or_error({**options, "on_error": "skip"}) == ([], 1)
+    with pytest.raises(EOFError):
+        _read_all({**options, "on_error": "fail"})
+
+
+def test_tar_gz_crc_trailer_is_checked(tmp_path):
+    path = str(tmp_path / "a.tar.gz")
+    _three_member_tar(path)
+    raw = bytearray(open(path, "rb").read())
+    raw[-8] ^= 1  # first byte of the gzip CRC-32 trailer
+    open(path, "wb").write(raw)
+    with pytest.raises(gzip.BadGzipFile):
+        _read_all({"paths": json.dumps([path]), "on_error": "fail"})
+
+
+def test_data_after_the_tar_end_block_fails(tmp_path):
+    # Two tars concatenated: tarfile stops at the first end-of-archive
+    # block, so the second one's members would be lost without a word.
+    a, b = str(tmp_path / "a.tar"), str(tmp_path / "b.tar")
+    _three_member_tar(a)
+    _write(b, [("late", b"x")])
+    with open(a, "ab") as f:
+        f.write(open(b, "rb").read())
+    with pytest.raises(tarfile.ReadError):
+        _read_all({"paths": json.dumps([a]), "on_error": "fail"})

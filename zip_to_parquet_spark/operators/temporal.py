@@ -27,7 +27,6 @@ __all__ = [
     "range_join_pairs",
     "cogroup_attribution",
     "funnel_stage_counts",
-    "funnel_stage_counts_partitioned",
     "retention_cohorts",
 ]
 
@@ -54,6 +53,13 @@ def funnel_stage_counts(
     Returns ``(stage, step_name, users_reached)`` — one row per step,
     ``users_reached`` counting users whose fold reached at least that
     stage.
+
+    The one funnel operator. A chunked form (per-(user, day) transition
+    tables composed per user) bounded a hot user's per-task state, but it
+    paid a second shuffle and ran slower: events_funnel at sf0.1, local[4],
+    five interleaved ``scripts/ab.py`` passes with the key alone in each
+    fresh process, 1.54 s here against 1.98 s (minima; every pass
+    slower). It was deleted.
     """
     ev = events.filter(F.col(type_col).isin(*steps)).select(
         F.col(user_col).alias("__u"),
@@ -92,8 +98,7 @@ def _stage_rollup(reached: DataFrame, steps: list[str]) -> DataFrame:
     """(stage) per user → one row per step with users_reached counts.
     Right join FROM the (broadcast, |steps|-row) step table so a stage
     nobody reached still emits its row with users_reached = 0 (count of
-    matched rows, not of join rows). Shared by both funnel strategies —
-    the rollup must stay identical for the shared oracle to hold."""
+    matched rows, not of join rows)."""
     stage_tbl = reached.sparkSession.createDataFrame(
         [(i + 1, s) for i, s in enumerate(steps)], "stage INT, step_name STRING"
     )
@@ -236,106 +241,6 @@ def range_join_pairs(
     )
 
 
-def funnel_stage_counts_partitioned(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    chunk_us: int = 86_400_000_000,
-) -> DataFrame:
-    """Skew-resilient funnel — same greedy strict-after semantics as
-    :func:`funnel_stage_counts`, computed hierarchically so no single
-    task ever materializes a power user's full event list.
-
-    The greedy fold is a finite state machine, and FSM application over
-    a TIME-ORDERED chunk of events is a function (entry stage → exit
-    stage); function composition is associative, so the fold
-    parallelizes as: (1) per (user, time-chunk), one pass computes the
-    chunk's full transition TABLE — the exit state for each of the
-    |steps|+1 possible entry stages (a constant-size vector, however
-    many events the chunk holds); (2) per user, compose the (few)
-    chunk tables in time order. Correctness of dropping ``last_us``
-    across chunks: chunking by ``floor(us / chunk_us)`` puts equal
-    timestamps in one chunk, so every event in a later chunk is
-    STRICTLY after every event in an earlier one and the cross-chunk
-    strict-after condition holds automatically; within a chunk each
-    track keeps its own in-chunk last-match time (NULL = no in-chunk
-    match yet, i.e. entry state from an earlier chunk — always
-    strictly earlier).
-
-    Shuffle profile: groupBy (user, chunk) then groupBy user. Per-task
-    state is bounded by one user's events in ONE chunk and by the
-    number of chunks — both tunable via ``chunk_us`` — where the
-    single-fold form is bounded only by the user's lifetime event
-    count (the hot-user skew killer at 100 TB).
-    """
-    n_steps = len(steps)
-    steps_arr = F.array(*[F.lit(s) for s in steps])
-    ev = events.filter(F.col(type_col).isin(*steps)).select(
-        F.col(user_col).alias("__u"),
-        F.unix_micros(F.col(ts_col)).alias("__us"),
-        F.col(type_col).alias("__t"),
-    )
-    chunked = ev.withColumn("__chunk", F.expr(f"__us div {chunk_us}L"))
-    per_chunk_events = chunked.groupBy("__u", "__chunk").agg(
-        F.array_sort(F.collect_list(F.struct("__us", "__t"))).alias("__evs")
-    )
-    # Track i (1-based element i of the array) = behavior for entry
-    # stage i-1: struct(exit int, last long). last NULL = no match yet
-    # in this chunk (entry state predates the chunk).
-    init = F.transform(
-        F.sequence(F.lit(1), F.lit(n_steps + 1)),
-        lambda i: F.struct(
-            (i - 1).cast("int").alias("exit"),
-            F.lit(None).cast("long").alias("last"),
-        ),
-    )
-
-    def step_tracks(acc, x):
-        def upd(t):
-            nxt = F.element_at(steps_arr, t.getField("exit") + 1)
-            can = (
-                (t.getField("exit") < n_steps)
-                & (x.getField("__t") == nxt)
-                & (
-                    t.getField("last").isNull()
-                    | (x.getField("__us") > t.getField("last"))
-                )
-            )
-            return F.when(
-                can,
-                F.struct(
-                    (t.getField("exit") + 1).cast("int").alias("exit"),
-                    x.getField("__us").alias("last"),
-                ),
-            ).otherwise(t)
-
-        return F.transform(acc, upd)
-
-    tables = per_chunk_events.select(
-        "__u",
-        "__chunk",
-        F.aggregate("__evs", init, step_tracks).alias("__table"),
-    )
-    # Compose chunk tables in time order: entry stage 0, each chunk maps
-    # stage s -> table[s+1].exit.
-    per_user = tables.groupBy("__u").agg(
-        F.array_sort(F.collect_list(F.struct("__chunk", "__table"))).alias(
-            "__tabs"
-        )
-    )
-    compose = F.aggregate(
-        "__tabs",
-        F.lit(0).cast("int"),
-        lambda acc, x: F.element_at(x.getField("__table"), acc + 1).getField(
-            "exit"
-        ),
-    )
-    reached = per_user.select(compose.alias("stage"))
-    return _stage_rollup(reached, steps)
-
-
 def cogroup_attribution(
     purchases,
     clicks,
@@ -358,7 +263,7 @@ def cogroup_attribution(
     Scale: one user-keyed shuffle per side; a hot user's whole history
     lands in one task — the documented trade of every cogroup/grouped-map
     (the skew-resilient alternative when that bites is an FSM/join
-    formulation, cf. funnel_stage_counts_partitioned). Timestamp math is
+    formulation). Timestamp math is
     integer microseconds on datetime64 values — exact, no float seam.
     """
     import numpy as np

@@ -36,11 +36,12 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed than the window holds, every slot must at least be spent on a
 # changed key.
 #
-# Pin basis: ``python scripts/window_pin.py --list`` on the tree that made
-# the zip source the one archive reader, tar included (same list and order
-# as the pin before it; ``set_priority`` raises on an unregistered key).
+# Pin basis: ``python scripts/window_pin.py --list`` on the tree that
+# deleted the text_chunk_windows_udtf and events_funnel_partitioned twins
+# (the deleted key's slot went to stats_mannwhitney_u, order otherwise
+# unchanged; ``set_priority`` raises on an unregistered key).
 # session.py and runtime._package_zip are in every key's closure, so the
-# tool counts all 316 keys as changed and the pin is its oldest-green-first
+# tool counts all 314 keys as changed and the pin is its oldest-green-first
 # rotation. Engine commits land before the correctness sweep (README
 # "Round discipline"); keys outside the window stay value-verified by the
 # sf0.001 oracle-parity suite on every test run.
@@ -50,7 +51,6 @@ set_priority([
     "q14_promo_revenue",
     "q19_disjunctive_revenue",
     "dedup_incremental_vs_snapshot",
-    "text_chunk_windows_udtf",
     "mapinarrow_text_metrics",
     "text_collocations_pmi",
     "mixture_source_entropy",
@@ -95,6 +95,7 @@ set_priority([
     "dq_expectations_report",
     "agg_sampled_percentiles",
     "join_null_aware_anti",
+    "stats_mannwhitney_u",
 ])
 
 __all__ = ["all_queries", "all_oracle_sql", "query", "set_priority"]

@@ -126,9 +126,10 @@ def tfidf_topk_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _FUNNEL_STEPS = ["view", "click", "purchase"]
 
-# Shared by events_funnel and events_funnel_partitioned: two physical
-# strategies, ONE semantics, hash-verified against the same SQL.
-_FUNNEL_ORACLE = """
+
+@query(
+    "events_funnel",
+    oracle="""
     WITH s1 AS (
       SELECT user_id, min(ts) t1 FROM events
       WHERE event_type = 'view' GROUP BY 1
@@ -145,10 +146,8 @@ _FUNNEL_ORACLE = """
            (SELECT count(*) FROM s1)::BIGINT users_reached
     UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
     UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-    """
-
-
-@query("events_funnel", oracle=_FUNNEL_ORACLE)
+    """,
+)
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view → click → purchase conversion funnel. The engine folds each
     user's step events through a codegen'd state machine in ONE shuffle
@@ -936,25 +935,6 @@ def window_time_range_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("events_funnel_partitioned", oracle=_FUNNEL_ORACLE)
-def events_funnel_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME funnel semantics as events_funnel (identical oracle),
-    computed skew-resiliently: the greedy fold is an FSM, FSM
-    application over a time chunk is a function, function composition
-    is associative — so per-(user, day) passes build constant-size
-    transition tables and a per-user pass composes them
-    (operators.temporal.funnel_stage_counts_partitioned). No task ever
-    holds a hot user's lifetime event list; two different physical
-    strategies, one hash-verified answer."""
-    from zip_to_parquet_spark.operators.temporal import (
-        funnel_stage_counts_partitioned,
-    )
-
-    return funnel_stage_counts_partitioned(
-        load_table(spark, sf_dir, "events"), steps=_FUNNEL_STEPS
-    )
-
-
 # ---------------------------------------------------------------------------
 # Array/higher-order-function battery (F-surface breadth)
 # ---------------------------------------------------------------------------
@@ -1470,9 +1450,10 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Strict-contiguity event pattern match (MATCH_RECOGNIZE-style CEP).
 # ---------------------------------------------------------------------------
-@query(
-    "events_pattern_strict_funnel",
-    oracle="""
+# Shared by events_pattern_strict_funnel and stream_pattern_strict_funnel:
+# each finds its (user_id, view_us, purchase_us) matches its own way and
+# rolls them up by day through _strict_pairs_daily.
+_STRICT_FUNNEL_ORACLE = """
     WITH seq AS (
       SELECT user_id, event_type, epoch_us(ts)::BIGINT AS us,
              lead(event_type) OVER w AS next_type,
@@ -1492,8 +1473,27 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
            sum(gap_us)::BIGINT AS gap_us_sum,
            (sum(gap_us) // count(*))::BIGINT AS mean_gap_us
     FROM m GROUP BY 1
-    """,
-)
+    """
+
+
+def _strict_pairs_daily(pairs: DataFrame) -> DataFrame:
+    """Daily rollup of strict view → purchase matches, one row per
+    ``(user_id, view_us, purchase_us)``: match and user counts, and the
+    exact integer sum and floor mean of the gaps, dated by the view."""
+    gap = F.col("purchase_us") - F.col("view_us")
+    return pairs.groupBy(
+        F.to_date(F.timestamp_micros(F.col("view_us"))).alias("day")
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_matches"),
+        F.countDistinct("user_id").cast("long").alias("n_users"),
+        F.sum(gap).cast("long").alias("gap_us_sum"),
+        F.expr("sum(purchase_us - view_us) div count(*)")
+        .cast("long")
+        .alias("mean_gap_us"),
+    )
+
+
+@query("events_pattern_strict_funnel", oracle=_STRICT_FUNNEL_ORACLE)
 def events_pattern_strict_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict-contiguity pattern matching — SQL:2016 MATCH_RECOGNIZE's
     ``A B`` with no permitted gap events, the semantics the loose funnel
@@ -1535,17 +1535,10 @@ def events_pattern_strict_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("next_us") - F.col("us") <= 1_800_000_000)
     ).select(
         "user_id",
-        "us",
-        (F.col("next_us") - F.col("us")).alias("gap_us"),
+        F.col("us").alias("view_us"),
+        F.col("next_us").alias("purchase_us"),
     )
-    return m.groupBy(
-        F.to_date(F.timestamp_micros(F.col("us"))).alias("day")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_matches"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-        F.sum("gap_us").cast("long").alias("gap_us_sum"),
-        F.expr("sum(gap_us) div count(*)").cast("long").alias("mean_gap_us"),
-    )
+    return _strict_pairs_daily(m)
 
 
 # ---------------------------------------------------------------------------

@@ -1746,10 +1746,9 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's BUILT-IN ``session_window`` grouping function, hash-proved
-    equal to the first-principles gaps-and-islands construction — the
-    mechanism-parity discipline of ``text_chunk_windows_udtf`` applied
-    to session windows: the engine primitive and the hand-built SQL must
-    agree row-for-row or one of them is lying. Note the boundary
+    equal to the first-principles gaps-and-islands construction: the
+    engine primitive and the hand-built SQL must agree row-for-row or one
+    of them is lying. Note the boundary
     semantics differ from ``events_sessionize``'s lag rule: the builtin
     merges events while the gap is STRICTLY under 30 min (an exactly-
     1800 s gap starts a new session), so the oracle's island flag uses

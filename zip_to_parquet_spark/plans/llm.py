@@ -1626,9 +1626,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared by text_chunk_windows (codegen HOF) and text_chunk_windows_udtf
-# (Python UDTF): one chunking semantics, two execution mechanisms.
-_CHUNK_ORACLE = """
+@query(
+    "text_chunk_windows",
+    oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
     c AS (
       SELECT doc_id, len(toks) AS n,
@@ -1638,10 +1638,8 @@ _CHUNK_ORACLE = """
     SELECT doc_id, idx::INT AS chunk_idx,
            array_to_string(toks[idx * 24 + 1 : idx * 24 + 32], ' ') AS chunk
     FROM c, unnest(range(0, n_chunks)) AS t(idx)
-    """
-
-
-@query("text_chunk_windows", oracle=_CHUNK_ORACLE)
+    """,
+)
 def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document chunking (size 32 tokens, stride 24 ⇒ 8-token
     overlap) — the standard pretraining chunker. One codegen'd projection +
@@ -2595,36 +2593,6 @@ def corpus_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_delta(docs, simulated_refresh(docs))
 
 
-@query("text_chunk_windows_udtf", oracle=_CHUNK_ORACLE)
-def text_chunk_windows_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME chunking semantics as text_chunk_windows, executed through
-    a Python user-defined TABLE function (Spark 4's arrow-optimized UDTF
-    + SQL LATERAL) — the remaining Python-integration mechanism after
-    pandas_udf / mapInPandas / applyInPandas(+WithState) / cogroup / the
-    Python Data Source. Identical oracle: mechanism changes, the hash
-    must not. When to pick which: the HOF key stays JVM-side (always
-    faster here); a UDTF earns its Python round trip only when per-row
-    table expansion needs real Python (a tokenizer lib, a parser)."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx int, chunk string", useArrow=True)
-    class ChunkWindows:
-        def eval(self, text: str):
-            toks = text.split(" ")
-            n_chunks = max((len(toks) - 8 + 23) // 24, 1)
-            for i in range(n_chunks):
-                yield i, " ".join(toks[i * 24 : i * 24 + 32])
-
-    spark.udtf.register("z2ps_chunk_windows", ChunkWindows)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "z2ps_docs_udtf"
-    )
-    return spark.sql(
-        "SELECT d.doc_id, c.chunk_idx, c.chunk "
-        "FROM z2ps_docs_udtf d, LATERAL z2ps_chunk_windows(d.text) c"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Hybrid retrieval: reciprocal-rank fusion of lexical BM25 + vector cosine
 # ---------------------------------------------------------------------------
@@ -2745,7 +2713,7 @@ def mapinarrow_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document byte length / whitespace token count / 'e' frequency
     computed with ``mapInArrow`` — completing the Python-integration
     mechanism matrix (pandas_udf, mapInPandas, applyInPandas(+WithState),
-    cogroup, UDTF, and now raw Arrow batches). Unlike mapInPandas there
+    cogroup, and now raw Arrow batches). Unlike mapInPandas there
     is NO Arrow→pandas materialization: pyarrow.compute kernels
     (binary_length, split_pattern + list_value_length, count_substring)
     run directly on the columnar buffers — the cheapest possible Python

@@ -104,8 +104,7 @@ def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Shared by events_ohlc_bars (batch) and stream_ohlc_bars (Structured
 # Streaming, complete mode): two physical engines, ONE hash-verified
-# semantics — the events_funnel / events_funnel_partitioned precedent
-# applied across the batch/stream boundary.
+# semantics, and one aggregation, _ohlc_bars.
 _OHLC_ORACLE = """
     WITH b AS (
       SELECT date_trunc('hour', ts)::TIMESTAMP AS bar_hour, event_type,
@@ -131,32 +130,48 @@ _OHLC_ORACLE = """
     """
 
 
+def _ohlc_bars(ev: DataFrame, bar, bar_hour) -> DataFrame:
+    """The candlestick aggregates of both OHLC keys over ``ev`` (``ts``,
+    ``event_id``, ``event_type``, ``vc``), grouped on (``bar`` aliased
+    ``bar``, event type); ``bar_hour`` names the output hour from the
+    grouped ``bar``. Each key keeps its own bar: ``date_trunc`` follows
+    the session time zone, ``window`` does not. Open/close are
+    ``min_by``/``max_by`` over the (ts, event_id) struct, a deterministic
+    total order even under timestamp ties."""
+    return (
+        ev.groupBy(bar.alias("bar"), "event_type")
+        .agg(
+            F.expr("min_by(vc, struct(ts, event_id))").alias("open_cents"),
+            F.max("vc").alias("high_cents"),
+            F.min("vc").alias("low_cents"),
+            F.expr("max_by(vc, struct(ts, event_id))").alias("close_cents"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("vc").alias("vol_cents"),
+        )
+        .select(
+            bar_hour.alias("bar_hour"),
+            "event_type",
+            "open_cents",
+            "high_cents",
+            "low_cents",
+            "close_cents",
+            "n_events",
+            "vol_cents",
+        )
+    )
+
+
 @query("events_ohlc_bars", oracle=_OHLC_ORACLE)
 def events_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candlestick (open/high/low/close + volume) bars per hour and event
-    type. Open/close are ``min_by``/``max_by`` over the (ts, event_id)
-    struct — a deterministic total order even under timestamp ties, which
-    a bare first()/last() cannot guarantee. The oracle states the same
-    selection via row_number; both pick the identical row.
+    type (_ohlc_bars). The oracle states the same open/close selection
+    via row_number; both pick the identical row.
 
     Scale shape: a single groupBy on (hour, type) — map-side combinable
     (min_by/max_by/min/max/sum all have partial merge), ONE shuffle of
     bar-cardinality state, no window over the fact table."""
-    ev = load_table(spark, sf_dir, "events").select(
-        F.date_trunc("hour", "ts").alias("bar_hour"),
-        "event_type",
-        "ts",
-        "event_id",
-        _cents("value").alias("vc"),
-    )
-    return ev.groupBy("bar_hour", "event_type").agg(
-        F.expr("min_by(vc, struct(ts, event_id))").alias("open_cents"),
-        F.max("vc").alias("high_cents"),
-        F.min("vc").alias("low_cents"),
-        F.expr("max_by(vc, struct(ts, event_id))").alias("close_cents"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("vc").alias("vol_cents"),
-    )
+    ev = load_table(spark, sf_dir, "events").withColumn("vc", _cents("value"))
+    return _ohlc_bars(ev, F.date_trunc("hour", "ts"), F.col("bar"))
 
 
 @query("stream_ohlc_bars", oracle=_OHLC_ORACLE)
@@ -178,30 +193,11 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_memory,
     )
 
-    ev = read_events_stream(spark, sf_dir).withColumn(
-        "vc", _cents("value")
-    )
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.expr("min_by(vc, struct(ts, event_id))").alias("open_cents"),
-            F.max("vc").alias("high_cents"),
-            F.min("vc").alias("low_cents"),
-            F.expr("max_by(vc, struct(ts, event_id))").alias("close_cents"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("vc").alias("vol_cents"),
-        )
-        .select(
-            F.col("w.start").alias("bar_hour"),
-            "event_type",
-            "open_cents",
-            "high_cents",
-            "low_cents",
-            "close_cents",
-            "n_events",
-            "vol_cents",
-        )
+    ev = read_events_stream(spark, sf_dir).withColumn("vc", _cents("value"))
+    agg = _ohlc_bars(
+        ev.withWatermark("ts", "10 minutes"),
+        F.window("ts", "1 hour"),
+        F.col("bar.start"),
     )
     return run_stream_to_memory(agg, "complete", "ohlc")
 

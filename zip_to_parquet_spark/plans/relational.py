@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from zip_to_parquet_spark.plans.registry import query
 from zip_to_parquet_spark.schema import load_table
+from zip_to_parquet_spark.streaming import windowed_counts
 
 
 # ---------------------------------------------------------------------------
@@ -641,38 +642,29 @@ def sha256_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Time-series over events: tumbling-window aggregate (batch form; the
-# streaming variant lives in streaming/). Sessionization is SQL-expressible
-# via the lag/gap/cumsum idiom, so it gets a full value oracle.
+# Time-series over events: tumbling-window aggregate (batch form of
+# stream_tumbling_window). Sessionization is SQL-expressible via the
+# lag/gap/cumsum idiom, so it gets a full value oracle.
 # ---------------------------------------------------------------------------
-@query(
-    "events_tumbling_window",
-    oracle="""
+# Shared by events_tumbling_window and stream_tumbling_window: both run
+# streams.windowed_counts, one over the batch table and one over the stream.
+_TUMBLE_ORACLE = """
     SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
            event_type,
            count(*) AS n_events,
            (sum(value::DECIMAL(18,2)))::DOUBLE AS total_value
     FROM events
     GROUP BY 1, 2
-    """,
-)
+    """
+
+
+@query("events_tumbling_window", oracle=_TUMBLE_ORACLE)
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # Exact decimal sum (see events_sessionize): round(sum(double))
-            # is engine-dependent on .xx5 boundaries.
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    """One-hour tumbling-window counts and exact value sums per event type:
+    the streaming key's aggregation over the batch table. Spark's
+    optimizer drops ``withWatermark`` from a batch plan, so the watermark
+    costs nothing here."""
+    return windowed_counts(load_table(spark, sf_dir, "events"))
 
 
 @query(

@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zip_to_parquet_spark.plans.analytics import (
+    _STRICT_FUNNEL_ORACLE,
+    _strict_pairs_daily,
+)
 from zip_to_parquet_spark.plans.registry import query
+from zip_to_parquet_spark.plans.relational import _TUMBLE_ORACLE
 from zip_to_parquet_spark.streaming import (
     read_events_stream,
     run_stream_to_memory,
@@ -26,17 +31,7 @@ from zip_to_parquet_spark.streaming import (
 )
 
 
-@query(
-    "stream_tumbling_window",
-    oracle="""
-    SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-           event_type,
-           count(*) AS n_events,
-           (sum(value::DECIMAL(18,2)))::DOUBLE AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
+@query("stream_tumbling_window", oracle=_TUMBLE_ORACLE)
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked streaming tumbling-window agg; complete-mode final state
     == the batch answer, hence the same oracle as events_tumbling_window."""
@@ -328,30 +323,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_pattern_strict_funnel",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type, epoch_us(ts)::BIGINT AS us,
-             lead(event_type) OVER w AS next_type,
-             lead(epoch_us(ts)::BIGINT) OVER w AS next_us
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    m AS (
-      SELECT user_id, us, next_us - us AS gap_us
-      FROM seq
-      WHERE event_type = 'view' AND next_type = 'purchase'
-        AND next_us - us <= 1800000000
-    )
-    SELECT make_timestamp(us)::DATE AS day,
-           count(*)::BIGINT AS n_matches,
-           count(DISTINCT user_id)::BIGINT AS n_users,
-           sum(gap_us)::BIGINT AS gap_us_sum,
-           (sum(gap_us) // count(*))::BIGINT AS mean_gap_us
-    FROM m GROUP BY 1
-    """,
-)
+@query("stream_pattern_strict_funnel", oracle=_STRICT_FUNNEL_ORACLE)
 def stream_pattern_strict_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The strict-contiguity CEP funnel (events_pattern_strict_funnel) as
     a STREAMING stateful automaton: three time-ordered micro-batches,
@@ -371,15 +343,4 @@ def stream_pattern_strict_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches = run_stream_to_memory(
         strict_pairs_stateful(ev), "update", "strict_pairs"
     )
-    return matches.groupBy(
-        F.to_date(F.timestamp_micros(F.col("view_us"))).alias("day")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_matches"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-        F.sum(F.col("purchase_us") - F.col("view_us"))
-        .cast("long")
-        .alias("gap_us_sum"),
-        F.expr("sum(purchase_us - view_us) div count(*)")
-        .cast("long")
-        .alias("mean_gap_us"),
-    )
+    return _strict_pairs_daily(matches)

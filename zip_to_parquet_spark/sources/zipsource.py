@@ -57,7 +57,12 @@ Tar archives (paths ending ``.tar``, ``.tar.gz``/``.tgz``, ``.tar.bz2``/
 through the same reader with a different member iterator. Tar has no
 central directory — it is a sequence of 512-byte header blocks, usually
 inside one compressed stream — so an archive is read in ONE sequential pass
-(``tarfile`` stream mode) that yields regular files only, in stream order.
+(``tarfile`` stream mode) that yields regular files only, in stream order,
+and then reads the stream to its end: a cut or damaged archive raises (the
+decompressors' checksums, a zero end-of-archive block followed only by NUL
+padding) instead of yielding fewer rows. Plain tar checksums only its header
+blocks, so a damaged byte in a plain tar's member data (or pax header data)
+reads through unnoticed.
 There are no member ranges: a tar is always one slice, packed like any
 small zip. Name filters still run before a member's body is read, but a
 compressed tar must inflate the skipped bytes to advance. Glob, null flags,
@@ -72,12 +77,16 @@ reference panics mid-job).
 
 from __future__ import annotations
 
+import bz2
 import glob as _pyglob
+import gzip
 import hashlib
 import json
+import lzma
 import re
 import tarfile
 import zipfile
+import zlib
 from dataclasses import dataclass
 from typing import NamedTuple
 
@@ -232,14 +241,16 @@ class _ZipPartition(InputPartition):
     slices: list[_ZipSlice]
 
 
-# Suffixes read as tar (compression auto-detected by tarfile's "r|*"); every
+# Suffixes read as tar, each with its decompressor (None: plain tar); every
 # other path is read as a zip — the per-file format pick of Hadoop's
 # suffix-keyed codec lookup.
-_TAR_SUFFIXES = (".tar", ".tar.gz", ".tgz", ".tar.bz2", ".tbz2", ".tar.xz", ".txz")
+_TAR_CODECS = {".tar": None, ".tar.gz": gzip.open, ".tgz": gzip.open,
+               ".tar.bz2": bz2.open, ".tbz2": bz2.open,
+               ".tar.xz": lzma.open, ".txz": lzma.open}
 
 
 def _is_tar(path: str) -> bool:
-    return path.lower().endswith(_TAR_SUFFIXES)
+    return path.lower().endswith(tuple(_TAR_CODECS))
 
 
 def _zip_members(fh, sl: _ZipSlice):
@@ -258,11 +269,36 @@ def _zip_members(fh, sl: _ZipSlice):
 
 def _tar_members(fh, sl: _ZipSlice):
     """``(name, read)`` per regular-file member of a tar, in stream order:
-    one sequential pass, so ``read`` is valid only until the next member."""
-    with tarfile.open(fileobj=fh, mode="r|*") as tf:
+    one sequential pass, so ``read`` is valid only until the next member.
+
+    The stream is read to its end, so a damaged archive raises instead of
+    ending early. The gzip, bz2 and xz readers check their own checksums
+    at EOF, which tarfile's stream mode never reaches. tarfile ends its
+    iteration quietly at a cut or damaged header (past the first member);
+    only a full zero block may end it, and only NUL padding may follow."""
+    path = sl.path.lower()
+    codec = next(c for suf, c in _TAR_CODECS.items() if path.endswith(suf))
+    ending = [b""]
+
+    class Info(tarfile.TarInfo):
+        @classmethod
+        def frombuf(cls, buf, encoding, errors):
+            ending[0] = buf
+            return super().frombuf(buf, encoding, errors)
+
+    raw = codec(fh) if codec else fh
+    with tarfile.open(fileobj=raw, mode="r|", tarinfo=Info) as tf:
         for m in tf:
             if m.isfile():
+                # tarfile keeps name bytes that are not UTF-8 as surrogates,
+                # which Arrow cannot store: raise here, under on_error.
+                m.name.encode()
                 yield m.name, lambda m=m: tf.extractfile(m).read()
+        if ending[0] != tarfile.NUL * tarfile.BLOCKSIZE:
+            raise tarfile.ReadError(f"tar ends without a zero block at {tf.offset}")
+        while chunk := tf.fileobj.read(1 << 16):
+            if chunk.strip(tarfile.NUL):
+                raise tarfile.ReadError("data after the tar end-of-archive block")
 
 
 def _pack(sized: list[tuple[list[_ZipSlice], int]], max_bytes: int,
@@ -484,7 +520,7 @@ class ZipMembersReader(DataSourceReader):
                     if len(names) >= self.batch_rows or pending_bytes >= self.batch_bytes:
                         yield flush()
         except (zipfile.BadZipFile, ZipFormatError, OSError, tarfile.TarError,
-                EOFError) as exc:
+                EOFError, zlib.error, lzma.LZMAError, UnicodeError) as exc:
             # ZipFormatError (unsupported compression method, missing zstd
             # codec) must take the same skip path as structural corruption:
             # permissive mode means "convert what this engine can read",
