@@ -1,12 +1,14 @@
 """Property tests of the one archive-member reader, without a JVM.
 
 ``ZipMembersReader(options).partitions()`` and ``.read()`` are driven
-directly over random archive sets — zips with stored, deflated, empty and
-directory members and non-ASCII names (one of them over a lowered
+directly over random archive sets — zips with stored, deflated, empty,
+ZIP64-extended and directory members, non-ASCII names, archive comments of
+up to 64 KiB and prepended stubs (one of them over a lowered
 ``split_members``), mixed with tar, tar.gz/tgz, tar.bz2 and tar.xz
 archives — under random packing confs, and checked against a stdlib
-``zipfile``/``tarfile`` reference. Damaged tars (one flipped bit, or a
-cut) must read as the reference, be skipped once, or fail.
+``zipfile``/``tarfile`` reference; every zip's end-record total must be its
+reference row count. Damaged archives (one flipped bit, or a cut) must read
+as the reference, be skipped once, or fail.
 """
 
 from __future__ import annotations
@@ -22,12 +24,17 @@ import tarfile
 import tempfile
 import zipfile
 import zlib
+from unittest import mock
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from zip_to_parquet_spark.sources.zipsource import ZipMembersReader
+from zip_to_parquet_spark.sources.zipsource import (
+    ZipFormatError,
+    ZipMembersReader,
+    _eocd_member_count,
+)
 
 _COLS = ("name", "source", "body", "hash")
 _TAR_MODES = {".tar": "w", ".tar.gz": "w:gz", ".tgz": "w:gz", ".tar.bz2": "w:bz2",
@@ -38,42 +45,62 @@ _DATA = st.binary(max_size=200)
 # Incompressible member bytes, so a compressed tar cut halfway through its
 # stream is cut inside member data.
 _NOISE = random.Random(0).randbytes(4096)
+# Archive comments and self-extractor stubs: text without the "PK" of a
+# zip signature, which zipfile assumes a comment never holds.
+_FILLER = b"zip comment or stub; " * 3300
 _SETTINGS = settings(max_examples=30, deadline=None,
                      suppress_health_check=[HealthCheck.too_slow])
 
 
 @st.composite
 def _zip_spec(draw, min_members=0):
-    """(".zip", [(name, data or None for a directory entry, method)])."""
+    """(".zip", [(name, data or None for a directory entry, method, zip64)],
+    {"comment": bytes, "stub": bytes, "zip64_end": bool})."""
     members = []
     for i in range(draw(st.integers(min_members, min_members + 5))):
         name = f"{i}_{draw(_NAME)}"
         if draw(st.integers(0, 5)) == 0:
-            members.append((name + "/", None, zipfile.ZIP_STORED))
+            members.append((name + "/", None, zipfile.ZIP_STORED, False))
         else:
             method = draw(st.sampled_from([zipfile.ZIP_STORED, zipfile.ZIP_DEFLATED]))
-            members.append((name, draw(_DATA), method))
-    return ".zip", members
+            members.append((name, draw(_DATA), method, draw(st.booleans())))
+    comment = _FILLER[:draw(st.one_of(st.integers(0, 100), st.integers(0, 0xFFFF)))]
+    stub = _FILLER[:draw(st.sampled_from([0, 0, 1, 300]))]
+    return ".zip", members, {"comment": comment, "stub": stub, "zip64_end": draw(st.booleans())}
 
 
 @st.composite
 def _tar_spec(draw):
-    """(suffix, [(name, data or None for a directory entry)])."""
+    """(suffix, [(name, data or None for a directory entry)], {})."""
     members = []
     for i in range(draw(st.integers(0, 5))):
         name = f"{i}_{draw(_NAME)}"
         members.append((name, None if draw(st.integers(0, 5)) == 0 else draw(_DATA)))
-    return draw(st.sampled_from(sorted(_TAR_MODES))), members
+    return draw(st.sampled_from(sorted(_TAR_MODES))), members, {}
 
 
-def _write(path: str, members) -> None:
+def _write(path: str, members, comment: bytes = b"", stub: bytes = b"",
+           zip64_end: bool = False) -> None:
+    """A zip (after ``stub``, e.g. a self-extractor) or a tar of ``members``;
+    a zip member with ``zip64`` set carries ZIP64 size fields, and
+    ``zip64_end`` writes the ZIP64 end records zipfile writes past 65,535
+    members."""
     if path.endswith(".zip"):
-        with zipfile.ZipFile(path, "w") as zf:
-            for name, data, method in members:
+        buf = io.BytesIO()
+        limit = -1 if zip64_end else zipfile.ZIP_FILECOUNT_LIMIT
+        with (mock.patch.object(zipfile, "ZIP_FILECOUNT_LIMIT", limit),
+              zipfile.ZipFile(buf, "w") as zf):
+            for name, data, method, zip64 in members:
                 if data is None:
                     zf.writestr(zipfile.ZipInfo(name), b"")
                 else:
-                    zf.writestr(name, data, compress_type=method)
+                    info = zipfile.ZipInfo(name)
+                    info.compress_type = method
+                    with zf.open(info, "w", force_zip64=zip64) as f:
+                        f.write(data)
+            zf.comment = comment
+        with open(path, "wb") as f:
+            f.write(stub + buf.getvalue())
         return
     mode = next(m for suf, m in _TAR_MODES.items() if path.endswith(suf))
     with tarfile.open(path, mode) as tf:
@@ -90,9 +117,9 @@ def _write(path: str, members) -> None:
 def _write_set(d: str, specs) -> list[str]:
     """One file per spec, named so that path order is spec order."""
     paths = []
-    for i, (suffix, members) in enumerate(specs):
+    for i, (suffix, members, dress) in enumerate(specs):
         p = os.path.join(d, f"a{i:03d}{suffix}")
-        _write(p, members)
+        _write(p, members, **dress)
         paths.append(p)
     return paths
 
@@ -160,6 +187,9 @@ def test_every_member_once_in_path_then_archive_order(specs, split, jumbo, packi
         got = _read_all(options)
         assert got == want
         assert sorted(got) == sorted(want)
+        for p in paths:
+            if p.endswith(".zip"):
+                assert _eocd_member_count(p) == len(_reference(p))
 
         for i, flag in enumerate(("source", "body", "hash"), start=1):
             nulled = [tuple(None if j == i else v for j, v in enumerate(r)) for r in want]
@@ -171,7 +201,7 @@ def _truncated(path: str, n: int, data: bytes) -> None:
     its central directory (so it still splits into member ranges, each of
     which fails); a plain tar is cut halfway into its last member's bytes,
     a compressed one halfway through its stream."""
-    members = [(f"m{i}", data, zipfile.ZIP_STORED) for i in range(n)]
+    members = [(f"m{i}", data, zipfile.ZIP_STORED, False) for i in range(n)]
     if path.endswith(".zip"):
         _write(path, members)
         raw = open(path, "rb").read()
@@ -203,7 +233,7 @@ def test_truncated_archive_is_skipped_once_or_fails(specs, bad, split, packing):
     suffix = bad.draw(st.sampled_from([".zip", ".tar", ".tar.gz", ".tar.xz"]), label="kind")
     n = bad.draw(st.integers(1, 3 * split), label="members")
     with tempfile.TemporaryDirectory() as d:
-        paths = _write_set(d, specs[:at] + [(suffix, [])] + specs[at:])
+        paths = _write_set(d, specs[:at] + [(suffix, [], {})] + specs[at:])
         _truncated(paths[at], n, _NOISE)
         want = [r for p in paths if p != paths[at] for r in _reference(p)]
         options = {"paths": json.dumps(paths), "split_members": str(split), **packing}
@@ -241,9 +271,9 @@ def _read_or_error(options: dict):
 @settings(max_examples=200, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(spec=_tar_spec(), damage=st.data())
 def test_damaged_tar_reads_reference_rows_skips_once_or_fails(spec, damage):
-    suffix, members = spec
+    suffix = spec[0]
     with tempfile.TemporaryDirectory() as d:
-        [path] = _write_set(d, [(suffix, members)])
+        [path] = _write_set(d, [spec])
         want = _reference(path)
         raw = open(path, "rb").read()
         exempt = _tar_data_bytes(path) if suffix == ".tar" else set()
@@ -330,3 +360,57 @@ def test_data_after_the_tar_end_block_fails(tmp_path):
         f.write(open(b, "rb").read())
     with pytest.raises(tarfile.ReadError):
         _read_all({"paths": json.dumps([a]), "on_error": "fail"})
+
+
+# What the reader raises for a damaged zip under on_error='fail'.
+_ZIP_ERRORS = (zipfile.BadZipFile, ZipFormatError, OSError, EOFError, zlib.error)
+
+
+def test_every_single_bit_flip_of_a_zip_reads_reference_rows_or_fails(tmp_path):
+    # zipfile walks the central directory by its byte size: a flipped
+    # comment-length field hid the entries after it until the walk had to
+    # find the end record's total.
+    path = str(tmp_path / "a.zip")
+    _write(path, [("a.txt", b"stored " * 10, zipfile.ZIP_STORED, False),
+                  ("demo", b"deflated " * 30, zipfile.ZIP_DEFLATED, False),
+                  ("c.bin", _NOISE[:200], zipfile.ZIP_DEFLATED, False)])
+    want = _reference(path)
+    raw = open(path, "rb").read()
+    options = {"paths": json.dumps([path])}
+    for at in range(len(raw)):
+        for bit in range(8):
+            with open(path, "wb") as f:
+                f.write(raw[:at] + bytes([raw[at] ^ (1 << bit)]) + raw[at + 1:])
+            try:
+                got = _read_all({**options, "on_error": "fail"})
+            except _ZIP_ERRORS:
+                continue
+            # A flip may turn a member's name into a directory entry's
+            # ("demo" -> "dem/"), which is never read; no row may go.
+            assert len(got) == len(want), (at, bit)
+            for g, w in zip(got, want):
+                assert g == w or g[0].endswith("/"), (at, bit)
+            skips = _Counter()
+            assert _read_all({**options, "on_error": "skip"}, skip_acc=skips) == got
+            assert skips.value == 0
+
+
+@pytest.mark.parametrize("bit", [0, 5, 6])
+def test_encrypted_or_patched_member_is_a_format_error(tmp_path, bit):
+    # zipfile raises RuntimeError (bit 0) or NotImplementedError (5, 6),
+    # which on_error='skip' did not catch.
+    good, bad = str(tmp_path / "a.zip"), str(tmp_path / "b.zip")
+    _write(good, [("a", b"kept", zipfile.ZIP_DEFLATED, False)])
+    _write(bad, [("b", b"flagged", zipfile.ZIP_DEFLATED, False)])
+    raw = bytearray(open(bad, "rb").read())
+    with zipfile.ZipFile(bad) as zf:
+        flags = zf.start_dir + 8  # the central-directory entry's flag bits
+    raw[flags] |= 1 << bit
+    open(bad, "wb").write(raw)
+    options = {"paths": json.dumps([good, bad])}
+
+    skips = _Counter()
+    assert _read_all({**options, "on_error": "skip"}, skip_acc=skips) == _reference(good)
+    assert skips.value == 1
+    with pytest.raises(ZipFormatError, match="encrypted or patched"):
+        _read_all({**options, "on_error": "fail"})

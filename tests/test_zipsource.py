@@ -271,6 +271,29 @@ def test_row_group_size_single_file(spark, tmp_path):
     assert sum(sizes) == 250
 
 
+@pytest.mark.parametrize("n", [199, 200, 201])
+def test_single_file_row_groups_are_full_but_the_last(spark, tmp_path, n):
+    """Every row group holds exactly ``row_group_rows`` rows except the
+    last, for row counts below, at and above a multiple of the cap. The
+    rows come from several member-range partitions in 13-row Arrow
+    batches, so neither lines up with the cap."""
+    import pyarrow.parquet as pq
+
+    from zip_to_parquet_spark.sinks import write_single_parquet_file
+
+    cap = 100
+    sizes = [n // 3 + 7, n // 3 - 5]
+    sizes.append(n - sum(sizes))
+    for i, k in enumerate(sizes):
+        make_zip(tmp_path / f"a{i}.zip", [(f"m{j:03d}", b"x" * j) for j in range(k)])
+    df = read_zip_members(spark, str(tmp_path / "*.zip"), batch_rows=13, split_members=45)
+    out = str(tmp_path / "out.parquet")
+    assert write_single_parquet_file(df, out, row_group_rows=cap) == n
+    md = pq.ParquetFile(out).metadata
+    groups = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+    assert groups == [cap] * (n // cap) + ([n % cap] if n % cap else [])
+
+
 def test_empty_input_glob_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="no input archives"):
         read_zip_members(spark, str(tmp_path / "nothing-*.zip"))
@@ -286,6 +309,96 @@ def test_count_members(spark, tmp_path):
     zp = make_zip(tmp_path / "basic.zip", BASIC)
     assert count_members(spark, zp) == 3
     assert count_members(spark, zp, member_glob="sub/**") == 2
+
+
+def _many_member_zip(path, n):
+    """``n`` empty members; past 65,535, zipfile adds the ZIP64 end records."""
+    with zipfile.ZipFile(path, "w") as z:
+        for i in range(n):
+            z.writestr(f"m{i:06d}.txt", b"")
+    return str(path)
+
+
+def test_count_members_without_glob_equals_the_scan(spark, tmp_path):
+    """Without a glob, count_members sums the zips' end-record totals; each
+    must equal the scan's row count. A tar in the input sends the whole
+    count to the scan."""
+    import tarfile
+
+    basic = make_zip(tmp_path / "basic.zip", BASIC)
+    dirs = str(tmp_path / "dirs.zip")
+    with zipfile.ZipFile(dirs, "w") as z:
+        for name in ("sub/", "sub/deep/", "sub/deep/f.txt"):
+            z.writestr(name, b"" if name.endswith("/") else b"data")
+    commented = make_zip(tmp_path / "commented.zip", BASIC)
+    with zipfile.ZipFile(commented, "a") as z:
+        z.comment = b"archive comment " * 500
+    stub = str(tmp_path / "stub.zip")
+    with open(stub, "wb") as f:
+        f.write(b"#!/bin/sh\nexit 0\n" + open(basic, "rb").read())
+    z64 = _many_member_zip(tmp_path / "z64.zip", 65540)
+    tgz = str(tmp_path / "mix.tar.gz")
+    with tarfile.open(tgz, "w:gz") as tf:
+        for name in ("t1", "t2"):
+            ti = tarfile.TarInfo(name)
+            ti.size = 2
+            tf.addfile(ti, io.BytesIO(b"tt"))
+
+    cases = {"basic": (basic, 3), "dirs": (dirs, 3), "commented": (commented, 3),
+             "stub": (stub, 3), "zip64": (z64, 65540), "mix": ([basic, tgz], 5)}
+    for case, (patterns, n) in cases.items():
+        scan = read_zip_members(spark, patterns, body=False, sha=False).count()
+        assert count_members(spark, patterns) == scan == n, case
+
+
+def test_count_members_without_glob_starts_no_spark_job(spark, tmp_path):
+    import tarfile
+
+    tracker = spark.sparkContext.statusTracker()
+    a = make_zip(tmp_path / "a.zip", BASIC)
+    b = make_zip(tmp_path / "b.zip", BASIC[:1])
+    before = set(tracker.getJobIdsForGroup())
+    assert count_members(spark, str(tmp_path / "*.zip")) == 4
+    assert set(tracker.getJobIdsForGroup()) == before
+
+    # The tracker does see the scan a tar input falls back to.
+    tar = str(tmp_path / "c.tar")
+    with tarfile.open(tar, "w") as tf:
+        tf.addfile(tarfile.TarInfo("empty"))
+    assert count_members(spark, [a, b, tar]) == 5
+    assert set(tracker.getJobIdsForGroup()) - before
+
+
+def test_count_members_wrap_ambiguous_end_record_takes_the_scan(spark, tmp_path):
+    """A classic end record stores the total mod 65536 when a writer
+    without ZIP64 passes 65535 entries: here 70,000 entries under a total
+    of 4,464. The directory is too large for that total, so the count
+    falls back to the scan, which reads all 70,000."""
+    import struct
+
+    from zip_to_parquet_spark.sources.zipsource import _eocd_member_count
+
+    n = 70000
+    zp = _many_member_zip(tmp_path / "wrap.zip", n)
+    raw = open(zp, "rb").read()
+    with zipfile.ZipFile(zp) as z:
+        start = z.start_dir
+    end_cd = len(raw) - 22 - 20 - 56  # classic EOCD, ZIP64 locator, ZIP64 EOCD
+    eocd = struct.pack("<4s4H2LH", b"PK\x05\x06", 0, 0, n % 65536, n % 65536,
+                       end_cd - start, start, 0)
+    with open(zp, "wb") as f:
+        f.write(raw[:end_cd] + eocd)
+    with zipfile.ZipFile(zp) as z:
+        assert len(z.infolist()) == n
+    assert _eocd_member_count(zp) is None
+    assert count_members(spark, zp) == n
+
+
+def test_count_members_without_end_record_raises(spark, tmp_path):
+    bad = str(tmp_path / "bad.zip")
+    open(bad, "wb").write(b"this is not a zip file")
+    with pytest.raises(Exception, match="not a zip file"):
+        count_members(spark, bad)
 
 
 def test_on_error_skip(spark, tmp_path):
@@ -1048,10 +1161,7 @@ def test_zip64_eocd_member_count(tmp_path):
     from zip_to_parquet_spark.sources.zipsource import _eocd_member_count
 
     n = 65540  # > 0xFFFF - 1 forces the ZIP64 EOCD
-    zp = str(tmp_path / "z64.zip")
-    with zf.ZipFile(zp, "w") as z:
-        for i in range(n):
-            z.writestr(f"m{i:06d}.txt", b"")
+    zp = _many_member_zip(tmp_path / "z64.zip", n)
     assert _eocd_member_count(zp) == n
 
     # Same archive with a zip comment: the signature scan must look back

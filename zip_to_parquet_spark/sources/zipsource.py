@@ -48,9 +48,16 @@ into member-index-range partitions that are never packed — the central
 directory is random-access, so each task opens the file independently and
 reads only its slice, bounding per-task time by the range size instead of
 the largest archive. The member count comes from the end-of-central-
-directory record alone (an O(comment) tail read, no CD parse), gated on
-file size so small archives cost the driver nothing beyond the stat it
-already does.
+directory record alone (the last 98 bytes, or the 64 KiB comment window
+when the record is not among them; no CD parse), gated on file size so
+small archives cost the driver nothing beyond the stat it already does.
+The same tail read, one per archive, is all ``count_members`` reads when
+no member glob is given: a million small archives cost the driver about
+100 MB of reads and start no Spark job. Every zip read checks that the
+central directory holds as many entries as its end record's total, so
+the count equals the rows read for every zip the reader accepts; a zip
+damaged inside a central-directory entry is counted by that total and
+fails (or is skipped) when it is read.
 
 Tar archives (paths ending ``.tar``, ``.tar.gz``/``.tgz``, ``.tar.bz2``/
 ``.tbz2``, ``.tar.xz``/``.txz``; every other path is read as a zip) go
@@ -83,7 +90,9 @@ import gzip
 import hashlib
 import json
 import lzma
+import os
 import re
+import struct
 import tarfile
 import zipfile
 import zlib
@@ -120,10 +129,14 @@ _SUPPORTED_METHODS = {
     zipfile.ZIP_BZIP2,
     zipfile.ZIP_LZMA,
 }
+# General-purpose flag bits this engine cannot read past: encrypted (0),
+# compressed patched data (5), strong encryption (6).
+_UNREADABLE_FLAGS = 0x1 | 0x20 | 0x40
 
 
 class ZipFormatError(ValueError):
-    """A member uses a compression method this engine cannot decode."""
+    """A member uses a compression method or a feature (encryption, patched
+    data) this engine cannot decode."""
 
 
 def _strict_hash_hex(digest: bytes) -> str:
@@ -143,9 +156,6 @@ def _read_zstd_member(fh, info: zipfile.ZipInfo, path: str) -> bytes:
     pyarrow's zstd codec, and CRC-check like zipfile would. CRC/format
     failures raise BadZipFile so ``on_error='skip'`` treats them exactly
     like any other corrupt-archive error."""
-    import struct
-    import zlib
-
     import pyarrow as pa
 
     if not pa.Codec.is_available("zstd"):  # pragma: no cover - env guard
@@ -182,7 +192,14 @@ def _read_zstd_member(fh, info: zipfile.ZipInfo, path: str) -> bytes:
 def _member_bytes(fh, zf: zipfile.ZipFile, info: zipfile.ZipInfo, path: str) -> bytes:
     """One member's decoded bytes: zstd through _read_zstd_member, the
     native codecs through zipfile, anything else a ZipFormatError. ``fh`` is
-    the file object ``zf`` reads from."""
+    the file object ``zf`` reads from. A member flagged encrypted (flag bit
+    0), patched (bit 5) or strongly encrypted (bit 6) is a ZipFormatError
+    too, not zipfile's RuntimeError or NotImplementedError."""
+    if info.flag_bits & _UNREADABLE_FLAGS:
+        raise ZipFormatError(
+            f"member {info.filename!r} in {path} is encrypted or patched "
+            f"(flag bits {info.flag_bits:#06x})"
+        )
     if info.compress_type == _ZSTD_METHOD:
         return _read_zstd_member(fh, info, path)
     if info.compress_type not in _SUPPORTED_METHODS:
@@ -195,33 +212,73 @@ def _member_bytes(fh, zf: zipfile.ZipFile, info: zipfile.ZipInfo, path: str) -> 
 
 # Minimum possible central-directory entry: 46-byte fixed header + a
 # nonempty filename. Lets partitions() skip the EOCD tail read entirely
-# for any archive too small to exceed the split threshold.
+# for any archive too small to exceed the split threshold, and bounds how
+# many entries a classic end record's 16-bit total can stand for.
 _MIN_CD_ENTRY = 46
 
+# The end-of-central-directory records, as zipfile reads them: the classic
+# EOCD (22 bytes, then a comment of up to 64 KiB), and before it the ZIP64
+# locator (20 bytes) and the ZIP64 EOCD (56 bytes, no extensible data).
+_EOCD = struct.Struct("<4s4H2LH")
+_EOCD64_LOCATOR = struct.Struct("<4sLQL")
+_EOCD64 = struct.Struct("<4sQ2H2L4Q")
+_EOCD64_SPAN = _EOCD64_LOCATOR.size + _EOCD64.size
 
-def _eocd_member_count(path: str) -> int:
-    """Total member count from the end-of-central-directory record alone —
-    seek to the tail, find the EOCD signature (scanning back past a zip
-    comment of up to 64 KiB), read the 2-byte total; 0xFFFF defers to the
-    ZIP64 EOCD's 8-byte total. Never parses the central directory, so a
-    million-member archive costs one bounded tail read."""
-    import os
-    import struct
 
-    size = os.path.getsize(path)
+def _eocd_member_count(path: str) -> int | None:
+    """The member total an archive's end-of-central-directory record vouches
+    for, or None when it vouches for none: no record, a non-zero disk field,
+    a directory whose offset and size do not fit before the record, or a
+    classic 16-bit total that may have wrapped: a directory of at least
+    ``(total + 0x10000) * 46`` bytes may hold ``total + k * 0x10000``
+    entries from a writer without ZIP64.
+
+    Reads the tail the way zipfile's ``_EndRecData`` does: the last 98
+    bytes (the classic record and the ZIP64 records before it), and the
+    64 KiB comment window only when the signature is not among them. Never
+    parses the central directory, so a million-member archive costs one
+    bounded tail read."""
     with open(path, "rb") as fh:
-        tail_len = min(size, 22 + 65535)
-        fh.seek(size - tail_len)
-        tail = fh.read(tail_len)
-    i = tail.rfind(b"PK\x05\x06")
-    if i < 0 or i + 22 > len(tail):
-        raise zipfile.BadZipFile(f"no end-of-central-directory record in {path}")
-    total = struct.unpack("<H", tail[i + 10 : i + 12])[0]
-    if total == 0xFFFF:
-        j = tail.rfind(b"PK\x06\x06", 0, i)
-        if j < 0 or j + 40 > len(tail):
-            raise zipfile.BadZipFile(f"ZIP64 EOCD not found in {path}")
-        total = struct.unpack("<Q", tail[j + 32 : j + 40])[0]
+        size = fh.seek(0, os.SEEK_END)
+        base = max(size - _EOCD.size - _EOCD64_SPAN, 0)
+        fh.seek(base)
+        buf = fh.read()
+        last = buf[-_EOCD.size:]
+        if len(last) == _EOCD.size and last[:4] == b"PK\x05\x06" and last[-2:] == b"\0\0":
+            i = len(buf) - _EOCD.size  # zipfile's no-comment fast path
+        else:
+            i = buf.rfind(b"PK\x05\x06")
+            if i < 0:
+                base = max(size - (1 << 16) - _EOCD.size, 0)
+                fh.seek(base)
+                buf = fh.read()
+                i = buf.rfind(b"PK\x05\x06")
+            if i < 0 or i + _EOCD.size > len(buf):
+                return None
+        at = base + i
+        if base > max(at - _EOCD64_SPAN, 0):  # a comment pushed the ZIP64 records out
+            base = max(at - _EOCD64_SPAN, 0)
+            fh.seek(base)
+            buf = fh.read(size - base)
+            i = at - base
+    _, disk, disk_cd, _, total, size_cd, offset_cd, _ = _EOCD.unpack_from(buf, i)
+    zip64 = False
+    if i >= _EOCD64_LOCATOR.size:
+        sig, z_disk, _, n_disks = _EOCD64_LOCATOR.unpack_from(buf, i - _EOCD64_LOCATOR.size)
+        if sig == b"PK\x06\x07":
+            if z_disk or n_disks > 1 or i < _EOCD64_SPAN:
+                return None  # zipfile raises on these
+            rec = _EOCD64.unpack_from(buf, i - _EOCD64_SPAN)
+            if rec[0] == b"PK\x06\x06":
+                zip64 = True
+                disk, disk_cd, _, total, size_cd, offset_cd = rec[4:]
+    if disk or disk_cd:
+        return None
+    # zipfile's "concat": bytes prepended to the archive (a stub), never < 0.
+    if at - size_cd - offset_cd - (_EOCD64_SPAN if zip64 else 0) < 0:
+        return None
+    if not zip64 and size_cd >= (total + 0x10000) * _MIN_CD_ENTRY:
+        return None
     return total
 
 
@@ -256,9 +313,23 @@ def _is_tar(path: str) -> bool:
 def _zip_members(fh, sl: _ZipSlice):
     """``(name, read)`` per member of a zip slice, in central-directory
     order: ``read()`` returns the decoded bytes, ``None`` marks a directory
-    entry (kept as a row with an empty body)."""
-    with zipfile.ZipFile(fh) as zf:
+    entry (kept as a row with an empty body).
+
+    zipfile walks the central directory by its byte size and never counts
+    the entries, so a damaged comment-length field hides the entries after
+    it. The walk must find the total the end record vouches for."""
+    try:
+        zf = zipfile.ZipFile(fh)
+    except NotImplementedError as exc:  # an entry's "version needed" above 6.3
+        raise ZipFormatError(f"{sl.path}: {exc}") from exc
+    with zf:
         infos = zf.infolist()
+        total = _eocd_member_count(sl.path)
+        if total is not None and total != len(infos):
+            raise zipfile.BadZipFile(
+                f"central directory of {sl.path} lists {len(infos)} entries, "
+                f"its end record {total}"
+            )
         if sl.start or sl.end is not None:
             infos = infos[sl.start : sl.end]
         for info in infos:
@@ -422,11 +493,9 @@ class ZipMembersReader(DataSourceReader):
         # always one slice. The size gate (an archive under
         # split_members·46 bytes CANNOT list that many CD entries) keeps
         # the driver cost at the stat it already pays; only plausibly-jumbo
-        # zips get the O(comment) EOCD tail read. A file unreadable here
-        # falls through to a single slice so the error surfaces in the
-        # task, where on_error applies.
-        import os
-
+        # zips get the EOCD tail read. A file unreadable here, or one whose
+        # end record vouches for no total, falls through to a single slice
+        # so any error surfaces in the task, where on_error applies.
         paths = self.paths
         if self.source_preds:
             pred = self._compile(self.source_preds)
@@ -442,7 +511,7 @@ class ZipMembersReader(DataSourceReader):
                     and not _is_tar(p)):
                 try:
                     n = _eocd_member_count(p)
-                except (OSError, zipfile.BadZipFile):
+                except OSError:
                     n = None
             if n is not None and n > self.split_members:
                 slices = [
@@ -595,8 +664,6 @@ class ZipMembersStreamReader(DataSourceStreamReader):
         self._horizon: float | None = None
 
     def _snapshot(self) -> list[tuple[float, str]]:
-        import os
-
         files = []
         for p in _pyglob.glob(self.pattern, recursive=True):
             try:
@@ -815,11 +882,33 @@ def count_members(
     member_glob: str | None = None,
 ) -> int:
     """Reference A3/D1: count glob-matching members without decompressing
-    any zip member (central-directory-only scan; a tar still takes its one
-    sequential pass). The reference runs this as a
-    separate sequential pre-pass that re-opens every archive
-    (builder.rs:24-41); here it is the same distributed scan with the
-    body/hash projection pushed down."""
+    any member. The reference runs this as a separate sequential pre-pass
+    that re-opens every archive (builder.rs:24-41).
+
+    Without ``member_glob`` and with only zip inputs, the count is the sum
+    of each archive's end-of-central-directory total, read on the driver
+    (one tail read per archive, see _eocd_member_count), and no Spark job
+    starts. Directory entries count, as they are rows. Any tar input, or
+    any zip whose end record vouches for no total, sends the whole count
+    to the distributed scan below, as does a glob: ``read_zip_members``
+    with the body/hash projection pushed down (central directory only; a
+    tar takes its one sequential pass).
+
+    So without a glob, a zip damaged inside a central-directory entry is
+    counted by its end record's total: it fails (or is skipped) when it is
+    read, not at count time."""
+    if not member_glob:
+        total = 0
+        for p in _expand_patterns(patterns):
+            try:
+                n = None if _is_tar(p) else _eocd_member_count(p)
+            except OSError:
+                n = None
+            if n is None:
+                break
+            total += n
+        else:
+            return total
     df = read_zip_members(spark, patterns, member_glob, body=False, source=False, sha=False)
     return df.count()
 
