@@ -12,7 +12,7 @@ from collections import defaultdict
 
 import pytest
 
-from tests.parity import compare
+from tests.parity import TABLES, compare, duck_connect
 from zip_to_parquet_spark.plans import all_oracle_sql, all_queries
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
@@ -58,6 +58,61 @@ def test_only_batch_stream_pairs_share_an_oracle():
         groups[" ".join(sql.split())].append(name)
     shared = {tuple(sorted(g)) for g in groups.values() if len(g) > 1}
     assert shared == BATCH_STREAM_PAIRS
+
+
+def _planted(base: str, out, table: str, rows: list[dict]) -> str:
+    """``base``'s tables in ``out``, with ``rows`` appended to ``table``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for t in TABLES:
+        if t != table:
+            os.symlink(f"{base}/{t}.parquet", out / f"{t}.parquet")
+    tbl = pq.read_table(f"{base}/{table}.parquet")
+    pq.write_table(
+        pa.concat_tables([tbl, pa.Table.from_pylist(rows, schema=tbl.schema)]),
+        out / f"{table}.parquet",
+    )
+    return str(out)
+
+
+def _near_parallel(base: str) -> list[dict]:
+    import pyarrow.parquet as pq
+
+    emb = pq.read_table(f"{base}/embeddings.parquet").to_pylist()
+    top = max(r["vec_id"] for r in emb)
+    v = [2 * x for x in emb[0]["embedding"]]
+    v[0] += 0.05
+    return [{"vec_id": top + 1, "embedding": v, "label": emb[0]["label"]}]
+
+
+def _orderless_customer(base: str) -> list[dict]:
+    import pyarrow.parquet as pq
+
+    top = max(pq.read_table(f"{base}/customer.parquet", columns=["c_custkey"])
+              .column("c_custkey").to_pylist())
+    return [{"c_custkey": top + 1, "c_name": f"Customer#{top + 1:09d}",
+             "c_nationkey": 0, "c_acctbal": 0.0, "c_mktsegment": "BUILDING"}]
+
+
+# Keys whose fixture oracle row compares two empty sets: every fixture
+# customer has orders, and no fixture embedding pair reaches cosine 0.95.
+# Each runs again on the fixture plus one planted row that must come out.
+PLANTED = {
+    "join_anti": ("customer", _orderless_customer),
+    "dedup_embedding_cosine": ("embeddings", _near_parallel),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PLANTED))
+def test_oracle_parity_planted(spark, tmp_path, name):
+    table, rows = PLANTED[name]
+    sf_dir = _planted(SF_DIR, tmp_path, table, rows(SF_DIR))
+    con = duck_connect(sf_dir)
+    [(n,)] = con.execute(f"SELECT count(*) FROM ({ORACLES[name]})").fetchall()
+    con.close()
+    assert n >= 1
+    compare(spark, sf_dir, QUERIES[name], ORACLES[name])
 
 
 def test_entry_smoke(spark):

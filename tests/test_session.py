@@ -1,9 +1,10 @@
-"""The Python worker daemon that ``get_spark`` sessions start.
+"""The worker-path ``sitecustomize`` that ``get_spark`` sessions install.
 
-``_worker/z2ps_daemon.py`` wraps ``zipimporter.invalidate_caches`` so a
-task does not re-read ``pyspark.zip`` unless it changed. These tests check,
-inside real tasks, that the wrap is installed, that it is cheap, and that
-a zip rewritten between tasks is still read again.
+``_worker/sitecustomize.py`` wraps ``zipimporter.invalidate_caches`` so a
+Python worker does not re-read ``pyspark.zip`` unless it changed. These
+tests check, inside real tasks and data-source planner workers, that the
+wrap is installed and cheap, that a zip rewritten between tasks is still
+read again, and that a ``sitecustomize`` it shadows still runs.
 """
 
 from __future__ import annotations
@@ -13,26 +14,71 @@ import subprocess
 import sys
 import zipfile
 
-from zip_to_parquet_spark.session import _DAEMON_DIR
+from zip_to_parquet_spark.session import _WORKER_DIR
 
-DAEMON_MODULE = "z2ps_daemon"
+WRAP_MODULE = "sitecustomize"
+WRAP_FILE = os.path.join(_WORKER_DIR, f"{WRAP_MODULE}.py")
 
 
 def _per_task(spark, fn, n=8):
     return spark.sparkContext.parallelize(range(n), n).mapPartitions(fn).collect()
 
 
-def test_workers_run_the_daemons_invalidate_caches(spark):
+def test_workers_run_the_sitecustomize_invalidate_caches(spark):
     def probe(_):
         import sys
         import zipimport
 
         fn = zipimport.zipimporter.invalidate_caches
-        # The daemon runs as ``python -m``, so its functions live in
-        # ``__main__``; the spec still names the module.
-        yield sys.modules[fn.__module__].__spec__.name
+        yield sys.modules[fn.__module__].__spec__.name, fn.__code__.co_filename
 
-    assert set(_per_task(spark, probe)) == {DAEMON_MODULE}
+    assert set(_per_task(spark, probe)) == {(WRAP_MODULE, WRAP_FILE)}
+
+
+def test_planner_workers_run_the_sitecustomize_invalidate_caches(spark):
+    """Spark starts the workers that plan a Python data source from the
+    stock ``pyspark.daemon``, whatever ``spark.python.daemon.module`` says;
+    the wrap reaches them through the worker path alone."""
+    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+    def wrap_and_cost():
+        import importlib
+        import sys
+        import time
+        import zipimport
+
+        fn = zipimport.zipimporter.invalidate_caches
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        secs = time.perf_counter() - t0
+        return f"{sys.modules[fn.__module__].__spec__.name}|{secs:.6f}"
+
+    class Reader(DataSourceReader):
+        def partitions(self):  # the plan_data_source_read worker
+            return [InputPartition(wrap_and_cost())]
+
+        def read(self, partition):
+            yield (partition.value,)
+
+    class Probe(DataSource):
+        @classmethod
+        def name(cls):
+            return "z2ps_planner_probe"
+
+        def schema(self):  # the create_data_source worker
+            return f"`{wrap_and_cost()}` string"
+
+        def reader(self, schema):
+            return Reader()
+
+    spark.dataSource.register(Probe)
+    df = spark.read.format("z2ps_planner_probe").load()
+    [(planned,)] = df.collect()
+    for worker, probed in (("create", df.columns[0]), ("plan", planned)):
+        module, secs = probed.split("|")
+        assert module == WRAP_MODULE, (worker, probed)
+        # The stock call re-reads pyspark.zip and the spark-core jar: ~0.2 s.
+        assert float(secs) < 0.020, (worker, probed)
 
 
 def test_worker_invalidate_caches_is_cheap(spark):
@@ -91,15 +137,36 @@ def test_worker_rereads_a_zip_rewritten_between_tasks(spark, tmp_path):
     assert {v for _, v in resized} == {3}
 
 
-def test_daemon_module_imports_alone():
-    assert sorted(f for f in os.listdir(_DAEMON_DIR) if f.endswith(".py")) == [
-        f"{DAEMON_MODULE}.py"]
+def test_worker_dir_module_imports_alone():
+    assert sorted(f for f in os.listdir(_WORKER_DIR) if f.endswith(".py")) == [
+        f"{WRAP_MODULE}.py"]
     code = (
-        f"import sys; sys.path[:] = [{_DAEMON_DIR!r}]; import {DAEMON_MODULE}; "
-        "print('zip_to_parquet_spark' in sys.modules)"
+        f"import sys; sys.path[:] = [{_WORKER_DIR!r}]; import {WRAP_MODULE}, zipimport; "
+        "print(zipimport.zipimporter.invalidate_caches.__module__, "
+        "'zip_to_parquet_spark' in sys.modules)"
     )
     out = subprocess.run(
         [sys.executable, "-I", "-S", "-c", code],
         capture_output=True, text=True, check=True, timeout=60,
     )
-    assert out.stdout.strip() == "False"
+    assert out.stdout.split() == [WRAP_MODULE, "False"]
+
+
+def test_shadowed_sitecustomize_still_runs(tmp_path):
+    marker = tmp_path / "marker"
+    shadowed = tmp_path / "site"
+    shadowed.mkdir()
+    (shadowed / f"{WRAP_MODULE}.py").write_text(
+        f"import pathlib\npathlib.Path({str(marker)!r}).write_text('ran')\n")
+    code = (
+        "import sys, zipimport; "
+        "print(zipimport.zipimporter.invalidate_caches.__code__.co_filename); "
+        f"print(sys.modules[{WRAP_MODULE!r}].__file__)"
+    )
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([_WORKER_DIR, str(shadowed)]))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, check=True, timeout=60, env=env,
+    )
+    assert out.stdout.splitlines() == [WRAP_FILE, str(shadowed / f"{WRAP_MODULE}.py")]
+    assert marker.read_text() == "ran"

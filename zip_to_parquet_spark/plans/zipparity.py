@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from zip_to_parquet_spark.plans.registry import query
 from zip_to_parquet_spark.runtime import build_once, session_scratch
-from zip_to_parquet_spark.sources.zipsource import read_zip_members
+from zip_to_parquet_spark.sources.zipsource import count_members, read_zip_members
 
 _N_ARCHIVES = 8
 _FIXED_DATE = (2020, 1, 1, 0, 0, 0)
@@ -99,14 +99,15 @@ def zip_glob_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# A3/D1: central-directory-only count (no decompression).
+# A3/D1: the reference's count pre-pass, through count_members itself (the
+# end-of-central-directory sum on the driver; no member is decompressed).
 @query(
     "zip_count_members",
     oracle="SELECT count(*) AS n_members FROM documents",
 )
 def zip_count_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _members(spark, sf_dir, body=False, source=False, sha=False)
-    return df.agg(F.count(F.lit(1)).alias("n_members"))
+    n = count_members(spark, f"{_zip_fixture_dir(sf_dir)}/part*.zip")
+    return spark.createDataFrame([(n,)], "n_members long")
 
 
 # C: multi-archive UNION ALL bag — per-archive member counts, with the

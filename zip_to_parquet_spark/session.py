@@ -12,15 +12,13 @@ locally:
   ``applyInPandas`` — Arrow batch transfer is the only acceptable Python seam.
 - ``maxPartitionBytes`` left at default 128 MB: parquet scans split by byte
   range, which is what keeps a 100 TB scan at ~800k well-sized tasks.
-- Python task workers start from ``_worker/z2ps_daemon.py``, not
-  ``pyspark.daemon``: before every task pyspark calls
-  ``importlib.invalidate_caches()``, which on Python 3.10-3.12 makes each
-  cached zipimporter re-read ``pyspark.zip`` and the spark-core jar (~0.2 s
-  a task). The daemon re-reads an archive only when its
-  ``(st_ino, st_mtime_ns, st_size)`` stamp changed since that importer's
-  last read. Spark still starts the workers that plan Python data sources
-  from ``pyspark.daemon``, so planning keeps that cost. Delete the daemon
-  once the worker Python is 3.13 or newer.
+- Every Python worker, task and data-source planner alike, starts with
+  ``_worker/sitecustomize.py`` imported: before every task and every
+  planning call pyspark calls ``importlib.invalidate_caches()``, which on
+  Python 3.10-3.12 makes each cached zipimporter re-read ``pyspark.zip``
+  and the spark-core jar (~0.2 s a call). The module re-reads an archive
+  only when its ``(st_ino, st_mtime_ns, st_size)`` stamp changed since that
+  importer's last read. Delete it once the worker Python is 3.13 or newer.
 """
 
 from __future__ import annotations
@@ -31,8 +29,10 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark"]
 
-# Holds only z2ps_daemon.py, so the worker path gains that one module.
-_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
+# Holds only sitecustomize.py: Spark starts every Python daemon, the
+# planners' too, with this directory on PYTHONPATH, so each worker
+# interpreter imports that module at start-up.
+_WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
 
 
 def get_spark(app_name: str = "zip-to-parquet-spark") -> SparkSession:
@@ -66,11 +66,10 @@ def get_spark(app_name: str = "zip-to-parquet-spark") -> SparkSession:
         # compiling and every later stage runs interpreted at 4-10x cost.
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
         .config("spark.ui.enabled", "false")
-        # Both are static confs: a session someone else already built (the
-        # caller of __spark_entry__, bench.py) ignores them through
-        # getOrCreate, and the master built here is always local, so the
-        # workers see this directory.
-        .config("spark.python.daemon.module", "z2ps_daemon")
-        .config("spark.executorEnv.PYTHONPATH", _DAEMON_DIR)
+        # A static conf: a session someone else already built (the caller
+        # of __spark_entry__, bench.py) ignores it through getOrCreate, and
+        # the master built here is always local, so the workers see this
+        # directory.
+        .config("spark.executorEnv.PYTHONPATH", _WORKER_DIR)
     )
     return builder.getOrCreate()
