@@ -7,8 +7,9 @@ up to 64 KiB and prepended stubs (one of them over a lowered
 ``split_members``), mixed with tar, tar.gz/tgz, tar.bz2 and tar.xz
 archives — under random packing confs, and checked against a stdlib
 ``zipfile``/``tarfile`` reference; every zip's end-record total must be its
-reference row count. Damaged archives (one flipped bit, or a cut) must read
-as the reference, be skipped once, or fail.
+reference row count. The central-directory probe columns read each zip's
+``infolist()`` metadata and refuse every tar. Damaged archives (one flipped
+bit, or a cut) must read as the reference, be skipped once, or fail.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ from zip_to_parquet_spark.sources.zipsource import (
 )
 
 _COLS = ("name", "source", "body", "hash")
+_PROBE_COLS = ("name", "source", "crc32", "size", "csize")
 _TAR_MODES = {".tar": "w", ".tar.gz": "w:gz", ".tgz": "w:gz", ".tar.bz2": "w:bz2",
               ".tbz2": "w:bz2", ".tar.xz": "w:xz", ".txz": "w:xz"}
 
@@ -136,12 +138,18 @@ def _reference(path: str) -> list[tuple]:
         return [row(m.name, tf.extractfile(m).read()) for m in tf.getmembers() if m.isfile()]
 
 
-def _read_all(options: dict, skip_acc=None) -> list[tuple]:
-    reader = ZipMembersReader(options, skip_acc=skip_acc)
+def _probe_reference(path: str) -> list[tuple]:
+    """(name, source, crc32, size, csize) of every zip member, by zipfile."""
+    with zipfile.ZipFile(path) as zf:
+        return [(i.filename, path, i.CRC, i.file_size, i.compress_size) for i in zf.infolist()]
+
+
+def _read_all(options: dict, skip_acc=None, columns=_COLS) -> list[tuple]:
+    reader = ZipMembersReader(options, skip_acc=skip_acc, columns=columns)
     rows = []
     for part in reader.partitions():
         for batch in reader.read(part):
-            rows += zip(*(batch.column(c).to_pylist() for c in _COLS))
+            rows += zip(*(batch.column(c).to_pylist() for c in columns))
     return rows
 
 
@@ -194,6 +202,15 @@ def test_every_member_once_in_path_then_archive_order(specs, split, jumbo, packi
         for i, flag in enumerate(("source", "body", "hash"), start=1):
             nulled = [tuple(None if j == i else v for j, v in enumerate(r)) for r in want]
             assert _read_all({**options, flag: "false"}) == nulled, flag
+
+        zips = [p for p in paths if p.endswith(".zip")]
+        skips = _Counter()
+        probe = _read_all({**options, "on_error": "skip"}, skips, _PROBE_COLS)
+        assert probe == [r for p in zips for r in _probe_reference(p)]
+        assert skips.value == len(paths) - len(zips)  # each tar once
+        if len(zips) < len(paths):
+            with pytest.raises(ZipFormatError, match="no central directory"):
+                _read_all(options, columns=_PROBE_COLS)
 
 
 def _truncated(path: str, n: int, data: bytes) -> None:
@@ -381,6 +398,13 @@ def test_every_single_bit_flip_of_a_zip_reads_reference_rows_or_fails(tmp_path):
         for bit in range(8):
             with open(path, "wb") as f:
                 f.write(raw[:at] + bytes([raw[at] ^ (1 << bit)]) + raw[at + 1:])
+            # The probe never reads member data: all rows, or an error.
+            try:
+                probe = _read_all({**options, "on_error": "fail"}, columns=_PROBE_COLS)
+            except _ZIP_ERRORS:
+                pass
+            else:
+                assert len(probe) == len(want), ("probe", at, bit)
             try:
                 got = _read_all({**options, "on_error": "fail"})
             except _ZIP_ERRORS:

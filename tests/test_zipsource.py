@@ -568,12 +568,6 @@ def test_streaming_offsets_bounded_watermark(tmp_path):
     end5 = r2.latestOffset()
     assert r2.partitions(end4, end5) == []
 
-    # Legacy path-list checkpoints resume cleanly: everything in "files"
-    # counts as processed.
-    r3 = ZipMembersStreamReader(opts)
-    legacy = {"files": sorted(str(p) for p in d.glob("*.zip"))}
-    assert r3.partitions(legacy, r3.latestOffset()) == []
-
 
 def test_filter_pushdown_name_and_source(spark, tmp_path):
     """Catalyst filter pushdown into the zip source: name predicates filter
@@ -925,19 +919,21 @@ def test_central_directory_scan_no_decompression(spark, tmp_path):
     """read_zip_central_directory reports (name, crc32, sizes) straight
     from the central directory — values must match zipfile's metadata and
     zlib.crc32 of the original bytes, for every member, without a body or
-    hash column in sight."""
+    hash column in sight. It is the zipmembers scan itself: no shuffle and
+    no pandas stage; a user schema other than the member rows or the probe
+    is refused."""
+    import json
     import zlib
 
     from zip_to_parquet_spark.sources.zipsource import (
+        ZipMembersReader,
         read_zip_central_directory,
     )
 
     members = [(f"m{i}.txt", f"payload {i} {'x' * i}".encode()) for i in range(5)]
     p = make_zip(tmp_path / "cd.zip", members)
-    rows = {
-        r["name"]: r
-        for r in read_zip_central_directory(spark, p).collect()
-    }
+    df = read_zip_central_directory(spark, p)
+    rows = {r["name"]: r for r in df.collect()}
     assert set(rows) == {n for n, _ in members}
     for name, data in members:
         r = rows[name]
@@ -945,6 +941,16 @@ def test_central_directory_scan_no_decompression(spark, tmp_path):
         assert r["size"] == len(data)
         assert r["csize"] > 0
         assert r["source"].endswith("cd.zip")
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "MapInPandas" not in plan, plan
+    assert "BatchScan zipmembers" in plan, plan
+
+    with pytest.raises(ValueError, match="zipmembers reads the columns"):
+        ZipMembersReader({}, columns=["name", "source", "crc32"])
+    with pytest.raises(Exception, match="zipmembers reads the columns"):
+        spark.read.format("zipmembers").schema("name string, size long").option(
+            "paths", json.dumps([p])).load().collect()
 
 
 def test_extract_member_hashes_scoped(spark, tmp_path):

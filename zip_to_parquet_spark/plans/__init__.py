@@ -37,11 +37,12 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed key.
 #
 # Pin basis: ``python scripts/window_pin.py --list`` on the tree that
-# installs the zip-importer stamp check through the worker-path
-# sitecustomize; its list equals the pin taken on the tree that deleted the
-# text_chunk_windows_udtf and events_funnel_partitioned twins (the deleted
-# key's slot went to stats_mannwhitney_u, order otherwise unchanged;
-# ``set_priority`` raises on an unregistered key).
+# reads the central-directory probe through the one archive reader
+# (zip_incremental_ingest, slot 9, is the key it changes); its list equals
+# the pin taken on the tree that deleted the text_chunk_windows_udtf and
+# events_funnel_partitioned twins (the deleted key's slot went to
+# stats_mannwhitney_u, order otherwise unchanged; ``set_priority`` raises
+# on an unregistered key).
 # session.py and runtime._package_zip are in every key's closure, so the
 # tool counts all 314 keys as changed and the pin is its oldest-green-first
 # rotation. Engine commits land before the correctness sweep (README

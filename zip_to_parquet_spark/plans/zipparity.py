@@ -369,8 +369,9 @@ def zip_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
        dedup_incremental_vs_snapshot). Modeled here: the prior run had
        every member except docs id%9==2 (arrived since), and docs
        id%9==5 carried different bytes then (stale crc).
-    2. read_zip_central_directory: metadata-only scan, zero
-       decompression — (name, source, crc32) per member.
+    2. read_zip_central_directory: the zipmembers reader under its
+       probe schema, zero decompression — (name, source, crc32) per
+       member from each archive's central directory.
     3. classify via ONE left equi-join on name: no manifest row → 'new';
        crc mismatch → 'changed'; equal crc → skip (never decompressed —
        at 100 TB the skip branch is ~all of the corpus).

@@ -76,6 +76,14 @@ compressed tar must inflate the skipped bytes to advance. Glob, null flags,
 hashing, ``strict_hash``, ``on_error`` and the one-member-plus-one-batch
 memory bound are the zip path's.
 
+The same reader serves one other column set, the central-directory probe
+``name, source, crc32 long, size long, csize long``, given as the user
+schema (any other user schema is a ValueError). Its rows come from each
+member's central-directory entry, so no member is decompressed; packing,
+jumbo ranges, pushdown, ``on_error`` and the entry-count check are the
+member rows'. A tar has no central directory: under the probe it is a
+ZipFormatError.
+
 Divergences by design (SURVEY §2 H): empty input glob raises at plan time
 (the reference silently writes an empty file — its NoInputsFound error is
 dead code); invalid member glob raises ValueError at plan time (the
@@ -132,6 +140,15 @@ _SUPPORTED_METHODS = {
 # General-purpose flag bits this engine cannot read past: encrypted (0),
 # compressed patched data (5), strong encryption (6).
 _UNREADABLE_FLAGS = 0x1 | 0x20 | 0x40
+
+
+# The two column sets the reader serves: the reference's member rows (the
+# default) and the central-directory probe; each column's Arrow type.
+_MEMBER_COLUMNS = ("name", "source", "body", "hash")
+_PROBE_COLUMNS = ("name", "source", "crc32", "size", "csize")
+_PROBE_SCHEMA = "name string, source string, crc32 long, size long, csize long"
+_ARROW_TYPES = {"name": "string", "source": "string", "body": "binary", "hash": "string",
+                "crc32": "int64", "size": "int64", "csize": "int64"}
 
 
 class ZipFormatError(ValueError):
@@ -311,9 +328,9 @@ def _is_tar(path: str) -> bool:
 
 
 def _zip_members(fh, sl: _ZipSlice):
-    """``(name, read)`` per member of a zip slice, in central-directory
+    """``(name, read, info)`` per member of a zip slice, in central-directory
     order: ``read()`` returns the decoded bytes, ``None`` marks a directory
-    entry (kept as a row with an empty body).
+    entry (kept as a row with an empty body); ``info`` is the ZipInfo.
 
     zipfile walks the central directory by its byte size and never counts
     the entries, so a damaged comment-length field hides the entries after
@@ -335,12 +352,13 @@ def _zip_members(fh, sl: _ZipSlice):
         for info in infos:
             yield info.filename, (
                 None if info.is_dir() else lambda i=info: _member_bytes(fh, zf, i, sl.path)
-            )
+            ), info
 
 
 def _tar_members(fh, sl: _ZipSlice):
-    """``(name, read)`` per regular-file member of a tar, in stream order:
-    one sequential pass, so ``read`` is valid only until the next member.
+    """``(name, read, info)`` per regular-file member of a tar, in stream
+    order: one sequential pass, so ``read`` is valid only until the next
+    member; ``info`` is the TarInfo.
 
     The stream is read to its end, so a damaged archive raises instead of
     ending early. The gzip, bz2 and xz readers check their own checksums
@@ -364,7 +382,7 @@ def _tar_members(fh, sl: _ZipSlice):
                 # tarfile keeps name bytes that are not UTF-8 as surrogates,
                 # which Arrow cannot store: raise here, under on_error.
                 m.name.encode()
-                yield m.name, lambda m=m: tf.extractfile(m).read()
+                yield m.name, lambda m=m: tf.extractfile(m).read(), m
         if ending[0] != tarfile.NUL * tarfile.BLOCKSIZE:
             raise tarfile.ReadError(f"tar ends without a zero block at {tf.offset}")
         while chunk := tf.fileobj.read(1 << 16):
@@ -409,13 +427,20 @@ def _pack(sized: list[tuple[list[_ZipSlice], int]], max_bytes: int,
 
 
 class ZipMembersReader(DataSourceReader):
-    def __init__(self, options: dict, skip_acc=None):
+    def __init__(self, options: dict, skip_acc=None, columns=_MEMBER_COLUMNS):
         # Optional SparkContext accumulator counting archives dropped by
         # on_error='skip' — the Spark-native analog of the reference's
         # per-archive error log (builder.rs:65-71). Travels driver →
         # executor with the pickled reader; updates flow back on task
         # completion, so the caller reads an exact job-wide count.
         self.skip_acc = skip_acc
+        self.columns = tuple(columns)
+        if self.columns not in (_MEMBER_COLUMNS, _PROBE_COLUMNS):
+            raise ValueError(
+                f"zipmembers reads the columns {_MEMBER_COLUMNS} or {_PROBE_COLUMNS}, "
+                f"not {self.columns}"
+            )
+        self.probe = self.columns == _PROBE_COLUMNS
         self.paths: list[str] = json.loads(options.get("paths", "[]"))
         self.member_regex: str | None = options.get("member_regex") or None
         self.with_body = options.get("body", "true") == "true"
@@ -535,58 +560,51 @@ class ZipMembersReader(DataSourceReader):
         """One archive (or one member range of a zip): its own Arrow
         buffers and its own error handling, so on_error and the memory
         bound stay per archive inside a packed partition. The path's suffix
-        picks the member iterator (_is_tar); everything after it is shared."""
+        picks the member iterator (_is_tar); everything after it is shared.
+        Probe rows come from the member's ZipInfo, never its bytes."""
         import pyarrow as pa
 
         need_decompress = self.with_body or self.with_hash
-
-        names: list[str] = []
-        sources: list[str | None] = []
-        bodies: list[bytes | None] = []
-        hashes: list[str | None] = []
+        source = sl.path if self.with_source else None
+        cols: list[list] = [[] for _ in self.columns]
         pending_bytes = 0
 
         def flush():
-            nonlocal names, sources, bodies, hashes, pending_bytes
+            nonlocal pending_bytes
             batch = pa.RecordBatch.from_arrays(
-                [
-                    pa.array(names, type=pa.string()),
-                    pa.array(sources, type=pa.string()),
-                    pa.array(bodies, type=pa.binary()),
-                    pa.array(hashes, type=pa.string()),
-                ],
-                names=["name", "source", "body", "hash"],
+                [pa.array(v, type=_ARROW_TYPES[c]) for c, v in zip(self.columns, cols)],
+                names=list(self.columns),
             )
-            names, sources, bodies, hashes = [], [], [], []
+            for v in cols:
+                v.clear()
             pending_bytes = 0
             return batch
 
         members = _tar_members if _is_tar(sl.path) else _zip_members
         try:
+            if self.probe and members is _tar_members:
+                raise ZipFormatError(f"{sl.path} is a tar: it has no central directory")
             with open(sl.path, "rb") as fh:
-                for name, read in members(fh, sl):
+                for name, read, info in members(fh, sl):
                     if pattern is not None and not pattern.match(name):
                         continue
                     if name_pred is not None and not name_pred(name):
                         continue
-                    data = read() if need_decompress and read is not None else b""
-                    names.append(name)
-                    sources.append(sl.path if self.with_source else None)
-                    if self.with_hash:
-                        h = hashlib.sha256(data)
-                        hashes.append(
-                            _strict_hash_hex(h.digest())
-                            if self.strict_hash
-                            else h.hexdigest()
-                        )
+                    if self.probe:
+                        row = (name, source, info.CRC, info.file_size, info.compress_size)
                     else:
-                        hashes.append(None)
-                    if self.with_body:
-                        bodies.append(data)
-                        pending_bytes += len(data)
-                    else:
-                        bodies.append(None)
-                    if len(names) >= self.batch_rows or pending_bytes >= self.batch_bytes:
+                        data = read() if need_decompress and read is not None else b""
+                        digest = None
+                        if self.with_hash:
+                            h = hashlib.sha256(data)
+                            digest = (_strict_hash_hex(h.digest()) if self.strict_hash
+                                      else h.hexdigest())
+                        if self.with_body:
+                            pending_bytes += len(data)
+                        row = (name, source, data if self.with_body else None, digest)
+                    for v, x in zip(cols, row):
+                        v.append(x)
+                    if len(cols[0]) >= self.batch_rows or pending_bytes >= self.batch_bytes:
                         yield flush()
         except (zipfile.BadZipFile, ZipFormatError, OSError, tarfile.TarError,
                 EOFError, zlib.error, lzma.LZMAError, UnicodeError) as exc:
@@ -621,7 +639,7 @@ class ZipMembersReader(DataSourceReader):
                 )
                 return
             raise
-        if names:
+        if cols[0]:
             yield flush()
 
 
@@ -654,8 +672,8 @@ class ZipMembersStreamReader(DataSourceStreamReader):
     parallel; the driver only lists the directory.
     """
 
-    def __init__(self, options: dict, skip_acc=None):
-        self._batch = ZipMembersReader(options, skip_acc=skip_acc)
+    def __init__(self, options: dict, skip_acc=None, columns=_MEMBER_COLUMNS):
+        self._batch = ZipMembersReader(options, skip_acc=skip_acc, columns=columns)
         self.pattern: str = options["stream_glob"]
         self.lateness: float = float(options.get("stream_lateness", "300"))
         # Listing horizon; None = enumerate everything (fresh query or
@@ -683,22 +701,12 @@ class ZipMembersStreamReader(DataSourceStreamReader):
         self._horizon = max(self._horizon or float("-inf"), wm - self.lateness)
         return {"wm": wm, "seen": sorted([mt, p] for mt, p in files)}
 
-    @staticmethod
-    def _paths(offset: dict) -> set[str]:
-        # "files" is the pre-watermark offset format — accept it so a
-        # checkpoint written by the old reader resumes cleanly.
-        if "files" in offset:
-            return set(offset["files"])
-        return {p for _, p in offset.get("seen", [])}
-
     def partitions(self, start: dict, end: dict):
-        done = self._paths(start)
-        # start.wm == 0 ⇒ start is the initial offset (or legacy format):
-        # no horizon, everything unseen is new.
-        horizon = start["wm"] - self.lateness if start.get("wm") else float("-inf")
-        new = sorted(
-            p for mt, p in end.get("seen", []) if p not in done and mt >= horizon
-        )
+        done = {p for _, p in start["seen"]}
+        # start.wm == 0 ⇒ start is the initial offset: no horizon,
+        # everything unseen is new.
+        horizon = start["wm"] - self.lateness if start["wm"] else float("-inf")
+        new = sorted(p for mt, p in end["seen"] if p not in done and mt >= horizon)
         return [_ZipPartition([_ZipSlice(p)]) for p in new]
 
     def read(self, partition: _ZipPartition):
@@ -728,10 +736,10 @@ class ZipMembersDataSource(DataSource):
         return "name string, source string, body binary, hash string"
 
     def reader(self, schema) -> ZipMembersReader:
-        return ZipMembersReader(self.options, skip_acc=type(self)._skip_acc)
+        return ZipMembersReader(self.options, type(self)._skip_acc, schema.fieldNames())
 
     def streamReader(self, schema) -> ZipMembersStreamReader:
-        return ZipMembersStreamReader(self.options, skip_acc=type(self)._skip_acc)
+        return ZipMembersStreamReader(self.options, type(self)._skip_acc, schema.fieldNames())
 
 
 def _expand_patterns(patterns: list[str] | str) -> list[str]:
@@ -780,6 +788,26 @@ def _register_source(spark: SparkSession, skip_counter) -> None:
     spark.dataSource.register(source_cls)
 
 
+def _load(spark: SparkSession, patterns: list[str] | str, skip_counter=None,
+          schema: str | None = None, **options: str) -> DataFrame:
+    """The one batch load of the ``zipmembers`` source: the archive paths,
+    the session's packing confs (see _pack), the reader ``options`` and, if
+    given, a user ``schema`` (the probe's)."""
+    paths = _expand_patterns(patterns)
+    _register_source(spark, skip_counter)
+    # Runtime conf (the driver harness owns its session): without it Spark
+    # refuses a reader that implements pushFilters.
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    reader = spark.read.format("zipmembers").options(
+        paths=json.dumps(paths),
+        max_partition_bytes=str(_conf_bytes(spark, "spark.sql.files.maxPartitionBytes")),
+        open_cost_bytes=str(_conf_bytes(spark, "spark.sql.files.openCostInBytes")),
+        min_partitions=str(spark.sparkContext.defaultParallelism),
+        **options,
+    )
+    return (reader.schema(schema) if schema else reader).load()
+
+
 def read_zip_members(
     spark: SparkSession,
     patterns: list[str] | str,
@@ -818,30 +846,12 @@ def read_zip_members(
     ``spark.sql.files.maxPartitionBytes``, ``spark.sql.files.openCostInBytes``
     and ``defaultParallelism``; see the module docstring's scale notes.
     """
-    paths = _expand_patterns(patterns)
-    member_regex = glob_to_regex(member_glob) if member_glob else ""
-    _register_source(spark, skip_counter)
-    # Runtime conf (the driver harness owns its session): without it Spark
-    # refuses a reader that implements pushFilters.
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    # Packing inputs: Spark's own file-split confs (see _pack).
-    max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
-    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes")
-    return (
-        spark.read.format("zipmembers")
-        .option("paths", json.dumps(paths))
-        .option("max_partition_bytes", str(max_bytes))
-        .option("open_cost_bytes", str(open_cost))
-        .option("min_partitions", str(spark.sparkContext.defaultParallelism))
-        .option("member_regex", member_regex)
-        .option("body", "true" if body else "false")
-        .option("source", "true" if source else "false")
-        .option("hash", "true" if sha else "false")
-        .option("on_error", on_error)
-        .option("batch_rows", str(batch_rows))
-        .option("strict_hash", "true" if strict_hash else "false")
-        .option("split_members", str(split_members))
-        .load()
+    return _load(
+        spark, patterns, skip_counter,
+        member_regex=glob_to_regex(member_glob) if member_glob else "",
+        body="true" if body else "false", source="true" if source else "false",
+        hash="true" if sha else "false", strict_hash="true" if strict_hash else "false",
+        on_error=on_error, batch_rows=str(batch_rows), split_members=str(split_members),
     )
 
 
@@ -932,42 +942,13 @@ def read_zip_central_directory(
     member every run, builder.rs:24-41); schema is additive — the
     reference's 4-column member schema (SURVEY §1) is untouched.
 
-    Distribution: archives hash-partition by path; per-task work is one
-    central-directory read per archive (no member-range splitting — the
-    directory of even a 65k-member archive is a few MB of metadata).
+    Read by the one archive reader under the probe schema (see the module
+    docstring): archives pack by size, a jumbo zip splits into member
+    ranges, name/source filters push into the scan, and a zip whose central
+    directory does not hold its end record's entry total fails. A tar has
+    no central directory and fails.
     """
-    paths = _expand_patterns(patterns)
-    pdf = spark.createDataFrame([(p,) for p in paths], "source string")
-
-    def scan(batches):
-        import pandas as _pd
-
-        # One output frame PER ARCHIVE: peak Python-object memory is one
-        # archive's directory, not the whole partition's (a partition can
-        # hold hundreds of 65k-member archives after repartitioning).
-        for b in batches:
-            for path in b["source"]:
-                names, sources, crcs, sizes, csizes = [], [], [], [], []
-                with zipfile.ZipFile(path) as zf:
-                    for info in zf.infolist():
-                        names.append(info.filename)
-                        sources.append(path)
-                        crcs.append(info.CRC)
-                        sizes.append(info.file_size)
-                        csizes.append(info.compress_size)
-                yield _pd.DataFrame(
-                    {
-                        "name": names,
-                        "source": sources,
-                        "crc32": _pd.array(crcs, dtype="int64"),
-                        "size": _pd.array(sizes, dtype="int64"),
-                        "csize": _pd.array(csizes, dtype="int64"),
-                    }
-                )
-
-    return pdf.repartition("source").mapInPandas(
-        scan, schema="name string, source string, crc32 long, size long, csize long"
-    )
+    return _load(spark, patterns, schema=_PROBE_SCHEMA)
 
 
 def extract_member_hashes(to_extract: DataFrame) -> DataFrame:
