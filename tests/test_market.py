@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from zip_to_parquet_spark.operators.stats import (
     cumulative_value_counts,
     quantile_disc_thresholds,
-    score_by_thresholds,
+    score_by_threshold_values,
 )
 from zip_to_parquet_spark.plans import all_queries
 
@@ -86,9 +86,9 @@ def test_quantile_thresholds_skewed_and_scoring(spark):
     # [1,1,1,10]: every quartile threshold is 1 (cum(1)=3 ≥ ceil(3n/4)=3);
     # scoring: v=1 → bucket 1, v=10 → strictly above all three → bucket 4.
     df = spark.createDataFrame([(1,), (1,), (1,), (10,)], "x long")
-    th = quantile_disc_thresholds(df, "x")
-    assert {r["k"]: r["t"] for r in th.collect()} == {1: 1, 2: 1, 3: 1}
-    scored = score_by_thresholds(df, "x", th, "s")
+    th = {r["k"]: r["t"] for r in quantile_disc_thresholds(df, "x").collect()}
+    assert th == {1: 1, 2: 1, 3: 1}
+    scored = score_by_threshold_values(df, "x", th, "s")
     got = sorted((r["x"], r["s"]) for r in scored.collect())
     assert got == [(1, 1), (1, 1), (1, 1), (10, 4)]
 

@@ -1,14 +1,16 @@
 """Every registered query with an oracle must match DuckDB at sf0.001.
 
 This mirrors the driver's t2 correctness gate (which runs at sf0.01); run
-``SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 pytest`` for the full-size check.
-Queries without an oracle get a rows-run smoke check instead.
+``SPARK_GRAFT_SF_DIR_TEST=/root/testdata/sf0.01 pytest`` for the full-size
+check. Queries without an oracle get a rows-run smoke check instead.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 from collections import defaultdict
+from pathlib import Path
 
 import pytest
 
@@ -58,6 +60,66 @@ def test_only_batch_stream_pairs_share_an_oracle():
         groups[" ".join(sql.split())].append(name)
     shared = {tuple(sorted(g)) for g in groups.values() if len(g) > 1}
     assert shared == BATCH_STREAM_PAIRS
+
+
+# The code side of the same rule: two functions that share this many
+# consecutive code lines hold one copied stage, which belongs in one
+# function that both call.
+COPIED_RUN = 12
+PKG_DIR = Path(__file__).resolve().parents[1] / "zip_to_parquet_spark"
+
+
+def _package_functions() -> list[tuple[str, list[str], frozenset]]:
+    """``(name, code lines, enclosing function names)`` for every function
+    in the package, nested ones included. Code lines are stripped; the
+    docstring, blank lines and comment lines are dropped."""
+    funcs = []
+
+    def walk(node, rel, src, outer):
+        for ch in ast.iter_child_nodes(node):
+            if not isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(ch, rel, src, outer)
+                continue
+            name = f"{rel}:{ch.lineno} {ch.name}"
+            first = ch.body[0]
+            doc = isinstance(first, ast.Expr) and isinstance(
+                getattr(first.value, "value", None), str
+            )
+            skip = range(first.lineno, first.end_lineno + 1) if doc else ()
+            lines = [
+                src[n - 1].strip()
+                for n in range(ch.lineno, ch.end_lineno + 1)
+                if n not in skip
+            ]
+            code = [ln for ln in lines if ln and not ln.startswith("#")]
+            funcs.append((name, code, outer))
+            walk(ch, rel, src, outer | {name})
+
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        text = path.read_text()
+        rel = path.relative_to(PKG_DIR.parent)
+        walk(ast.parse(text), rel, text.splitlines(), frozenset())
+    return funcs
+
+
+def test_no_two_functions_share_a_copied_stage():
+    funcs = _package_functions()
+    holders = defaultdict(set)
+    for i, (_, code, _) in enumerate(funcs):
+        for k in range(len(code) - COPIED_RUN + 1):
+            holders[tuple(code[k : k + COPIED_RUN])].add(i)
+    # A function is not compared with a function nested inside it.
+    pairs = sorted(
+        (funcs[i][0], funcs[j][0])
+        for i, j in {
+            (i, j) for ids in holders.values() for i in ids for j in ids if i < j
+        }
+        if funcs[i][0] not in funcs[j][2] and funcs[j][0] not in funcs[i][2]
+    )
+    assert not pairs, (
+        f"{len(pairs)} function pairs share a run of >= {COPIED_RUN} code "
+        "lines:\n" + "\n".join(f"  {a} <-> {b}" for a, b in pairs)
+    )
 
 
 def _planted(base: str, out, table: str, rows: list[dict]) -> str:

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 __all__ = [
     "BASKET_CAP",
     "capped_baskets",
+    "copurchase_pairs",
+    "basket_pair_counts",
     "pagerank_integer",
     "triangle_count",
     "connected_components_star",
@@ -68,25 +70,55 @@ def capped_baskets(
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
+def copurchase_pairs(
+    lineitem: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """Global triangle count over an undirected simple graph → one row
-    ``(n_edges, n_triangles)``.
+    """Part co-purchase pairs ``(src < dst)`` of ``lineitem``, one row per
+    order the two parts share, built from basket-capped orders: baskets
+    above BASKET_CAP distinct parts are dropped before the order-key
+    self-join (see :func:`capped_baskets`)."""
+    lp = capped_baskets(lineitem.select("l_orderkey", "l_partkey").distinct())
+    return (
+        lp.alias("a")
+        .join(lp.alias("b"), "l_orderkey")
+        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
+        .select(
+            F.col("a.l_partkey").alias(src), F.col("b.l_partkey").alias(dst)
+        )
+    )
 
-    Degree-ordered edge-iterator (the MapReduce-era standard, Suri &
-    Vassilvitskii WWW'11 / Cohen 2009): orient every undirected edge from
-    its lower-(degree, id) endpoint to the higher one, build wedges by
-    joining oriented edges head-to-tail, and close each wedge against the
-    oriented edge set. Orientation makes each triangle count exactly once
-    AND bounds per-node wedge fan-out by out-degree ≤ O(√m) — the skew
-    fix that lets a power-law graph (where a hub's degree² wedge count
-    would explode an id-ordered join) survive at scale. Two equi-joins,
-    both on node keys; no cross join anywhere.
 
-    The oracle can count with the naive ``a<b<c`` 3-way self-join —
-    orientation changes the join volume, never the count.
-    """
+def basket_pair_counts(po: DataFrame) -> DataFrame:
+    """Support counts ``(part_a, part_b, n_ab)`` of the part pairs
+    ``part_a < part_b`` that share at least two orders of the distinct
+    ``(l_orderkey, l_partkey)`` rows ``po``. Pair generation is a
+    self-equi-join on the order key: candidate volume is Σ|basket|², never
+    |parts|²."""
+    a = po.alias("a")
+    b = po.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(
+            F.col("a.l_partkey").alias("part_a"),
+            F.col("b.l_partkey").alias("part_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+        .filter(F.col("n_ab") >= 2)
+    )
+
+
+def _oriented_triangles(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Degree-ordered triangle enumeration shared by
+    :func:`triangle_count` and :func:`local_clustering` →
+    ``(und, deg, tri)``: the undirected simple edge set ``(u, v)``, the
+    degree table ``(node, deg)`` and one row ``(x, z, y)`` per triangle
+    (see :func:`triangle_count` for the orientation argument)."""
     und = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -120,11 +152,32 @@ def triangle_count(
         F.col("e2.b").alias("z"),
     )
     closer = oriented.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tri = wedge.join(closer, ["x", "z"]).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_triangles")
-    )
+    return und, deg, wedge.join(closer, ["x", "z"])
+
+
+def triangle_count(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Global triangle count over an undirected simple graph → one row
+    ``(n_edges, n_triangles)``.
+
+    Degree-ordered edge-iterator (the MapReduce-era standard, Suri &
+    Vassilvitskii WWW'11 / Cohen 2009): orient every undirected edge from
+    its lower-(degree, id) endpoint to the higher one, build wedges by
+    joining oriented edges head-to-tail, and close each wedge against the
+    oriented edge set. Orientation makes each triangle count exactly once
+    AND bounds per-node wedge fan-out by out-degree ≤ O(√m) — the skew
+    fix that lets a power-law graph (where a hub's degree² wedge count
+    would explode an id-ordered join) survive at scale. Two equi-joins,
+    both on node keys; no cross join anywhere.
+
+    The oracle can count with the naive ``a<b<c`` 3-way self-join —
+    orientation changes the join volume, never the count.
+    """
+    und, _, tri = _oriented_triangles(edges, src, dst)
+    n_tri = tri.agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
     return und.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges")).crossJoin(
-        tri
+        n_tri
     )
 
 
@@ -378,42 +431,9 @@ def local_clustering(
     unpivots to its three member nodes for a node-keyed rollup joined
     back to the degree table. Work beyond triangle_count is one
     3×-triangles explode plus a node rollup — same asymptotics."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    ranked = und.join(du, "u").join(dv, "v")
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = ranked.select(
-        F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).localCheckpoint(eager=False)
-    wedge = oriented.alias("e1").join(
-        oriented.alias("e2"), F.col("e1.b") == F.col("e2.a")
-    ).select(
-        F.col("e1.a").alias("x"),
-        F.col("e1.b").alias("y"),
-        F.col("e2.b").alias("z"),
-    )
-    closer = oriented.select(F.col("a").alias("x"), F.col("b").alias("z"))
+    _, deg, tri = _oriented_triangles(edges, src, dst)
     tri_nodes = (
-        wedge.join(closer, ["x", "z"])
-        .select(
+        tri.select(
             F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias(
                 "node"
             )

@@ -19,10 +19,12 @@ from zip_to_parquet_spark.operators.textops import (
     word_shingles,
     words,
 )
+from zip_to_parquet_spark.runtime import size_aware_side
 
 __all__ = [
     "pack_greedy_contiguous",
     "train_val_test_split",
+    "md5_split",
     "gopher_quality",
     "gopher_signal_cols",
     "repetition_stats",
@@ -32,6 +34,7 @@ __all__ = [
     "dsir_scores",
     "unigram_surprisal",
     "bigram_surprisal",
+    "word_pairs",
     "snapshot_delta",
     "curriculum_buckets",
 ]
@@ -84,16 +87,21 @@ def train_val_test_split(
     byte-for-byte (the property that matters when train/test membership
     must never drift across pipeline versions).
     """
-    bucket = F.substring(
-        F.md5(F.col(id_col).cast("string").cast("binary")), 1, 2
-    )
-    return df.select(
-        F.col(id_col),
-        bucket.alias("bucket"),
+    bucket, split = md5_split(F.col(id_col), train_hex, val_hex)
+    return df.select(F.col(id_col), bucket.alias("bucket"), split.alias("split"))
+
+
+def md5_split(
+    key: Column, train_hex: str = "cc", val_hex: str = "e6"
+) -> tuple[Column, Column]:
+    """``(bucket, split)`` columns of :func:`train_val_test_split` for any
+    key expression: ``bucket`` the first two hex chars of md5(key), and
+    ``split`` 'train' / 'val' / 'test' by the two hex cut points."""
+    bucket = F.substring(F.md5(key.cast("string").cast("binary")), 1, 2)
+    return bucket, (
         F.when(bucket < train_hex, "train")
         .when(bucket < val_hex, "val")
         .otherwise("test")
-        .alias("split"),
     )
 
 
@@ -368,15 +376,6 @@ def dsir_scores(
     )
 
 
-def _size_aware_side(side: DataFrame, probe: DataFrame, max_rows: int | None):
-    """See :func:`zip_to_parquet_spark.runtime.size_aware_side` (promoted
-    there in round 4 so retrieval's idf table shares the same guarded
-    broadcast instead of growing its own copy of the pattern)."""
-    from zip_to_parquet_spark.runtime import size_aware_side
-
-    return size_aware_side(side, probe, max_rows)
-
-
 def unigram_surprisal(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -421,7 +420,7 @@ def unigram_surprisal(
         .cast("long")
         .alias("s_micro"),
     )
-    surp_side = _size_aware_side(surp, vocab, broadcast_max_types)
+    surp_side = size_aware_side(surp, vocab, broadcast_max_types)
     return (
         toks.join(surp_side, "w")
         .groupBy("doc_id")
@@ -472,7 +471,7 @@ def bigram_surprisal(
     keys, map-side combine), a three-way type-table join (bigram types ×
     two unigram lookups — all type-cardinality, not corpus-cardinality),
     then the SIZE-AWARE join of scored types back against the transition
-    stream (``_size_aware_side``: bigram types outgrow broadcast far
+    stream (``runtime.size_aware_side``: bigram types outgrow broadcast far
     sooner than vocabularies — the probe matters more here, not less).
     """
     docs = df.select(
@@ -481,17 +480,7 @@ def bigram_surprisal(
     toks = docs.select("doc_id", F.explode("ws").alias("w"))
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     stats = uni.agg(F.sum("c").alias("total"), F.count(F.lit(1)).alias("v"))
-    n1 = F.size("ws") - 1
-    pairs = docs.select(
-        "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice("ws", 1, n1),
-                F.slice("ws", 2, n1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.w1", "p.w2")
+    pairs = word_pairs(docs, ["doc_id"])
     bgt = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     u1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
     u2 = uni.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
@@ -514,7 +503,7 @@ def bigram_surprisal(
             .alias("s_micro"),
         )
     )
-    side = _size_aware_side(scored, bgt, broadcast_max_types)
+    side = size_aware_side(scored, bgt, broadcast_max_types)
     return (
         pairs.join(side, ["w1", "w2"])
         .groupBy("doc_id")
@@ -532,6 +521,23 @@ def bigram_surprisal(
             ),
         )
     )
+
+
+def word_pairs(df: DataFrame, keep: list[str]) -> DataFrame:
+    """Explode the token array column ``ws`` of ``df`` into its word
+    transitions → ``(*keep, w1, w2)``, one row per adjacent token pair;
+    arrays shorter than two tokens give no rows."""
+    n1 = F.size("ws") - 1
+    return df.select(
+        *keep,
+        F.explode(
+            F.zip_with(
+                F.slice("ws", 1, n1),
+                F.slice("ws", 2, n1),
+                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+            )
+        ).alias("p"),
+    ).select(*keep, "p.w1", "p.w2")
 
 
 def simulated_refresh(docs: DataFrame) -> DataFrame:

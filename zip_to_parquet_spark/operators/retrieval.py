@@ -26,7 +26,14 @@ from pyspark.sql.window import Window
 from zip_to_parquet_spark.operators.textops import words
 from zip_to_parquet_spark.runtime import size_aware_side
 
-__all__ = ["bm25_topk", "rrf_fuse", "tfidf_topk_terms", "micro_sim", "mmr_select"]
+__all__ = [
+    "bm25_topk",
+    "rrf_fuse",
+    "tfidf_topk_terms",
+    "micro_sim",
+    "micro_sim_sql",
+    "mmr_select",
+]
 
 
 def tfidf_topk_terms(
@@ -217,14 +224,21 @@ def micro_sim(a, b):
     """Cosine similarity as exact integer micro-units (1e-6), the repo's
     cross-engine-stable similarity representation: round to 6 decimals
     (absorbs last-ulp libm noise), scale, round again, cast long. The
-    DuckDB twin is
-    ``CAST(round(round(list_dot_product(a,b) / (sqrt(list_dot_product(a,a))
-    * sqrt(list_dot_product(b,b))), 6) * 1000000) AS BIGINT)`` —
-    verified 499/499 exact on the embeddings fixture."""
+    DuckDB twin is :func:`micro_sim_sql` — verified 499/499 exact on the
+    embeddings fixture."""
     from zip_to_parquet_spark.operators.vectors import cosine
 
     return (
         F.round(F.round(cosine(a, b), 6) * 1000000, 0).cast("long")
+    )
+
+
+def micro_sim_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`micro_sim` over list expressions ``a``, ``b``."""
+    return (
+        f"CAST(round(round(list_dot_product({a}, {b})"
+        f" / (sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b}))), 6) * 1000000) AS BIGINT)"
     )
 
 

@@ -199,25 +199,12 @@ def score_by_threshold_values(
 ) -> DataFrame:
     """Append 1-based quantile score ``out``: ``1 + #{threshold values
     strictly below the value}`` — thresholds already driver-side
-    literals, so this is a pure whole-stage-codegen projection."""
+    literals, so this is a pure whole-stage-codegen projection. Collect
+    the quantile-count-sized threshold table first: left lazy, it would
+    replicate the whole two-pass histogram lineage into the consumer's
+    plan once per metric (measured: a 329-node plan for RFM vs ~10 nodes
+    with literals)."""
     expr = F.lit(1)
     for _, t in sorted(thresholds.items()):
         expr = expr + F.when(F.col(col) > F.lit(t), 1).otherwise(0)
     return df.withColumn(out, expr.cast("int"))
-
-
-def score_by_thresholds(
-    df: DataFrame, col: str, thresholds: DataFrame, out: str
-) -> DataFrame:
-    """Append 1-based quantile score ``out`` to ``df``: ``1 + #{thresholds
-    strictly below the value}``.
-
-    The thresholds table is quantile-count sized (``denom - 1`` rows) —
-    collected to literals here, a bounded driver fetch like
-    ``global_rank_two_pass``'s bucket counts. Inlining them keeps the
-    scoring a pure whole-stage-codegen projection: leaving the thresholds
-    lazy would replicate the entire two-pass histogram lineage into the
-    consumer's plan once per metric (measured: a 329-node plan for RFM vs
-    ~10 nodes with literals)."""
-    tvals = {r["k"]: r["t"] for r in thresholds.collect()}
-    return score_by_threshold_values(df, col, tvals, out)

@@ -14,6 +14,9 @@ these belong to the extension surface, shaped for 100 TB:
   equi-join. Each left row joins only its own and the next bucket, so the
   shuffle key is (key, bucket) and candidate volume is bounded by local
   density × 2 buckets, never n².
+
+``daily_revenue`` is the daily order-revenue series the time-series keys
+(decomposition, rolling median, Theil-Sen, runs test) read.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ __all__ = [
     "asof_join",
     "range_join_pairs",
     "cogroup_attribution",
+    "daily_revenue",
     "funnel_stage_counts",
     "retention_cohorts",
 ]
@@ -314,4 +318,24 @@ def cogroup_attribution(
                 " n_prior_clicks long, attributed boolean"
             ),
         )
+    )
+
+
+def daily_revenue(orders: DataFrame) -> DataFrame:
+    """Daily order revenue ``(i, rev)`` of the ``orders`` table: ``i`` the
+    tz-free epoch-day index of ``o_orderdate``, ``rev`` the day's summed
+    ``o_totalprice`` in integer cents. The one corpus-sized stage of the
+    daily time-series keys; everything after it runs on the
+    calendar-bounded series."""
+    return (
+        orders.select(
+            F.expr("datediff(cast(o_orderdate as date), date'1970-01-01')")
+            .cast("long")
+            .alias("i"),
+            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+            .cast("long")
+            .alias("cents"),
+        )
+        .groupBy("i")
+        .agg(F.sum("cents").cast("long").alias("rev"))
     )

@@ -37,9 +37,10 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed key.
 #
 # Pin basis: ``python scripts/window_pin.py --list`` on the tree that
-# reads the central-directory probe through the one archive reader
-# (zip_incremental_ingest, slot 9, is the key it changes); its list equals
-# the pin taken on the tree that deleted the text_chunk_windows_udtf and
+# folds the copied key stages into one function each (46 keys' reachable
+# code changed, their plans did not); its list equals the pin taken on the
+# tree that reads the central-directory probe through the one archive
+# reader, and on the tree that deleted the text_chunk_windows_udtf and
 # events_funnel_partitioned twins (the deleted key's slot went to
 # stats_mannwhitney_u, order otherwise unchanged; ``set_priority`` raises
 # on an unregistered key).

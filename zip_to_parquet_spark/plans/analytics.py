@@ -24,7 +24,7 @@ from zip_to_parquet_spark.operators.dedupe import (
     shingle_sets,
     word_edit_pairs,
 )
-from zip_to_parquet_spark.operators.graph import triangle_count
+from zip_to_parquet_spark.operators.graph import copurchase_pairs, triangle_count
 from zip_to_parquet_spark.operators.joins import merge_upsert, scd2_history
 from zip_to_parquet_spark.operators.pipeline import curriculum_buckets
 from zip_to_parquet_spark.operators.pipeline import (
@@ -309,21 +309,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.graph.BASKET_CAP, r13 — C(basket, 2) pairs per order is
     quadratic in a data-dependent quantity; mirrored in the oracle,
     never fires on fixtures)."""
-    from zip_to_parquet_spark.operators.graph import capped_baskets
-
-    lp = capped_baskets(
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    edges = (
-        lp.alias("a")
-        .join(lp.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-    )
+    edges = copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
     return triangle_count(edges)
 
 
@@ -1148,21 +1134,9 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PageRank, k-means, connected components) with traversal. Edge
     generation is basket-capped (operators.graph.BASKET_CAP, r13 —
     mirrored in the oracle, never fires on fixtures)."""
-    from zip_to_parquet_spark.operators.graph import bfs_hops, capped_baskets
+    from zip_to_parquet_spark.operators.graph import bfs_hops
 
-    lp = capped_baskets(
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    edges = (
-        lp.alias("a")
-        .join(lp.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-    )
+    edges = copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
     return bfs_hops(edges, sources=[0], max_hops=4)
 
 
@@ -1541,6 +1515,27 @@ def events_pattern_strict_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _strict_pairs_daily(m)
 
 
+def _priority_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily order count and revenue per order priority → ``(prio, d,
+    cnt, rev)``, revenue in integer cents: the two series the daily rank
+    correlation keys compare."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .select(
+            F.col("o_orderpriority").alias("prio"),
+            F.col("o_orderdate").cast("date").alias("d"),
+            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+            .cast("long")
+            .alias("cents"),
+        )
+        .groupBy("prio", "d")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("cnt"),
+            F.sum("cents").cast("long").alias("rev"),
+        )
+    )
+
+
 # ---------------------------------------------------------------------------
 # Spearman rank correlation (midranks, exact signed rho^2).
 # ---------------------------------------------------------------------------
@@ -1600,21 +1595,7 @@ def stats_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     (series length, not fact rows); one 5-row result."""
     from pyspark.sql.window import Window
 
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderpriority").alias("prio"),
-            F.col("o_orderdate").cast("date").alias("d"),
-            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("prio", "d")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.sum("cents").cast("long").alias("rev"),
-        )
-    )
+    daily = _priority_daily(spark, sf_dir)
 
     def two_mid(v: str) -> F.Column:
         return (
@@ -1727,21 +1708,7 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     For calendar series, d ≈ 10⁴ even over decades → ≤ 10⁸ pairs per
     group, a single in-core join at any corpus size."""
     dec = "decimal(38,0)"
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderpriority").alias("prio"),
-            F.col("o_orderdate").cast("date").alias("d"),
-            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("prio", "d")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.sum("cents").cast("long").alias("rev"),
-        )
-    )
+    daily = _priority_daily(spark, sf_dir)
     a = daily.select(
         "prio",
         F.col("d").alias("da"),
@@ -1862,24 +1829,9 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership. Edge generation is basket-capped
     (operators.graph.BASKET_CAP, r13 — mirrored in the oracle, never
     fires on fixtures)."""
-    from zip_to_parquet_spark.operators.graph import (
-        capped_baskets,
-        local_clustering,
-    )
+    from zip_to_parquet_spark.operators.graph import local_clustering
 
-    lp = capped_baskets(
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    edges = (
-        lp.alias("a")
-        .join(lp.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-    )
+    edges = copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
     return local_clustering(edges)
 
 

@@ -57,6 +57,56 @@ _DUCK_VARIANT = "(md5_number_lower(user_id::VARCHAR) % 256) % 2"
 _CUTOFF = "2024-01-16 00:00:00"
 
 
+def _pre_post_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user event counts before (``x``) and from (``y``) the
+    ``_CUTOFF`` midpoint → ``(user_id, x, y)``, one user-keyed
+    partial-agg shuffle."""
+    return (
+        spread(load_table(spark, sf_dir, "events"), "user_id")
+        .groupBy("user_id")
+        .agg(
+            F.sum(
+                F.when(F.col("ts") < F.lit(_CUTOFF).cast("timestamp"), 1)
+                .otherwise(0)
+            )
+            .cast("long")
+            .alias("x"),
+            F.sum(
+                F.when(F.col("ts") >= F.lit(_CUTOFF).cast("timestamp"), 1)
+                .otherwise(0)
+            )
+            .cast("long")
+            .alias("y"),
+        )
+    )
+
+
+def _arm_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-arm moments of per-user event counts as one row ``(na, sa, qa,
+    nb, sb, qb)``: users, Σy and Σy² of arm A (variant 0) and arm B —
+    one user-keyed partial-agg shuffle, a 2-row variant rollup, a 1-row
+    pivot."""
+    per_user = (
+        spread(load_table(spark, sf_dir, "events"), "user_id")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("y"))
+        .withColumn("variant", F.expr(_VARIANT_SQL))
+    )
+    v = per_user.groupBy("variant").agg(
+        F.count(F.lit(1)).cast(D38).alias("n"),
+        F.sum("y").cast(D38).alias("s"),
+        F.sum(F.expr("y * y")).cast(D38).alias("q"),
+    )
+    return v.agg(
+        F.max(F.when(F.col("variant") == 0, F.col("n"))).alias("na"),
+        F.max(F.when(F.col("variant") == 0, F.col("s"))).alias("sa"),
+        F.max(F.when(F.col("variant") == 0, F.col("q"))).alias("qa"),
+        F.max(F.when(F.col("variant") == 1, F.col("n"))).alias("nb"),
+        F.max(F.when(F.col("variant") == 1, F.col("s"))).alias("sb"),
+        F.max(F.when(F.col("variant") == 1, F.col("q"))).alias("qb"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # CUPED variance-reduced experiment readout (Deng et al. WSDM'13).
 # ---------------------------------------------------------------------------
@@ -117,24 +167,8 @@ def experiment_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id), then a 1-row global moment reduce broadcast-crossed
     with the 2-row per-variant rollup — no window, no second pass over
     events, no collect."""
-    per_user = (
-        spread(load_table(spark, sf_dir, "events"), "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(F.col("ts") < F.lit(_CUTOFF).cast("timestamp"), 1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("x"),
-            F.sum(
-                F.when(F.col("ts") >= F.lit(_CUTOFF).cast("timestamp"), 1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("y"),
-        )
-        .withColumn("variant", F.expr(_VARIANT_SQL))
+    per_user = _pre_post_counts(spark, sf_dir).withColumn(
+        "variant", F.expr(_VARIANT_SQL)
     )
     g = per_user.agg(
         F.count(F.lit(1)).cast(D38).alias("n"),
@@ -631,26 +665,7 @@ def experiment_lift_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user-keyed partial-agg shuffle, a 2-row variant
     rollup, a 1-row pivot — no window over facts, no collect."""
-    per_user = (
-        spread(load_table(spark, sf_dir, "events"), "user_id")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-        .withColumn("variant", F.expr(_VARIANT_SQL))
-    )
-    v = per_user.groupBy("variant").agg(
-        F.count(F.lit(1)).cast(D38).alias("n"),
-        F.sum("y").cast(D38).alias("s"),
-        F.sum(F.expr("y * y")).cast(D38).alias("q"),
-    )
-    w = v.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n"))).alias("na"),
-        F.max(F.when(F.col("variant") == 0, F.col("s"))).alias("sa"),
-        F.max(F.when(F.col("variant") == 0, F.col("q"))).alias("qa"),
-        F.max(F.when(F.col("variant") == 1, F.col("n"))).alias("nb"),
-        F.max(F.when(F.col("variant") == 1, F.col("s"))).alias("sb"),
-        F.max(F.when(F.col("variant") == 1, F.col("q"))).alias("qb"),
-    )
-    t = w.select(
+    t = _arm_moments(spark, sf_dir).select(
         "na",
         "nb",
         "sa",
@@ -953,24 +968,8 @@ def experiment_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user-keyed partial-agg shuffle, one 1-row reduce —
     join-free, window-free, collect-free."""
-    per_user = (
-        spread(load_table(spark, sf_dir, "events"), "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(F.col("ts") < F.lit(_CUTOFF).cast("timestamp"), 1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("x"),
-            F.sum(
-                F.when(F.col("ts") >= F.lit(_CUTOFF).cast("timestamp"), 1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("y"),
-        )
-        .withColumn("t", F.expr(_VARIANT_SQL))
+    per_user = _pre_post_counts(spark, sf_dir).withColumn(
+        "t", F.expr(_VARIANT_SQL)
     )
     g = per_user.agg(
         F.sum(F.when(F.col("t") == 1, 1).otherwise(0)).cast(D38).alias("nt"),
@@ -1718,26 +1717,7 @@ def experiment_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to experiment_lift_t2 — one user-keyed
     partial-agg shuffle, a 2-row variant rollup, a 1-row pivot; the
     power algebra runs on the 1-row frame. No windows, no collect."""
-    per_user = (
-        spread(load_table(spark, sf_dir, "events"), "user_id")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-        .withColumn("variant", F.expr(_VARIANT_SQL))
-    )
-    v = per_user.groupBy("variant").agg(
-        F.count(F.lit(1)).cast(D38).alias("n"),
-        F.sum("y").cast(D38).alias("s"),
-        F.sum(F.expr("y * y")).cast(D38).alias("q"),
-    )
-    w = v.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n"))).alias("na"),
-        F.max(F.when(F.col("variant") == 0, F.col("s"))).alias("sa"),
-        F.max(F.when(F.col("variant") == 0, F.col("q"))).alias("qa"),
-        F.max(F.when(F.col("variant") == 1, F.col("n"))).alias("nb"),
-        F.max(F.when(F.col("variant") == 1, F.col("s"))).alias("sb"),
-        F.max(F.when(F.col("variant") == 1, F.col("q"))).alias("qb"),
-    )
-    t = w.select(
+    t = _arm_moments(spark, sf_dir).select(
         "na",
         "nb",
         "sa",

@@ -31,15 +31,40 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from zip_to_parquet_spark.operators.graph import basket_pair_counts
 from zip_to_parquet_spark.operators.multimodal import (
     png_ahash_bands,
     synth_png,
 )
+from zip_to_parquet_spark.operators.temporal import daily_revenue
 from zip_to_parquet_spark.plans.registry import query
 from zip_to_parquet_spark.runtime import spread
 from zip_to_parquet_spark.schema import load_table
 
 D38 = "decimal(38,0)"
+
+
+def _touches_before_conversion(events: DataFrame) -> DataFrame:
+    """Every ``purchase`` (a conversion) of ``events`` paired with the
+    same user's ``view``/``click`` touches in the strict 7-day lookback
+    before it → ``(user_id, conv_id, conv_ts, t_id, t_ts, t_type)``. An
+    equi-join on user_id: per-user fanout is bounded by one user's 7-day
+    activity, never a cross join."""
+    conv = events.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("conv_id"),
+        "user_id",
+        F.col("ts").alias("conv_ts"),
+    )
+    touch = events.filter(F.col("event_type").isin("view", "click")).select(
+        F.col("event_id").alias("t_id"),
+        "user_id",
+        F.col("ts").alias("t_ts"),
+        F.col("event_type").alias("t_type"),
+    )
+    return conv.join(touch, "user_id").filter(
+        (F.col("t_ts") < F.col("conv_ts"))
+        & (F.col("t_ts") >= F.col("conv_ts") - F.expr("INTERVAL 7 DAYS"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -97,22 +122,7 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     users), then two windows both partitioned by conversion id (same
     shuffle key) and one 2-row rollup. No corpus-sized window, no
     collect."""
-    e = load_table(spark, sf_dir, "events")
-    conv = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("conv_id"),
-        "user_id",
-        F.col("ts").alias("conv_ts"),
-    )
-    touch = e.filter(F.col("event_type").isin("view", "click")).select(
-        F.col("event_id").alias("t_id"),
-        "user_id",
-        F.col("ts").alias("t_ts"),
-        F.col("event_type").alias("t_type"),
-    )
-    j = conv.join(touch, "user_id").filter(
-        (F.col("t_ts") < F.col("conv_ts"))
-        & (F.col("t_ts") >= F.col("conv_ts") - F.expr("INTERVAL 7 DAYS"))
-    )
+    j = _touches_before_conversion(load_table(spark, sf_dir, "events"))
     wn = Window.partitionBy("conv_id")
     wr = Window.partitionBy("conv_id").orderBy(
         F.col("t_ts").desc(), F.col("t_id").desc()
@@ -314,6 +324,25 @@ def text_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _detrended_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The daily-revenue series minus its centred 7-row moving-average
+    trend → ``(i, weekday_idx, detrended)``; edge rows without a full
+    7-row window drop out. Shared by ``ts_ma_decompose`` and
+    ``events_anomaly_deseasonalized``."""
+    w = Window.orderBy("i").rowsBetween(-3, 3)
+    t = daily_revenue(load_table(spark, sf_dir, "orders")).select(
+        "i",
+        "rev",
+        F.sum("rev").over(w).alias("s7"),
+        F.count(F.lit(1)).over(w).alias("c7"),
+    )
+    return t.filter(F.col("c7") == 7).select(
+        "i",
+        F.expr("i % 7").alias("weekday_idx"),
+        F.expr("rev - s7 div 7").alias("detrended"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # Classical additive seasonal decomposition by centered moving average.
 # ---------------------------------------------------------------------------
@@ -363,31 +392,7 @@ def ts_ma_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one corpus-sized rollup to the daily grain, then one
     ordered 7-row window over the calendar-bounded series (entity-
     partitioned in a multi-series deployment) and a 7-row group-by."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.expr("datediff(cast(o_orderdate as date), date'1970-01-01')")
-            .cast("long")
-            .alias("i"),
-            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("i")
-        .agg(F.sum("cents").cast("long").alias("rev"))
-    )
-    w = Window.orderBy("i").rowsBetween(-3, 3)
-    t = daily.select(
-        "i",
-        "rev",
-        F.sum("rev").over(w).alias("s7"),
-        F.count(F.lit(1)).over(w).alias("c7"),
-    )
-    d = t.filter(F.col("c7") == 7).select(
-        F.expr("i % 7").alias("weekday_idx"),
-        F.expr("rev - s7 div 7").alias("detrended"),
-    )
-    return d.groupBy("weekday_idx").agg(
+    return _detrended_daily(spark, sf_dir).groupBy("weekday_idx").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.expr("sum(detrended) div count(*)")
         .cast("long")
@@ -846,31 +851,7 @@ def events_anomaly_deseasonalized(spark: SparkSession, sf_dir: str) -> DataFrame
     7-row seasonal join → two series-level percentile aggregates with
     1-row broadcasts back — the ``stats_outlier_mad`` shape on a
     calendar-bounded series."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.expr("datediff(cast(o_orderdate as date), date'1970-01-01')")
-            .cast("long")
-            .alias("i"),
-            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("i")
-        .agg(F.sum("cents").cast("long").alias("rev"))
-    )
-    w = Window.orderBy("i").rowsBetween(-3, 3)
-    t = daily.select(
-        "i",
-        "rev",
-        F.sum("rev").over(w).alias("s7"),
-        F.count(F.lit(1)).over(w).alias("c7"),
-    )
-    d = t.filter(F.col("c7") == 7).select(
-        "i",
-        F.expr("i % 7").alias("weekday_idx"),
-        F.expr("rev - s7 div 7").alias("detrended"),
-    )
+    d = _detrended_daily(spark, sf_dir)
     season = d.groupBy("weekday_idx").agg(
         F.expr("sum(detrended) div count(*)").alias("seasonal")
     )
@@ -1183,21 +1164,7 @@ def recsys_item_item_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     pc = po.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_ord"))
-    a = po.alias("a")
-    b = po.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-    )
+    pairs = basket_pair_counts(po)
     ca = pc.select(F.col("l_partkey").alias("part_a"), F.col("n_ord").alias("n_a"))
     cb = pc.select(F.col("l_partkey").alias("part_b"), F.col("n_ord").alias("n_b"))
     jac = (
@@ -1407,21 +1374,8 @@ def events_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows share the join's shuffle, and a tiny type rollup ends the
     plan. No cartesian anywhere (locked by the shared attribution plan
     test)."""
-    ev = spread(load_table(spark, sf_dir, "events"), "user_id")
-    conv = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("conv_id"),
-        "user_id",
-        F.col("ts").alias("conv_ts"),
-    )
-    touch = ev.filter(F.col("event_type").isin("view", "click")).select(
-        F.col("event_id").alias("t_id"),
-        "user_id",
-        F.col("ts").alias("t_ts"),
-        F.col("event_type").alias("t_type"),
-    )
-    j = conv.join(touch, "user_id").filter(
-        (F.col("t_ts") < F.col("conv_ts"))
-        & (F.col("t_ts") >= F.col("conv_ts") - F.expr("INTERVAL 7 DAY"))
+    j = _touches_before_conversion(
+        spread(load_table(spark, sf_dir, "events"), "user_id")
     )
     wc = Window.partitionBy("conv_id")
     wr = Window.partitionBy("conv_id").orderBy(
@@ -1902,24 +1856,8 @@ def events_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame
     (per-user fanout bounded by a user's 7-day activity, AQE handles hot
     users), THREE windows all partitioned by the SAME conv_id key (one
     shuffle), and a k-row rollup. No corpus-sized window, no collect."""
-    e = load_table(spark, sf_dir, "events")
-    conv = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("conv_id"),
-        "user_id",
-        F.col("ts").alias("conv_ts"),
-    )
-    touch = e.filter(F.col("event_type").isin("view", "click")).select(
-        F.col("event_id").alias("t_id"),
-        "user_id",
-        F.col("ts").alias("t_ts"),
-        F.col("event_type").alias("t_type"),
-    )
     j = (
-        conv.join(touch, "user_id")
-        .filter(
-            (F.col("t_ts") < F.col("conv_ts"))
-            & (F.col("t_ts") >= F.col("conv_ts") - F.expr("INTERVAL 7 DAYS"))
-        )
+        _touches_before_conversion(load_table(spark, sf_dir, "events"))
         .withColumn(
             "w",
             F.expr(

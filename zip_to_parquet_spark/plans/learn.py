@@ -306,16 +306,12 @@ def quality_distill_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Z-order layout for two-dimensional scan pruning
 # ---------------------------------------------------------------------------
-def _zorder_oracle() -> str:
+def _zorder_sample_ctes(samp_cols: str) -> str:
+    """The CTE prefix both z-order oracles open with: events keyed by
+    ``(user_id, day)`` (``base``, ``ev``), their z-value (``evz``), and
+    ``samp``, the md5-sampled ``samp_cols`` of ``evz`` that the
+    equi-depth file boundaries come from. Ends with ``samp``'s comma."""
     z_duck = zorder_value_sql("u", "d", 16).replace(" div ", " // ")
-    mins = ", ".join(
-        f"min(CASE WHEN cum >= ({q} * s + 15) // 16 THEN z END) AS t{q}"
-        for q in range(1, 16)
-    )
-    assign = " + ".join(
-        f"(CASE WHEN t{q} IS NOT NULL AND z >= t{q} THEN 1 ELSE 0 END)"
-        for q in range(1, 16)
-    )
     return f"""
     WITH base AS (
       SELECT event_id, CAST(user_id AS BIGINT) AS user_id,
@@ -330,10 +326,22 @@ def _zorder_oracle() -> str:
     evz AS (SELECT *, {z_duck} AS z FROM ev),
     n AS (SELECT count(*) AS n FROM events),
     samp AS (
-      SELECT z FROM evz, n
+      SELECT {samp_cols} FROM evz, n
       WHERE (md5_number_lower(event_id::VARCHAR) % 65536)
             % greatest(1, n // 2000) = 0
-    ),
+    ),"""
+
+
+def _zorder_oracle() -> str:
+    mins = ", ".join(
+        f"min(CASE WHEN cum >= ({q} * s + 15) // 16 THEN z END) AS t{q}"
+        for q in range(1, 16)
+    )
+    assign = " + ".join(
+        f"(CASE WHEN t{q} IS NOT NULL AND z >= t{q} THEN 1 ELSE 0 END)"
+        for q in range(1, 16)
+    )
+    return _zorder_sample_ctes("z") + f"""
     vc AS (SELECT z, count(*) AS c FROM samp GROUP BY 1),
     cum AS (
       SELECT z, sum(c) OVER (ORDER BY z) AS cum,
@@ -364,8 +372,6 @@ def layout_zorder_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zorder_pruning_oracle() -> str:
-    z_duck = zorder_value_sql("u", "d", 16).replace(" div ", " // ")
-
     def assign(tag: str, key: str) -> str:
         mins = ", ".join(
             f"min(CASE WHEN cum >= ({q} * s + 15) // 16 THEN k END) AS t{q}"
@@ -394,24 +400,7 @@ def _zorder_pruning_oracle() -> str:
         "(dim = 'user' AND mu <= v AND v <= xu)"
         " OR (dim = 'day' AND md <= v AND v <= xd)"
     )
-    return f"""
-    WITH base AS (
-      SELECT event_id, CAST(user_id AS BIGINT) AS user_id,
-             epoch_us(ts) // 86400000000 AS day
-      FROM events
-    ),
-    ev AS (
-      SELECT event_id, user_id, day,
-             user_id % 65536 AS u, day % 65536 AS d
-      FROM base
-    ),
-    evz AS (SELECT *, {z_duck} AS z FROM ev),
-    n AS (SELECT count(*) AS n FROM events),
-    samp AS (
-      SELECT z, user_id FROM evz, n
-      WHERE (md5_number_lower(event_id::VARCHAR) % 65536)
-            % greatest(1, n // 2000) = 0
-    ),{assign("z", "z")},{assign("u", "user_id")},
+    return _zorder_sample_ctes("z, user_id") + f"""{assign("z", "z")},{assign("u", "user_id")},
     bounds AS (
       SELECT min(user_id) AS mnu, max(user_id) AS mxu,
              min(day) AS mnd, max(day) AS mxd

@@ -66,6 +66,7 @@ from zip_to_parquet_spark.operators.vectors import (
     train_ivf_codebook,
     train_pq_codebooks,
 )
+from zip_to_parquet_spark.operators.retrieval import micro_sim_sql
 from zip_to_parquet_spark.plans.registry import query
 from zip_to_parquet_spark.runtime import spread
 from zip_to_parquet_spark.schema import load_table
@@ -2892,15 +2893,6 @@ def mixture_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MMR diverse re-ranking over a first-stage candidate pool
 # ---------------------------------------------------------------------------
-def _msim(a: str, b: str) -> str:
-    """DuckDB twin of operators/retrieval.micro_sim (verified exact)."""
-    return (
-        f"CAST(round(round(list_dot_product({a}, {b})"
-        f" / (sqrt(list_dot_product({a}, {a}))"
-        f" * sqrt(list_dot_product({b}, {b}))), 6) * 1000000) AS BIGINT)"
-    )
-
-
 def _mmr_oracle(k: int = 5, lam: int = 7) -> str:
     """Unrolled greedy MMR as CTEs (the PageRank pattern: iterations as
     SQL, bit-exact parity on an inherently sequential algorithm)."""
@@ -2908,7 +2900,7 @@ def _mmr_oracle(k: int = 5, lam: int = 7) -> str:
     ctes = [
         "q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)",
         f"""scored AS (
-          SELECT vec_id AS n_id, {_msim('embedding::DOUBLE[]', 'qv')} AS rel_micro
+          SELECT vec_id AS n_id, {micro_sim_sql('embedding::DOUBLE[]', 'qv')} AS rel_micro
           FROM embeddings, q WHERE vec_id <> 0
         )""",
         "cand AS (SELECT n_id, rel_micro FROM scored ORDER BY rel_micro DESC, n_id LIMIT 20)",
@@ -2917,7 +2909,7 @@ def _mmr_oracle(k: int = 5, lam: int = 7) -> str:
           FROM cand c JOIN embeddings e ON e.vec_id = c.n_id
         )""",
         f"""pairs AS (
-          SELECT a.n_id AS a_id, b.n_id AS b_id, {_msim('a.v', 'b.v')} AS psim_micro
+          SELECT a.n_id AS a_id, b.n_id AS b_id, {micro_sim_sql('a.v', 'b.v')} AS psim_micro
           FROM candv a JOIN candv b ON a.n_id <> b.n_id
         )""",
         f"""p1 AS (
@@ -3174,6 +3166,45 @@ def ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _heldout_bigram_eval(spark: SparkSession, sf_dir: str, score, *aggs):
+    """Held-out bigram evaluation shared by ``lm_perplexity_holdout`` and
+    ``lm_kneser_ney_bigram``. Documents split by md5 at
+    ``train_val_test_split``'s cut points; ``score(train, bgt, vtypes)``
+    scores the distinct val transitions ``vtypes (w1, w2)`` from the
+    train documents ``train (doc_id, source, ws, part)`` and their bigram
+    counts ``bgt (w1, w2, c12)``. The scored types join back to the val
+    transitions (size-aware) and roll up per source into ``(source,
+    n_docs, n_bigrams, *aggs)``."""
+    from zip_to_parquet_spark.operators.pipeline import words
+    from zip_to_parquet_spark.runtime import size_aware_side
+
+    d = _documents_spread(spark, sf_dir)
+    _, part = pipeline.md5_split(F.col("doc_id"))
+    split = d.select(
+        "doc_id", "source", words(F.col("text")).alias("ws"), part.alias("part")
+    )
+    train = split.filter(F.col("part") == "train")
+    bgt = (
+        pipeline.word_pairs(train, [])
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c12"))
+    )
+    vpairs = pipeline.word_pairs(
+        split.filter(F.col("part") == "val"), ["doc_id", "source"]
+    )
+    vtypes = vpairs.select("w1", "w2").distinct()
+    side = size_aware_side(score(train, bgt, vtypes), vpairs, 2_000_000)
+    return (
+        vpairs.join(side, ["w1", "w2"])
+        .groupBy("source")
+        .agg(
+            F.countDistinct("doc_id").cast("long").alias("n_docs"),
+            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+            *aggs,
+        )
+    )
+
+
 @query(
     "lm_perplexity_holdout",
     oracle="""
@@ -3250,93 +3281,51 @@ def lm_perplexity_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     TYPE table (never the token stream) LEFT-joined against the count
     tables, one size-aware join back to val transitions, one source
     rollup."""
-    from zip_to_parquet_spark.operators.pipeline import (
-        _size_aware_side,
-        words,
-    )
 
-    d = _documents_spread(spark, sf_dir)
-    bucket = F.substring(
-        F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2
-    )
-    split = d.select(
-        "doc_id",
-        "source",
-        words(F.col("text")).alias("ws"),
-        F.when(bucket < "cc", "train")
-        .when(bucket < "e6", "val")
-        .otherwise("test")
-        .alias("part"),
-    )
-    train = split.filter(F.col("part") == "train")
-    val = split.filter(F.col("part") == "val")
-    toks = train.select(F.explode("ws").alias("w"))
-    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    stats = uni.agg(F.sum("c").alias("total"), F.count(F.lit(1)).alias("v"))
-
-    def pair_stream(df, extra):
-        n1 = F.size("ws") - 1
-        return df.select(
-            *extra,
-            F.explode(
-                F.zip_with(
-                    F.slice("ws", 1, n1),
-                    F.slice("ws", 2, n1),
-                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                )
-            ).alias("p"),
-        ).select(*extra, "p.w1", "p.w2")
-
-    bgt = (
-        pair_stream(train, [])
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-    )
-    vpairs = pair_stream(val, ["doc_id", "source"])
-    vtypes = vpairs.select("w1", "w2").distinct()
-    u1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
-    u2 = uni.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
-    sc = (
-        vtypes.join(bgt, ["w1", "w2"], "left")
-        .join(u1, "w1", "left")
-        .join(u2, "w2", "left")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "w1",
-            "w2",
-            F.floor(
-                -F.log(
-                    F.when(
-                        F.col("c12").isNull(), F.lit(0.0)
-                    ).otherwise(F.lit(0.9) * (F.col("c12") / F.col("c1")))
-                    + F.lit(0.1)
-                    * (
-                        (F.coalesce(F.col("c2"), F.lit(0)) + 1)
-                        / (F.col("total") + F.col("v"))
+    def score(train, bgt, vtypes):
+        toks = train.select(F.explode("ws").alias("w"))
+        uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+        stats = uni.agg(F.sum("c").alias("total"), F.count(F.lit(1)).alias("v"))
+        u1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
+        u2 = uni.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
+        return (
+            vtypes.join(bgt, ["w1", "w2"], "left")
+            .join(u1, "w1", "left")
+            .join(u2, "w2", "left")
+            .crossJoin(F.broadcast(stats))
+            .select(
+                "w1",
+                "w2",
+                F.floor(
+                    -F.log(
+                        F.when(
+                            F.col("c12").isNull(), F.lit(0.0)
+                        ).otherwise(F.lit(0.9) * (F.col("c12") / F.col("c1")))
+                        + F.lit(0.1)
+                        * (
+                            (F.coalesce(F.col("c2"), F.lit(0)) + 1)
+                            / (F.col("total") + F.col("v"))
+                        )
                     )
+                    * 1e6
                 )
-                * 1e6
+                .cast("long")
+                .alias("s_micro"),
+                F.when(F.col("c12").isNull(), 1).otherwise(0).alias("is_oov"),
             )
-            .cast("long")
-            .alias("s_micro"),
-            F.when(F.col("c12").isNull(), 1).otherwise(0).alias("is_oov"),
         )
-    )
-    side = _size_aware_side(sc, vpairs, 2_000_000)
-    return (
-        vpairs.join(side, ["w1", "w2"])
-        .groupBy("source")
-        .agg(
-            F.countDistinct("doc_id").cast("long").alias("n_docs"),
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.sum("s_micro").cast("long").alias("surprisal_micro"),
-            F.expr("sum(s_micro) div count(*)")
-            .cast("long")
-            .alias("mean_surprisal_micro"),
-            F.expr("(1000 * sum(is_oov)) div count(*)")
-            .cast("long")
-            .alias("oov_permille"),
-        )
+
+    return _heldout_bigram_eval(
+        spark,
+        sf_dir,
+        score,
+        F.sum("s_micro").cast("long").alias("surprisal_micro"),
+        F.expr("sum(s_micro) div count(*)")
+        .cast("long")
+        .alias("mean_surprisal_micro"),
+        F.expr("(1000 * sum(is_oov)) div count(*)")
+        .cast("long")
+        .alias("oov_permille"),
     )
 
 
@@ -3624,94 +3613,51 @@ def lm_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable), scoring over the val TYPE table (vocabulary-sized,
     never the token stream), a 1-row N1all broadcast, one join back to
     val transitions, one source rollup."""
-    from zip_to_parquet_spark.operators.pipeline import words
 
-    d = _documents_spread(spark, sf_dir)
-    bucket = F.substring(
-        F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2
-    )
-    split = d.select(
-        "doc_id",
-        "source",
-        words(F.col("text")).alias("ws"),
-        F.when(bucket < "cc", "train")
-        .when(bucket < "e6", "val")
-        .otherwise("test")
-        .alias("part"),
-    )
-
-    def pair_stream(df, extra):
-        n1 = F.size("ws") - 1
-        return df.select(
-            *extra,
-            F.explode(
-                F.zip_with(
-                    F.slice("ws", 1, n1),
-                    F.slice("ws", 2, n1),
-                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                )
-            ).alias("p"),
-        ).select(*extra, "p.w1", "p.w2")
-
-    train = split.filter(F.col("part") == "train")
-    val = split.filter(F.col("part") == "val")
-    bgt = (
-        pair_stream(train, [])
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("c12"))
-    )
-    ctx = bgt.groupBy("w1").agg(
-        F.sum("c12").cast("long").alias("c1"),
-        F.count(F.lit(1)).cast("long").alias("n1fw"),
-    )
-    cont = bgt.groupBy("w2").agg(
-        F.count(F.lit(1)).cast("long").alias("n1bw")
-    )
-    nall = bgt.agg(F.count(F.lit(1)).cast("long").alias("n1all"))
-    vpairs = pair_stream(val, ["doc_id", "source"])
-    vtypes = vpairs.select("w1", "w2").distinct()
-    sc = (
-        vtypes.join(bgt, ["w1", "w2"], "left")
-        .join(ctx, "w1", "left")
-        .join(cont, "w2", "left")
-        .crossJoin(F.broadcast(nall))
-        .select(
-            "w1",
-            "w2",
-            F.when(
-                F.col("c1").isNull(),
-                F.expr("(1000000 * coalesce(n1bw, 0)) div n1all"),
-            )
-            .otherwise(
-                F.expr(
-                    "(1000000 * (CASE WHEN c12 IS NULL THEN 0"
-                    " ELSE (4 * c12 - 3) * n1all END"
-                    " + 3 * n1fw * coalesce(n1bw, 0)))"
-                    " div (4 * c1 * n1all)"
-                )
-            )
-            .cast("long")
-            .alias("p_micro"),
-            F.when(F.col("c12").isNull(), 1).otherwise(0).alias("is_unseen"),
+    def score(train, bgt, vtypes):
+        ctx = bgt.groupBy("w1").agg(
+            F.sum("c12").cast("long").alias("c1"),
+            F.count(F.lit(1)).cast("long").alias("n1fw"),
         )
-    )
-    from zip_to_parquet_spark.operators.pipeline import _size_aware_side
-
-    side = _size_aware_side(sc, vpairs, 2_000_000)
-    return (
-        vpairs.join(side, ["w1", "w2"])
-        .groupBy("source")
-        .agg(
-            F.countDistinct("doc_id").cast("long").alias("n_docs"),
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.sum("p_micro").cast("long").alias("p_sum_micro"),
-            F.expr("sum(p_micro) div count(*)")
-            .cast("long")
-            .alias("mean_p_micro"),
-            F.expr("(1000 * sum(is_unseen)) div count(*)")
-            .cast("long")
-            .alias("unseen_permille"),
+        cont = bgt.groupBy("w2").agg(
+            F.count(F.lit(1)).cast("long").alias("n1bw")
         )
+        nall = bgt.agg(F.count(F.lit(1)).cast("long").alias("n1all"))
+        return (
+            vtypes.join(bgt, ["w1", "w2"], "left")
+            .join(ctx, "w1", "left")
+            .join(cont, "w2", "left")
+            .crossJoin(F.broadcast(nall))
+            .select(
+                "w1",
+                "w2",
+                F.when(
+                    F.col("c1").isNull(),
+                    F.expr("(1000000 * coalesce(n1bw, 0)) div n1all"),
+                )
+                .otherwise(
+                    F.expr(
+                        "(1000000 * (CASE WHEN c12 IS NULL THEN 0"
+                        " ELSE (4 * c12 - 3) * n1all END"
+                        " + 3 * n1fw * coalesce(n1bw, 0)))"
+                        " div (4 * c1 * n1all)"
+                    )
+                )
+                .cast("long")
+                .alias("p_micro"),
+                F.when(F.col("c12").isNull(), 1).otherwise(0).alias("is_unseen"),
+            )
+        )
+
+    return _heldout_bigram_eval(
+        spark,
+        sf_dir,
+        score,
+        F.sum("p_micro").cast("long").alias("p_sum_micro"),
+        F.expr("sum(p_micro) div count(*)").cast("long").alias("mean_p_micro"),
+        F.expr("(1000 * sum(is_unseen)) div count(*)")
+        .cast("long")
+        .alias("unseen_permille"),
     )
 
 
@@ -3840,9 +3786,7 @@ def lm_good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zip_to_parquet_spark.operators.pipeline import words
 
     d = _documents_spread(spark, sf_dir)
-    bucket = F.substring(
-        F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2
-    )
+    bucket, _ = pipeline.md5_split(F.col("doc_id"))
     toks = (
         d.filter(bucket < "cc")
         .select(F.explode(words(F.col("text"))).alias("tok"))
@@ -4017,15 +3961,9 @@ def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = rep.groupBy("group_rep").agg(
         F.count(F.lit(1)).cast("long").alias("group_size")
     )
-    bucket = F.substring(F.md5(F.col("group_rep").cast("string")), 1, 2)
+    _, split = pipeline.md5_split(F.col("group_rep"))
     return rep.join(g, "group_rep").select(
-        "doc_id",
-        "group_rep",
-        "group_size",
-        F.when(bucket < "cc", "train")
-        .when(bucket < "e6", "val")
-        .otherwise("test")
-        .alias("split"),
+        "doc_id", "group_rep", "group_size", split.alias("split")
     )
 
 

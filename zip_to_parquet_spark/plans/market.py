@@ -253,7 +253,10 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     part-frequency table is part-dimension-sized (size-aware broadcast),
     and the scalar order count is a broadcast 1-row cross join — the
     house pattern for global denominators."""
-    from zip_to_parquet_spark.operators.graph import capped_baskets
+    from zip_to_parquet_spark.operators.graph import (
+        basket_pair_counts,
+        capped_baskets,
+    )
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     po = capped_baskets(li.distinct())
@@ -261,21 +264,7 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders")
     )
     pc = po.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_part"))
-    a = po.alias("a")
-    b = po.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .filter(F.col("n_ab") >= 2)
-    )
+    pairs = basket_pair_counts(po)
     pa = pc.select(
         F.col("l_partkey").alias("part_a"), F.col("n_part").alias("n_a")
     )
@@ -771,6 +760,22 @@ def scan_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _user_cent_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each user's event ``value``s in cents, ordered by ``(ts,
+    event_id)`` → ``(user_id, vals)`` — the sequence the per-user
+    fixed-point smoothing folds run over. ONE user-keyed shuffle; state is
+    the user's own event list."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", _cents("value").alias("xc")
+    )
+    return ev.groupBy("user_id").agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("ts", "event_id", "xc"))),
+            lambda s: s["xc"],
+        ).alias("vals")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Fixed-point EWMA per user (ordered array fold — sequential recursion
 # expressed exactly, no float).
@@ -811,16 +816,7 @@ def events_ewma_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     list (the per-user bound every sequential-semantics operator in this
     repo accepts and documents); the fold itself is codegen'd JVM, no
     Python."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", _cents("value").alias("xc")
-    )
-    per_user = ev.groupBy("user_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("ts", "event_id", "xc"))),
-            lambda s: s["xc"],
-        ).alias("vals")
-    )
-    return per_user.select(
+    return _user_cent_sequences(spark, sf_dir).select(
         "user_id",
         F.size("vals").cast("long").alias("n_events"),
         F.expr(
@@ -1346,16 +1342,7 @@ def events_holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE user-keyed shuffle; per-user state is the user's
     own ordered value array (the documented sequential-semantics bound);
     the fold is codegen'd JVM, no Python."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", _cents("value").alias("xc")
-    )
-    per_user = ev.groupBy("user_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("ts", "event_id", "xc"))),
-            lambda s: s["xc"],
-        ).alias("vals")
-    )
-    return per_user.select(
+    return _user_cent_sequences(spark, sf_dir).select(
         "user_id",
         F.size("vals").cast("long").alias("n_events"),
         F.expr(

@@ -1656,6 +1656,28 @@ def join_null_aware_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _europe_asia_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EUROPE and ASIA customers' balances in integer cents → ``(v, in_a,
+    in_b)``, ``in_a``/``in_b`` the 0/1 sample flags (A = EUROPE) — the two
+    samples of the two-sample KS and Mann-Whitney keys; dims broadcast
+    onto the customer probe."""
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(
+        F.col("r_name").isin("EUROPE", "ASIA")
+    )
+    return (
+        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        .select(
+            (F.col("c_acctbal").cast("decimal(12,2)") * 100)
+            .cast("long").alias("v"),
+            F.when(F.col("r_name") == "EUROPE", 1).otherwise(0).alias("in_a"),
+            F.when(F.col("r_name") == "ASIA", 1).otherwise(0).alias("in_b"),
+        )
+    )
+
+
 # ---------------------------------------------------------------------------
 # Exact two-sample Kolmogorov–Smirnov distance (integer cross-mult)
 # ---------------------------------------------------------------------------
@@ -1715,21 +1737,7 @@ def stats_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the merged sample (the same deliberate choice as the exact
     weighted-median key — for sharded scale, range-partition the value
     axis first and take the per-range max; the supremum distributes)."""
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name").isin("EUROPE", "ASIA")
-    )
-    a = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select(
-            (F.col("c_acctbal").cast("decimal(12,2)") * 100)
-            .cast("long").alias("v"),
-            F.when(F.col("r_name") == "EUROPE", 1).otherwise(0).alias("in_a"),
-            F.when(F.col("r_name") == "ASIA", 1).otherwise(0).alias("in_b"),
-        )
-    )
+    a = _europe_asia_balances(spark, sf_dir)
     wcum = (
         Window.partitionBy(F.lit(0))
         .orderBy("v")
@@ -1832,21 +1840,7 @@ def stats_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     one cumulative window and a 1-row reduce — same deliberate
     global-window choice as the KS key, same range-partition escape
     hatch at shard scale."""
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name").isin("EUROPE", "ASIA")
-    )
-    a = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select(
-            (F.col("c_acctbal").cast("decimal(12,2)") * 100)
-            .cast("long").alias("v"),
-            F.when(F.col("r_name") == "EUROPE", 1).otherwise(0).alias("in_a"),
-            F.when(F.col("r_name") == "ASIA", 1).otherwise(0).alias("in_b"),
-        )
-    )
+    a = _europe_asia_balances(spark, sf_dir)
     g = a.groupBy("v").agg(
         F.sum("in_a").alias("ca"),
         F.sum("in_b").alias("cb"),

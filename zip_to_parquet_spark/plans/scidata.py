@@ -25,11 +25,70 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from zip_to_parquet_spark.operators.retrieval import micro_sim_sql
+from zip_to_parquet_spark.operators.temporal import daily_revenue
 from zip_to_parquet_spark.plans.registry import query
 from zip_to_parquet_spark.runtime import spread
 from zip_to_parquet_spark.schema import load_table
 
 D38 = "decimal(38,0)"
+
+
+def _one_way_f(obs: DataFrame, grp: str, x: str) -> tuple[DataFrame, DataFrame]:
+    """The exact one-way ANOVA F of measure ``x`` across groups ``grp`` →
+    ``(g2, ss)``: ``g2`` one checkpointed row per group ``(grp, n_g, s_g,
+    q_g, mean_milli)``, ``ss`` the 1-row ``(ssb, ssw, n, k, f_permille)``.
+    See ``stats_anova_f`` for the exactness contract; ``stats_levene_bf``
+    runs it on absolute deviations from the group median."""
+    g = obs.groupBy(grp).agg(
+        F.count(F.lit(1)).cast(D38).alias("n_g"),
+        F.sum(x).cast(D38).alias("s_g"),
+        F.sum(F.col(x) * F.col(x)).cast(D38).alias("q_g"),
+    )
+    # Few rows, referenced three times (group output, grand totals, SS
+    # rollup): checkpoint so the fact table is scanned exactly once.
+    g2 = g.withColumn(
+        "mean_milli", F.expr("(s_g * 1000) div n_g")
+    ).localCheckpoint(eager=True)
+    tot = g2.agg(
+        F.sum("n_g").cast(D38).alias("n"),
+        F.sum("s_g").cast(D38).alias("s"),
+        F.count(F.lit(1)).cast(D38).alias("k"),
+    ).withColumn("gm_milli", F.expr("(s * 1000) div n"))
+    ss = (
+        g2.crossJoin(F.broadcast(tot))
+        .agg(
+            F.sum(
+                F.expr(
+                    "n_g * (cast(mean_milli as decimal(38,0)) - gm_milli)"
+                    " * (cast(mean_milli as decimal(38,0)) - gm_milli)"
+                )
+            )
+            .cast(D38)
+            .alias("ssb"),
+            F.sum(
+                F.expr(
+                    "q_g * 1000000"
+                    " - n_g * cast(mean_milli as decimal(38,0)) * mean_milli"
+                )
+            )
+            .cast(D38)
+            .alias("ssw"),
+            F.max("n").alias("n"),
+            F.max("k").alias("k"),
+        )
+        .withColumn(
+            # nullif: DuckDB's //0 yields NULL while Spark's ANSI div
+            # raises DIVIDE_BY_ZERO — degenerate inputs (all-identical
+            # values => ssw=0, or a single group => k=1) must yield NULL
+            # in BOTH engines, not an error in one.
+            "f_permille",
+            F.expr(
+                "(ssb * (n - k) * 1000) div nullif(ssw * (k - 1), 0)"
+            ),
+        )
+    )
+    return g2, ss
 
 
 # ---------------------------------------------------------------------------
@@ -101,54 +160,7 @@ def stats_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast(D38)
         .alias("x"),
     )
-    g = m.groupBy("prio").agg(
-        F.count(F.lit(1)).cast(D38).alias("n_g"),
-        F.sum("x").cast(D38).alias("s_g"),
-        F.sum(F.col("x") * F.col("x")).cast(D38).alias("q_g"),
-    )
-    # 5 rows, referenced three times (group output, grand totals, SS
-    # rollup): checkpoint so the fact table is scanned exactly once.
-    g2 = g.withColumn(
-        "mean_milli", F.expr("(s_g * 1000) div n_g")
-    ).localCheckpoint(eager=True)
-    tot = g2.agg(
-        F.sum("n_g").cast(D38).alias("n"),
-        F.sum("s_g").cast(D38).alias("s"),
-        F.count(F.lit(1)).cast(D38).alias("k"),
-    ).withColumn("gm_milli", F.expr("(s * 1000) div n"))
-    ss = (
-        g2.crossJoin(F.broadcast(tot))
-        .agg(
-            F.sum(
-                F.expr(
-                    "n_g * (cast(mean_milli as decimal(38,0)) - gm_milli)"
-                    " * (cast(mean_milli as decimal(38,0)) - gm_milli)"
-                )
-            )
-            .cast(D38)
-            .alias("ssb"),
-            F.sum(
-                F.expr(
-                    "q_g * 1000000"
-                    " - n_g * cast(mean_milli as decimal(38,0)) * mean_milli"
-                )
-            )
-            .cast(D38)
-            .alias("ssw"),
-            F.max("n").alias("n"),
-            F.max("k").alias("k"),
-        )
-        .withColumn(
-            # nullif: DuckDB's //0 yields NULL while Spark's ANSI div
-            # raises DIVIDE_BY_ZERO — degenerate inputs (all-identical
-            # values => ssw=0, or a single group => k=1) must yield NULL
-            # in BOTH engines, not an error in one.
-            "f_permille",
-            F.expr(
-                "(ssb * (n - k) * 1000) div nullif(ssw * (k - 1), 0)"
-            ),
-        )
-    )
+    g2, ss = _one_way_f(m, "prio", "x")
     return g2.crossJoin(F.broadcast(ss)).select(
         "prio",
         F.col("n_g").cast("long").alias("n_rows"),
@@ -305,6 +317,46 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lag_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lag-1..5 moments of the daily event-count series, one row per lag:
+    ``(lag, m_k, c_k, h_k, t_k, n, s, q)`` — pair count, Σx_t·x_{t+k}, the
+    head and tail sums, and the series' count, sum and sum of squares.
+    ``_ACF_PPM`` turns a row into the ppm autocorrelation."""
+    daily = (
+        load_table(spark, sf_dir, "events")
+        .select(F.expr("unix_micros(ts) div 86400000000").alias("i"))
+        .groupBy("i")
+        .agg(F.count(F.lit(1)).cast(D38).alias("x"))
+    )
+    st = daily.agg(
+        F.count(F.lit(1)).cast(D38).alias("n"),
+        F.sum("x").cast(D38).alias("s"),
+        F.sum(F.col("x") * F.col("x")).cast(D38).alias("q"),
+    )
+    lags = spark.range(1, 6).select(F.col("id").cast(D38).alias("lag"))
+    a = daily.select(F.col("i").alias("ai"), F.col("x").alias("ax"))
+    b = daily.select(F.col("i").alias("bi"), F.col("x").alias("bx"))
+    pair = (
+        a.crossJoin(F.broadcast(lags))
+        .join(b, F.col("bi") == F.col("ai") + F.col("lag").cast("long"))
+        .groupBy("lag")
+        .agg(
+            F.count(F.lit(1)).cast(D38).alias("m_k"),
+            F.sum(F.col("ax") * F.col("bx")).cast(D38).alias("c_k"),
+            F.sum("ax").cast(D38).alias("h_k"),
+            F.sum("bx").cast(D38).alias("t_k"),
+        )
+    )
+    return pair.crossJoin(F.broadcast(st))
+
+
+# Mean-centred ACF at lag k over ``_lag_moments``, denominators cleared.
+_ACF_PPM = (
+    "((n * n * c_k - n * s * (h_k + t_k) + m_k * s * s) * 1000000)"
+    " div nullif(n * n * q - n * s * s, 0)"
+)
+
+
 # ---------------------------------------------------------------------------
 # Autocorrelation function (exact integer ACF at lags 1..5)
 # ---------------------------------------------------------------------------
@@ -356,40 +408,10 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-replicated self-equi-join and a broadcast 1-row moment table.
     Same plan at any corpus size; the series length, not the corpus,
     bounds the join."""
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .select(F.expr("unix_micros(ts) div 86400000000").alias("i"))
-        .groupBy("i")
-        .agg(F.count(F.lit(1)).cast(D38).alias("x"))
-    )
-    st = daily.agg(
-        F.count(F.lit(1)).cast(D38).alias("n"),
-        F.sum("x").cast(D38).alias("s"),
-        F.sum(F.col("x") * F.col("x")).cast(D38).alias("q"),
-    )
-    lags = spark.range(1, 6).select(F.col("id").cast(D38).alias("lag"))
-    a = daily.select(F.col("i").alias("ai"), F.col("x").alias("ax"))
-    b = daily.select(F.col("i").alias("bi"), F.col("x").alias("bx"))
-    pair = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("bi") == F.col("ai") + F.col("lag").cast("long"))
-        .groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).cast(D38).alias("m_k"),
-            F.sum(F.col("ax") * F.col("bx")).cast(D38).alias("c_k"),
-            F.sum("ax").cast(D38).alias("h_k"),
-            F.sum("bx").cast(D38).alias("t_k"),
-        )
-    )
-    return pair.crossJoin(F.broadcast(st)).select(
+    return _lag_moments(spark, sf_dir).select(
         F.col("lag").cast("long").alias("lag"),
         F.col("m_k").cast("long").alias("n_pairs"),
-        F.expr(
-            "((n * n * c_k - n * s * (h_k + t_k) + m_k * s * s) * 1000000)"
-            " div nullif(n * n * q - n * s * s, 0)"
-        )
-        .cast("long")
-        .alias("acf_ppm"),
+        F.expr(_ACF_PPM).cast("long").alias("acf_ppm"),
     )
 
 
@@ -476,22 +498,12 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Greedy k-center coreset selection over embeddings
 # ---------------------------------------------------------------------------
-def _msim(a: str, b: str) -> str:
-    """DuckDB twin of operators/retrieval.micro_sim (the repo's verified
-    cross-engine cosine-micro contract)."""
-    return (
-        f"CAST(round(round(list_dot_product({a}, {b})"
-        f" / (sqrt(list_dot_product({a}, {a}))"
-        f" * sqrt(list_dot_product({b}, {b}))), 6) * 1000000) AS BIGINT)"
-    )
-
-
 def _kcenter_oracle(k: int = 6) -> str:
     ctes = [
         "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
         "s1 AS (SELECT v FROM e WHERE vec_id = 0)",
         f"""d1 AS (
-          SELECT e.vec_id, 1000000 - {_msim('e.v', 's1.v')} AS dmin, e.v
+          SELECT e.vec_id, 1000000 - {micro_sim_sql('e.v', 's1.v')} AS dmin, e.v
           FROM e, s1 WHERE e.vec_id <> 0
         )""",
     ]
@@ -504,7 +516,7 @@ def _kcenter_oracle(k: int = 6) -> str:
         if i < k:
             ctes.append(f"""d{i} AS (
               SELECT d.vec_id,
-                     least(d.dmin, 1000000 - {_msim('d.v', 'p.v')}) AS dmin,
+                     least(d.dmin, 1000000 - {micro_sim_sql('d.v', 'p.v')}) AS dmin,
                      d.v
               FROM d{prev} d, p{i} p WHERE d.vec_id <> p.vec_id
             )""")
@@ -749,23 +761,9 @@ def ts_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-entity scale this same window would partition by the entity
     key). The frame holds ≤7 values, so sorting inside the frame is
     O(1) per row."""
-    from pyspark.sql.window import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.expr("datediff(cast(o_orderdate as date), date'1970-01-01')")
-            .cast("long")
-            .alias("i"),
-            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("i")
-        .agg(F.sum("cents").cast("long").alias("rev_cents"))
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"))
     w = Window.orderBy("i").rangeBetween(-3, 3)
-    return daily.select(
+    return daily.withColumnRenamed("rev", "rev_cents").select(
         F.col("i").alias("day_idx"),
         "rev_cents",
         F.sort_array(F.collect_list("rev_cents").over(w)).alias("s"),
@@ -829,21 +827,8 @@ def stats_theil_sen_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     published Theil-Sen cost and is BOUNDED by calendar length, never
     corpus size. The median rank scan is one ordered window over those
     pairs."""
-    from pyspark.sql.window import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.expr("datediff(cast(o_orderdate as date), date'1970-01-01')")
-            .cast("long")
-            .alias("i"),
-            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("i")
-        .agg(F.sum("cents").cast("long").alias("rev"))
-        .localCheckpoint(eager=True)
+    daily = daily_revenue(load_table(spark, sf_dir, "orders")).localCheckpoint(
+        eager=True
     )
     a = daily.select(F.col("i").alias("ai"), F.col("rev").alias("ra"))
     b = daily.select(F.col("i").alias("bi"), F.col("rev").alias("rb"))
@@ -1322,20 +1307,10 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     is mirrored verbatim in every consuming oracle and never fires on
     the fixtures (max basket 17 at sf0.1). Checkpointed eagerly: the
     edge set is reused by the degree, adjacency, and anti-join stages."""
-    from zip_to_parquet_spark.operators.graph import capped_baskets
+    from zip_to_parquet_spark.operators.graph import copurchase_pairs
 
-    lp = capped_baskets(
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
     return (
-        lp.alias("a")
-        .join(lp.alias("b"), "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
+        copurchase_pairs(load_table(spark, sf_dir, "lineitem"), "u", "v")
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -1678,21 +1653,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     theil-sen/rolling-median contract: series-sized ordered windows,
     entity-partitioned in a multi-entity deployment) and a 1-row
     reduce."""
-    from pyspark.sql.window import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.expr("datediff(cast(o_orderdate as date), date'1970-01-01')")
-            .cast("long")
-            .alias("i"),
-            (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("i")
-        .agg(F.sum("cents").cast("long").alias("rev"))
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"))
     w = Window.orderBy("i")
     d = daily.select("i", (F.col("rev") - F.lag("rev").over(w)).alias("diff"))
     s = d.filter(F.col("diff").isNotNull() & (F.col("diff") != 0)).select(
@@ -2790,52 +2751,8 @@ def stats_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = r.join(F.broadcast(med), "grp").select(
         "grp", F.expr("abs(2 * x - med2)").cast(D38).alias("z")
     )
-    g = z.groupBy("grp").agg(
-        F.count(F.lit(1)).cast(D38).alias("n_g"),
-        F.sum("z").cast(D38).alias("s_g"),
-        F.sum(F.col("z") * F.col("z")).cast(D38).alias("q_g"),
-    )
-    g2 = g.withColumn(
-        "mean_milli", F.expr("(s_g * 1000) div n_g")
-    ).localCheckpoint(eager=True)
-    tot = g2.agg(
-        F.sum("n_g").cast(D38).alias("n"),
-        F.sum("s_g").cast(D38).alias("s"),
-        F.count(F.lit(1)).cast(D38).alias("k"),
-    ).withColumn("gm_milli", F.expr("(s * 1000) div n"))
-    ss = (
-        g2.crossJoin(F.broadcast(tot))
-        .agg(
-            F.sum(
-                F.expr(
-                    "n_g * (cast(mean_milli as decimal(38,0)) - gm_milli)"
-                    " * (cast(mean_milli as decimal(38,0)) - gm_milli)"
-                )
-            )
-            .cast(D38)
-            .alias("ssb"),
-            F.sum(
-                F.expr(
-                    "q_g * 1000000"
-                    " - n_g * cast(mean_milli as decimal(38,0)) * mean_milli"
-                )
-            )
-            .cast(D38)
-            .alias("ssw"),
-            F.max("n").alias("n"),
-            F.max("k").alias("k"),
-        )
-    )
-    fin = ss.select(
-        # nullif mirrors the oracle: NULL (not a DuckDB div-by-zero error)
-        # when every within-group |2x-med2| is identical (ssw=0) or only
-        # one event_type exists (k=1).
-        F.expr("(ssb * (n - k) * 1000) div nullif(ssw * (k - 1), 0)").alias(
-            "f_permille"
-        ),
-        "n",
-        "k",
-    )
+    g2, ss = _one_way_f(z, "grp", "z")
+    fin = ss.select("f_permille", "n", "k")
     return (
         g2.join(F.broadcast(med), "grp")
         .crossJoin(F.broadcast(fin))
@@ -2920,40 +2837,10 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row tables; the cumulative window runs over FIVE rows. Series
     length, never corpus size, bounds everything past the first
     shuffle."""
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .select(F.expr("unix_micros(ts) div 86400000000").alias("i"))
-        .groupBy("i")
-        .agg(F.count(F.lit(1)).cast(D38).alias("x"))
-    )
-    st = daily.agg(
-        F.count(F.lit(1)).cast(D38).alias("n"),
-        F.sum("x").cast(D38).alias("s"),
-        F.sum(F.col("x") * F.col("x")).cast(D38).alias("q"),
-    )
-    lags = spark.range(1, 6).select(F.col("id").cast(D38).alias("lag"))
-    a = daily.select(F.col("i").alias("ai"), F.col("x").alias("ax"))
-    b = daily.select(F.col("i").alias("bi"), F.col("x").alias("bx"))
-    pair = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("bi") == F.col("ai") + F.col("lag").cast("long"))
-        .groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).cast(D38).alias("m_k"),
-            F.sum(F.col("ax") * F.col("bx")).cast(D38).alias("c_k"),
-            F.sum("ax").cast(D38).alias("h_k"),
-            F.sum("bx").cast(D38).alias("t_k"),
-        )
-    )
-    acf = pair.crossJoin(F.broadcast(st)).select(
+    acf = _lag_moments(spark, sf_dir).select(
         "lag",
         "n",
-        F.expr(
-            "((n * n * c_k - n * s * (h_k + t_k) + m_k * s * s) * 1000000)"
-            " div nullif(n * n * q - n * s * s, 0)"
-        )
-        .cast(D38)
-        .alias("rho_ppm"),
+        F.expr(_ACF_PPM).cast(D38).alias("rho_ppm"),
         F.expr(
             "CASE cast(lag as int) WHEN 1 THEN 3841 WHEN 2 THEN 5991"
             " WHEN 3 THEN 7815 WHEN 4 THEN 9488 ELSE 11070 END"
