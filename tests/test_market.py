@@ -124,7 +124,7 @@ def test_multi_metric_thresholds_match_single(spark):
         for _ in range(137)
     ]
     df = spark.createDataFrame(rows, "a long, b long, c long")
-    multi = quantile_disc_thresholds_multi(df, ["a", "b", "c"], denom=4)
+    multi = quantile_disc_thresholds_multi(df, ["a", "b", "c"])
     for col in ("a", "b", "c"):
         single = {
             r["k"]: r["t"]

@@ -190,7 +190,7 @@ def test_incremental_dedup_vs_snapshot_classification(spark):
     out = {
         r["doc_id"]: (r["status"], r["matched_prior_id"], r["jaccard"])
         for r in incremental_dedup_vs_snapshot(
-            new, hash_idx, band_idx, prior, threshold=0.8
+            new, hash_idx, band_idx, prior
         ).collect()
     }
     assert out[101] == ("exact_dup", 1, None)  # min prior id wins
@@ -632,8 +632,8 @@ def test_semantic_dedup_pairs_planted(spark):
         [(i, [float(v) for v in row]) for i, row in enumerate(x)],
         "vec_id long, v array<double>",
     )
-    cb = train_ivf_codebook(df, k=4, iters=10, sample_per_centroid=16)
-    assign, pairs = semantic_dedup_pairs(df, cb, threshold=0.95)
+    cb = train_ivf_codebook(df, k=4)
+    assign, pairs = semantic_dedup_pairs(df, cb)
     clusters = {r["vec_id"]: r["cluster"] for r in assign.collect()}
     got = {(r.vec_a, r.vec_b) for r in pairs.collect()}
     xn = x / np.linalg.norm(x, axis=1, keepdims=True)
@@ -743,7 +743,7 @@ def test_pq_encode_decode_shapes(spark):
     assert all(len(c) == 8 and all(0 <= ci < 8 for ci in c)
                for c in codes1.values())
     dec = df.select("vec_id", enc("v").alias("codes"))
-    dec = dec.select("vec_id", pq_decode_expr(cbs, "codes").alias("d"))
+    dec = dec.select("vec_id", pq_decode_expr(cbs).alias("d"))
     got = {r["vec_id"]: list(r["d"]) for r in dec.collect()}
     for vid, d in got.items():
         assert len(d) == 32
@@ -1032,7 +1032,7 @@ def test_word_chunks_cover_every_word(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = df.select(
         "doc_id",
-        F.posexplode(word_chunks(words(F.col("text")), 32, 24)).alias(
+        F.posexplode(word_chunks(words(F.col("text")))).alias(
             "cid", "ch"
         ),
     ).collect()
@@ -1111,7 +1111,7 @@ def test_word_edit_pairs_planted_near_dup(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["doc_a"], r["doc_b"]): r["word_edit_distance"]
-        for r in word_edit_pairs(df, prefix_words=48, max_dist=4).collect()
+        for r in word_edit_pairs(df).collect()
     }
     assert got == {(1, 2): 3}
 
@@ -1121,7 +1121,7 @@ def test_curriculum_buckets_equi_depth_and_monotone(spark):
     from zip_to_parquet_spark.schema import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    out = curriculum_buckets(docs, n_buckets=10).collect()
+    out = curriculum_buckets(docs).collect()
     assert len(out) == docs.count()
     # monotone: a doc with more tokens never lands in a lower bucket
     pairs = sorted((r["n_tokens"], r["bucket"]) for r in out)
@@ -1219,7 +1219,7 @@ def test_scd2_history_branches(spark):
     new = spark.createDataFrame(
         [(1, 10), (2, 25), (4, 40)], "k long, attr int"
     )
-    rows = scd2_history(old, new, "k", ["attr"], as_of="2024-02-01").collect()
+    rows = scd2_history(old, new, "k", ["attr"]).collect()
     by_k: dict[int, list] = {}
     for r in rows:
         by_k.setdefault(r["k"], []).append(
@@ -1355,7 +1355,7 @@ def test_word_edit_pairs_random_completeness(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["doc_a"], r["doc_b"]): r["word_edit_distance"]
-        for r in word_edit_pairs(df, prefix_words=48, max_dist=4).collect()
+        for r in word_edit_pairs(df).collect()
     }
     # Cross-group random pairs never collide under 4 edits (16-symbol
     # alphabet, distance ~44), so the found set == the planted set.
@@ -1478,7 +1478,7 @@ def test_perceptron_spark_score_matches_python(spark):
     got = {
         r.id: r.s
         for r in df.select(
-            "id", trigram_bucket_counts_score("text", weights, bias).alias("s")
+            "id", trigram_bucket_counts_score(weights, bias).alias("s")
         ).collect()
     }
     for i, t in enumerate(texts):
@@ -1509,7 +1509,7 @@ def test_distilled_classifier_beats_majority_baseline(spark):
 # Z-order layout (layout_zorder_files)
 # ---------------------------------------------------------------------------
 def test_zorder_interleave_expression(spark):
-    from zip_to_parquet_spark.operators.layout import zorder_value_sql
+    from zip_to_parquet_spark.operators.layout import ZORDER_VALUE_SQL
 
     def z_py(a, b, bits=16):
         z = 0
@@ -1522,7 +1522,7 @@ def test_zorder_interleave_expression(spark):
         [(5, 3), (0, 0), (65535, 65535), (1, 0), (0, 1), (21845, 43690)],
         "u long, d long",
     )
-    got = [r.z for r in df.select(F.expr(zorder_value_sql("u", "d")).alias("z")).collect()]
+    got = [r.z for r in df.select(F.expr(ZORDER_VALUE_SQL).alias("z")).collect()]
     want = [z_py(u, d) for u, d in [(5, 3), (0, 0), (65535, 65535), (1, 0), (0, 1), (21845, 43690)]]
     assert got == want
 
@@ -1583,15 +1583,15 @@ def test_zorder_pruning_eval_story(spark):
 def test_bpe_replace_chain_matches_python_encoder(spark):
     from zip_to_parquet_spark.operators.bpe import (
         SEP,
+        SPARK_DELIM_CHARS_SQL,
         bpe_encode_py,
         bpe_replace_chain,
-        spark_delim_chars_sql,
     )
 
     merges = (("a", "b"), ("ab", "c"), ("d", "d"), ("ab", "ab"))
     words = ["abcabd", "ababab", "dddd", "xyz", "a", "abcabcabc"]
     df = spark.createDataFrame([(w,) for w in words], "wd string")
-    chain = bpe_replace_chain(spark_delim_chars_sql("wd"), merges)
+    chain = bpe_replace_chain(SPARK_DELIM_CHARS_SQL, merges)
     got = {
         r.wd: tuple(r.s.strip(SEP).split(SEP + SEP))
         for r in df.select("wd", F.expr(chain).alias("s")).collect()
@@ -1730,9 +1730,9 @@ def test_bpe_chain_equals_python_on_random_words(spark):
 
     from zip_to_parquet_spark.operators.bpe import (
         SEP,
+        SPARK_DELIM_CHARS_SQL,
         bpe_encode_py,
         bpe_replace_chain,
-        spark_delim_chars_sql,
     )
 
     rng = random.Random(20260814)
@@ -1749,7 +1749,7 @@ def test_bpe_chain_equals_python_on_random_words(spark):
 
     df = spark.createDataFrame([(i, w) for i, w in enumerate(words)],
                                "i long, wd string")
-    chain = bpe_replace_chain(spark_delim_chars_sql("wd"), merges)
+    chain = bpe_replace_chain(SPARK_DELIM_CHARS_SQL, merges)
     got = {r.i: tuple(r.s.strip(SEP).split(SEP + SEP))
            for r in df.select("i", F.expr(chain).alias("s")).collect()}
     for i, w in enumerate(words):
@@ -2157,7 +2157,7 @@ def test_apss_prefix_property_vs_brute_force(spark):
         sh = shingle_sets(df)
         got = {
             (r["doc_a"], r["doc_b"]): r["o"]
-            for r in apss_prefix_pairs(sh, 1, 2).collect()
+            for r in apss_prefix_pairs(sh).collect()
         }
         sets = {r["doc_id"]: set(r["sh"]) for r in sh.collect()}
         want = {}

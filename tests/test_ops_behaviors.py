@@ -242,7 +242,7 @@ def test_apss_prefix_matches_brute_force_synthetic(spark):
     sh = shingle_sets(df)
     got = {
         (r["doc_a"], r["doc_b"]): r["o"]
-        for r in apss_prefix_pairs(sh, 1, 2).collect()
+        for r in apss_prefix_pairs(sh).collect()
     }
     # Brute force in Python over the same 3-gram shingle sets.
     sets = {

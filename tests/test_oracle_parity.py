@@ -122,6 +122,116 @@ def test_no_two_functions_share_a_copied_stage():
     )
 
 
+# A parameter that every caller sets to one value is a setting nobody
+# sets: that value belongs in the function as a literal, or in a module
+# constant where several functions must agree on it.
+REPO_DIR = PKG_DIR.parent
+CALLER_FILES = [
+    *sorted(PKG_DIR.rglob("*.py")),
+    *(p for d in ("tests", "scripts", "perfbench")
+      for p in sorted((REPO_DIR / d).rglob("*.py"))),
+    REPO_DIR / "bench.py",
+    REPO_DIR / "__spark_entry__.py",
+]
+
+
+def _is_constant(node) -> bool:
+    """A literal (constant, signed number, tuple/list of literals) or an
+    ALL_CAPS name."""
+    if isinstance(node, ast.Constant):
+        return True
+    if isinstance(node, ast.UnaryOp) and isinstance(node.op, (ast.USub, ast.UAdd)):
+        return isinstance(node.operand, ast.Constant)
+    if isinstance(node, (ast.Tuple, ast.List)):
+        return all(_is_constant(e) for e in node.elts)
+    return isinstance(node, ast.Name) and node.id.lstrip("_").isupper()
+
+
+def _one_value_parameters() -> list[str]:
+    """``file:line function(parameter=value)`` for each parameter of a
+    package function that gets one value at every call site. A call
+    site's value is its keyword argument, else its positional argument,
+    else the default, as ``ast.unparse`` renders it (so quoting and digit
+    separators are not a second value); a call through an import alias
+    counts as a call of the imported name. A function counts only when its
+    name is defined once in the package, it is no dunder and no
+    ``@query``, takes no ``*args``/``**kwargs``, is called, is never
+    referenced other than by a call, and no call unpacks ``*``/``**``."""
+    defs, calls, refs = defaultdict(list), defaultdict(list), set()
+    for path in CALLER_FILES:
+        tree = ast.parse(path.read_text())
+        in_pkg = path.is_relative_to(PKG_DIR)
+        # A call through ``from m import f as g`` is a call of ``f``.
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.asname
+        }
+        called = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                called.add(id(n.func))
+                name = getattr(n.func, "id", getattr(n.func, "attr", None))
+                calls[alias.get(name, name)].append((in_pkg, n))
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in called:
+                refs.add(getattr(n, "id", getattr(n, "attr", None)))
+            if in_pkg and isinstance(n, ast.ClassDef):
+                for m in n.body:
+                    m.is_method = True
+            if in_pkg and isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[n.name].append((path.relative_to(REPO_DIR), n))
+
+    found = []
+    for name, [(rel, fn)] in ((k, v) for k, v in defs.items() if len(v) == 1):
+        sites = calls.get(name, [])
+        a = fn.args
+        if (
+            name.startswith("__") and name.endswith("__")
+            or any(getattr(d, "id", getattr(getattr(d, "func", None), "id", None))
+                   == "query" for d in fn.decorator_list)
+            or a.vararg or a.kwarg or not sites or name in refs
+            or any(isinstance(x, ast.Starred) for _, c in sites for x in c.args)
+            or any(k.arg is None for _, c in sites for k in c.keywords)
+        ):
+            continue
+        positional = a.posonlyargs + a.args
+        if getattr(fn, "is_method", False) and not any(
+            getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list
+        ):
+            positional = positional[1:]
+        defaults = dict(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+        defaults.update(zip(a.kwonlyargs, a.kw_defaults))
+        for i, par in enumerate(positional + a.kwonlyargs):
+            texts, nodes = set(), []
+            for _, c in sites:
+                kw = {k.arg: k.value for k in c.keywords}
+                if par.arg in kw:
+                    node = kw[par.arg]
+                elif i < len(positional) and i < len(c.args):
+                    node = c.args[i]
+                else:
+                    node = defaults.get(par)
+                texts.add(node and ast.unparse(node))
+                nodes.append(node)
+            if (
+                len(texts) == 1 and None not in texts
+                and any(in_pkg for in_pkg, _ in sites)
+                and _is_constant(nodes[0])
+            ):
+                found.append(f"{rel}:{fn.lineno} {name}({par.arg}={texts.pop()})")
+    return sorted(found)
+
+
+def test_no_parameter_takes_one_value_everywhere():
+    found = _one_value_parameters()
+    assert not found, (
+        f"{len(found)} parameters take one value at every call site; make "
+        "each a literal or a module constant:\n"
+        + "\n".join(f"  {f}" for f in found)
+    )
+
+
 def _planted(base: str, out, table: str, rows: list[dict]) -> str:
     """``base``'s tables in ``out``, with ``rows`` appended to ``table``."""
     import pyarrow as pa

@@ -39,12 +39,12 @@ def test_pack_contiguous_semantics(spark):
          Row(doc_id=64, text="a b c d")]
     )
     out = {r.doc_id: (r.bin_id, r.bin_offset)
-           for r in pack_greedy_contiguous(df, ctx=10, n_shards=32).collect()}
+           for r in pack_greedy_contiguous(df, ctx=10).collect()}
     assert out == {0: (0, 0), 32: (0, 4), 64: (0, 8)}
     # Fourth doc starts at 12 → bin 1, offset 2.
     df2 = df.union(spark.createDataFrame([Row(doc_id=96, text="x y")]))
     out2 = {r.doc_id: (r.bin_id, r.bin_offset)
-            for r in pack_greedy_contiguous(df2, ctx=10, n_shards=32).collect()}
+            for r in pack_greedy_contiguous(df2, ctx=10).collect()}
     assert out2[96] == (1, 2)
 
 
@@ -54,7 +54,7 @@ def test_pack_shards_independent(spark):
         [Row(doc_id=1, text="a b c"), Row(doc_id=2, text="a b c")]
     )
     out = {r.doc_id: (r.shard, r.bin_id, r.bin_offset)
-           for r in pack_greedy_contiguous(df, ctx=10, n_shards=32).collect()}
+           for r in pack_greedy_contiguous(df, ctx=10).collect()}
     assert out == {1: (1, 0, 0), 2: (2, 0, 0)}
 
 

@@ -46,7 +46,7 @@ def test_range_join_bucket_completeness(spark):
     df = spark.createDataFrame(rows).select(
         "k", F.timestamp_seconds("ts").alias("ts"), "eid"
     )
-    out = range_join_pairs(df, key="k", ts="ts", payload=["eid"], max_gap_seconds=300)
+    out = range_join_pairs(df, key="k", payload=["eid"])
     pairs = {(r.eid, r.eid_b) for r in out.collect()}
     # 2→3 is exactly 300s (inclusive boundary, crosses a bucket edge);
     # 0→2 is 301s apart: excluded.

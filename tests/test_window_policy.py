@@ -603,12 +603,11 @@ def test_refgraph_reaches_operator_helpers():
 def test_hot_shingle_guard_sql_in_sync_across_all_oracles():
     """Finding from the round-5 review: the hot-shingle predicate appears
     in several oracle strings. Every occurrence must equal the ONE
-    generator in operators/dedupe.py — a constant change that forgets an
+    constant in operators/dedupe.py — a constant change that forgets an
     oracle fails here instead of as a driver hash mismatch."""
-    from zip_to_parquet_spark.operators.dedupe import duck_hot_having_sql
+    from zip_to_parquet_spark.operators.dedupe import DUCK_HOT_HAVING_SQL as want
     from zip_to_parquet_spark.plans import all_oracle_sql
 
-    want = duck_hot_having_sql("SELECT count(*) FROM s")
     hits = 0
     for name, sql in all_oracle_sql().items():
         for line in sql.splitlines():

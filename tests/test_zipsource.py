@@ -533,7 +533,7 @@ def test_streaming_offsets_bounded_watermark(tmp_path):
 
     # Backfill: 50 archives spread over ~14 hours — far beyond lateness.
     backfill = [touch(f"old{i:03d}.zip", 1000 + i * 1000) for i in range(50)]
-    opts = {"stream_glob": f"{d}/*.zip", "stream_lateness": "300"}
+    opts = {"stream_glob": f"{d}/*.zip"}
     r = ZipMembersStreamReader(opts)
     start = r.initialOffset()
     end1 = r.latestOffset()
@@ -630,8 +630,8 @@ def test_empty_and_dir_entry_archives(spark, tmp_path):
 
 
 def test_large_members_flush_by_bytes(spark, tmp_path):
-    """Members larger than batch_bytes force per-batch flushes; bodies and
-    hashes survive multi-batch assembly intact."""
+    """Members larger than a batch's byte bound force per-batch flushes;
+    bodies and hashes survive multi-batch assembly intact."""
     import hashlib
     import zipfile
 

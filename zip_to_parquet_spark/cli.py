@@ -182,7 +182,7 @@ def main(argv: list[str] | None = None) -> int:
                 if args.format == "orc":
                     from zip_to_parquet_spark.sinks import write_orc
 
-                    write_orc(df, args.output, mode="overwrite")
+                    write_orc(df, args.output)
                 elif args.format == "jsonl":
                     from zip_to_parquet_spark.sources.jsonlsink import (
                         write_jsonl_shards,

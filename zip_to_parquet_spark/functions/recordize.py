@@ -18,14 +18,14 @@ from pyspark.sql import functions as F
 __all__ = ["parse_csv_members", "parse_jsonl_members"]
 
 
-def _lines(members: DataFrame, body_col: str) -> DataFrame:
+def _lines(members: DataFrame) -> DataFrame:
     """One row per non-empty line of each member body, with the member
     name and 0-based line number carried along."""
     return (
         members.select(
             "name",
             F.posexplode(
-                F.split(F.decode(F.col(body_col), "UTF-8"), "\n")
+                F.split(F.decode(F.col("body"), "UTF-8"), "\n")
             ).alias("line_no", "line"),
         )
         .filter(F.length("line") > 0)
@@ -35,19 +35,16 @@ def _lines(members: DataFrame, body_col: str) -> DataFrame:
 def parse_csv_members(
     members: DataFrame,
     schema: str,
-    header: bool = True,
-    body_col: str = "body",
     options: dict | None = None,
 ) -> DataFrame:
-    """Parse each zip member body as a CSV file into typed columns.
+    """Parse each zip member body (``body`` column) as a CSV file with a
+    header line into typed columns.
 
     ``schema`` is a DDL string (e.g. ``"doc_id BIGINT, lang STRING"``);
-    ``header=True`` drops each member's first line. Malformed lines
+    each member's first line, the header, is dropped. Malformed lines
     follow ``from_csv`` PERMISSIVE semantics (null columns) unless
     overridden via ``options`` (e.g. ``{"mode": "FAILFAST"}``)."""
-    lines = _lines(members, body_col)
-    if header:
-        lines = lines.filter(F.col("line_no") > 0)
+    lines = _lines(members).filter(F.col("line_no") > 0)
     parsed = lines.select(
         "name",
         "line_no",
@@ -56,18 +53,14 @@ def parse_csv_members(
     return parsed.select("name", "line_no", "r.*")
 
 
-def parse_jsonl_members(
-    members: DataFrame,
-    schema: str,
-    body_col: str = "body",
-    options: dict | None = None,
-) -> DataFrame:
-    """Parse each zip member body as JSON-lines into typed columns.
-    Same shape as :func:`parse_csv_members` (no header concept)."""
-    lines = _lines(members, body_col)
-    parsed = lines.select(
+def parse_jsonl_members(members: DataFrame) -> DataFrame:
+    """Parse each zip member body as JSON lines of the documents table's
+    ``doc_id, source, n_chars`` columns. Same shape as
+    :func:`parse_csv_members` (no header concept)."""
+    parsed = _lines(members).select(
         "name",
         "line_no",
-        F.from_json("line", schema, options or {}).alias("r"),
+        F.from_json("line", "doc_id BIGINT, source STRING, n_chars BIGINT")
+        .alias("r"),
     )
     return parsed.select("name", "line_no", "r.*")

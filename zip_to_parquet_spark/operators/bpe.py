@@ -42,8 +42,8 @@ __all__ = [
     "train_bpe_merges",
     "bpe_encode_py",
     "bpe_replace_chain",
-    "spark_delim_chars_sql",
-    "duck_delim_chars_sql",
+    "SPARK_DELIM_CHARS_SQL",
+    "DUCK_DELIM_CHARS_SQL",
 ]
 
 SEP = "\x1f"
@@ -112,23 +112,21 @@ def bpe_encode_py(
     return s
 
 
-def spark_delim_chars_sql(w: str) -> str:
-    """Spark SQL: word column → SEP-wrapped character sequence, '' for an
-    empty word. The explicit guard exists because Spark's
-    ``sequence(1, 0)`` DESCENDS (returns [1, 0]) — without it an empty
-    string would encode as four SEP bytes and count as two phantom
-    tokens."""
-    return (
-        f"case when length({w}) >= 1 then"
-        f" concat('{SEP}', array_join(transform(sequence(1, length({w})),"
-        f" i -> substring({w}, i, 1)), '{SEP}{SEP}'), '{SEP}')"
-        f" else '' end"
-    )
+# Spark SQL: word column ``wd`` → SEP-wrapped character sequence, '' for an
+# empty word. The explicit guard exists because Spark's ``sequence(1, 0)``
+# DESCENDS (returns [1, 0]) — without it an empty string would encode as
+# four SEP bytes and count as two phantom tokens.
+SPARK_DELIM_CHARS_SQL = (
+    "case when length(wd) >= 1 then"
+    f" concat('{SEP}', array_join(transform(sequence(1, length(wd)),"
+    f" i -> substring(wd, i, 1)), '{SEP}{SEP}'), '{SEP}')"
+    " else '' end"
+)
 
-
-def duck_delim_chars_sql(w: str) -> str:
-    """DuckDB SQL: same delimited representation via empty-string split."""
-    return f"'{SEP}' || array_to_string(string_split({w}, ''), '{SEP}{SEP}') || '{SEP}'"
+# DuckDB SQL: the same delimited representation via empty-string split.
+DUCK_DELIM_CHARS_SQL = (
+    f"'{SEP}' || array_to_string(string_split(wd, ''), '{SEP}{SEP}') || '{SEP}'"
+)
 
 
 def bpe_replace_chain(

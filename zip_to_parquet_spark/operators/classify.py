@@ -65,42 +65,37 @@ def gate_label_py(text: str) -> int:
     )
 
 
-def trigram_feats_py(text: str, buckets: int = FEATURE_BUCKETS) -> dict[int, int]:
+def trigram_feats_py(text: str) -> dict[int, int]:
     """Char-trigram → hashed-bucket counts. Bucket = little-endian low
-    bytes of md5 (digest[8] + 256·digest[9]) mod ``buckets`` — equal to
-    DuckDB's ``md5_number_lower(g) % buckets`` for any power-of-two
+    bytes of md5 (digest[8] + 256·digest[9]) mod FEATURE_BUCKETS — equal
+    to DuckDB's ``md5_number_lower(g) % buckets`` for any power-of-two
     ``buckets`` ≤ 65536, and to the Spark ``conv(substring(md5...))``
     expression in :func:`trigram_bucket_counts_score`."""
     c: dict[int, int] = {}
     for i in range(len(text) - 2):
         d = hashlib.md5(text[i : i + 3].encode()).digest()
-        b = (d[8] + 256 * d[9]) % buckets
+        b = (d[8] + 256 * d[9]) % FEATURE_BUCKETS
         c[b] = c.get(b, 0) + 1
     return c
 
 
 @functools.lru_cache(maxsize=8)
-def train_distilled_gate_perceptron(
-    sf_dir: str,
-    buckets: int = FEATURE_BUCKETS,
-    epochs: int = PERCEPTRON_EPOCHS,
-    sample_target: int = SAMPLE_TARGET,
-) -> tuple[tuple[int, ...], int, int]:
-    """→ (weights[buckets], bias, n_sample). Deterministic and bounded:
-    the sample is crc32(str(doc_id)) % m == 0 (m sized for ~sample_target
-    docs), iterated id-sorted for ``epochs`` passes. Cached per sf_dir —
-    the Spark plan and the DuckDB oracle generator both call this, so
-    they inline bit-identical weights by construction."""
+def train_distilled_gate_perceptron(sf_dir: str) -> tuple[tuple[int, ...], int, int]:
+    """→ (weights[FEATURE_BUCKETS], bias, n_sample). Deterministic and
+    bounded: the sample is crc32(str(doc_id)) % m == 0 (m sized for
+    ~SAMPLE_TARGET docs), iterated id-sorted for PERCEPTRON_EPOCHS passes.
+    Cached per sf_dir — the Spark plan and the DuckDB oracle generator both
+    call this, so they inline bit-identical weights by construction."""
     from zip_to_parquet_spark.operators.sampling import (
         crc32_sampled_documents,
     )
 
-    sample = crc32_sampled_documents(sf_dir, sample_target)
-    w = [0] * buckets
+    sample = crc32_sampled_documents(sf_dir, SAMPLE_TARGET)
+    w = [0] * FEATURE_BUCKETS
     bias = 0
-    for _ in range(epochs):
+    for _ in range(PERCEPTRON_EPOCHS):
         for _, tx in sample:
-            f = trigram_feats_py(tx, buckets)
+            f = trigram_feats_py(tx)
             score = sum(w[b] * c for b, c in f.items()) + bias
             pred = 1 if score > 0 else 0
             y = gate_label_py(tx)
@@ -112,13 +107,12 @@ def train_distilled_gate_perceptron(
     return tuple(w), bias, len(sample)
 
 
-def trigram_bucket_counts_score(
-    text_col: str, weights: tuple[int, ...], bias: int
-) -> Column:
-    """Integer perceptron score as ONE Catalyst expression: char-trigram
-    transform → md5 little-endian low-16-bit bucket → weight lookup →
-    integer sum (+ bias). Codegen'd, map-only; the bucket arithmetic is
-    the md5_number_lower contract (see :func:`trigram_feats_py`).
+def trigram_bucket_counts_score(weights: tuple[int, ...], bias: int) -> Column:
+    """Integer perceptron score of ``text`` as ONE Catalyst expression:
+    char-trigram transform → md5 little-endian low-16-bit bucket → weight
+    lookup → integer sum (+ bias). Codegen'd, map-only; the bucket
+    arithmetic is the md5_number_lower contract (see
+    :func:`trigram_feats_py`).
 
     The sub-3-char guard is explicit because Spark's ``sequence(1, 0)``
     DESCENDS (returns [1, 0]) instead of yielding an empty range — the
@@ -126,8 +120,8 @@ def trigram_bucket_counts_score(
     buckets = len(weights)
     warr = "array(" + ",".join(f"{v}L" for v in weights) + ")"
     grams = (
-        f"transform(sequence(1, length({text_col}) - 2),"
-        f" i -> substring({text_col}, i, 3))"
+        "transform(sequence(1, length(text) - 2),"
+        " i -> substring(text, i, 3))"
     )
     # Bind each trigram's digest ONCE (nested transform) — Catalyst does
     # not CSE across lambda bodies, so inlining md5 into both byte
@@ -139,7 +133,7 @@ def trigram_bucket_counts_score(
     )
     return F.expr(
         f"aggregate("
-        f"  case when length({text_col}) >= 3 then"
+        "  case when length(text) >= 3 then"
         f"    transform({digests}, h -> ({bucket}) % {buckets})"
         f"  else cast(array() as array<int>) end,"
         f"  {bias}L,"

@@ -6,7 +6,7 @@ The verify stage is exact (array_intersect on shingle sets), so the
 approximate stages only affect recall, never precision.
 
 Skew note for the shingle-join path: shingles shared by a large fraction of
-documents explode the candidate join. ``max_shingle_df`` drops
+documents explode the candidate join. ``max_shingle_permille`` drops
 high-document-frequency shingles before the join — the standard stopword-
 shingle mitigation; near-duplicate pairs share plenty of rare shingles, so
 recall at meaningful thresholds is unaffected.
@@ -48,31 +48,32 @@ __all__ = [
 # silent wrap), and the hash family stays a genuine universal family.
 _MERSENNE_P = (1 << 61) - 1
 
+# The one MinHash-LSH setting: MINHASH_K hashes seeded by MINHASH_SEED over
+# distinct SHINGLE_N-word shingles, banded into MINHASH_BANDS bands. The
+# snapshot index and the incremental probe must hash with the same values
+# for a band hash written by one to be found by the other.
+MINHASH_K = 128
+MINHASH_BANDS = 32
+MINHASH_SEED = 42
+SHINGLE_N = 3
 
-def _minhash_coeffs(k: int, seed: int) -> list[tuple[int, int]]:
-    import random
 
-    rnd = random.Random(seed)
-    return [
-        (rnd.randrange(1, 1 << 30), rnd.randrange(0, _MERSENNE_P)) for _ in range(k)
-    ]
-
-
-def shingle_sets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """(id, sh) where sh is the distinct n-word shingle set of the text."""
+def shingle_sets(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, sh) where sh is the distinct SHINGLE_N-word shingle set of
+    ``text``."""
     return df.select(
         F.col(id_col).alias("doc_id"),
-        F.array_distinct(word_shingles(words(F.col(text_col)), n)).alias("sh"),
+        F.array_distinct(word_shingles(words(F.col("text")), SHINGLE_N)).alias("sh"),
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup by content hash: one survivor (min id) per sha256. A
-    single hash-groupBy — the only shuffle key is the 64-char digest, which
-    is uniform by construction (no skew at any scale)."""
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact dedup by content hash: one survivor (min doc_id) per sha256 of
+    ``text``. A single hash-groupBy — the only shuffle key is the 64-char
+    digest, which is uniform by construction (no skew at any scale)."""
     return (
         df.select(
-            F.col(id_col).alias("doc_id"), F.sha2(F.col(text_col), 256).alias("text_sha")
+            "doc_id", F.sha2(F.col("text"), 256).alias("text_sha")
         )
         .groupBy("text_sha")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -162,22 +163,20 @@ HOT_SHINGLE_PERMILLE = 10
 HOT_SHINGLE_MIN_DF = 5
 
 
-def duck_hot_having_sql(n_docs_sql: str) -> str:
-    """The ONE DuckDB restatement of the corpus-relative hot-shingle
-    predicate (permille bound AND absolute floor) — every oracle that
-    guards a shingle self-join interpolates this, so the constants above
-    can never desync engine from oracle."""
-    return (
-        f"count(*) * 1000 > {HOT_SHINGLE_PERMILLE} * ({n_docs_sql})"
-        f" AND count(*) > {HOT_SHINGLE_MIN_DF}"
-    )
+# The ONE DuckDB restatement of the corpus-relative hot-shingle predicate
+# (permille bound AND absolute floor) over a shingle table ``s`` — every
+# oracle that guards a shingle self-join interpolates this, so the
+# constants above can never desync engine from oracle.
+DUCK_HOT_HAVING_SQL = (
+    f"count(*) * 1000 > {HOT_SHINGLE_PERMILLE} * (SELECT count(*) FROM s)"
+    f" AND count(*) > {HOT_SHINGLE_MIN_DF}"
+)
 
 
 def _shingle_candidate_pairs(
     shingled: DataFrame,
-    max_shingle_df: int | None,
     ordered: bool,
-    max_shingle_permille: int | None = None,
+    max_shingle_permille: int | None,
 ) -> DataFrame:
     """Inverted-index candidate pairs: explode shingles → (optional
     hot-shingle df guard, the stopword-shingle skew mitigation) →
@@ -187,29 +186,20 @@ def _shingle_candidate_pairs(
     like containment). Shared by every exact-verify dedup variant so the
     skew guard's semantics live in ONE place.
 
-    Guards: ``max_shingle_df`` is an absolute document-frequency cap;
-    ``max_shingle_permille`` is corpus-relative (drop shingles with
+    Guard: ``max_shingle_permille`` is corpus-relative (drop shingles with
     ``df * 1000 > permille * n_docs``) so the same bound means the same
-    thing at sf0.001 and at 100 TB. Either (or both) may be set; the hot
-    set is tiny by construction (≤ 1000/permille shingles can each cover
+    thing at sf0.001 and at 100 TB; ``None`` turns it off. The hot set is
+    tiny by construction (≤ 1000/permille shingles can each cover
     > permille/1000 of doc-shingle rows), hence the broadcast anti-join."""
     e = shingled.select("doc_id", F.explode("sh").alias("shingle"))
-    if max_shingle_df is not None or max_shingle_permille is not None:
+    if max_shingle_permille is not None:
         dfc = e.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        cond = F.lit(False)
-        if max_shingle_df is not None:
-            cond = cond | (F.col("df") > max_shingle_df)
-        if max_shingle_permille is not None:
-            n_docs = shingled.select(F.count(F.lit(1)).alias("n_docs"))
-            dfc = dfc.crossJoin(F.broadcast(n_docs))
-            cond = cond | (
-                (
-                    F.col("df") * F.lit(1000)
-                    > F.lit(max_shingle_permille) * F.col("n_docs")
-                )
-                & (F.col("df") > HOT_SHINGLE_MIN_DF)
-            )
-        hot = dfc.filter(cond).select("shingle")
+        n_docs = shingled.select(F.count(F.lit(1)).alias("n_docs"))
+        dfc = dfc.crossJoin(F.broadcast(n_docs))
+        hot = dfc.filter(
+            (F.col("df") * F.lit(1000) > F.lit(max_shingle_permille) * F.col("n_docs"))
+            & (F.col("df") > HOT_SHINGLE_MIN_DF)
+        ).select("shingle")
         e = e.join(F.broadcast(hot), "shingle", "left_anti")
     a, b = e.alias("a"), e.alias("b")
     pred = (
@@ -228,7 +218,6 @@ def _shingle_candidate_pairs(
 def ngram_jaccard_pairs(
     shingled: DataFrame,
     threshold: float,
-    max_shingle_df: int | None = None,
     max_shingle_permille: int | None = HOT_SHINGLE_PERMILLE,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via an inverted-index join on shingles.
@@ -242,10 +231,7 @@ def ngram_jaccard_pairs(
     ``max_shingle_permille=None`` for the unguarded (quadratic-per-hot-
     shingle) exact candidate set.
     """
-    cand = _shingle_candidate_pairs(
-        shingled, max_shingle_df, ordered=False,
-        max_shingle_permille=max_shingle_permille,
-    )
+    cand = _shingle_candidate_pairs(shingled, False, max_shingle_permille)
     sa = shingled.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = shingled.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     # No rounding on jaccard: it is a small-denominator rational whose double
@@ -264,15 +250,14 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_band_hashes_from_text_udf(
-    k: int = 128, bands: int = 32, seed: int = 42, n: int = 3
-):
+def minhash_band_hashes_from_text_udf():
     """Arrow-batched numpy MinHash banding straight from text: string →
-    array<long> of ``bands`` LSH band hashes, building the distinct n-word
-    shingle set in Python on the way. The one MinHash banding kernel.
+    array<long> of MINHASH_BANDS LSH band hashes, building the distinct
+    n-word shingle set in Python on the way. The one MinHash banding
+    kernel.
 
     Per document: crc32 of each shingle, then k (a·h + b) mod P
-    permutations (``_minhash_coeffs``) as one vectorized (k × |shingles|)
+    permutations (seeded ``random.Random``) as one vectorized (k × |shingles|)
     numpy modmul, the per-permutation minimum, and crc32 over each band of
     k/bands minima. Shingling in Python instead of as Catalyst arrays
     matters: profiling at sf0.1 showed the HOF shingling (slice +
@@ -282,15 +267,19 @@ def minhash_band_hashes_from_text_udf(
     ``split(text, ' ')`` (keeping empty tokens, like Spark's split),
     windows of n, space-joined, de-duplicated. Documents with fewer than
     n words get no shingles and must be filtered out upstream."""
+    import random
     import zlib
 
     import numpy as np
 
     from pyspark.sql.functions import pandas_udf
 
-    assert k % bands == 0
+    k, bands, n = MINHASH_K, MINHASH_BANDS, SHINGLE_N
     r = k // bands
-    coeffs = _minhash_coeffs(k, seed)
+    rnd = random.Random(MINHASH_SEED)
+    coeffs = [
+        (rnd.randrange(1, 1 << 30), rnd.randrange(0, _MERSENNE_P)) for _ in range(k)
+    ]
     a_vec = np.array([a for a, _ in coeffs], dtype=np.uint64)
     b_vec = np.array([b for _, b in coeffs], dtype=np.uint64)
     p = np.uint64(_MERSENNE_P)
@@ -320,18 +309,9 @@ def minhash_band_hashes_from_text_udf(
     return band_hashes
 
 
-def minhash_lsh_pairs_docs(
-    docs: DataFrame,
-    threshold: float,
-    k: int = 128,
-    bands: int = 32,
-    seed: int = 42,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs from raw documents,
-    exact-verified — the one MinHash-LSH operator.
+def minhash_lsh_pairs_docs(docs: DataFrame, threshold: float) -> DataFrame:
+    """MinHash+LSH near-duplicate pairs from raw ``(doc_id, text)``
+    documents, exact-verified — the one MinHash-LSH operator.
 
     sign+band (one Arrow-batched numpy UDF from text) → bucket-then-expand
     on (band_idx, band_hash) → exact Jaccard verify. Buckets expand pairs
@@ -347,12 +327,12 @@ def minhash_lsh_pairs_docs(
     r = k/bands); precision is exact — every pair is ``jaccard >=
     threshold`` on the full shingle sets, as in ``ngram_jaccard_pairs``.
     """
-    sig = minhash_band_hashes_from_text_udf(k=k, bands=bands, seed=seed, n=n)
+    sig = minhash_band_hashes_from_text_udf()
     # Docs with < n words have no shingles, can't be near-duplicates, and
     # would otherwise form one degenerate all-zeros mega-bucket.
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).filter(F.size(words(F.col("text"))) >= n)
+    base = docs.select("doc_id", "text").filter(
+        F.size(words(F.col("text"))) >= SHINGLE_N
+    )
     banded = base.select("doc_id", F.posexplode(sig("text"))).select(
         "doc_id", F.col("pos").alias("band_idx"), F.col("col").alias("band_hash")
     )
@@ -379,7 +359,7 @@ def minhash_lsh_pairs_docs(
         .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sh_cand = shingle_sets(base.join(cand_ids, "doc_id"), n=n)
+    sh_cand = shingle_sets(base.join(cand_ids, "doc_id"))
     sa = sh_cand.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sh_cand.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return (
@@ -394,8 +374,14 @@ def minhash_lsh_pairs_docs(
     )
 
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 60) -> DataFrame:
-    """(doc_id, simhash) — 60-bit SimHash over word tokens (Charikar'02).
+# SimHash signature width: every packed value stays positive in a signed
+# long and divides evenly into 4, 5 or 6 pigeonhole blocks.
+SIMHASH_BITS = 60
+
+
+def simhash(df: DataFrame) -> DataFrame:
+    """(doc_id, simhash) — 60-bit SimHash over the word tokens of ``text``
+    (Charikar'02).
 
     Arrow-batched numpy: per document, 64-bit md5 token hashes expand to a
     (tokens × bits) ±1 matrix whose column sums sign-pack into the
@@ -417,7 +403,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
 
     from pyspark.sql.functions import pandas_udf
 
-    bit_idx = np.arange(bits, dtype=np.uint64)
+    bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)
 
     @pandas_udf("long")
     def signature(texts: pd.Series) -> pd.Series:
@@ -438,7 +424,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
             out.append(int(((votes > 0).astype(np.uint64) << bit_idx).sum()))
         return pd.Series(out)
 
-    return df.select(F.col(id_col).alias("doc_id"), signature(text_col).alias("simhash"))
+    return df.select("doc_id", signature(F.col("text")).alias("simhash"))
 
 
 # simhash's own bucket cap sits HIGHER than LSH_BUCKET_CAP: 15-bit bands
@@ -452,7 +438,7 @@ SIMHASH_BUCKET_CAP = 1024
 
 
 def simhash_tables(
-    bits: int = 60, blocks: int = 4, max_hamming: int = 3
+    bits: int = SIMHASH_BITS, blocks: int = 4, max_hamming: int = 3
 ) -> list[tuple[int, ...]]:
     """Block combinations for the exact Hamming-≤k table scheme.
 
@@ -483,14 +469,9 @@ def simhash_tables(
     return list(itertools.combinations(range(blocks), blocks - max_hamming))
 
 
-def simhash_params_for(
-    n_docs: int,
-    bits: int = 60,
-    max_hamming: int = 3,
-    target_bucket: int = 64,
-    block_choices: tuple[int, ...] = (4, 5, 6),
-) -> dict:
-    """Corpus-sized block count for :func:`simhash_pairs` (r13 ask #3).
+def simhash_params_for(n_docs: int) -> dict:
+    """Corpus-sized block count for :func:`simhash_pairs` at Hamming
+    distance 3 (r13 ask #3).
 
     A FIXED 4×15-bit banding is a scale dial left on its smallest
     setting: table-key entropy is 15 bits, so expected bucket occupancy
@@ -509,7 +490,7 @@ def simhash_params_for(
     6         30 bits     20       n ≈ 64·2^30 ≈ 69G docs
     ========  ==========  =======  ==========================
 
-    Rule: the smallest B whose key width ≥ log2(n/target_bucket) — the
+    Rule: the smallest B whose key width ≥ log2(n/64) — the
     same hold-occupancy-constant shape as vectors.lsh_params_for, with
     completeness EXACT at every setting (unlike the probabilistic
     hyperplane tables).  At every fixture scale (n ≤ 5 000 docs, needed
@@ -520,12 +501,11 @@ def simhash_params_for(
     """
     import math
 
-    needed = math.log2(max(1.0, n_docs / max(1, target_bucket)))
-    k = max_hamming
-    for b in block_choices:
-        if b > k and bits % b == 0 and bits * (b - k) // b >= needed:
+    needed = math.log2(max(1.0, n_docs / 64))
+    for b in (4, 5):
+        if SIMHASH_BITS * (b - 3) // b >= needed:
             return {"blocks": b}
-    return {"blocks": block_choices[-1]}
+    return {"blocks": 6}
 
 
 def simhash_pairs(
@@ -642,9 +622,6 @@ def simhash_pairs(
 def span_dedup(
     df: DataFrame,
     span_words: int = 50,
-    min_count: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     keep: str = "none",
 ) -> DataFrame:
     """Exact-substring span deduplication (the scalable Spark form of
@@ -654,9 +631,9 @@ def span_dedup(
     The published pipeline builds a corpus-global suffix array to find
     every duplicated ≥50-token substring — inherently single-machine.
     The distributed re-expression: slide a stride-1 window of
-    ``span_words`` words over every document, count each gram's
-    corpus-wide frequency with one hash-groupBy, and remove every word
-    covered by a gram occurring ``min_count``+ times. Overlapping grams
+    ``span_words`` words over every ``(doc_id, text)`` document, count
+    each gram's corpus-wide frequency with one hash-groupBy, and remove
+    every word covered by a gram occurring twice or more. Overlapping grams
     make detection ALIGNMENT-INVARIANT: a verbatim duplicated run of
     ≥ span_words words shares all of its length-``span_words`` subruns
     wherever it sits in each document, so the whole run is removed from
@@ -664,7 +641,7 @@ def span_dedup(
 
     * ``"none"`` (default): remove ALL copies — the aggressive
       boilerplate-removal variant, the right default for
-      corpus-frequency ≥ min_count spans;
+      corpus-frequency ≥ 2 spans;
     * ``"first"``: the PAPER-faithful policy — the canonical occurrence
       of each duplicated gram (lowest ``(doc_id, position)``) survives
       and only the other copies are removed, so exactly one copy of a
@@ -696,9 +673,7 @@ def span_dedup(
     if keep not in ("none", "first"):
         raise ValueError(f"keep must be none|first, got {keep!r}")
     w = span_words
-    docs = df.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("ws")
-    )
+    docs = df.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
     grams = F.when(
         F.size("ws") >= w,
         F.transform(
@@ -728,7 +703,7 @@ def span_dedup(
     flagged = sp.join(counts, "gh", "left")
     agg = flagged.groupBy("doc_id").agg(
         F.count("j").alias("n_grams"),
-        F.sum(F.when(F.col("c") >= min_count, 1).otherwise(0))
+        F.sum(F.when(F.col("c") >= 2, 1).otherwise(0))
         .cast("long")
         .alias("n_dup_grams"),
     )
@@ -739,7 +714,7 @@ def span_dedup(
     # duplicated gram to its ≤ span_words covered positions and
     # anti-joining on (doc_id, pos) keeps every step linear in corpus
     # tokens (the same magnitude as the gram explode above).
-    dup_occurrences = flagged.filter(F.col("c") >= min_count)
+    dup_occurrences = flagged.filter(F.col("c") >= 2)
     if keep == "first":
         from pyspark.sql.window import Window as SqlWindow
 
@@ -786,68 +761,58 @@ def span_dedup(
     )
 
 
-def word_prefix_encoding(text_col: Column, prefix_words: int) -> Column:
-    """Encode the first ``prefix_words`` words as one char per word (the
+# The word edit-distance join compares the first EDIT_PREFIX_WORDS words
+# of each document and keeps pairs within EDIT_MAX_DIST word edits.
+EDIT_PREFIX_WORDS = 48
+EDIT_MAX_DIST = 4
+
+
+def word_prefix_encoding(text_col: Column) -> Column:
+    """Encode the first EDIT_PREFIX_WORDS words as one char per word (the
     first hex digit of each word's md5) — a 16-symbol alphabet in which
     character edit distance IS word-level edit distance up to 1/16
     collision leniency, computable by any engine's ``levenshtein``.
     Deterministic and engine-portable (md5 hex is canonical)."""
     return F.array_join(
         F.transform(
-            F.slice(words(text_col), 1, prefix_words),
+            F.slice(words(text_col), 1, EDIT_PREFIX_WORDS),
             lambda x: F.substring(F.md5(x), 1, 1),
         ),
         "",
     )
 
 
-def _passjoin_segments(length: int, n_segs: int) -> list[tuple[int, int, int]]:
-    """(seg_id, start, len) even split of a fixed-length string — PassJoin's
-    segmentation (Li, Deng, Feng 2011): any string within edit distance
-    ``n_segs - 1`` must contain at least one segment verbatim."""
-    base, rem = divmod(length, n_segs)
-    out, start = [], 1
-    for i in range(n_segs):
-        ln = base + (1 if i < rem else 0)
-        out.append((i, start, ln))
-        start += ln
-    return out
-
-
-def word_edit_pairs(
-    docs: DataFrame,
-    prefix_words: int = 48,
-    max_dist: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Word-level edit-distance near-dup join over the first
-    ``prefix_words`` words (docs shorter than the prefix are out of scope
-    — the standard prefix-window contract). Returns
-    ``(doc_a, doc_b, word_edit_distance)`` for unordered pairs with
-    distance <= ``max_dist``.
+def word_edit_pairs(docs: DataFrame) -> DataFrame:
+    """Word-level edit-distance near-dup join of ``(doc_id, text)``
+    documents over the first EDIT_PREFIX_WORDS words (docs shorter than
+    the prefix are out of scope — the standard prefix-window contract).
+    Returns ``(doc_a, doc_b, word_edit_distance)`` for unordered pairs
+    with distance <= EDIT_MAX_DIST.
 
     PassJoin-shaped candidates (Li, Deng, Feng, ICDE 2011): the encoding
-    splits into ``max_dist + 1`` fixed segments; by pigeonhole, any string
-    within ``max_dist`` edits contains >= 1 segment VERBATIM, at a
-    position shifted by at most ``max_dist``. Candidate generation is
+    splits into ``EDIT_MAX_DIST + 1`` fixed segments; by pigeonhole, any
+    string within EDIT_MAX_DIST edits contains >= 1 segment VERBATIM, at
+    a position shifted by at most EDIT_MAX_DIST. Candidate generation is
     therefore a pure equi-join on ``(seg_id, content)`` — one doc side
     contributes its exact segments, the other its substrings at the
-    ±max_dist position window (a constant ~(d+1)(2d+1) substrings per
+    ±EDIT_MAX_DIST position window (a constant ~(d+1)(2d+1) substrings per
     doc) — bucketed like every other candidate generator in this module,
     never all-pairs. Exact ``levenshtein`` verify runs on candidates only,
     so the approximation affects nothing: completeness is the pigeonhole
     theorem, precision is the verify.
     """
-    n_segs = max_dist + 1
     base = (
-        docs.filter(F.size(words(F.col(text_col))) >= prefix_words)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            word_prefix_encoding(F.col(text_col), prefix_words).alias("enc"),
-        )
+        docs.filter(F.size(words(F.col("text"))) >= EDIT_PREFIX_WORDS)
+        .select("doc_id", word_prefix_encoding(F.col("text")).alias("enc"))
     )
-    segs = _passjoin_segments(prefix_words, n_segs)
+    # (seg_id, start, len): an even split of the encoding, PassJoin's
+    # segmentation.
+    seg_len, rem = divmod(EDIT_PREFIX_WORDS, EDIT_MAX_DIST + 1)
+    segs, start = [], 1
+    for sid in range(EDIT_MAX_DIST + 1):
+        ln = seg_len + (1 if sid < rem else 0)
+        segs.append((sid, start, ln))
+        start += ln
     a_segs = base.select(
         "doc_id",
         F.explode(
@@ -866,8 +831,8 @@ def word_edit_pairs(
         (sid, p, ln)
         for sid, start, ln in segs
         for p in range(
-            max(1, start - max_dist),
-            min(prefix_words - ln + 1, start + max_dist) + 1,
+            max(1, start - EDIT_MAX_DIST),
+            min(EDIT_PREFIX_WORDS - ln + 1, start + EDIT_MAX_DIST) + 1,
         )
     ]
     b_subs = base.select(
@@ -903,19 +868,14 @@ def word_edit_pairs(
         .withColumn(
             "word_edit_distance", F.levenshtein("ea", "eb").cast("int")
         )
-        .filter(F.col("word_edit_distance") <= max_dist)
+        .filter(F.col("word_edit_distance") <= EDIT_MAX_DIST)
         .select("doc_a", "doc_b", "word_edit_distance")
     )
 
 
-def containment_pairs(
-    shingled: DataFrame,
-    threshold: float,
-    max_shingle_df: int | None = None,
-    max_shingle_permille: int | None = HOT_SHINGLE_PERMILLE,
-) -> DataFrame:
+def containment_pairs(shingled: DataFrame) -> DataFrame:
     """Broder containment near-dup pairs: ORDERED (doc_a, doc_b) where
-    ``|sh(a) ∩ sh(b)| / |sh(a)| >= threshold`` — doc_a is (mostly)
+    ``|sh(a) ∩ sh(b)| / |sh(a)| >= 0.9`` — doc_a is (mostly)
     contained in doc_b. The asymmetric complement to Jaccard: a short
     quote inside a long page has low Jaccard but containment ≈ 1, which
     is exactly the quote-/subset-duplication signal Jaccard misses
@@ -928,10 +888,7 @@ def containment_pairs(
     pair are evaluated (containment is asymmetric); docs with zero
     shingles match nothing (NULL containment).
     """
-    cand = _shingle_candidate_pairs(
-        shingled, max_shingle_df, ordered=True,
-        max_shingle_permille=max_shingle_permille,
-    )
+    cand = _shingle_candidate_pairs(shingled, True, HOT_SHINGLE_PERMILLE)
     sa = shingled.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = shingled.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     containment = F.try_divide(
@@ -942,21 +899,13 @@ def containment_pairs(
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", containment.alias("containment"))
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= 0.9)
     )
 
 
-def snapshot_dedup_index(
-    docs: DataFrame,
-    k: int = 128,
-    bands: int = 32,
-    seed: int = 42,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> tuple[DataFrame, DataFrame]:
+def snapshot_dedup_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Build the frozen-corpus dedup index a recurring-crawl pipeline
-    persists once per snapshot: ``(hash_idx, band_idx)``.
+    persists once per ``(doc_id, text)`` snapshot: ``(hash_idx, band_idx)``.
 
     * ``hash_idx``  — (text_sha, prior_id): one row per distinct content
       hash, prior_id = min doc id holding it. Exact-dup probe target.
@@ -971,18 +920,16 @@ def snapshot_dedup_index(
     """
     hash_idx = (
         docs.select(
-            F.col(id_col).alias("prior_id"),
-            F.sha2(F.col(text_col).cast("binary"), 256).alias("text_sha"),
+            F.col("doc_id").alias("prior_id"),
+            F.sha2(F.col("text").cast("binary"), 256).alias("text_sha"),
         )
         .groupBy("text_sha")
         .agg(F.min("prior_id").alias("prior_id"))
     )
-    sig = minhash_band_hashes_from_text_udf(k=k, bands=bands, seed=seed, n=n)
+    sig = minhash_band_hashes_from_text_udf()
     band_idx = (
-        docs.select(
-            F.col(id_col).alias("prior_id"), F.col(text_col).alias("text")
-        )
-        .filter(F.size(words(F.col("text"))) >= n)
+        docs.select(F.col("doc_id").alias("prior_id"), "text")
+        .filter(F.size(words(F.col("text"))) >= SHINGLE_N)
         .select("prior_id", F.posexplode(sig("text")))
         .select(
             "prior_id",
@@ -998,16 +945,10 @@ def incremental_dedup_vs_snapshot(
     hash_idx: DataFrame,
     band_idx: DataFrame,
     prior_docs: DataFrame,
-    threshold: float = 0.8,
-    k: int = 128,
-    bands: int = 32,
-    seed: int = 42,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Classify an incoming batch against a FROZEN prior-corpus snapshot —
-    the operator a recurring-crawl training-data pipeline runs nightly.
+    """Classify an incoming batch of ``(doc_id, text)`` documents against a
+    FROZEN prior-corpus snapshot — the operator a recurring-crawl
+    training-data pipeline runs nightly.
 
     Per new doc, one row (doc_id, status, matched_prior_id, jaccard):
 
@@ -1015,7 +956,7 @@ def incremental_dedup_vs_snapshot(
       the index's canonical (min) prior id, jaccard NULL (not computed —
       identity needs no similarity score).
     * ``near_dup``  — survives the exact probe, shares an LSH band bucket
-      with a prior doc, and exact shingle-Jaccard ≥ threshold; matched =
+      with a prior doc, and exact shingle-Jaccard ≥ 0.8; matched =
       the best prior doc (max jaccard, min prior_id tie-break).
     * ``novel``     — everything else (including docs with < n words,
       which have no shingles and can't near-match).
@@ -1028,9 +969,7 @@ def incremental_dedup_vs_snapshot(
     anywhere, and prior text is touched only for candidate prior ids.
     """
     new_hashed = new_docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        F.sha2(F.col(text_col).cast("binary"), 256).alias("text_sha"),
+        "doc_id", "text", F.sha2(F.col("text").cast("binary"), 256).alias("text_sha")
     )
     exact = new_hashed.join(hash_idx, "text_sha").select(
         "doc_id",
@@ -1040,9 +979,9 @@ def incremental_dedup_vs_snapshot(
     )
     surv = new_hashed.join(hash_idx, "text_sha", "left_anti")
 
-    sig = minhash_band_hashes_from_text_udf(k=k, bands=bands, seed=seed, n=n)
+    sig = minhash_band_hashes_from_text_udf()
     new_bands = (
-        surv.filter(F.size(words(F.col("text"))) >= n)
+        surv.filter(F.size(words(F.col("text"))) >= SHINGLE_N)
         .select("doc_id", F.posexplode(sig("text")))
         .select(
             "doc_id",
@@ -1056,13 +995,12 @@ def incremental_dedup_vs_snapshot(
         .distinct()
     )
     sh_new = shingle_sets(
-        surv.join(cand.select("doc_id").distinct(), "doc_id"), n=n
+        surv.join(cand.select("doc_id").distinct(), "doc_id")
     ).select("doc_id", F.col("sh").alias("sh_new"))
     sh_prior = shingle_sets(
-        prior_docs.select(
-            F.col(id_col).alias("prior_id"), F.col(text_col).alias("text")
-        ).join(cand.select("prior_id").distinct(), "prior_id"),
-        n=n,
+        prior_docs.select(F.col("doc_id").alias("prior_id"), "text").join(
+            cand.select("prior_id").distinct(), "prior_id"
+        ),
         id_col="prior_id",
     ).select(F.col("doc_id").alias("prior_id"), F.col("sh").alias("sh_prior"))
     verified = (
@@ -1073,7 +1011,7 @@ def incremental_dedup_vs_snapshot(
             "prior_id",
             _jaccard(F.col("sh_new"), F.col("sh_prior")).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.8)
     )
     near = (
         verified.groupBy("doc_id")
@@ -1103,14 +1041,12 @@ def incremental_dedup_vs_snapshot(
     return exact.unionByName(near).unionByName(novel)
 
 
-def apss_prefix_pairs(
-    sh_df: DataFrame, t2_num: int = 1, t2_den: int = 2
-) -> DataFrame:
+def apss_prefix_pairs(sh_df: DataFrame) -> DataFrame:
     """All-pairs similarity search with EXACT prefix filtering (Bayardo,
     Ma & Srikant, WWW 2007; Chaudhuri et al.'s prefix filter): every pair
     of shingle SETS with binary cosine >= t, no candidate missed, never
-    all-pairs. ``t^2 = t2_num / t2_den`` keeps the threshold rational so
-    every filter cross-multiplies to integers.
+    all-pairs. ``t^2 = 1/2`` keeps the threshold rational so every filter
+    cross-multiplies to integers.
 
     The completeness argument, which the sf-parity suite re-proves
     empirically against a brute-force oracle: under ANY global total
@@ -1143,8 +1079,8 @@ def apss_prefix_pairs(
         )
         .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     )
-    # ceil(t2 * n) = (t2_num * n + t2_den - 1) div t2_den
-    min_overlap = F.expr(f"({t2_num} * n + {t2_den} - 1) div {t2_den}")
+    # ceil(t^2 * n) = (1 * n + 2 - 1) div 2
+    min_overlap = F.expr("(1 * n + 2 - 1) div 2")
     prefix = ranked.filter(
         F.col("pos") <= F.col("n") - min_overlap + 1
     ).select("term", "doc_id", "n")
@@ -1159,10 +1095,7 @@ def apss_prefix_pairs(
         .filter(
             (F.col("doc_a") < F.col("doc_b"))
             # size filter: t^2 * max(na, nb) <= min(na, nb)
-            & (
-                t2_den * F.least("na", "nb")
-                >= t2_num * F.greatest("na", "nb")
-            )
+            & (2 * F.least("na", "nb") >= 1 * F.greatest("na", "nb"))
         )
         .select("doc_a", "doc_b", "na", "nb")
         .distinct()
@@ -1176,8 +1109,7 @@ def apss_prefix_pairs(
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
     )
     return overlap.filter(
-        t2_den * F.col("o") * F.col("o")
-        >= t2_num * F.col("na") * F.col("nb")
+        2 * F.col("o") * F.col("o") >= 1 * F.col("na") * F.col("nb")
     ).select(
         "doc_a",
         "doc_b",

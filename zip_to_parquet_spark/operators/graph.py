@@ -46,14 +46,12 @@ __all__ = [
 BASKET_CAP = 256
 
 
-def capped_baskets(
-    lp: DataFrame, cap: int = BASKET_CAP, key: str = "l_orderkey"
-) -> DataFrame:
-    """Drop baskets (groups sharing ``key``) larger than ``cap`` rows
-    ahead of a C(basket, 2) pair self-join — see BASKET_CAP above.
+def capped_baskets(lp: DataFrame, cap: int = BASKET_CAP) -> DataFrame:
+    """Drop baskets (groups sharing ``l_orderkey``) larger than ``cap``
+    rows ahead of a C(basket, 2) pair self-join — see BASKET_CAP above.
 
     Shape: one window count partitioned by the basket key. The window's
-    hash exchange on ``key`` is exactly the partitioning the downstream
+    hash exchange on ``l_orderkey`` is exactly the partitioning the downstream
     pair self-join requires, so the guard adds no extra shuffle — and a
     jumbo basket inside the window is a spillable sorted run plus a
     running count, never a materialized array or a deg² join output.
@@ -62,7 +60,7 @@ def capped_baskets(
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(key)
+    w = Window.partitionBy("l_orderkey")
     return (
         lp.withColumn("_bsz", F.count(F.lit(1)).over(w))
         .filter(F.col("_bsz") <= cap)
@@ -111,9 +109,7 @@ def basket_pair_counts(po: DataFrame) -> DataFrame:
     )
 
 
-def _oriented_triangles(
-    edges: DataFrame, src: str, dst: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _oriented_triangles(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Degree-ordered triangle enumeration shared by
     :func:`triangle_count` and :func:`local_clustering` →
     ``(und, deg, tri)``: the undirected simple edge set ``(u, v)``, the
@@ -121,8 +117,8 @@ def _oriented_triangles(
     (see :func:`triangle_count` for the orientation argument)."""
     und = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -155,11 +151,9 @@ def _oriented_triangles(
     return und, deg, wedge.join(closer, ["x", "z"])
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Global triangle count over an undirected simple graph → one row
-    ``(n_edges, n_triangles)``.
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Global triangle count over an undirected simple ``(src, dst)``
+    graph → one row ``(n_edges, n_triangles)``.
 
     Degree-ordered edge-iterator (the MapReduce-era standard, Suri &
     Vassilvitskii WWW'11 / Cohen 2009): orient every undirected edge from
@@ -174,32 +168,26 @@ def triangle_count(
     The oracle can count with the naive ``a<b<c`` 3-way self-join —
     orientation changes the join volume, never the count.
     """
-    und, _, tri = _oriented_triangles(edges, src, dst)
+    und, _, tri = _oriented_triangles(edges)
     n_tri = tri.agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
     return und.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges")).crossJoin(
         n_tri
     )
 
 
-def pagerank_integer(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 5,
-    damping_pct: int = 85,
-    base: int = 1_000_000,
-) -> DataFrame:
-    """Power-iteration PageRank in INTEGER micro-units → (node, rank_micro).
+def pagerank_integer(edges: DataFrame, iters: int = 5) -> DataFrame:
+    """Power-iteration PageRank over ``(src, dst)`` edges in INTEGER
+    micro-units → (node, rank_micro), damping 85 %.
 
     Why integer: a distributed double sum is addition-order-dependent, so
     float PageRank never hash-matches an oracle (and drifts run-to-run).
     Here every per-edge contribution is ``rank div out_degree`` (exact
     integer floor-division) and the damping update is
-    ``teleport + (damping_pct · Σcontrib) div 100`` — all integer, so the
+    ``teleport + (85 · Σcontrib) div 100`` — all integer, so the
     in-neighbor sum is order-free and the fixed-point result is
     bit-identical on any engine, any partitioning. Ranks are micro-units
-    of probability mass × node count (init = ``base`` per node); divide
-    by ``base`` for the conventional scale. Floor loss per edge is
+    of probability mass × node count (init = 10⁶ per node); divide by
+    10⁶ for the conventional scale. Floor loss per edge is
     < 1 micro-unit — noise at rank magnitudes, determinism in exchange.
 
     Semantics: distinct directed edges, uniform out-edge split, fixed
@@ -214,9 +202,7 @@ def pagerank_integer(
     each step keeps the plan from growing with ``iters`` — the standard
     Spark iterative-algorithm idiom (same as connected_components_star).
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct().localCheckpoint(eager=False)
+    e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -224,8 +210,8 @@ def pagerank_integer(
         .localCheckpoint(eager=False)
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    teleport = base * (100 - damping_pct) // 100
-    ranks = nodes.select("node", F.lit(base).cast("long").alias("r"))
+    teleport = 1_000_000 * (100 - 85) // 100
+    ranks = nodes.select("node", F.lit(1_000_000).cast("long").alias("r"))
     for _ in range(iters):
         contrib = (
             e.join(ranks, e["src"] == ranks["node"])
@@ -239,7 +225,7 @@ def pagerank_integer(
                 "node",
                 (
                     F.lit(teleport)
-                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+                    + F.expr("(85 * coalesce(s, 0L)) div 100")
                 )
                 .cast("long")
                 .alias("r"),
@@ -249,15 +235,11 @@ def pagerank_integer(
     return ranks.select("node", F.col("r").alias("rank_micro"))
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) → (node, comp), comp = min node id of the component.
+def connected_components_star(edges: DataFrame) -> DataFrame:
+    """Connected components of the ``(doc_a, doc_b)`` pair graph via
+    alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014) → (node, comp), comp
+    = min node id of the component.
 
     The one connected-components operator: ``dedup_clusters``,
     ``split_group_aware`` and ``dedup_cluster_keep_best`` cluster their
@@ -278,7 +260,7 @@ def connected_components_star(
     IS combinable). Convergence is detected by an order-free edge-set
     fingerprint (count + bit_xor of xxhash64), one tiny agg per round;
     ``localCheckpoint`` truncates lineage; non-convergence within
-    ``max_iter`` raises instead of returning a non-star (and therefore
+    20 rounds raises instead of returning a non-star (and therefore
     corrupt) labeling. Output covers every node that appears in a
     non-self-loop edge; an empty edge set gives no rows.
     """
@@ -296,7 +278,7 @@ def connected_components_star(
         )
 
     e = canon(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     ).localCheckpoint(eager=True)
 
     def sym(df: DataFrame) -> DataFrame:
@@ -335,7 +317,7 @@ def connected_components_star(
 
     fp = fingerprint(e)
     converged = False
-    for _ in range(max_iter):
+    for _ in range(20):
         e2 = small_star(large_star(e)).localCheckpoint(eager=True)
         fp2 = fingerprint(e2)
         e = e2
@@ -345,9 +327,9 @@ def connected_components_star(
         fp = fp2
     if not converged:
         raise RuntimeError(
-            f"star contraction did not converge in {max_iter} rounds; "
-            "the edge set is not yet a star and its labeling would be "
-            "corrupt — raise max_iter (O(log^2 n) rounds suffice)"
+            "star contraction did not converge in 20 rounds; the edge set "
+            "is not yet a star and its labeling would be corrupt "
+            "(O(log^2 n) rounds suffice)"
         )
 
     # Terminal star: every non-root points at its root; roots self-label.
@@ -358,16 +340,10 @@ def connected_components_star(
     return nodes_to_root.unionByName(roots).distinct()
 
 
-def bfs_hops(
-    edges: DataFrame,
-    sources: list[int],
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 6,
-) -> DataFrame:
-    """Multi-source breadth-first hop distances over an UNDIRECTED graph
-    → (node, hops), hops = min #edges from any source, capped at
-    ``max_hops`` (unreached nodes are absent).
+def bfs_hops(edges: DataFrame) -> DataFrame:
+    """Breadth-first hop distances from node 0 over an UNDIRECTED
+    ``(src, dst)`` graph → (node, hops), hops = min #edges from the
+    source, capped at 4 (unreached nodes are absent).
 
     Frontier-expansion BFS, the Pregel iteration pattern on DataFrames:
     each round joins the current frontier against the symmetrized edge
@@ -375,21 +351,21 @@ def bfs_hops(
     the visited set to keep only newly discovered nodes, and
     ``localCheckpoint``s so lineage stays O(1) across rounds. Hop counts
     are integers, so the result is exactly reproducible on any engine —
-    the oracle is a recursive CTE with the same ≤``max_hops`` bound.
+    the oracle is a recursive CTE with the same ≤4 bound.
 
     Early exit when a frontier comes back empty: the check rides the
     eager checkpoint that materializes the round anyway (no extra job).
     The visited set is node-keyed; web-scale hub skew hits the frontier
-    join like any node-keyed shuffle — AQE skew handling applies. A
-    ``max_hops`` cap is not an optimization but part of the operator's
+    join like any node-keyed shuffle — AQE skew handling applies. The
+    hop cap is not an optimization but part of the operator's
     contract (k-hop neighborhoods; unbounded BFS on a crawl graph is a
     different, component-sized question answered by
     ``connected_components_star``).
     """
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+            edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -397,10 +373,10 @@ def bfs_hops(
     )
     spark = edges.sparkSession
     dist = spark.createDataFrame(
-        [(int(s), 0) for s in sources], "node long, hops long"
+        [(0, 0)], "node long, hops long"
     ).localCheckpoint(eager=True)
     frontier = dist.select("node")
-    for h in range(1, max_hops + 1):
+    for h in range(1, 5):
         nxt = (
             frontier.join(e, frontier["node"] == e["u"])
             .select(F.col("v").alias("node"))
@@ -418,10 +394,9 @@ def bfs_hops(
     return dist
 
 
-def local_clustering(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node triangle counts and local clustering coefficients →
+def local_clustering(edges: DataFrame) -> DataFrame:
+    """Per-node triangle counts and local clustering coefficients of an
+    undirected ``(src, dst)`` graph →
     ``(node, deg, n_tri, cc_milli)`` with cc = 2T/(d(d-1)) in exact
     milli (NULL for degree < 2 — cc is undefined there, not zero).
 
@@ -431,7 +406,7 @@ def local_clustering(
     unpivots to its three member nodes for a node-keyed rollup joined
     back to the degree table. Work beyond triangle_count is one
     3×-triangles explode plus a node rollup — same asymptotics."""
-    _, deg, tri = _oriented_triangles(edges, src, dst)
+    _, deg, tri = _oriented_triangles(edges)
     tri_nodes = (
         tri.select(
             F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias(

@@ -18,45 +18,37 @@ from pyspark.sql import functions as F
 __all__ = ["salted_join", "merge_upsert", "scd2_history"]
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join on ``key`` that spreads each hot key across ``salts``
-    reducers.
+def salted_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Inner equi-join on ``event_type`` that spreads each hot key across
+    16 reducers.
 
     Left rows get a deterministic per-row salt (hash of the whole row, NOT
     of the key — same-key rows must scatter); the right side is replicated
-    ``salts`` times with an exploded salt column; the join key becomes
-    (key, salt). Correctness is unchanged for inner/left joins: every left
-    row still meets every matching right row exactly once. Shuffle volume:
-    left unchanged, right × salts — choose ``salts`` ≈ hot-key partition
-    excess, not larger.
+    16 times with an exploded salt column; the join key becomes
+    (key, salt). Correctness is unchanged: every left row still meets
+    every matching right row exactly once. Shuffle volume: left
+    unchanged, right × 16 — the salt count should track the hot-key
+    partition excess, not exceed it.
     """
-    lsalt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salts))
+    lsalt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(16))
     l = left.withColumn("__salt", lsalt)
     r = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(16 - 1)))
     )
-    out = l.join(r, [key, "__salt"], how)
+    out = l.join(r, ["event_type", "__salt"], "inner")
     return out.drop("__salt")
 
 
 def merge_upsert(
     base: DataFrame,
     changes: DataFrame,
-    id_col: str = "doc_id",
-    op_col: str = "op",
     enforce_contract: bool = True,
 ) -> DataFrame:
     """Warehouse MERGE INTO as a pure DataFrame plan: apply a change set
-    (``op`` ∈ 'upsert' | 'delete') to a base snapshot — upserts insert or
-    replace the payload, deletes drop the row, untouched base rows pass
-    through. The SCD type-1 refresh primitive (and the batch analog of
-    Delta/Iceberg MERGE, expressed engine-agnostically).
+    (``op`` ∈ 'upsert' | 'delete', keyed on ``doc_id``) to a base snapshot —
+    upserts insert or replace the payload, deletes drop the row, untouched
+    base rows pass through. The SCD type-1 refresh primitive (and the batch
+    analog of Delta/Iceberg MERGE, expressed engine-agnostically).
 
     Output schema == the BASE schema: change-payload columns resolve
     from the change row on upsert, base-only columns (present in base
@@ -81,18 +73,18 @@ def merge_upsert(
     sides on the id (sinks.write_bucketed_table) for shuffle-free
     recurring refreshes.
     """
-    payload = [c for c in changes.columns if c not in (id_col, op_col)]
+    payload = [c for c in changes.columns if c not in ("doc_id", "op")]
     missing = [c for c in payload if c not in base.columns]
     if missing:
         raise ValueError(f"change payload columns absent from base: {missing}")
-    base_only = [c for c in base.columns if c != id_col and c not in payload]
+    base_only = [c for c in base.columns if c != "doc_id" and c not in payload]
     b = base.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         *[F.col(c).alias(f"__b_{c}") for c in payload + base_only],
     )
     c = changes.select(
-        F.col(id_col).alias("__id"),
-        F.col(op_col).alias("__op"),
+        F.col("doc_id").alias("__id"),
+        F.col("op").alias("__op"),
         *[F.col(cc).alias(f"__c_{cc}") for cc in payload],
     )
     if enforce_contract:
@@ -126,7 +118,7 @@ def merge_upsert(
     keep = F.col("__op").isNull() | (F.col("__op") == "upsert")
     out_cols = []
     for cc in base.columns:
-        if cc == id_col:
+        if cc == "doc_id":
             continue
         if cc in payload:
             out_cols.append(
@@ -136,7 +128,7 @@ def merge_upsert(
             )
         else:
             out_cols.append(F.col(f"__b_{cc}").alias(cc))
-    return joined.filter(keep).select(F.col("__id").alias(id_col), *out_cols)
+    return joined.filter(keep).select(F.col("__id").alias("doc_id"), *out_cols)
 
 
 def scd2_history(
@@ -144,13 +136,12 @@ def scd2_history(
     new: DataFrame,
     id_col: str,
     compare_cols: list[str],
-    as_of: str,
 ) -> DataFrame:
     """Slowly-changing-dimension type 2: version the dimension by diffing
-    two snapshots. Per id: unchanged → one open row; changed → the old
-    version closed at ``as_of`` plus the new version open; added → new
-    open row; removed → old row closed at ``as_of``. ``valid_to`` NULL
-    means the version is current.
+    two snapshots taken on 2024-02-01. Per id: unchanged → one open row;
+    changed → the old version closed at 2024-02-01 plus the new version
+    open; added → new open row; removed → old row closed at 2024-02-01.
+    ``valid_to`` NULL means the version is current.
 
     ONE full-outer equi-join on the id, then an in-row explode of the
     (up to 2) versions — map-only after the join, no second shuffle.
@@ -180,7 +171,7 @@ def scd2_history(
             valid_to.cast("date").alias("valid_to"),
         )
 
-    closed_old = ver("o", F.lit(as_of))
+    closed_old = ver("o", F.lit("2024-02-01"))
     open_old = ver("o", F.lit(None))
     open_new = ver("n", F.lit(None))
     versions = (

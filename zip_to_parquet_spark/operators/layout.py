@@ -11,14 +11,14 @@ Everything here is exact integer arithmetic (div/mod bit extraction —
 no engine-specific bit intrinsics), so DuckDB replays file assignment
 bit-for-bit:
 
-* **Z-value**: low ``bits`` of each dimension, interleaved via
+* **Z-value**: low ZORDER_BITS bits of each dimension, interleaved via
   ``Σ ((a div 2^i) % 2)·4^i + ((b div 2^i) % 2)·2·4^i`` — one codegen'd
   map-only expression.
 * **File boundaries**: equi-depth thresholds over a DETERMINISTIC
   md5-sampled subset — the honest distributed story (Spark's
   RangePartitioner samples too; a full-data global sort or row_number
   would funnel the corpus through one partition). The sample is bounded
-  (~``sample_target`` rows regardless of corpus size), so its
+  (~2000 rows regardless of corpus size), so its
   cumulative-count window is a constant-size step; per-row assignment is
   a map against the broadcast one-row threshold array — the same shape
   as ``pipeline.curriculum_buckets``.
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 __all__ = [
-    "zorder_value_sql",
+    "ZORDER_VALUE_SQL",
     "md5_low16_sql",
     "md5_low_bytes_sql",
     "zorder_file_stats",
@@ -42,15 +42,15 @@ __all__ = [
 ]
 
 
-def zorder_value_sql(a: str, b: str, bits: int = 16) -> str:
-    """SQL fragment (valid in Spark AND DuckDB dialects, modulo DuckDB's
-    ``//`` vs Spark's ``div`` — caller substitutes) interleaving the low
-    ``bits`` of ``a`` (even positions) and ``b`` (odd positions)."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"(({a} div {2**i}) % 2) * {4**i}")
-        terms.append(f"(({b} div {2**i}) % 2) * {2 * 4**i}")
-    return " + ".join(terms)
+ZORDER_BITS = 16
+
+# SQL fragment (valid in Spark AND DuckDB dialects, modulo DuckDB's ``//``
+# vs Spark's ``div`` — the caller substitutes) interleaving the low
+# ZORDER_BITS bits of ``u`` (even positions) and ``d`` (odd positions).
+ZORDER_VALUE_SQL = " + ".join(
+    f"((u div {2**i}) % 2) * {4**i} + ((d div {2**i}) % 2) * {2 * 4**i}"
+    for i in range(ZORDER_BITS)
+)
 
 
 def md5_low_bytes_sql(expr: str, n_bytes: int = 2) -> str:
@@ -74,8 +74,7 @@ def md5_low16_sql(expr: str) -> str:
     return md5_low_bytes_sql(expr, 2)
 
 
-def _events_with_z(events: DataFrame, bits: int) -> DataFrame:
-    z_sql = zorder_value_sql("u", "d", bits)
+def _events_with_z(events: DataFrame) -> DataFrame:
     return (
         events.select(
             F.col("event_id"),
@@ -86,27 +85,25 @@ def _events_with_z(events: DataFrame, bits: int) -> DataFrame:
             "event_id",
             "user_id",
             "day",
-            (F.col("user_id") % (2**bits)).alias("u"),
-            (F.col("day") % (2**bits)).alias("d"),
+            (F.col("user_id") % (2**ZORDER_BITS)).alias("u"),
+            (F.col("day") % (2**ZORDER_BITS)).alias("d"),
         )
-        .withColumn("z", F.expr(z_sql))
+        .withColumn("z", F.expr(ZORDER_VALUE_SQL))
     )
 
 
-def _boundary_sample(ev: DataFrame, n: int, sample_target: int) -> DataFrame:
+def _boundary_sample(ev: DataFrame, n: int) -> DataFrame:
     """Deterministic bounded boundary sample: md5_low16(event_id) % m == 0
-    with m = max(1, n div sample_target). Shared by every layout built
-    over the same events so competing layouts see identical samples."""
-    m = max(1, n // sample_target)
+    with m = max(1, n div 2000). Shared by every layout built over the
+    same events so competing layouts see identical samples."""
+    m = max(1, n // 2000)
     return ev.filter(
         F.expr(md5_low16_sql("cast(event_id as string)")) % m == 0
     )
 
 
-def _assign_files(
-    ev: DataFrame, samp: DataFrame, key: str, n_files: int
-) -> DataFrame:
-    """Equi-depth file assignment on ``key``: percentile_disc-style
+def _assign_files(ev: DataFrame, samp: DataFrame, key: str) -> DataFrame:
+    """Equi-depth assignment to 16 files on ``key``: percentile_disc-style
     integer thresholds over the (bounded) sample's cumulative ``key``
     distribution, then a map against the broadcast one-row threshold
     array — the same shape as pipeline.curriculum_buckets."""
@@ -125,11 +122,11 @@ def _assign_files(
                 F.min(
                     F.when(
                         F.col("cum")
-                        >= F.expr(f"({q} * s + {n_files - 1}) div {n_files}"),
+                        >= F.expr(f"({q} * s + 15) div 16"),
                         F.col("k"),
                     )
                 )
-                for q in range(1, n_files)
+                for q in range(1, 16)
             ]
         ).alias("t")
     )
@@ -142,28 +139,23 @@ def _assign_files(
     )
 
 
-def zorder_file_stats(
-    events: DataFrame,
-    n_files: int = 16,
-    bits: int = 16,
-    sample_target: int = 2000,
-) -> DataFrame:
-    """Z-order the events table on (user_id, event day) and report the
-    per-file min/max of BOTH dimensions → one row per target file
+def zorder_file_stats(events: DataFrame) -> DataFrame:
+    """Z-order the events table on (user_id, event day) into 16 files and
+    report the per-file min/max of BOTH dimensions → one row per file
     ``(file_id, n_rows, min_user, max_user, min_day, max_day, min_z,
     max_z)`` — the ranges a planner would prune against.
 
     Boundary sample: rows where ``md5_low16(event_id) % m == 0`` with
-    ``m = max(1, n div sample_target)`` — deterministic, engine-portable
+    ``m = max(1, n div 2000)`` — deterministic, engine-portable
     (no RNG), and bounded, so the threshold computation never grows with
     the corpus. Thresholds are percentile_disc-style integer mins over
     the sample's cumulative z distribution; assignment is
     ``Σ (z ≥ t_q)`` against the broadcast threshold row. The ``count()``
     here is a bounded driver-side metadata job (the same contract as
     ``vectors.deterministic_training_sample``)."""
-    ev = _events_with_z(events, bits)
-    samp = _boundary_sample(ev, events.count(), sample_target)
-    assigned = _assign_files(ev, samp, "z", n_files)
+    ev = _events_with_z(events)
+    samp = _boundary_sample(ev, events.count())
+    assigned = _assign_files(ev, samp, "z")
     return assigned.groupBy("file_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.min("user_id").alias("min_user"),
@@ -175,15 +167,10 @@ def zorder_file_stats(
     )
 
 
-def zorder_pruning_eval(
-    events: DataFrame,
-    n_files: int = 16,
-    bits: int = 16,
-    sample_target: int = 2000,
-) -> DataFrame:
-    """Head-to-head pruning evaluation of the Z-ordered layout against a
-    single-column (user-sorted) layout → one row per probe predicate
-    ``(pred, files_zorder, files_usersorted)``.
+def zorder_pruning_eval(events: DataFrame) -> DataFrame:
+    """Head-to-head pruning evaluation of the 16-file Z-ordered layout
+    against a single-column (user-sorted) layout → one row per probe
+    predicate ``(pred, files_zorder, files_usersorted)``.
 
     Probes are deterministic in-plan quartile points of each dimension's
     RANGE (``min + q·span div 4``); a file must be scanned when the probe
@@ -195,15 +182,15 @@ def zorder_pruning_eval(
     trusting it at corpus scale.
 
     Everything after the two file-stat rollups is constant-size
-    (2·n_files + 8 rows), broadcast-joined; both layouts reuse ONE
+    (2·16 + 8 rows), broadcast-joined; both layouts reuse ONE
     boundary sample so the comparison is apples-to-apples.
     """
-    ev = _events_with_z(events, bits)
-    samp = _boundary_sample(ev, events.count(), sample_target)
+    ev = _events_with_z(events)
+    samp = _boundary_sample(ev, events.count())
 
     def stats(key: str) -> DataFrame:
         return (
-            _assign_files(ev, samp, key, n_files)
+            _assign_files(ev, samp, key)
             .groupBy("file_id")
             .agg(
                 F.min("user_id").alias("mu"),

@@ -65,16 +65,16 @@ MEDIA_FEATURE_SCHEMA = StructType(
 )
 
 
-def attach_media_metadata(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Build the canonical multimodal frame from a text table: payload =
-    UTF-8 bytes (deterministic stand-in for real media bytes), mime cycled
-    by id. All Catalyst expressions."""
+def attach_media_metadata(df: DataFrame) -> DataFrame:
+    """Build the canonical multimodal frame from a ``(doc_id, text)``
+    table: payload = UTF-8 bytes (deterministic stand-in for real media
+    bytes), mime cycled by id. All Catalyst expressions."""
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        "doc_id",
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.element_at(
             F.array(*[F.lit(m) for m in _MIME_BY_MOD]),
-            (F.col(id_col) % 3 + 1).cast("int"),
+            (F.col("doc_id") % 3 + 1).cast("int"),
         ).alias("mime"),
     )
 
@@ -545,11 +545,9 @@ def png_features(
     return df.mapInPandas(extract, schema=PNG_FEATURE_SCHEMA)
 
 
-def png_resize_features(
-    df: DataFrame, out_w: int = 8, out_h: int = 8, payload_col: str = "payload"
-) -> DataFrame:
-    """REAL image resize: decode each PNG (full parse + defilter), then
-    nearest-neighbor downsample to (out_w, out_h) with numpy fancy
+def png_resize_features(df: DataFrame) -> DataFrame:
+    """REAL image resize: decode each ``payload`` PNG (full parse +
+    defilter), then nearest-neighbor downsample to 8×8 with numpy fancy
     indexing — source pixel (x·w_in // w_out, y·h_in // h_out), the
     classic integer nearest-neighbor mapping — and emit the resized
     image's pixel sum and corner checksum. Because the mapping is pure
@@ -557,13 +555,15 @@ def png_resize_features(
     recompute the expected sums exactly: the decode AND the resample are
     both verified. Map-only mapInPandas, same shape as png_features."""
 
+    out_w = out_h = 8
+
     def resize(batches: Iterator) -> Iterator:
         import numpy as np
         import pandas as pd
 
         for pdf in batches:
             rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
                 w, h, _, _, img = _decode_png(bytes(b))
                 xs = (np.arange(out_w, dtype=np.int64) * w) // out_w
                 ys = (np.arange(out_h, dtype=np.int64) * h) // out_h
@@ -598,10 +598,9 @@ def png_resize_features(
     )
 
 
-def png_ahash_bands(
-    df: DataFrame, payload_col: str = "payload", on_error: str = "fail"
-) -> DataFrame:
-    """Perceptual average-hash (aHash) over the REAL PNG decode: point-
+def png_ahash_bands(df: DataFrame) -> DataFrame:
+    """Perceptual average-hash (aHash) over the REAL decode of each
+    ``payload`` PNG (a malformed payload fails the job): point-
     sample the decoded image on an 8×8 grid (``x_s = x·w div 8``,
     ``y_s = y·h div 8`` — integer-exact, no resampling kernel), set bit
     ``k = y·8+x`` iff ``64·px > Σpx`` (strict, integer cross-multiplied
@@ -611,22 +610,14 @@ def png_ahash_bands(
     mapInPandas over Arrow batches: the 100 TB shape for media
     fingerprinting; the hash itself never leaves the executor as a
     >64-bit value, so downstream joins shuffle plain ints."""
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be fail|skip, got {on_error!r}")
-
     def extract(batches: Iterator) -> Iterator:
         import numpy as np
         import pandas as pd
 
         for pdf in batches:
             rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    w, h, _, _, img = _decode_png(bytes(b))
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    continue
+            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
+                w, h, _, _, img = _decode_png(bytes(b))
                 xs = (np.arange(8, dtype=np.int64) * w) // 8
                 ys = (np.arange(8, dtype=np.int64) * h) // 8
                 samp = img[np.ix_(ys, xs)].astype(np.int64)
@@ -679,7 +670,7 @@ def _box(typ: bytes, payload: bytes) -> bytes:
     return struct.pack(">I", 8 + len(payload)) + typ + payload
 
 
-def synth_mp4(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_mp4(df: DataFrame) -> DataFrame:
     """(doc_id, payload) with payload = a real (minimal) ISO-BMFF file:
     ftyp + moov(mvhd, trak(tkhd, mdia(minf(stbl(stsz))))) + mdat, every
     box size-prefixed per the spec, parameters from _mp4_params.
@@ -698,7 +689,7 @@ def synth_mp4(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         for pdf in batches:
             payloads = []
-            for doc_id in pdf[id_col]:
+            for doc_id in pdf["doc_id"]:
                 ts, dur, w, h, nf, fs = _mp4_params(int(doc_id))
                 ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0) + b"isommp41")
                 mvhd = _box(
@@ -728,7 +719,7 @@ def synth_mp4(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     bytes([(doc_id * 31 + i * 7) % 251]) * fs for i in range(nf)
                 )
                 payloads.append(ftyp + moov + _box(b"mdat", frames))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     return df.mapInPandas(
         gen,
@@ -752,13 +743,12 @@ MP4_META_SCHEMA = StructType(
 _MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 
 
-def mp4_meta(
-    df: DataFrame, payload_col: str = "payload", on_error: str = "fail"
-) -> DataFrame:
-    """REAL ISO-BMFF parse: walk the size-prefixed box tree, recurse into
-    container boxes, and recover movie timescale/duration (mvhd), track
-    dimensions (tkhd, 16.16 fixed point), frame count (constant-size
-    stsz), and media payload size (mdat). Arrow-batched mapInPandas,
+def mp4_meta(df: DataFrame, on_error: str = "fail") -> DataFrame:
+    """REAL ISO-BMFF parse of each ``payload``: walk the size-prefixed box
+    tree, recurse into container boxes, and recover movie
+    timescale/duration (mvhd), track dimensions (tkhd, 16.16 fixed
+    point), frame count (constant-size stsz), and media payload size
+    (mdat). Arrow-batched mapInPandas,
     map-only — the video leg of the multimodal triad, parsed from bytes
     like audio_features/png_features, nothing faked.
 
@@ -818,7 +808,7 @@ def mp4_meta(
 
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
                     w, h, dms, nf, mb = parse_one(bytes(payload))
                     rows.append((int(doc_id), w, h, dms, nf, mb))

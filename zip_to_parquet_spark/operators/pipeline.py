@@ -40,33 +40,28 @@ __all__ = [
 ]
 
 
-def pack_greedy_contiguous(
-    df: DataFrame,
-    ctx: int = 512,
-    n_shards: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Contiguous-fill sequence packing: concatenate documents in id order
-    within a shard and cut every ``ctx`` tokens (documents may straddle a
+def pack_greedy_contiguous(df: DataFrame, ctx: int = 512) -> DataFrame:
+    """Contiguous-fill sequence packing: concatenate ``(doc_id, text)``
+    documents in id order within one of 32 shards and cut every ``ctx``
+    tokens (documents may straddle a
     boundary — the GPT-style pretraining packer, as opposed to first-fit
     bin packing which never splits but shuffles per bin).
 
-    100 TB shape: the running-sum window partitions by ``id % n_shards``,
-    so no global sort and no single-partition window; each shard packs
-    independently and shard count scales with the cluster. Output is one
+    100 TB shape: the running-sum window partitions by ``id % 32``, so no
+    global sort and no single-partition window; each shard packs
+    independently. Output is one
     row per document: its shard, token length, the bin (context window)
     its first token lands in, and its token offset within that bin — all
     integer arithmetic, exactly reproducible in SQL.
     """
-    tok = F.size(words(F.col(text_col))).cast("bigint")
-    shard = (F.col(id_col) % n_shards).cast("int")
-    w = Window.partitionBy("shard").orderBy(id_col)
-    d = df.select(F.col(id_col), shard.alias("shard"), tok.alias("token_len"))
+    tok = F.size(words(F.col("text"))).cast("bigint")
+    shard = (F.col("doc_id") % 32).cast("int")
+    w = Window.partitionBy("shard").orderBy("doc_id")
+    d = df.select(F.col("doc_id"), shard.alias("shard"), tok.alias("token_len"))
     start = (F.sum("token_len").over(w) - F.col("token_len")).alias("start_tok")
-    d = d.select(id_col, "shard", "token_len", start)
+    d = d.select("doc_id", "shard", "token_len", start)
     return d.select(
-        id_col,
+        "doc_id",
         "shard",
         "token_len",
         F.floor(F.col("start_tok") / ctx).cast("bigint").alias("bin_id"),
@@ -74,33 +69,27 @@ def pack_greedy_contiguous(
     )
 
 
-def train_val_test_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    train_hex: str = "cc",
-    val_hex: str = "e6",
-) -> DataFrame:
+def train_val_test_split(df: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment from the first two hex chars
-    of md5(id): < train_hex → train (0xcc/0x100 ≈ 79.7%), < val_hex → val
+    of md5(doc_id): < 'cc' → train (0xcc/0x100 ≈ 79.7%), < 'e6' → val
     (≈ 10.2%), else test. Stateless map — no shuffle, no RNG, stable under
     reruns and repartitioning, and any engine with md5 reproduces it
     byte-for-byte (the property that matters when train/test membership
     must never drift across pipeline versions).
     """
-    bucket, split = md5_split(F.col(id_col), train_hex, val_hex)
-    return df.select(F.col(id_col), bucket.alias("bucket"), split.alias("split"))
+    bucket, split = md5_split(F.col("doc_id"))
+    return df.select(F.col("doc_id"), bucket.alias("bucket"), split.alias("split"))
 
 
-def md5_split(
-    key: Column, train_hex: str = "cc", val_hex: str = "e6"
-) -> tuple[Column, Column]:
+def md5_split(key: Column) -> tuple[Column, Column]:
     """``(bucket, split)`` columns of :func:`train_val_test_split` for any
     key expression: ``bucket`` the first two hex chars of md5(key), and
-    ``split`` 'train' / 'val' / 'test' by the two hex cut points."""
+    ``split`` 'train' / 'val' / 'test' by the hex cut points 'cc' and
+    'e6'."""
     bucket = F.substring(F.md5(key.cast("string").cast("binary")), 1, 2)
     return bucket, (
-        F.when(bucket < train_hex, "train")
-        .when(bucket < val_hex, "val")
+        F.when(bucket < "cc", "train")
+        .when(bucket < "e6", "val")
         .otherwise("test")
     )
 
@@ -126,8 +115,9 @@ def gopher_signal_cols(text_col):
     return n, mean_len, stop_frac, passes
 
 
-def gopher_quality(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Gopher-style document quality gate (Rae et al. 2021, §A1.1 spirit):
+def gopher_quality(df: DataFrame) -> DataFrame:
+    """Gopher-style quality gate over ``(doc_id, text)`` documents (Rae et
+    al. 2021, §A1.1 spirit):
     word count bounds, mean word length bounds, stopword presence. Map-only
     Catalyst — every signal is a higher-order function over the in-row word
     array, so the gate runs inside the scan stage at any scale.
@@ -135,9 +125,9 @@ def gopher_quality(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     Ratios are emitted unrounded (int/int division is bit-exact across
     engines); the boolean verdict composes the bounds.
     """
-    n, mean_len, stop_frac, passes = gopher_signal_cols(F.col(text_col))
+    n, mean_len, stop_frac, passes = gopher_signal_cols(F.col("text"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("n_words"),
         mean_len.alias("mean_word_len"),
         stop_frac.alias("stop_frac"),
@@ -145,26 +135,24 @@ def gopher_quality(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Repetition ratios per document: the fraction of tokens taken by the
-    most frequent token, and of bigrams by the most frequent bigram — the
-    Gopher/C4 repetitive-content signals (high values flag boilerplate and
-    degenerate generation loops).
+def repetition_stats(df: DataFrame) -> DataFrame:
+    """Repetition ratios per ``(doc_id, text)`` document: the fraction of
+    tokens taken by the most frequent token, and of bigrams by the most
+    frequent bigram — the Gopher/C4 repetitive-content signals (high values
+    flag boilerplate and degenerate generation loops).
 
     Shape: explode → groupBy(doc_id, gram) → groupBy(doc_id). Both
     shuffles key on (doc_id, gram) / doc_id — cardinality grows with the
     corpus, no hot key, partial aggregation applies map-side. Fractions
     are int/int, bit-exact across engines.
     """
-    base = df.select(F.col(id_col), words(F.col(text_col)).alias("w"))
+    base = df.select(F.col("doc_id"), words(F.col("text")).alias("w"))
 
     def top_frac(grams: DataFrame, out: str) -> DataFrame:
         return (
-            grams.groupBy(id_col, "g")
+            grams.groupBy("doc_id", "g")
             .agg(F.count("*").alias("c"))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(
                 (F.max("c") / F.sum("c")).alias(out),
                 F.sum("c").alias(f"n_{out}"),
@@ -172,52 +160,41 @@ def repetition_stats(
         )
 
     uni = top_frac(
-        base.select(id_col, F.explode("w").alias("g")), "top_word_frac"
+        base.select("doc_id", F.explode("w").alias("g")), "top_word_frac"
     ).withColumnRenamed("n_top_word_frac", "n_words")
     big = top_frac(
         base.select(
-            id_col, F.explode(word_shingles(F.col("w"), n=2)).alias("g")
+            "doc_id", F.explode(word_shingles(F.col("w"), n=2)).alias("g")
         ),
         "top_bigram_frac",
     ).withColumnRenamed("n_top_bigram_frac", "n_bigrams")
-    return uni.join(big, id_col).select(
-        id_col, "n_words", "top_word_frac", "n_bigrams", "top_bigram_frac"
+    return uni.join(big, "doc_id").select(
+        "doc_id", "n_words", "top_word_frac", "n_bigrams", "top_bigram_frac"
     )
 
 
-def decontaminate_ngrams(
-    train: DataFrame,
-    eval_df: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_eval: bool = True,
-) -> DataFrame:
+def decontaminate_ngrams(train: DataFrame, eval_df: DataFrame) -> DataFrame:
     """Benchmark decontamination by exact n-gram collision: flag every
-    training document sharing at least one n-word shingle with the eval
-    set, with the count of distinct shared shingles.
+    training ``(doc_id, text)`` document sharing at least one 4-word
+    shingle with the eval set, with the count of distinct shared shingles.
 
     The standard pre-training hygiene step (GPT-3 appendix C / PaLM-style
-    13-gram overlap, here parameterized). Plan shape for 100 TB: the eval
+    13-gram overlap, here with 4-grams). Plan shape for 100 TB: the eval
     side (a benchmark suite — megabytes, not terabytes) collapses to a
     DISTINCT gram set and is broadcast, so the training side never
     shuffles: scan → in-row shingling (codegen HOFs, no explode until the
     gram join) → broadcast-hash semi-style join → per-doc count. Training
     grams are deduped in-row (`array_distinct`) and eval grams globally,
     so a plain `count(*)` after the join IS the distinct-collision count —
-    no count_distinct re-shuffle. Set ``broadcast_eval=False`` only if the
-    eval corpus is itself huge; the join then shuffles on the gram key
-    (high cardinality, no hot keys beyond natural stop-gram skew)."""
-    gram = lambda d: F.explode(  # noqa: E731
-        F.array_distinct(word_shingles(words(F.col(text_col)), n))
+    no count_distinct re-shuffle."""
+    gram = lambda: F.explode(  # noqa: E731
+        F.array_distinct(word_shingles(words(F.col("text")), 4))
     ).alias("gram")
-    tg = train.select(F.col(id_col), gram(train))
-    eg = eval_df.select(gram(eval_df)).distinct()
-    if broadcast_eval:
-        eg = F.broadcast(eg)
+    tg = train.select(F.col("doc_id"), gram())
+    eg = F.broadcast(eval_df.select(gram()).distinct())
     return (
         tg.join(eg, "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("n_shared"))
     )
 
@@ -232,29 +209,24 @@ PII_PATTERNS = (
 )
 
 
-def pii_redact(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Redact PII-shaped spans (emails, IPv4 addresses, dashed phone
-    numbers) and count hits per pattern. Map-only Catalyst
+    numbers) in ``text`` and count hits per pattern. Map-only Catalyst
     ``regexp_count`` / ``regexp_replace`` chain — stays inside
     whole-stage codegen, embarrassingly parallel at any scale. Patterns
     apply in declaration order; counts are taken on the incoming text
     (the patterns cannot produce one another's matches)."""
     out = df
-    redacted = F.col(text_col)
+    redacted = F.col("text")
     for name, pat, token in PII_PATTERNS:
-        out = out.withColumn(f"n_{name}", F.regexp_count(F.col(text_col), F.lit(pat)))
+        out = out.withColumn(f"n_{name}", F.regexp_count(F.col("text"), F.lit(pat)))
         redacted = F.regexp_replace(redacted, pat, token)
     return out.withColumn("redacted", redacted)
 
 
-def mixture_sample(
-    df: DataFrame,
-    threshold_hex: Column,
-    id_col: str = "doc_id",
-    strata_col: str = "source",
-) -> DataFrame:
-    """Deterministic per-stratum mixture sampling: keep a row iff the
-    first md5 byte of ``stratum:id`` sorts below the row's (hex-string)
+def mixture_sample(df: DataFrame, threshold_hex: Column) -> DataFrame:
+    """Deterministic per-source mixture sampling: keep a row iff the
+    first md5 byte of ``source:doc_id`` sorts below the row's (hex-string)
     threshold — ``'80'`` keeps ≈50%, ``'20'`` ≈12.5%. The per-source
     rate column expresses the mixture weights of a training-data recipe
     (e.g. upsample curated sources, downsample crawl).
@@ -266,7 +238,7 @@ def mixture_sample(
     bucket = F.substring(
         F.md5(
             F.concat_ws(
-                ":", F.col(strata_col), F.col(id_col).cast("string")
+                ":", F.col("source"), F.col("doc_id").cast("string")
             ).cast("binary")
         ),
         1,
@@ -278,44 +250,28 @@ def mixture_sample(
     )
 
 
-def clean_text(
-    df: DataFrame,
-    text_col: str = "text",
-    lowercase: bool = True,
-    max_chars: int | None = None,
-) -> DataFrame:
+def clean_text(df: DataFrame) -> DataFrame:
     """Normalization pass every training corpus runs first: strip control
-    characters, collapse runs of whitespace to single spaces, trim,
-    optionally lowercase and truncate. Pure Catalyst regexp/string chain
-    — map-only codegen at any scale; appends a ``clean`` column.
+    characters from ``text``, collapse runs of whitespace to single
+    spaces, trim and lowercase. Pure Catalyst regexp/string chain —
+    map-only codegen at any scale; appends a ``clean`` column.
 
     The whitespace class is spelled explicitly ([ \\t\\n\\r\\f]) rather
     than \\s because Java regex includes \\x0B in \\s and RE2 does not —
     the explicit class keeps Spark and DuckDB byte-identical."""
-    c = F.regexp_replace(F.col(text_col), r"[\x00-\x08\x0b-\x1f\x7f]", "")
+    c = F.regexp_replace(F.col("text"), r"[\x00-\x08\x0b-\x1f\x7f]", "")
     c = F.regexp_replace(c, r"[ \t\n\r\f]+", " ")
-    c = F.trim(c)
-    if lowercase:
-        c = F.lower(c)
-    if max_chars is not None:
-        c = F.substring(c, 1, max_chars)
-    return df.withColumn("clean", c)
+    return df.withColumn("clean", F.lower(F.trim(c)))
 
 
-def dsir_scores(
-    df: DataFrame,
-    target_pred: Column,
-    n_buckets: int = 256,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_scores(df: DataFrame, target_pred: Column) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every document by
     how much its hashed n-gram profile looks like a target domain vs the
     rest of the corpus; training-data selection then keeps/resamples the
-    top-scoring docs.
+    top-scoring ``(doc_id, text)`` docs.
 
-    Features are unigrams + bigrams hashed into ``n_buckets`` buckets
+    Features are unigrams + bigrams hashed into 256 buckets
     (md5-prefix hash — canonical across engines). Both bucket
     distributions get add-one smoothing; a document's raw score is
     Σ_features ln(p_target[b(f)] / p_rest[b(f)]).
@@ -329,23 +285,20 @@ def dsir_scores(
     an order-free exact aggregation. Output ``dsir_micro_nats`` is that
     integer score; divide by 1e6 for nats.
 
-    Scale shape: the bucket table is O(n_buckets) — two groupBy passes
+    Scale shape: the bucket table is O(256) — two groupBy passes
     over exploded features (uniform md5 keys), then a broadcast join of
     the tiny log-ratio table against the feature stream and one integer
     sum per doc. Map-side combine does the heavy lifting; no skew, no
     driver-side state.
     """
-    feats = F.concat(
-        words(F.col(text_col)), word_shingles(words(F.col(text_col)), 2)
-    )
+    feats = F.concat(words(F.col("text")), word_shingles(words(F.col("text")), 2))
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         target_pred.alias("is_target"),
         F.explode(feats).alias("f"),
     ).withColumn(
         "b",
-        F.conv(F.substring(F.md5(F.col("f")), 1, 8), 16, 10).cast("long")
-        % n_buckets,
+        F.conv(F.substring(F.md5(F.col("f")), 1, 8), 16, 10).cast("long") % 256,
     )
     dist = base.groupBy("b").agg(
         F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("ct"),
@@ -358,8 +311,8 @@ def dsir_scores(
         "b",
         F.floor(
             (
-                F.log((F.col("ct") + 1) / (F.col("tt") + n_buckets))
-                - F.log((F.col("cr") + 1) / (F.col("tr") + n_buckets))
+                F.log((F.col("ct") + 1) / (F.col("tt") + 256))
+                - F.log((F.col("cr") + 1) / (F.col("tr") + 256))
             )
             * 1e6
         )
@@ -377,17 +330,14 @@ def dsir_scores(
 
 
 def unigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_max_types: int | None = 2_000_000,
+    df: DataFrame, broadcast_max_types: int | None = 2_000_000
 ) -> DataFrame:
-    """CCNet-style language-model quality scoring (Wenzek et al. 2020
-    filter documents by LM perplexity), with the LM reduced to the
-    largest model whose training is one distributed pass: a corpus-fit
-    unigram LM with add-one smoothing. Low mean surprisal ≈ typical
-    text; high ≈ noise/outliers — the same accept/reject signal shape
-    CCNet gets from its KenLM 5-gram.
+    """CCNet-style language-model quality scoring (Wenzek et al. 2020 filter
+    documents by LM perplexity) of ``(doc_id, text)`` documents, with the LM
+    reduced to the largest model whose training is one distributed pass: a
+    corpus-fit unigram LM with add-one smoothing. Low mean surprisal ≈
+    typical text; high ≈ noise/outliers — the same accept/reject signal
+    shape CCNet gets from its KenLM 5-gram.
 
     Per-token surprisal -ln p(w) is floored to integer micro-nats once
     per TYPE, so each document's total is an order-free integer sum
@@ -405,9 +355,7 @@ def unigram_surprisal(
     ``broadcast_max_types=None`` skips the probe and leaves the choice
     to AQE.
     """
-    toks = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(words(F.col(text_col))).alias("w")
-    )
+    toks = df.select("doc_id", F.explode(words(F.col("text"))).alias("w"))
     vocab = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     stats = vocab.agg(
         F.sum("c").alias("total"), F.count(F.lit(1)).alias("v")
@@ -440,13 +388,9 @@ def unigram_surprisal(
     )
 
 
-def bigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_max_types: int | None = 2_000_000,
-) -> DataFrame:
-    """Interpolated bigram-LM surprisal — one Markov order up from
+def bigram_surprisal(df: DataFrame) -> DataFrame:
+    """Interpolated bigram-LM surprisal of ``(doc_id, text)`` documents —
+    one Markov order up from
     ``unigram_surprisal``, the next step toward CCNet's KenLM 5-gram
     (Wenzek et al. 2020) while training stays two distributed counting
     passes. Per transition:
@@ -471,12 +415,11 @@ def bigram_surprisal(
     keys, map-side combine), a three-way type-table join (bigram types ×
     two unigram lookups — all type-cardinality, not corpus-cardinality),
     then the SIZE-AWARE join of scored types back against the transition
-    stream (``runtime.size_aware_side``: bigram types outgrow broadcast far
-    sooner than vocabularies — the probe matters more here, not less).
+    stream (``runtime.size_aware_side`` with a 2M-type broadcast limit:
+    bigram types outgrow broadcast far sooner than vocabularies — the
+    probe matters more here, not less).
     """
-    docs = df.select(
-        F.col(id_col).alias("doc_id"), words(F.col(text_col)).alias("ws")
-    )
+    docs = df.select("doc_id", words(F.col("text")).alias("ws"))
     toks = docs.select("doc_id", F.explode("ws").alias("w"))
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     stats = uni.agg(F.sum("c").alias("total"), F.count(F.lit(1)).alias("v"))
@@ -503,7 +446,7 @@ def bigram_surprisal(
             .alias("s_micro"),
         )
     )
-    side = size_aware_side(scored, bgt, broadcast_max_types)
+    side = size_aware_side(scored, bgt, 2_000_000)
     return (
         pairs.join(side, ["w1", "w2"])
         .groupBy("doc_id")
@@ -586,18 +529,13 @@ def simulated_refresh_sql(extra_cols: str = "") -> str:
     """
 
 
-def snapshot_delta(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Change-data-capture between two corpus snapshots — the refresh
-    primitive of a living training corpus (monthly crawl drops, takedown
-    removals, re-extraction fixes): per document id, status ∈
-    added / removed / changed / unchanged plus both content hashes, so
-    downstream stages re-process exactly the added ∪ changed slice
-    instead of the whole corpus.
+def snapshot_delta(old: DataFrame, new: DataFrame) -> DataFrame:
+    """Change-data-capture between two ``(doc_id, text)`` corpus snapshots —
+    the refresh primitive of a living training corpus (monthly crawl drops,
+    takedown removals, re-extraction fixes): per document id, status ∈ added
+    / removed / changed / unchanged plus both content hashes, so downstream
+    stages re-process exactly the added ∪ changed slice instead of the whole
+    corpus.
 
     Shape: map-side sha256 content fingerprints (never ship the text),
     one full-outer equi-join on the id — uniform key, sort-merge at TB
@@ -606,12 +544,10 @@ def snapshot_delta(
     either snapshot.
     """
     o = old.select(
-        F.col(id_col).alias("doc_id"),
-        F.sha2(F.col(text_col).cast("binary"), 256).alias("old_sha"),
+        "doc_id", F.sha2(F.col("text").cast("binary"), 256).alias("old_sha")
     )
     n = new.select(
-        F.col(id_col).alias("doc_id"),
-        F.sha2(F.col(text_col).cast("binary"), 256).alias("new_sha"),
+        "doc_id", F.sha2(F.col("text").cast("binary"), 256).alias("new_sha")
     )
     status = (
         F.when(F.col("old_sha").isNull(), "added")
@@ -625,14 +561,9 @@ def snapshot_delta(
     )
 
 
-def curriculum_buckets(
-    df: DataFrame,
-    n_buckets: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def curriculum_buckets(df: DataFrame) -> DataFrame:
     """Equi-depth difficulty bucketing for curriculum-ordered training:
-    bucket documents into ``n_buckets`` quantile bins of token count
+    bucket ``(doc_id, text)`` documents into 10 quantile bins of token count
     (easy→hard) plus a deterministic intra-bucket shuffle key. Consumers
     ``orderBy(bucket, shuffle_key)`` — a distributed range sort, NOT a
     global row_number window (which would funnel the corpus through one
@@ -641,16 +572,16 @@ def curriculum_buckets(
     Exact, engine-portable quantiles with NO floating interpolation:
     thresholds come from the cumulative distribution of DISTINCT token
     counts — t_q = min value whose running count reaches
-    ``ceil(q·N / n_buckets)`` (integer arithmetic only, the
+    ``ceil(q·N / 10)`` (integer arithmetic only, the
     percentile_disc definition). The distinct-value table is tiny
     relative to the corpus (bounded by max document length), so its
     single-partition cumulative window is a constant-size step at any
     corpus scale; the per-document bucket assignment is a map against the
     broadcast one-row threshold array.
     """
+    n_buckets = 10
     d = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(words(F.col(text_col))).cast("long").alias("n_tokens"),
+        "doc_id", F.size(words(F.col("text"))).cast("long").alias("n_tokens")
     )
     vc = d.groupBy("n_tokens").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("n_tokens").rowsBetween(
@@ -688,24 +619,17 @@ def curriculum_buckets(
     )
 
 
-def ivm_refresh(
-    v1: DataFrame,
-    v2: DataFrame,
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Incremental view maintenance of a per-``group_col`` (count, chars)
-    aggregate across a snapshot change, via TRUE multiset insert/retract
-    algebra: snapshots reduce to per-(id, group, sha256(text))
-    MULTIPLICITIES, and the delta per key is c₂ − c₁ — so duplicate
-    rows (a snapshot written twice, an append glitch) and group moves
-    (same id, same text, new group) both maintain correctly; the
-    refreshed view is base ⊕ Σ(count-weighted deltas), dropping
-    zero-count groups. (The earlier set-based anti-join form missed
-    both cases — each found by the randomized pytest.) Equals a full
-    recomputation over v2 by construction (and by the driver oracle +
-    randomized pytest).
+def ivm_refresh(v1: DataFrame, v2: DataFrame) -> DataFrame:
+    """Incremental view maintenance of a per-``source`` (count, chars)
+    aggregate of ``(doc_id, source, text)`` rows across a snapshot change,
+    via TRUE multiset insert/retract algebra: snapshots reduce to per-(id,
+    group, sha256(text)) MULTIPLICITIES, and the delta per key is c₂ − c₁ —
+    so duplicate rows (a snapshot written twice, an append glitch) and group
+    moves (same id, same text, new group) both maintain correctly; the
+    refreshed view is base ⊕ Σ(count-weighted deltas), dropping zero-count
+    groups. (The earlier set-based anti-join form missed both cases — each
+    found by the randomized pytest.) Equals a full recomputation over v2 by
+    construction (and by the driver oracle + randomized pytest).
 
     Scale shape: one per-key count aggregate per snapshot
     (map-combinable), ONE full-outer equi-join on the key whose output
@@ -717,10 +641,10 @@ def ivm_refresh(
     def keyed(df: DataFrame) -> DataFrame:
         return (
             df.select(
-                F.col(id_col).alias("_id"),
-                F.col(group_col).alias("_grp"),
-                F.sha2(F.col(text_col), 256).alias("_sha"),
-                F.length(text_col).cast("long").alias("_chars"),
+                F.col("doc_id").alias("_id"),
+                F.col("source").alias("_grp"),
+                F.sha2(F.col("text"), 256).alias("_sha"),
+                F.length("text").cast("long").alias("_chars"),
             )
             .groupBy("_id", "_grp", "_sha")
             .agg(
@@ -756,7 +680,7 @@ def ivm_refresh(
     return (
         base.join(delta, "_grp", "full_outer")
         .select(
-            F.col("_grp").alias(group_col),
+            F.col("_grp").alias("source"),
             (
                 F.coalesce("_n_docs", F.lit(0)) + F.coalesce("_d_docs", F.lit(0))
             ).alias("n_docs"),

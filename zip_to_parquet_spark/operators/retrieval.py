@@ -36,16 +36,11 @@ __all__ = [
 ]
 
 
-def tfidf_topk_terms(
-    docs: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_max_types: int | None = 2_000_000,
-) -> DataFrame:
-    """Per-document top-k terms by TF-IDF — the keyword-extraction /
-    feature-selection complement to :func:`bm25_topk` (which scores docs
-    for a query; this scores terms for a doc).
+def tfidf_topk_terms(docs: DataFrame) -> DataFrame:
+    """Per-document top-3 terms by TF-IDF of ``(doc_id, text)`` documents —
+    the keyword-extraction / feature-selection complement to
+    :func:`bm25_topk` (which scores docs for a query; this scores terms for
+    a doc).
 
     Determinism for oracle parity: idf is floored to integer micro-nats
     per TERM (``floor(ln(N/df) * 1e6)``, the repo's standard trick — one
@@ -56,16 +51,16 @@ def tfidf_topk_terms(
     Plan shape: explode → tf groupBy on (doc, term) — the natural key, one
     shuffle proportional to corpus tokens; df is a second aggregation of
     the already-small tf table; the one-row corpus count rides a broadcast
-    and the per-term idf table joins size-aware
+    and the per-term idf table joins size-aware up to 2M terms
     (:func:`~zip_to_parquet_spark.runtime.size_aware_side` — a 100 TB
     vocabulary falls back to a shuffle join on the term key instead of
     blowing the broadcast limit). Top-k per doc is a window over the doc's
     own terms only.
     """
     tok = docs.select(
-        F.col(id_col), F.explode(words(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(words(F.col("text"))).alias("term")
     )
-    tf = tok.groupBy(id_col, "term").agg(
+    tf = tok.groupBy("doc_id", "term").agg(
         F.count("*").cast("bigint").alias("tf")
     )
     n_docs = docs.agg(F.count("*").cast("bigint").alias("n_docs"))
@@ -80,21 +75,21 @@ def tfidf_topk_terms(
         .cast("bigint")
         .alias("idf_micro"),
     )
-    idf_side = size_aware_side(idf_tbl, df_tbl, broadcast_max_types)
+    idf_side = size_aware_side(idf_tbl, df_tbl, 2_000_000)
     scored = tf.join(idf_side, "term").select(
-        F.col(id_col),
+        F.col("doc_id"),
         "term",
         "tf",
         "idf_micro",
         (F.col("tf") * F.col("idf_micro")).cast("bigint").alias("score_micro"),
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score_micro").desc(), F.col("term")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "term", "tf", "idf_micro", "score_micro", "rank")
+        .filter(F.col("rank") <= 3)
+        .select("doc_id", "term", "tf", "idf_micro", "score_micro", "rank")
     )
 
 
@@ -102,12 +97,9 @@ def bm25_topk(
     docs: DataFrame,
     terms: list[str] | DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """Top-k documents by BM25 score for a bag of query terms.
+    """Top-k ``(doc_id, text)`` documents by BM25 score (k1 = 1.2,
+    b = 0.75) for a bag of query terms.
 
     Returns (doc_id, score, rank) for documents matching ≥1 term. The
     corpus stats (N, avgdl) ride a single-row broadcast join — no
@@ -120,25 +112,25 @@ def bm25_topk(
     via a broadcast semi join, so a data-dependent query never round-trips
     through the driver."""
     base = docs.select(
-        F.col(id_col), F.size(words(F.col(text_col))).cast("bigint").alias("dl")
+        F.col("doc_id"), F.size(words(F.col("text"))).cast("bigint").alias("dl")
     )
     stats = base.agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
     tok = docs.select(
-        F.col(id_col), F.explode(words(F.col(text_col))).alias("t")
+        F.col("doc_id"), F.explode(words(F.col("text"))).alias("t")
     )
     if isinstance(terms, DataFrame):
         tok = tok.join(F.broadcast(terms.select("t").distinct()), "t", "semi")
     else:
         tok = tok.filter(F.col("t").isin(*terms))
-    tf = tok.groupBy(id_col, "t").agg(F.count("*").cast("bigint").alias("tf"))
+    tf = tok.groupBy("doc_id", "t").agg(F.count("*").cast("bigint").alias("tf"))
     df_tbl = tf.groupBy("t").agg(F.count("*").cast("bigint").alias("df"))
 
     scored = (
         tf.join(F.broadcast(df_tbl), "t")
-        .join(base, id_col)
+        .join(base, "doc_id")
         .crossJoin(F.broadcast(stats))
     )
     idf = F.log(
@@ -147,16 +139,16 @@ def bm25_topk(
         + F.lit(1.0)
     )
     contrib = idf * (
-        F.col("tf") * (k1 + 1)
-    ) / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-    per_term = scored.select(F.col(id_col), F.col("t"), contrib.alias("c"))
+        F.col("tf") * 2.2
+    ) / (F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl")))
+    per_term = scored.select(F.col("doc_id"), F.col("t"), contrib.alias("c"))
     # Sequential, term-ordered fold: array_sort on (t, c) structs orders by
     # term; aggregate adds left-to-right — same doubles in any engine.
     per_doc = (
-        per_term.groupBy(id_col)
+        per_term.groupBy("doc_id")
         .agg(F.array_sort(F.collect_list(F.struct("t", "c"))).alias("cs"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.round(
                 F.aggregate(
                     "cs", F.lit(0.0), lambda acc, x: acc + x.getField("c")
@@ -169,25 +161,18 @@ def bm25_topk(
     # each partition contributes its local top-k, no single-partition
     # window over all matching docs); the rank window then runs over just
     # k rows.
-    top = per_doc.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col))
+    top = per_doc.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
+    w = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
     return top.withColumn("rank", F.row_number().over(w))
 
 
-def rrf_fuse(
-    rankings: dict[str, DataFrame],
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
-    k0: int = 60,
-    scale: int = 1_000_000_000,
-    topk: int = 20,
-) -> DataFrame:
+def rrf_fuse(rankings: dict[str, DataFrame]) -> DataFrame:
     """Reciprocal-rank fusion (Cormack/Clarke/Buettcher 2009) of named
-    rankings → (id, rank_<name>..., rrf_micro, fused_rank).
+    rankings → top 20 (doc_id, rank_<name>..., rrf_micro, fused_rank).
 
-    Each input is a bounded top-n list (id, rank). The fused score is the
-    classic RRF sum Σ 1/(k0 + rank) held EXACT as integers:
-    ``scale div (k0 + rank)`` is truncating integer division of positive
+    Each input is a bounded top-n list (doc_id, rank). The fused score is
+    the classic RRF sum Σ 1/(60 + rank) held EXACT as integers:
+    ``10⁹ div (60 + rank)`` is truncating integer division of positive
     ints — identical in any engine — so the fusion carries a full value
     oracle (a float RRF sum would be summation-order-dependent). A doc
     missing from a list contributes 0 (standard RRF).
@@ -202,21 +187,21 @@ def rrf_fuse(
     contribs = []
     for name, df in rankings.items():
         r = df.select(
-            F.col(id_col),
-            F.col(rank_col).cast("bigint").alias(f"rank_{name}"),
+            F.col("doc_id"),
+            F.col("rank").cast("bigint").alias(f"rank_{name}"),
         )
-        fused = r if fused is None else fused.join(r, id_col, "full_outer")
+        fused = r if fused is None else fused.join(r, "doc_id", "full_outer")
         contribs.append(
             F.coalesce(
-                F.expr(f"{scale} div ({k0} + rank_{name})"), F.lit(0).cast("bigint")
+                F.expr(f"1000000000 div (60 + rank_{name})"), F.lit(0).cast("bigint")
             )
         )
     score = contribs[0]
     for c in contribs[1:]:
         score = score + c
     out = fused.withColumn("rrf_micro", score.cast("bigint"))
-    top = out.orderBy(F.col("rrf_micro").desc(), F.col(id_col)).limit(topk)
-    w = Window.orderBy(F.col("rrf_micro").desc(), F.col(id_col))
+    top = out.orderBy(F.col("rrf_micro").desc(), F.col("doc_id")).limit(20)
+    w = Window.orderBy(F.col("rrf_micro").desc(), F.col("doc_id"))
     return top.withColumn("fused_rank", F.row_number().over(w).cast("bigint"))
 
 

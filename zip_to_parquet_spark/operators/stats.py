@@ -94,10 +94,11 @@ def quantile_disc_thresholds(
 
 
 def quantile_disc_thresholds_multi(
-    df: DataFrame, cols: list[str], denom: int = 4, n_buckets: int = 16
+    df: DataFrame, cols: list[str]
 ) -> dict[str, dict[int, int]]:
-    """Exact discrete quantile thresholds for SEVERAL integer columns at
-    once — same definition as :func:`quantile_disc_thresholds`, but all
+    """Exact discrete quartile thresholds for SEVERAL integer columns at
+    once — same definition as :func:`quantile_disc_thresholds` with
+    ``denom=4``, but all
     metrics share each pass, so the whole computation is THREE bounded
     jobs total instead of three per metric (each driver job costs fixed
     scheduling latency; at 3 metrics the sequential single-metric path
@@ -105,13 +106,13 @@ def quantile_disc_thresholds_multi(
 
     1. one min/max aggregate over every metric (2·|cols| scalars);
     2. metrics melt into (metric, v) via ``stack`` → one shared
-       histogram groupBy; per-(metric, bucket) totals collect
-       (≤ |cols|·n_buckets rows);
+       histogram groupBy into 16 value-range buckets; per-(metric,
+       bucket) totals collect (≤ |cols|·16 rows);
     3. within-bucket cumsum window PARTITIONED BY (metric, bucket) +
        driver prefix offsets → one thresholds collect
-       (≤ |cols|·(denom−1) rows).
+       (≤ |cols|·3 rows).
 
-    Returns ``{col: {k: threshold}}`` for ``k in 1..denom-1``."""
+    Returns ``{col: {k: threshold}}`` for ``k in 1..3``."""
     bounds = df.agg(
         *[
             f
@@ -137,7 +138,7 @@ def quantile_disc_thresholds_multi(
                     F.when(
                         F.col("metric") == c,
                         F.expr(
-                            f"((v - {bounds[f'lo_{c}']}L) * {n_buckets})"
+                            f"((v - {bounds[f'lo_{c}']}L) * 16)"
                             f" div ({bounds[f'hi_{c}'] - bounds[f'lo_{c}'] + 1}L)"
                         ),
                     )
@@ -166,9 +167,9 @@ def quantile_disc_thresholds_multi(
         )
     )
     need_rows = [
-        (m, k, -(-k * n_per_metric[m] // denom))
+        (m, k, -(-k * n_per_metric[m] // 4))
         for m in cols
-        for k in range(1, denom)
+        for k in range(1, 4)
     ]
     need_df = F.broadcast(
         df.sparkSession.createDataFrame(

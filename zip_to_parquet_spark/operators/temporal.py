@@ -35,14 +35,9 @@ __all__ = [
 ]
 
 
-def funnel_stage_counts(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Ordered-sequence funnel: how many users reached step 1, then step 2
+def funnel_stage_counts(events: DataFrame, steps: list[str]) -> DataFrame:
+    """Ordered-sequence funnel over ``(user_id, ts, event_type)`` events:
+    how many users reached step 1, then step 2
     strictly after their matched step 1, and so on (the product-analytics
     funnel; greedy earliest-match semantics, which equals the staged
     ``min(ts) > previous`` formulation and is what the oracle computes).
@@ -65,10 +60,10 @@ def funnel_stage_counts(
     fresh process, 1.54 s here against 1.98 s (minima; every pass
     slower). It was deleted.
     """
-    ev = events.filter(F.col(type_col).isin(*steps)).select(
-        F.col(user_col).alias("__u"),
-        F.unix_micros(F.col(ts_col)).alias("__us"),
-        F.col(type_col).alias("__t"),
+    ev = events.filter(F.col("event_type").isin(*steps)).select(
+        F.col("user_id").alias("__u"),
+        F.unix_micros(F.col("ts")).alias("__us"),
+        F.col("event_type").alias("__t"),
     )
     per_user = ev.groupBy("__u").agg(
         F.array_sort(F.collect_list(F.struct("__us", "__t"))).alias("__evs")
@@ -117,12 +112,9 @@ def _stage_rollup(reached: DataFrame, steps: list[str]) -> DataFrame:
     )
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Cohort retention matrix: users grouped by first-active date, counted
+def retention_cohorts(events: DataFrame) -> DataFrame:
+    """Cohort retention matrix of ``(user_id, ts)`` events: users grouped
+    by first-active date, counted
     on each later active date as a day offset — the classic growth-
     analytics triangle.
 
@@ -133,7 +125,7 @@ def retention_cohorts(
     ``(cohort_date, day_offset)`` — uniform keys at any scale.
     """
     days = events.select(
-        F.col(user_col).alias("__u"), F.to_date(F.col(ts_col)).alias("__d")
+        F.col("user_id").alias("__u"), F.to_date(F.col("ts")).alias("__d")
     ).distinct()
     first = days.groupBy("__u").agg(F.min("__d").alias("cohort_date"))
     return (
@@ -198,23 +190,17 @@ def asof_join(
     )
 
 
-def range_join_pairs(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    payload: list[str],
-    max_gap_seconds: int,
-) -> DataFrame:
+def range_join_pairs(df: DataFrame, key: str, payload: list[str]) -> DataFrame:
     """Self range join: all ordered pairs (a, b) with the same key and
-    ``a.ts < b.ts <= a.ts + max_gap``.
+    ``a.ts < b.ts <= a.ts + 300 s``.
 
-    Bucketing: with bucket width == max_gap, any qualifying b lives in
+    Bucketing: with bucket width == the 300 s gap, any qualifying b lives in
     a's bucket or the next one. The left side duplicates each row into
     those two bucket keys, then an equi-join on (key, bucket) + the exact
     range filter gives completeness without any theta/cross join.
     """
-    gap_us = max_gap_seconds * 1_000_000
-    us = F.unix_micros(F.col(ts))
+    gap_us = 300_000_000
+    us = F.unix_micros(F.col("ts"))
     base = df.select(
         F.col(key).alias("__k"),
         us.alias("__us"),
@@ -245,15 +231,11 @@ def range_join_pairs(
     )
 
 
-def cogroup_attribution(
-    purchases,
-    clicks,
-    window_minutes: int = 30,
-):
+def cogroup_attribution(purchases, clicks):
     """Per-user conversion attribution via COGROUPED applyInPandas → one
     row per purchase ``(user_id, purchase_event_id, n_prior_clicks,
     attributed)``: the count of the same user's clicks strictly before
-    the purchase and within ``window_minutes`` (the stream_stream_join
+    the purchase and within 30 minutes (the stream_stream_join
     interval semantics, batch-side).
 
     Exists to exercise the one Pandas-on-Spark execution mechanism the
@@ -273,7 +255,7 @@ def cogroup_attribution(
     import numpy as np
     import pandas as pd
 
-    delta = np.timedelta64(window_minutes * 60_000_000, "us")
+    delta = np.timedelta64(30 * 60_000_000, "us")
 
     def reconcile(pdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:

@@ -58,11 +58,12 @@ def word_shingles(words_col: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_chunks(words_col: Column, size: int = 32, stride: int = 24) -> Column:
-    """Overlapping word windows for RAG-style context chunking.
+def word_chunks(words_col: Column) -> Column:
+    """Overlapping 32-word windows at stride 24 for RAG-style context
+    chunking.
 
-    Chunk starts are ``1, 1+stride, …`` while ``start <= max(1,
-    n - (size - stride))`` — every word is covered, the final chunk may be
+    Chunk starts are ``1, 25, …`` while ``start <= max(1, n - 8)`` —
+    every word is covered, the final chunk may be
     short, and a trailing start whose window would be fully contained in
     the previous chunk is never emitted. Returns an array of structs
     ``(start, n_chunk_tokens, chunk_text)``; callers ``posexplode`` for a
@@ -72,24 +73,22 @@ def word_chunks(words_col: Column, size: int = 32, stride: int = 24) -> Column:
     expression — the chunk array lives inside the row, so chunking is
     map-only at any corpus size (no shuffle, no Python).
     """
-    if stride <= 0 or size < stride:
-        raise ValueError(f"need 0 < stride <= size, got {size=} {stride=}")
     w = words_col
     n = F.size(w)
-    last_start = F.greatest(F.lit(1), n - (size - stride))
-    starts = F.sequence(F.lit(1), last_start, F.lit(stride))
+    last_start = F.greatest(F.lit(1), n - (32 - 24))
+    starts = F.sequence(F.lit(1), last_start, F.lit(24))
     return F.transform(
         starts,
         lambda s: F.struct(
             s.alias("start"),
-            F.least(F.lit(size), n - s + 1).alias("n_chunk_tokens"),
-            F.array_join(F.slice(w, s, size), " ").alias("chunk_text"),
+            F.least(F.lit(32), n - s + 1).alias("n_chunk_tokens"),
+            F.array_join(F.slice(w, s, 32), " ").alias("chunk_text"),
         ),
     )
 
 
-def stopword_ratio(words_col: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    n_stop = F.size(F.filter(words_col, lambda x: x.isin(*stopwords)))
+def stopword_ratio(words_col: Column) -> Column:
+    n_stop = F.size(F.filter(words_col, lambda x: x.isin(*EN_STOPWORDS)))
     return n_stop / F.greatest(F.size(words_col), F.lit(1))
 
 
@@ -102,11 +101,11 @@ def token_count_regex(text: Column) -> Column:
     return F.regexp_count(text, F.lit(TOKEN_REGEX))
 
 
-def winnow_fingerprints(text: Column, n: int = 8, w: int = 4) -> Column:
+def winnow_fingerprints(text: Column) -> Column:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
-    SIGMOD'03): rolling char-n-gram hashes → per-window-of-w minima →
-    distinct set. Robust to insertions/reordering at sub-window scale;
-    the standard local-fingerprinting scheme behind MOSS-style clone
+    SIGMOD'03): rolling char-n-gram hashes (n = 8) → per-window-of-w minima
+    (w = 4) → distinct set. Robust to insertions/reordering at sub-window
+    scale; the standard local-fingerprinting scheme behind MOSS-style clone
     detection.
 
     All Catalyst higher-order functions over in-row arrays (constant-size
@@ -114,6 +113,7 @@ def winnow_fingerprints(text: Column, n: int = 8, w: int = 4) -> Column:
     across engines for oracle parity. Documents shorter than n+w-1 chars
     yield an empty set.
     """
+    n, w = 8, 4
 
     def seq_or_empty(upper: Column) -> Column:
         # sequence(1, 0) DESCENDS in Spark; guard the short-string case.
@@ -170,13 +170,9 @@ TOPIC_LEXICONS = (
 )
 
 
-def topic_classify(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lexicons=TOPIC_LEXICONS,
-) -> DataFrame:
-    """Keyword-lexicon topic bucketing — the cheap, fully-auditable form
+def topic_classify(df: DataFrame) -> DataFrame:
+    """Keyword-lexicon topic bucketing of ``(doc_id, text)`` documents by
+    TOPIC_LEXICONS — the cheap, fully-auditable form
     of domain classification used to stratify corpus mixtures (each doc
     gets per-topic occurrence counts and an argmax topic; downstream
     mixture sampling keys on the topic the way mixture_sample_by_source
@@ -189,7 +185,8 @@ def topic_classify(
     zero hits everywhere → 'none'. Every branch mirrors into SQL
     literally, so the key is full-value-oracle-checkable.
     """
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
+    lexicons = TOPIC_LEXICONS
 
     def in_lex(lex):
         # A separate factory, NOT a default-arg lambda: F.filter treats a
@@ -202,7 +199,7 @@ def topic_classify(
         for name, lex in lexicons
     ]
     d = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.size(ws).cast("long").alias("n_tokens"),
         *hit_cols,
     )
@@ -220,10 +217,10 @@ def topic_classify(
 
 
 def boilerplate_line_stats(
-    lines: DataFrame, min_df: int = 2, hash_keys: bool = False
+    lines: DataFrame, hash_keys: bool = False
 ) -> DataFrame:
     """CCNet-style boilerplate-line removal rollup over an exploded
-    ``(doc_id, line, wc)`` frame: lines appearing in >= ``min_df``
+    ``(doc_id, line, wc)`` frame: lines appearing in >= 2
     distinct documents are boilerplate; per document emit line/word
     totals and the kept-word mass after dropping them.
 
@@ -249,7 +246,7 @@ def boilerplate_line_stats(
     boiler = (
         keyed.groupBy("line_key")
         .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= 2)
         .select("line_key", F.lit(True).alias("is_boiler"))
     )
     marked = keyed.join(boiler, "line_key", "left").withColumn(

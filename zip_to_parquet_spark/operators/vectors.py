@@ -90,16 +90,7 @@ def hyperplane_multitable_udf(
     return buckets
 
 
-def lsh_params_for(
-    n_vectors: int,
-    threshold: float,
-    target_bucket: int = 64,
-    max_miss: float = 1e-6,
-    min_planes: int = 8,
-    max_planes: int = 24,
-    min_tables: int = 32,
-    max_tables: int = 4096,
-) -> dict:
+def lsh_params_for(n_vectors: int, threshold: float) -> dict:
     """Corpus-sized hyperplane-LSH parameters for :func:`cosine_lsh_pairs`.
 
     A FIXED plane count is a scale bug: 2^n_planes buckets per table
@@ -109,13 +100,14 @@ def lsh_params_for(
     inside oversized buckets). Sizing both dials from the corpus keeps
     candidate volume LINEAR in n with recall held:
 
-    - ``n_planes`` = log2(n / target_bucket), clamped: expected bucket
-      occupancy stays near ``target_bucket``, so per-table candidate
-      volume is ~n/target · C(target, 2) ∝ n.
-    - ``n_tables`` from the OR-amplification bound: a qualifying pair at
-      angle θ = arccos(threshold) collides per table with
-      q^planes (q = 1 - θ/π), so tables = ln(max_miss)/ln(1 - q^planes)
-      holds the miss probability at ``max_miss`` as planes rise.
+    - ``n_planes`` = log2(n / 64), clamped to [8, 24]: expected bucket
+      occupancy stays near 64, so per-table candidate volume is
+      ~n/64 · C(64, 2) ∝ n.
+    - ``n_tables`` from the OR-amplification bound, clamped to
+      [32, 4096]: a qualifying pair at angle θ = arccos(threshold)
+      collides per table with q^planes (q = 1 - θ/π), so
+      tables = ln(1e-6)/ln(1 - q^planes) holds the miss probability at
+      1e-6 as planes rise.
 
     At every fixture scale (≤ 2000 vectors) this resolves to exactly the
     historical (8, 32) — plan and oracle hashes unchanged; the dials move
@@ -123,17 +115,11 @@ def lsh_params_for(
     ~5×10³ candidates per vector instead of ~n/16). Degenerate
     thresholds are clamped — q is held in the open interval (0, 1) so
     threshold=±1.0 returns finite dials instead of a math domain error,
-    and ``max_tables`` bounds the OR-amplification blow-up as q → 0
+    and the 4096-table cap bounds the OR-amplification blow-up as q → 0
     (ADVICE r13). Enumerated in tests/test_operators.py."""
     import math
 
-    planes = max(
-        min_planes,
-        min(
-            max_planes,
-            math.ceil(math.log2(max(1.0, n_vectors / target_bucket))),
-        ),
-    )
+    planes = max(8, min(24, math.ceil(math.log2(max(1.0, n_vectors / 64)))))
     # Clamp q into the OPEN interval: threshold=1.0 gives q=1 (log(0)
     # domain error in the table formula) and threshold=-1.0 gives q=0
     # (log(1)=0 divisor) — both degenerate thresholds must still return
@@ -143,11 +129,7 @@ def lsh_params_for(
     # log1p keeps the denominator finite and non-zero even when q**planes
     # underflows past float resolution (1.0 - 1e-72 rounds to 1.0).
     tables = min(
-        max_tables,
-        max(
-            min_tables,
-            math.ceil(math.log(max_miss) / math.log1p(-(q**planes))),
-        ),
+        4096, max(32, math.ceil(math.log(1e-6) / math.log1p(-(q**planes))))
     )
     return {"n_planes": planes, "n_tables": tables}
 
@@ -275,11 +257,11 @@ def ivf_sample_modulus(n: int, k: int, sample_per_centroid: int) -> int:
     return max(n // max(k * sample_per_centroid, k), 1)
 
 
-def _lloyds(x, k: int, iters: int, seed: int, assign_fn):
+def _lloyds(x, k: int, iters: int, assign_fn):
     """Pure-numpy Lloyd's k-means over an (n, dim) float64 sample;
     ``assign_fn(x, cents)`` → per-row centroid index is the only step the
     two public trainers vary. Deterministic (fixed init from the first k
-    rows, an empty cluster re-seeds from a fixed-seed RandomState), so the
+    rows, an empty cluster re-seeds from a RandomState seeded 42), so the
     SAME array trains the SAME codebook anywhere it runs: the driver-side
     oracle generators replay the public trainers to inline centroids as
     SQL literals."""
@@ -287,7 +269,7 @@ def _lloyds(x, k: int, iters: int, seed: int, assign_fn):
 
     if len(x) < k:
         raise ValueError(f"sample of {len(x)} rows cannot seed {k} centroids")
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     cents = x[:k].copy()  # deterministic init: first k sampled ids
     for _ in range(iters):
         assign = assign_fn(x, cents)
@@ -314,26 +296,19 @@ def _l2_assign(x, cents):
     return d.argmin(axis=1)  # first-min ties == lowest code
 
 
-def lloyds_codebook(x, k: int, iters: int = 10, seed: int = 42):
-    """Cosine Lloyd's k-means (the IVF coarse trainer): each round assigns
-    rows by normalized-cosine argmax. See ``_lloyds``."""
-    return _lloyds(x, k, iters, seed, _cosine_assign)
+def lloyds_codebook(x, k: int):
+    """Cosine Lloyd's k-means (the IVF coarse trainer), 10 rounds: each
+    round assigns rows by normalized-cosine argmax. See ``_lloyds``."""
+    return _lloyds(x, k, 10, _cosine_assign)
 
 
-def train_ivf_codebook(
-    emb,
-    k: int = 64,
-    iters: int = 10,
-    sample_per_centroid: int = 50,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-):
-    """Sampled-k-means IVF codebook: returns a ``(k, dim)`` list of centroid
-    lists, trained with Lloyd's algorithm on a deterministic hash sample.
+def train_ivf_codebook(emb, k: int = 64):
+    """Sampled-k-means IVF codebook over ``(vec_id, v)`` rows: returns a
+    ``(k, dim)`` list of centroid lists, trained with Lloyd's algorithm on
+    a deterministic hash sample.
 
     The sample is taken distributed (crc32-of-id filter — no full collect)
-    and only ~k·sample_per_centroid vectors land on the driver, where numpy
+    and only ~k·16 vectors land on the driver, where numpy
     Lloyd's runs in milliseconds: codebook training is a bounded driver-side
     step by design in IVF builds (FAISS trains on a sample the same way).
     Deterministic: hash sampling, sorted ids, fixed seed/iteration count —
@@ -341,18 +316,13 @@ def train_ivf_codebook(
     ``zlib.crc32(str(id).encode())`` reproduces bit-for-bit outside Spark,
     so the value oracle can replay training from the raw parquet.
     """
-    x = deterministic_training_sample(emb, k, sample_per_centroid, id_col, vec_col)
-    return lloyds_codebook(x, k=k, iters=iters, seed=seed)
+    x = deterministic_training_sample(emb, k, 16)
+    return lloyds_codebook(x, k=k)
 
 
-def deterministic_training_sample(
-    emb,
-    k: int,
-    sample_per_centroid: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-):
-    """The ONE definition of the bounded deterministic training sample:
+def deterministic_training_sample(emb, k: int, sample_per_centroid: int):
+    """The ONE definition of the bounded deterministic training sample of
+    ``(vec_id, v)`` rows:
     crc32-of-decimal-id filter at ``ivf_sample_modulus`` rate, id-sorted,
     float64. Shared by the IVF and PQ trainers — and replayed bit-for-bit
     by the oracle generators in plans/llm.py (same crc32 contract), so
@@ -363,9 +333,9 @@ def deterministic_training_sample(
     m = ivf_sample_modulus(n, k, sample_per_centroid)
     sample = (
         emb.filter(
-            F.crc32(F.col(id_col).cast("string").cast("binary")) % m == 0
+            F.crc32(F.col("vec_id").cast("string").cast("binary")) % m == 0
         )
-        .select(id_col, vec_col)
+        .select("vec_id", "v")
         .collect()
     )
     sample.sort(key=lambda r: r[0])
@@ -396,30 +366,20 @@ def replayed_training_sample(sf_dir: str, k: int, sample_per_centroid: int):
     return np.array([v for _, v in samp], dtype=np.float64)
 
 
-def semantic_dedup_pairs(
-    emb,
-    codebook,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-):
-    """SemDeDup core (Abbas et al. 2023): assign every embedding to its
-    nearest trained centroid (map-only numpy argmax per Arrow batch), then
-    emit exact cosine near-duplicate pairs WITHIN each cluster via an
-    equi-join on the cluster id. Returns ``(assign, pairs)`` DataFrames:
-    assign = (vec_id, v, cluster); pairs = (cluster, vec_a, vec_b,
-    cos_sim) with cos_sim rounded to 6 and ≥ threshold.
+def semantic_dedup_pairs(emb, codebook):
+    """SemDeDup core (Abbas et al. 2023): assign every ``(vec_id, v)``
+    embedding to its nearest trained centroid (map-only numpy argmax per
+    Arrow batch), then emit exact cosine near-duplicate pairs WITHIN each
+    cluster via an equi-join on the cluster id. Returns ``(assign,
+    pairs)`` DataFrames: assign = (vec_id, v, cluster); pairs = (cluster,
+    vec_a, vec_b, cos_sim) with cos_sim rounded to 6 and ≥ 0.95.
 
     Candidate volume is O(Σ cell²); scale k with the corpus so cells stay
     constant-sized (same knob as IVF — 4k-64k cells in production)."""
     nearest_cell, _ = ivf_assign_udfs(
         [(i, c) for i, c in enumerate(codebook)], nprobe=1
     )
-    assign = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        nearest_cell(vec_col).alias("cluster"),
-    )
+    assign = emb.select("vec_id", "v", nearest_cell("v").alias("cluster"))
     # Both sides of the pair self-join AND the caller's members groupBy
     # consume `assign`; without materialization Spark re-runs the scan +
     # argmax UDF once per consumer branch. localCheckpoint, not persist():
@@ -444,19 +404,19 @@ def semantic_dedup_pairs(
             "vec_b",
             F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= 0.95)
     )
     return assign, pairs
 
 
-def lloyds_codebook_l2(x, k: int, iters: int = 10, seed: int = 42):
+def lloyds_codebook_l2(x, k: int, iters: int = 10):
     """Euclidean Lloyd's k-means over an (n, dim) float64 sample — the PQ
     sub-quantizer trainer (raw subvectors, L2 assignment: unlike the
     cosine variant above, PQ must preserve magnitudes because ADC sums
     un-normalized partial inner products). Same deterministic loop as
     ``lloyds_codebook`` (``_lloyds``), so the oracle generator replays it
     bit-for-bit."""
-    return _lloyds(x, k, iters, seed, _l2_assign)
+    return _lloyds(x, k, iters, _l2_assign)
 
 
 def train_pq_codebooks(
@@ -465,23 +425,18 @@ def train_pq_codebooks(
     ksub: int = 16,
     iters: int = 10,
     sample_per_centroid: int = 50,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ):
-    """Product-quantization codebooks: split ``dim`` into ``m`` contiguous
-    subspaces and train an independent ``ksub``-centroid L2 codebook per
-    subspace (Jégou et al. 2011; the FAISS IndexPQ trainer). Returns
-    ``m`` lists of ``ksub`` centroid lists.
+    """Product-quantization codebooks of ``(vec_id, v)`` rows: split ``dim``
+    into ``m`` contiguous subspaces and train an independent
+    ``ksub``-centroid L2 codebook per subspace (Jégou et al. 2011; the FAISS
+    IndexPQ trainer). Returns ``m`` lists of ``ksub`` centroid lists.
 
     Same bounded-driver-sample discipline as ``train_ivf_codebook``: a
     deterministic crc32-of-id filter lands ~ksub·sample_per_centroid rows
     on the driver; numpy trains in milliseconds. The crc32 sample and the
     fixed-seed Lloyd's make training replayable outside Spark, so a value
     oracle can inline the trained centroids as SQL literals."""
-    x = deterministic_training_sample(
-        emb, ksub, sample_per_centroid, id_col, vec_col
-    )
+    x = deterministic_training_sample(emb, ksub, sample_per_centroid)
     if x.ndim < 2:
         # Loud precondition, not an IndexError on .shape[1]: an empty
         # corpus yields a 0-row (1-D) sample (degenerate_sweep allowlist).
@@ -493,21 +448,22 @@ def train_pq_codebooks(
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     dsub = dim // m
     return [
-        lloyds_codebook_l2(x[:, s * dsub : (s + 1) * dsub], k=ksub, iters=iters, seed=seed)
+        lloyds_codebook_l2(x[:, s * dsub : (s + 1) * dsub], k=ksub, iters=iters)
         for s in range(m)
     ]
 
 
-def ivfpq_train_arrays(x, k_coarse=16, m=16, ksub=16, iters=10, seed=42):
+def ivfpq_train_arrays(x):
     """FAISS-IVFPQ trainer (Jégou et al. 2011 §IV; faiss IndexIVFPQ):
-    from ONE deterministic (n, dim) float64 sample, train (a) the coarse
-    cosine codebook with ``lloyds_codebook`` and (b) per-subspace L2
-    codebooks over the RESIDUALS x - coarse_centroid(x) with
-    ``lloyds_codebook_l2``. Encoding residuals instead of raw vectors is
-    the IVFPQ insight: within a cell the residual energy is much smaller
-    than the vector energy, so the same PQ bit budget quantizes far more
-    finely. Returns ``(coarse, cbs)`` — ``coarse`` a (k_coarse, dim)
-    list-of-lists, ``cbs`` m lists of ksub sub-centroids.
+    from ONE deterministic (n, dim) float64 sample, train (a) the
+    16-centroid coarse cosine codebook with ``lloyds_codebook`` and (b)
+    16-centroid L2 codebooks for each of 16 subspaces over the RESIDUALS
+    x - coarse_centroid(x) with ``lloyds_codebook_l2`` (10 rounds).
+    Encoding residuals instead of raw vectors is the IVFPQ insight:
+    within a cell the residual energy is much smaller than the vector
+    energy, so the same PQ bit budget quantizes far more finely. Returns
+    ``(coarse, cbs)`` — ``coarse`` a (16, dim) list-of-lists, ``cbs`` 16
+    lists of 16 sub-centroids.
 
     Pure numpy, deterministic end-to-end (fixed inits/seeds, sample
     assignment replicates ``ivf_assign_udfs``'s normalized-cosine argmax
@@ -516,7 +472,8 @@ def ivfpq_train_arrays(x, k_coarse=16, m=16, ksub=16, iters=10, seed=42):
     literals."""
     import numpy as np
 
-    coarse = lloyds_codebook(x, k=k_coarse, iters=iters, seed=seed)
+    m = 16
+    coarse = lloyds_codebook(x, k=16)
     cmat = np.array(coarse, dtype=np.float64)
     xn = x / np.linalg.norm(x, axis=1, keepdims=True).clip(min=1e-300)
     cn = cmat / np.linalg.norm(cmat, axis=1, keepdims=True).clip(min=1e-300)
@@ -527,9 +484,7 @@ def ivfpq_train_arrays(x, k_coarse=16, m=16, ksub=16, iters=10, seed=42):
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     dsub = dim // m
     cbs = [
-        lloyds_codebook_l2(
-            resid[:, s * dsub : (s + 1) * dsub], k=ksub, iters=iters, seed=seed
-        )
+        lloyds_codebook_l2(resid[:, s * dsub : (s + 1) * dsub], k=16, iters=10)
         for s in range(m)
     ]
     return coarse, cbs
@@ -572,8 +527,9 @@ def pq_encode_udf(codebooks):
     return encode
 
 
-def pq_decode_expr(codebooks, codes_col):
-    """Catalyst reconstruction of the PQ-decoded vector: the trained
+def pq_decode_expr(codebooks):
+    """Catalyst reconstruction of the PQ-decoded vector of the ``codes``
+    column: the trained
     centroids ship as a nested literal array and each code indexes its
     subspace's centroid — pure codegen'd expression, so downstream exact
     arithmetic (the sequential ``dot``) bit-matches a SQL oracle that
@@ -584,10 +540,9 @@ def pq_decode_expr(codebooks, codes_col):
             for sub in codebooks
         ]
     )
-    codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
     return F.flatten(
         F.transform(
-            codes,
+            F.col("codes"),
             lambda c, s: F.element_at(F.element_at(cb_lit, s + F.lit(1)), c + F.lit(1)),
         )
     )
@@ -598,20 +553,18 @@ def gemm_topk_candidates(
     q_ids,
     q_vecs,
     k: int = 5,
-    margin: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     metric: str = "cosine",
 ):
     """Brute-force exact cosine (or inner-product, ``metric='ip'`` — the
-    ADC scorer for PQ-decoded corpora) scoring with per-batch partial
-    top-k; the output column is named ``cos_sim_raw`` for either metric:
+    ADC scorer for PQ-decoded corpora) scoring of ``(vec_id, v)`` rows
+    with per-batch partial top-k; the output column is named
+    ``cos_sim_raw`` for either metric:
     returns (q_id, n_id, cos_sim_raw) candidate rows, ≥ the true top-k
     per query, scored identically to the Catalyst ``cosine()`` column.
 
     The scale fix over the naive broadcast-join + global window: the full
     N×Q similarity matrix never reaches a shuffle. Each Arrow batch scores
-    all queries with vectorized numpy and emits only the (k+margin) best
+    all queries with vectorized numpy and emits only the (k+20) best
     candidates per query, so shuffle volume is O(batches × Q × k) instead
     of O(N × Q) — at 100 TB that is the difference between a rank window
     over trillions of rows and one over a few million.
@@ -622,8 +575,8 @@ def gemm_topk_candidates(
     the same left-to-right double additions as ``F.aggregate``. Final
     rounding/ranking stays in Spark SQL downstream, so oracle tie-breaks
     are decided by exactly the same engine arithmetic as before; the
-    in-batch preselection orders by (numpy round 6, id) with a ``margin``
-    cushion against cross-engine rounding drift at the cut line.
+    in-batch preselection orders by (numpy round 6, id) with a 20-row
+    margin against cross-engine rounding drift at the cut line.
 
     Zero-norm vectors (query or corpus) are excluded here, matching
     ``try_divide`` NULL semantics downstream (NULL never enters top-k).
@@ -644,7 +597,7 @@ def gemm_topk_candidates(
         return np.sqrt(acc)
 
     qn = _seq_sq_norm(qm)
-    take = k + margin
+    take = k + 20
 
     def score(batches):
         import pandas as pd
@@ -652,8 +605,8 @@ def gemm_topk_candidates(
         for pdf in batches:
             if not len(pdf):
                 continue
-            cm = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cid = pdf[id_col].to_numpy(dtype=np.int64)
+            cm = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            cid = pdf["vec_id"].to_numpy(dtype=np.int64)
             dot = np.zeros((len(cm), len(qm)))
             for d in range(cm.shape[1]):
                 dot = dot + np.outer(cm[:, d], qm[:, d])
@@ -695,7 +648,7 @@ def gemm_topk_candidates(
                  "cos_sim_raw": out_s.astype(np.float64)}
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(
+    return corpus.select("vec_id", "v").mapInPandas(
         score, schema="q_id long, n_id long, cos_sim_raw double"
     )
 
@@ -704,13 +657,12 @@ def kmeans_integer(
     emb,
     k: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = 1_000_000,
     offset: int = 4_000_000,
     return_distance_matrix: bool = False,
 ):
-    """Distributed Lloyd's k-means in exact INTEGER micro-units →
+    """Distributed Lloyd's k-means of ``(vec_id, embedding)`` rows in exact
+    INTEGER micro-units →
     ``(vec_id, cluster, dist2)``; with ``return_distance_matrix=True``,
     the full n×k ``(vec_id, cl, d2)`` relation against the FINAL
     centroids instead (one extra broadcast-scoring pass, no shuffle) —
@@ -758,9 +710,9 @@ def kmeans_integer(
     # value exists.
     q = f"cast(floor(cast(e as double) * {scale}) as bigint) + {offset}L"
     x = emb.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.expr(
-            f"transform({vec_col}, e -> case when ({q}) < 0 then"
+            f"transform(embedding, e -> case when ({q}) < 0 then"
             f" cast(raise_error('kmeans_integer: coordinate below"
             f" -offset/scale; raise offset to keep floor division exact')"
             f" as bigint) else ({q}) end)"

@@ -37,10 +37,11 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed key.
 #
 # Pin basis: ``python scripts/window_pin.py --list`` on the tree that
-# folds the copied key stages into one function each (46 keys' reachable
-# code changed, their plans did not); its list equals the pin taken on the
-# tree that reads the central-directory probe through the one archive
-# reader, and on the tree that deleted the text_chunk_windows_udtf and
+# folds every parameter its callers set to one value into a literal or a
+# module constant; its list equals the pin taken on the tree that folds
+# the copied key stages into one function each, on the tree that reads
+# the central-directory probe through the one archive reader, and on the
+# tree that deleted the text_chunk_windows_udtf and
 # events_funnel_partitioned twins (the deleted key's slot went to
 # stats_mannwhitney_u, order otherwise unchanged; ``set_priority`` raises
 # on an unregistered key).

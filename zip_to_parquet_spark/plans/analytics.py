@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zip_to_parquet_spark.operators.dedupe import (
-    duck_hot_having_sql,
+    DUCK_HOT_HAVING_SQL,
     containment_pairs,
     shingle_sets,
     word_edit_pairs,
@@ -56,7 +56,7 @@ from zip_to_parquet_spark.schema import load_table
     e AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
     hot AS (
       SELECT shingle FROM e GROUP BY shingle
-      HAVING {duck_hot_having_sql('SELECT count(*) FROM s')}
+      HAVING {DUCK_HOT_HAVING_SQL}
     ),
     eg AS (SELECT e.* FROM e ANTI JOIN hot USING (shingle)),
     cand AS (
@@ -75,7 +75,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard misses. Same inverted-index + exact-verify shape as the
     Jaccard key (operators.dedupe.containment_pairs)."""
     sh = shingle_sets(spread(load_table(spark, sf_dir, "documents"), "doc_id"))
-    return containment_pairs(sh, threshold=0.9)
+    return containment_pairs(sh)
 
 
 # ---------------------------------------------------------------------------
@@ -118,7 +118,7 @@ def tfidf_topk_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-aware (broadcast under threshold, term-keyed shuffle above —
     runtime.size_aware_side)."""
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    return tfidf_topk_terms(docs, k=3)
+    return tfidf_topk_terms(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -225,7 +225,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment superset of the same pigeonhole, verified identically —
     both complete, so the verified sets coincide."""
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    return word_edit_pairs(docs, prefix_words=48, max_dist=4)
+    return word_edit_pairs(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -267,9 +267,7 @@ def curriculum_quantile_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle_key). Thresholds are integer percentile_disc over the
     distinct-value cumulative distribution — no float interpolation to
     disagree across engines."""
-    return curriculum_buckets(
-        load_table(spark, sf_dir, "documents"), n_buckets=10
-    )
+    return curriculum_buckets(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -344,7 +342,7 @@ def format_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice"
     )
-    write_orc(li, path, mode="overwrite")
+    write_orc(li, path)
     back = spark.read.orc(path)
     dec = lambda c: F.col(c).cast("decimal(12,2)")  # noqa: E731
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -489,7 +487,7 @@ def corpus_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("new "), F.col("text")).alias("text"),
     )
     changes = deletes.unionByName(edits).unionByName(inserts)
-    merged = merge_upsert(docs, changes, id_col="doc_id")
+    merged = merge_upsert(docs, changes)
     return merged.select(
         "doc_id", F.sha2(F.col("text").cast("binary"), 256).alias("text_sha")
     )
@@ -567,9 +565,7 @@ def dim_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return scd2_history(
-        cust, new, "c_custkey", ["c_nationkey"], as_of="2024-02-01"
-    )
+    return scd2_history(cust, new, "c_custkey", ["c_nationkey"])
 
 
 # ---------------------------------------------------------------------------
@@ -633,7 +629,7 @@ def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     e2 AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
     hot AS (
       SELECT shingle FROM e2 GROUP BY shingle
-      HAVING {duck_hot_having_sql('SELECT count(*) FROM s')}
+      HAVING {DUCK_HOT_HAVING_SQL}
     ),
     eg AS (SELECT e2.* FROM e2 ANTI JOIN hot USING (shingle)),
     cand AS (
@@ -1137,7 +1133,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zip_to_parquet_spark.operators.graph import bfs_hops
 
     edges = copurchase_pairs(load_table(spark, sf_dir, "lineitem"))
-    return bfs_hops(edges, sources=[0], max_hops=4)
+    return bfs_hops(edges)
 
 
 # ---------------------------------------------------------------------------

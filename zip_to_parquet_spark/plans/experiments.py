@@ -45,7 +45,9 @@ from zip_to_parquet_spark.plans.registry import query
 from zip_to_parquet_spark.runtime import spread
 from zip_to_parquet_spark.schema import load_table
 
-D38 = "decimal(38,0)"
+# Its own statement: the window-policy differ then counts only the keys
+# that use D38 as changed by it, not every key that calls load_table.
+from zip_to_parquet_spark.schema import D38  # noqa: E402
 
 # Deterministic 50/50 assignment: low byte of md5(user_id), even → A.
 # DuckDB md5_number_lower(x) % 256 is the same little-endian low byte.
@@ -1089,8 +1091,9 @@ def privacy_dp_geometric_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Benjamini–Hochberg FDR over seasonality cells (exact integer rationals).
 # ---------------------------------------------------------------------------
-def bh_fdr_hour_cells(cells: DataFrame, alpha_num: int = 1, alpha_den: int = 20) -> DataFrame:
+def bh_fdr_hour_cells(cells: DataFrame) -> DataFrame:
     """Benjamini–Hochberg step-up FDR control (Benjamini & Hochberg 1995)
+    at α = 1/20
     over per-cell deviation tests, with EXACT integer arithmetic end to
     end — the multiple-testing gate a feature-selection or anomaly sweep
     needs when it tests thousands of hypotheses at once.
@@ -1105,7 +1108,7 @@ def bh_fdr_hour_cells(cells: DataFrame, alpha_num: int = 1, alpha_den: int = 20)
     ``n·(1/24)·(23/24)``) stays a RATIONAL with integer numerator 23n
     and denominator dev24² — no CDF, no erf, no float p ever exists.
     The BH step-up check at rank i, ``p ≤ i·α/m``, cross-multiplies to
-    ``23n·α_den·m ≤ i·α_num·dev24²`` in DECIMAL(38,0)/HUGEINT — exact
+    ``23n·20·m ≤ i·1·dev24²`` in DECIMAL(38,0)/HUGEINT — exact
     at any scale, as is ``p_milli`` (its dev24² also squares in
     DECIMAL(38,0) ↔ HUGEINT; the quotient is ≤1000 by the least()).
     The raw rational columns (p_num, p_den) stay BIGINT and are exact
@@ -1132,9 +1135,8 @@ def bh_fdr_hour_cells(cells: DataFrame, alpha_num: int = 1, alpha_den: int = 20)
     ranked = scored.withColumn("rank_i", F.row_number().over(w))
     hit = (F.col("dev24") > 0) & (
         F.expr(
-            f"cast(23 as decimal(38,0)) * n * {alpha_den} * m"
-            f" <= cast(rank_i as decimal(38,0)) * {alpha_num}"
-            " * dev24 * dev24"
+            "cast(23 as decimal(38,0)) * n * 20 * m"
+            " <= cast(rank_i as decimal(38,0)) * 1 * dev24 * dev24"
         )
     )
     hits = ranked.withColumn("hit", hit)
@@ -1498,12 +1500,9 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OBF_Z2_MILLI = [18775, 8779, 5565, 4056]
 
 
-def _obf_case(col: str) -> str:
-    branches = " ".join(
-        f"WHEN {col} = {k + 1} THEN {z2}"
-        for k, z2 in enumerate(_OBF_Z2_MILLI)
-    )
-    return f"CASE {branches} END"
+_OBF_CASE = "CASE " + " ".join(
+    f"WHEN look = {k + 1} THEN {z2}" for k, z2 in enumerate(_OBF_Z2_MILLI)
+) + " END"
 
 
 @query(
@@ -1549,9 +1548,9 @@ def _obf_case(col: str) -> str:
     SELECT look, na::BIGINT AS n_a, nb::BIGINT AS n_b,
            (CASE WHEN deno = 0 THEN NULL
                  ELSE (1000 * nume) // deno END)::BIGINT AS t2_milli,
-           ({_obf_case('look')})::BIGINT AS bound_z2_milli,
+           ({_OBF_CASE})::BIGINT AS bound_z2_milli,
            (CASE WHEN deno = 0 THEN NULL
-                 ELSE (1000 * nume) // deno >= ({_obf_case('look')})
+                 ELSE (1000 * nume) // deno >= ({_OBF_CASE})
             END) AS crossed
     FROM t
     """,
@@ -1637,10 +1636,10 @@ def experiment_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("na").cast("long").alias("n_a"),
         F.col("nb").cast("long").alias("n_b"),
         t2.cast("long").alias("t2_milli"),
-        F.expr(_obf_case("look")).cast("long").alias("bound_z2_milli"),
+        F.expr(_OBF_CASE).cast("long").alias("bound_z2_milli"),
         F.when(F.col("deno") == 0, F.lit(None).cast("boolean"))
         .otherwise(
-            F.expr("(1000 * nume) div deno") >= F.expr(_obf_case("look"))
+            F.expr("(1000 * nume) div deno") >= F.expr(_OBF_CASE)
         )
         .alias("crossed"),
     )

@@ -22,10 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zip_to_parquet_spark.operators.bpe import (
+    DUCK_DELIM_CHARS_SQL,
     SEP as BPE_SEP,
+    SPARK_DELIM_CHARS_SQL,
     bpe_replace_chain,
-    duck_delim_chars_sql,
-    spark_delim_chars_sql,
     train_bpe_merges,
 )
 from zip_to_parquet_spark.operators.classify import (
@@ -35,9 +35,9 @@ from zip_to_parquet_spark.operators.classify import (
 )
 from zip_to_parquet_spark.operators.pipeline import gopher_signal_cols
 from zip_to_parquet_spark.operators.layout import (
+    ZORDER_VALUE_SQL,
     zorder_file_stats,
     zorder_pruning_eval,
-    zorder_value_sql,
 )
 from zip_to_parquet_spark.operators.vectors import kmeans_integer
 from zip_to_parquet_spark.plans.registry import query
@@ -293,7 +293,7 @@ def quality_distill_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred vs gate_pass is the distillation fidelity."""
     weights, bias, _ = train_distilled_gate_perceptron(sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    score = trigram_bucket_counts_score("text", weights, bias)
+    score = trigram_bucket_counts_score(weights, bias)
     _, _, _, passes = gopher_signal_cols(F.col("text"))
     return docs.select(
         "doc_id",
@@ -311,7 +311,7 @@ def _zorder_sample_ctes(samp_cols: str) -> str:
     ``(user_id, day)`` (``base``, ``ev``), their z-value (``evz``), and
     ``samp``, the md5-sampled ``samp_cols`` of ``evz`` that the
     equi-depth file boundaries come from. Ends with ``samp``'s comma."""
-    z_duck = zorder_value_sql("u", "d", 16).replace(" div ", " // ")
+    z_duck = ZORDER_VALUE_SQL.replace(" div ", " // ")
     return f"""
     WITH base AS (
       SELECT event_id, CAST(user_id AS BIGINT) AS user_id,
@@ -446,7 +446,7 @@ def layout_pruning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_oracle() -> str:
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     merges = train_bpe_merges(sf_dir)
-    chain = bpe_replace_chain(duck_delim_chars_sql("wd"), merges)
+    chain = bpe_replace_chain(DUCK_DELIM_CHARS_SQL, merges)
     return f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
     w AS (
@@ -483,7 +483,7 @@ def bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     same replace chain in DuckDB."""
     merges = train_bpe_merges(sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    chain = bpe_replace_chain(spark_delim_chars_sql("wd"), merges)
+    chain = bpe_replace_chain(SPARK_DELIM_CHARS_SQL, merges)
     w = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "wd")
     ).filter(F.length("wd") > 0)

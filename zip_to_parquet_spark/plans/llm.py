@@ -38,6 +38,7 @@ from zip_to_parquet_spark.operators.dedupe import (
 # those names in the stale-closure differ — a second statement scopes the
 # closure delta to the keys that actually use the new helpers.
 from zip_to_parquet_spark.operators.dedupe import (  # noqa: E402
+    DUCK_HOT_HAVING_SQL,
     simhash_params_for,
     simhash_tables,
 )
@@ -110,20 +111,16 @@ _DUCK_SHINGLES = """
 # Integer permille arithmetic — no float seam between engines.
 
 
-def _duck_cand_guarded(ordered: bool) -> str:
-    from zip_to_parquet_spark.operators.dedupe import duck_hot_having_sql
-
-    pred = "a.doc_id <> b.doc_id" if ordered else "a.doc_id < b.doc_id"
-    return f"""
+_DUCK_CAND_GUARDED = f"""
     , e AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
     hot AS (
       SELECT shingle FROM e GROUP BY shingle
-      HAVING {duck_hot_having_sql("SELECT count(*) FROM s")}
+      HAVING {DUCK_HOT_HAVING_SQL}
     ),
     eg AS (SELECT e.* FROM e ANTI JOIN hot USING (shingle)),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM eg a JOIN eg b ON a.shingle = b.shingle AND {pred}
+      FROM eg a JOIN eg b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
     )
 """
 
@@ -145,7 +142,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_ngram_jaccard",
     oracle=_DUCK_SHINGLES
-    + _duck_cand_guarded(ordered=False)
+    + _DUCK_CAND_GUARDED
     + """
     SELECT doc_a, doc_b,
            len(list_intersect(x.sh, y.sh))::DOUBLE
@@ -329,7 +326,6 @@ def dedup_incremental_vs_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
         spark.read.parquet(base + "/hash_idx"),
         spark.read.parquet(base + "/band_idx"),
         docs,
-        threshold=0.8,
     )
 
 
@@ -923,17 +919,15 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_MAX_CODEBOOK)
         .collect()
     ]
-    return _ivf_topk(emb, codebook, nprobe=2, topk=5)
+    return _ivf_topk(emb, codebook, nprobe=2)
 
 
-def _ivf_topk(
-    emb: DataFrame, codebook: list, nprobe: int, topk: int
-) -> DataFrame:
+def _ivf_topk(emb: DataFrame, codebook: list, nprobe: int) -> DataFrame:
     """Shared IVF query shape: closure-shipped codebook, numpy-argmax cell
     assignment via ``ivf_assign_udfs`` (one matmul per Arrow batch —
     map-only, no join, no shuffle), nprobe nearest cells per query, exact
     Catalyst cosine re-rank within probed cells (so output similarities
-    stay bit-identical to the sequential-sum oracle).
+    stay bit-identical to the sequential-sum oracle), top 5 per query.
 
     ``codebook`` is a cent_id-sorted list of (cent_id, [float, ...]). This
     replaces a crossJoin(broadcast)+HOF-cosine+groupBy-max plan that
@@ -980,7 +974,7 @@ def _ivf_topk(
             "q_id", F.col("vec_id").alias("n_id"), sim.alias("cos_sim")
         )
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= 5)
     )
 
 
@@ -1096,7 +1090,7 @@ def _replayed_ivf_cents_values() -> str:
 
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     x = replayed_training_sample(sf_dir, k=32, sample_per_centroid=16)
-    cents = lloyds_codebook(x, k=32, iters=10, seed=42)
+    cents = lloyds_codebook(x, k=32)
     return ", ".join(
         "(%d, [%s])" % (i, ", ".join(repr(v) for v in c))
         for i, c in enumerate(cents)
@@ -1171,10 +1165,8 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings_spread(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    codebook = train_ivf_codebook(emb, k=32, iters=10, sample_per_centroid=16)
-    return _ivf_topk(
-        emb, [(i, c) for i, c in enumerate(codebook)], nprobe=8, topk=5
-    )
+    codebook = train_ivf_codebook(emb, k=32)
+    return _ivf_topk(emb, [(i, c) for i, c in enumerate(codebook)], nprobe=8)
 
 
 def _pq_topk_oracle() -> str:
@@ -1196,7 +1188,7 @@ def _pq_topk_oracle() -> str:
     x = replayed_training_sample(sf_dir, k=16, sample_per_centroid=50)
     m, dsub = 16, x.shape[1] // 16
     cbs = [
-        lloyds_codebook_l2(x[:, s * dsub : (s + 1) * dsub], k=16, iters=10, seed=42)
+        lloyds_codebook_l2(x[:, s * dsub : (s + 1) * dsub], k=16, iters=10)
         for s in range(m)
     ]
     rows = ", ".join(
@@ -1261,7 +1253,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cbs = train_pq_codebooks(emb, m=16, ksub=16, iters=10, sample_per_centroid=50)
     codes = emb.select("vec_id", pq_encode_udf(cbs)(F.col("v")).alias("codes"))
-    decoded = codes.select("vec_id", pq_decode_expr(cbs, "codes").alias("v"))
+    decoded = codes.select("vec_id", pq_decode_expr(cbs).alias("v"))
     qrows = (
         emb.filter(F.col("vec_id") % 25 == 0)
         .orderBy("vec_id")
@@ -1298,9 +1290,7 @@ def _ivfpq_topk_oracle() -> str:
 
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     x = replayed_training_sample(sf_dir, k=16, sample_per_centroid=32)
-    coarse, cbs = ivfpq_train_arrays(
-        x, k_coarse=16, m=16, ksub=16, iters=10, seed=42
-    )
+    coarse, cbs = ivfpq_train_arrays(x)
     m, dsub = 16, x.shape[1] // 16
     coarse_rows = ", ".join(
         "(%d, [%s])" % (i, ", ".join(repr(v) for v in c))
@@ -1404,9 +1394,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     x = deterministic_training_sample(emb, 16, 32)
-    coarse, cbs = ivfpq_train_arrays(
-        x, k_coarse=16, m=16, ksub=16, iters=10, seed=42
-    )
+    coarse, cbs = ivfpq_train_arrays(x)
     nearest_cell, nearest_cells = ivf_assign_udfs(
         [(i, c) for i, c in enumerate(coarse)], nprobe=8
     )
@@ -1424,7 +1412,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recon = codes.select(
         "vec_id",
         "cent_id",
-        F.zip_with(cent, pq_decode_expr(cbs, "codes"), lambda a, b: a + b).alias(
+        F.zip_with(cent, pq_decode_expr(cbs), lambda a, b: a + b).alias(
             "xhat"
         ),
     )
@@ -1503,8 +1491,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings_spread(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    codebook = train_ivf_codebook(emb, k=32, iters=10, sample_per_centroid=16)
-    assign, pairs = semantic_dedup_pairs(emb, codebook, threshold=0.95)
+    codebook = train_ivf_codebook(emb, k=32)
+    assign, pairs = semantic_dedup_pairs(emb, codebook)
     members = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))
     per_cluster = pairs.groupBy("cluster").agg(F.count(F.lit(1)).alias("np"))
     return members.join(per_cluster, "cluster", "left").select(
@@ -1539,7 +1527,7 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _documents_spread(spark, sf_dir)
     return d.select(
         "doc_id",
-        F.explode(textops.winnow_fingerprints(F.col("text"), n=8, w=4)).alias("fp"),
+        F.explode(textops.winnow_fingerprints(F.col("text"))).alias("fp"),
     )
 
 
@@ -1569,8 +1557,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_clusters' oracle: the same components as
 # graph.connected_components_star, computed as a recursive transitive
 # closure — tractable because fixture near-dup clusters are tiny.
-from zip_to_parquet_spark.operators.dedupe import duck_hot_having_sql as _hot_sql
-
 _CLUSTERS_ORACLE = """
     WITH RECURSIVE t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     s AS (
@@ -1606,7 +1592,7 @@ _CLUSTERS_ORACLE = """
     )
     SELECT src AS doc_id, least(src, min(dst)) AS comp
     FROM reach GROUP BY src
-    """.replace("__HOT_PRED__", _hot_sql("SELECT count(*) FROM s"))
+    """.replace("__HOT_PRED__", DUCK_HOT_HAVING_SQL)
 
 
 @query("dedup_clusters", oracle=_CLUSTERS_ORACLE)
@@ -1653,7 +1639,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and boundaries are unchanged (ceil((n-overlap)/stride), 1-chunk
     # floor); this key keeps its original 2-column schema.
     chunks = F.transform(
-        textops.word_chunks(F.split(F.col("text"), " "), size=32, stride=24),
+        textops.word_chunks(F.split(F.col("text"), " ")),
         lambda c: c.getField("chunk_text"),
     )
     return d.select("doc_id", F.posexplode(chunks)).select(
@@ -1689,7 +1675,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     32 packing shards (operators/pipeline.pack_greedy_contiguous). The
     running-sum window is per-shard — no global sort at any scale."""
     return pipeline.pack_greedy_contiguous(
-        load_table(spark, sf_dir, "documents"), ctx=512, n_shards=32
+        load_table(spark, sf_dir, "documents"), ctx=512
     )
 
 
@@ -1772,7 +1758,7 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "split_leakage_neardup",
     oracle=_DUCK_SHINGLES
-    + _duck_cand_guarded(ordered=False)
+    + _DUCK_CAND_GUARDED
     + """
     , j AS (
       SELECT doc_a, doc_b,
@@ -2002,7 +1988,6 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pipeline.decontaminate_ngrams(
         d.filter(F.col("doc_id") % 97 != 0),
         d.filter(F.col("doc_id") % 97 == 0),
-        n=4,
     )
 
 
@@ -2190,9 +2175,7 @@ def text_clean_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.upper(F.substring("text", 1, 16)),
         F.lit("\x07  "),
     )
-    out = pipeline.clean_text(
-        d.select("doc_id", dirty.alias("text")), lowercase=True
-    )
+    out = pipeline.clean_text(d.select("doc_id", dirty.alias("text")))
     return out.select(
         "doc_id",
         F.length("text").cast("bigint").alias("raw_len"),
@@ -2505,7 +2488,7 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
         .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
     )
-    return pagerank_integer(edges, "src", "dst", iters=5)
+    return pagerank_integer(edges, iters=5)
 
 
 @query(
@@ -2694,7 +2677,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 50)
         .select(F.col("n_id").alias("doc_id"), "rank")
     )
-    return rrf_fuse({"lex": lex, "sem": sem}, topk=20)
+    return rrf_fuse({"lex": lex, "sem": sem})
 
 
 # ---------------------------------------------------------------------------
@@ -2893,10 +2876,10 @@ def mixture_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MMR diverse re-ranking over a first-stage candidate pool
 # ---------------------------------------------------------------------------
-def _mmr_oracle(k: int = 5, lam: int = 7) -> str:
+def _mmr_oracle() -> str:
     """Unrolled greedy MMR as CTEs (the PageRank pattern: iterations as
-    SQL, bit-exact parity on an inherently sequential algorithm)."""
-    mu = 10 - lam
+    SQL, bit-exact parity on an inherently sequential algorithm): 5 picks
+    scored ``7·relevance − 3·max-similarity`` (λ = 0.7 in tenths)."""
     ctes = [
         "q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)",
         f"""scored AS (
@@ -2913,16 +2896,16 @@ def _mmr_oracle(k: int = 5, lam: int = 7) -> str:
           FROM candv a JOIN candv b ON a.n_id <> b.n_id
         )""",
         f"""p1 AS (
-          SELECT n_id, rel_micro, {lam} * rel_micro AS mmr_score
+          SELECT n_id, rel_micro, 7 * rel_micro AS mmr_score
           FROM cand ORDER BY mmr_score DESC, n_id LIMIT 1
         )""",
         "sel1 AS (SELECT n_id FROM p1)",
     ]
-    for i in range(2, k + 1):
+    for i in range(2, 6):
         prev = i - 1
         ctes.append(f"""p{i} AS (
           SELECT c.n_id, c.rel_micro,
-                 {lam} * c.rel_micro - {mu} * max(p.psim_micro) AS mmr_score
+                 7 * c.rel_micro - 3 * max(p.psim_micro) AS mmr_score
           FROM cand c
           JOIN pairs p ON p.a_id = c.n_id AND p.b_id IN (SELECT n_id FROM sel{prev})
           WHERE c.n_id NOT IN (SELECT n_id FROM sel{prev})
@@ -2934,7 +2917,7 @@ def _mmr_oracle(k: int = 5, lam: int = 7) -> str:
         )
     unions = "\nUNION ALL\n".join(
         f"SELECT {i} AS pick_order, n_id, rel_micro, mmr_score FROM p{i}"
-        for i in range(1, k + 1)
+        for i in range(1, 6)
     )
     return "WITH " + ",\n".join(ctes) + "\n" + unions
 
@@ -3001,7 +2984,7 @@ def _neg_pairs_oracle() -> str:
     # side's md5_low_bytes_sql(salted, 6) (operators/layout.py contract).
     return (
         _DUCK_SHINGLES
-        + _duck_cand_guarded(ordered=False)
+        + _DUCK_CAND_GUARDED
         + f"""
     , nd AS (
       SELECT doc_a, doc_b
@@ -3409,7 +3392,7 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("wc", F.size(F.split("line", " ")).cast("long"))
     from zip_to_parquet_spark.operators.textops import boilerplate_line_stats
 
-    return boilerplate_line_stats(lines, min_df=2, hash_keys=False)
+    return boilerplate_line_stats(lines, hash_keys=False)
 
 
 # ---------------------------------------------------------------------------
@@ -3448,7 +3431,7 @@ def dedup_apss_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingle_sets(_documents_spread(spark, sf_dir))
     from zip_to_parquet_spark.operators.dedupe import apss_prefix_pairs
 
-    return apss_prefix_pairs(sh, t2_num=1, t2_den=2)
+    return apss_prefix_pairs(sh)
 
 
 # ---------------------------------------------------------------------------
@@ -3830,7 +3813,7 @@ def lm_good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_threshold_curve",
     oracle=_DUCK_SHINGLES
-    + _duck_cand_guarded(ordered=False)
+    + _DUCK_CAND_GUARDED
     + """
     , pairs AS (
       SELECT doc_a, doc_b,

@@ -27,12 +27,10 @@ from zip_to_parquet_spark.plans.registry import query
 from zip_to_parquet_spark.runtime import spread
 from zip_to_parquet_spark.schema import load_table
 
-D38 = "decimal(38,0)"
-
-
-def _cents(c: str):
-    """Exact integer cents of a 2-decimal double column."""
-    return (F.col(c).cast("decimal(12,2)") * 100).cast("long")
+# Its own statement: the window-policy differ then counts only the keys
+# that use D38 as changed by it, not every key that calls load_table.
+from zip_to_parquet_spark.schema import D38  # noqa: E402
+from zip_to_parquet_spark.schema import cents as _cents
 
 
 # ---------------------------------------------------------------------------
@@ -399,9 +397,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-metric operator computes all nine thresholds in THREE bounded
     # jobs (shared melt/histogram), not three per metric.
     pc = pc.persist()
-    th = quantile_disc_thresholds_multi(
-        pc, ["r_days", "f_orders", "m_cents"], denom=4
-    )
+    th = quantile_disc_thresholds_multi(pc, ["r_days", "f_orders", "m_cents"])
     scored = pc
     for metric, out in (
         ("r_days", "r_score"),
@@ -928,9 +924,7 @@ def ts_seasonal_naive_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("d"))
         .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(12,2)") * 100).cast("long")
-            ).cast("long").alias("rev_cents")
+            F.sum(_cents("o_totalprice")).cast("long").alias("rev_cents")
         )
         # Materialize the |calendar|-sized rollup once: without this the
         # self-join's two legs each re-scan the fact (plan-tested).
@@ -1544,9 +1538,7 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     permille comparison is integer-only."""
     li = spread(load_table(spark, sf_dir, "lineitem"), "l_partkey")
     rev = li.groupBy("l_partkey").agg(
-        F.sum((F.col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long"))
-        .cast("long")
-        .alias("cents")
+        F.sum(_cents("l_extendedprice")).cast("long").alias("cents")
     )
     tot = rev.agg(F.sum("cents").cast("decimal(38,0)").alias("t"))
     w = Window.orderBy(F.col("cents").desc(), "l_partkey").rowsBetween(

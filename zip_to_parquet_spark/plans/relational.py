@@ -967,7 +967,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Column order matched to the oracle projection (the driver compares
     # name-sorted, but ad-hoc tuple diffs shouldn't trip on ordering).
-    return salted_join(e, dim, key="event_type", salts=16).select(
+    return salted_join(e, dim).select(
         "event_id", "event_type", "n_type"
     )
 

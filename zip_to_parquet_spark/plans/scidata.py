@@ -31,7 +31,9 @@ from zip_to_parquet_spark.plans.registry import query
 from zip_to_parquet_spark.runtime import spread
 from zip_to_parquet_spark.schema import load_table
 
-D38 = "decimal(38,0)"
+# Its own statement: the window-policy differ then counts only the keys
+# that use D38 as changed by it, not every key that calls load_table.
+from zip_to_parquet_spark.schema import D38  # noqa: E402
 
 
 def _one_way_f(obs: DataFrame, grp: str, x: str) -> tuple[DataFrame, DataFrame]:
@@ -498,7 +500,12 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Greedy k-center coreset selection over embeddings
 # ---------------------------------------------------------------------------
-def _kcenter_oracle(k: int = 6) -> str:
+# Picks of the greedy k-center coreset, shared by the key and its oracle.
+_KCENTER_K = 6
+
+
+def _kcenter_oracle() -> str:
+    k = _KCENTER_K
     ctes = [
         "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
         "s1 AS (SELECT v FROM e WHERE vec_id = 0)",
@@ -550,7 +557,7 @@ def select_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the published lower bound for greedy k-center."""
     from zip_to_parquet_spark.operators.retrieval import micro_sim
 
-    k = 6
+    k = _KCENTER_K
     emb = spread(load_table(spark, sf_dir, "embeddings"), "vec_id").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1553,11 +1560,8 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast rows joined against the cell grid."""
     from zip_to_parquet_spark.operators.layout import md5_low_bytes_sql
 
-    def bucket_sql(r_expr: str, w_expr: str) -> str:
-        h = md5_low_bytes_sql(
-            f"concat('cms', cast({r_expr} as string), '|', {w_expr})", 2
-        )
-        return f"({h}) % 1024"
+    h = md5_low_bytes_sql("concat('cms', cast(r as string), '|', word)", 2)
+    bucket_sql = f"({h}) % 1024"
 
     tok = load_table(spark, sf_dir, "documents").select(
         F.explode(
@@ -1567,7 +1571,7 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows4 = spark.range(4).select(F.col("id").alias("r"))
     cells = (
         tok.crossJoin(F.broadcast(rows4))
-        .select("r", F.expr(bucket_sql("r", "word")).alias("bucket"))
+        .select("r", F.expr(bucket_sql).alias("bucket"))
         .groupBy("r", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -1581,7 +1585,7 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word",
         "exact_count",
         "r",
-        F.expr(bucket_sql("r", "word")).alias("bucket"),
+        F.expr(bucket_sql).alias("bucket"),
     )
     return (
         cells.join(F.broadcast(probes), ["r", "bucket"])

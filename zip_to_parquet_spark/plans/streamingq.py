@@ -60,9 +60,7 @@ def stream_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-aligned to the slide, and both engines' 30-minute origins
     coincide). Complete-mode final state == the batch answer."""
     return run_stream_to_memory(
-        windowed_counts(
-            read_events_stream(spark, sf_dir), "1 hour", slide="30 minutes"
-        ),
+        windowed_counts(read_events_stream(spark, sf_dir), slide="30 minutes"),
         "complete",
         "hop",
     )

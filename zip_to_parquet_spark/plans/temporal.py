@@ -67,9 +67,7 @@ def join_range_within_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle key is (user_id, time-bucket), candidate volume is local
     density × 2 buckets, never n²."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
-    pairs = range_join_pairs(
-        ev, key="user_id", ts="ts", payload=["event_id", "ts"], max_gap_seconds=300
-    )
+    pairs = range_join_pairs(ev, key="user_id", payload=["event_id", "ts"])
     return pairs.select(
         "user_id",
         F.col("event_id").alias("event_a"),

@@ -301,9 +301,7 @@ def zip_jsonl_members(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _record_fixture_dir(sf_dir, "jsonl")
     members = read_zip_members(spark, f"{d}/part*.zip", sha=False)
-    return parse_jsonl_members(
-        members, "doc_id BIGINT, source STRING, n_chars BIGINT"
-    ).select("doc_id", "source", "n_chars")
+    return parse_jsonl_members(members).select("doc_id", "source", "n_chars")
 
 
 # Federation: the zipmembers Python Data Source and a parquet table in

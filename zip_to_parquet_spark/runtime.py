@@ -125,16 +125,14 @@ def ensure_shipped(spark: SparkSession) -> None:
     _SHIPPED.add(key)
 
 
-def session_scratch(
-    spark: SparkSession, prefix: str, sf_dir: str, max_age_hours: int = 6
-) -> str:
+def session_scratch(spark: SparkSession, prefix: str, sf_dir: str) -> str:
     """Per-session scratch path ``/tmp/<prefix>/<appId>/<sf-basename>_<key>``
     — the ONE definition of the pattern (was triplicated across plans).
     ``key`` is 16 hex digits of the sha256 of ``sf_dir``'s absolute path,
     so two fixture dirs that share a basename get separate scratch sets.
     appId keying prevents concurrent sessions on the same sf from
     overwriting each other mid-read-back; sibling appId dirs whose mtime
-    is older than ``max_age_hours`` are pruned best-effort, so a box
+    is older than 6 hours are pruned best-effort, so a box
     running the driver round after round no longer accumulates one
     scratch set per application forever."""
     import time
@@ -145,7 +143,7 @@ def session_scratch(
         now = time.time()
         for d in os.listdir(root):
             p = os.path.join(root, d)
-            if d != app and now - os.path.getmtime(p) > max_age_hours * 3600:
+            if d != app and now - os.path.getmtime(p) > 6 * 3600:
                 shutil.rmtree(p, ignore_errors=True)
     except OSError:
         pass

@@ -57,17 +57,13 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    compression: str = "snappy",
-    mode: str = "error",
-) -> None:
-    """Distributed ORC write — the columnar sibling sink (same commit
-    protocol as write_parquet; format_orc_roundtrip hash-verifies the
-    read-back). Distributed-only: the reference's byte-exact single-file
-    contract (exact row-group rows) is parquet-specific and stays so."""
-    df.write.mode(mode).option("compression", compression).orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    """Distributed snappy ORC write that replaces ``path`` — the columnar
+    sibling sink (same commit protocol as write_parquet;
+    format_orc_roundtrip hash-verifies the read-back). Distributed-only:
+    the reference's byte-exact single-file contract (exact row-group
+    rows) is parquet-specific and stays so."""
+    df.write.mode("overwrite").option("compression", "snappy").orc(path)
 
 
 def _stream_to_pyarrow(
@@ -145,11 +141,10 @@ def write_single_parquet_file(
 
 def write_parquet_stdout(
     df: DataFrame,
-    compression: str = "snappy",
     row_group_rows: int = DEFAULT_ROW_GROUP_ROWS,
 ) -> int:
-    """Stream the parquet bytes to stdout (A5, ``--stdout``)."""
-    return _stream_to_pyarrow(df, sys.stdout.buffer, compression, row_group_rows)
+    """Stream snappy parquet bytes to stdout (A5, ``--stdout``)."""
+    return _stream_to_pyarrow(df, sys.stdout.buffer, "snappy", row_group_rows)
 
 
 def write_bucketed_table(
@@ -185,8 +180,6 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
-    mode: str = "overwrite",
-    dynamic: bool = True,
     files_per_partition: int = 1,
 ) -> None:
     """Hive-style partitioned parquet layout (``path/col=value/...``) with
@@ -198,8 +191,8 @@ def write_partitioned(
       instead of one-file-per-task-per-partition — the classic
       thousands-of-tiny-files failure that murders downstream scans and
       the object-store listing.
-    * **Dynamic partition overwrite**: with ``dynamic=True``, overwrite
-      replaces ONLY the partitions present in ``df`` (Spark's
+    * **Dynamic partition overwrite**: the write replaces ONLY the
+      partitions present in ``df`` (Spark's
       ``partitionOverwriteMode=dynamic``), the idempotent daily-backfill
       semantics; static overwrite (the default Spark behavior) would drop
       every other partition in the table.
@@ -219,8 +212,6 @@ def write_partitioned(
     else:
         dist = df.repartition(*keys)
     with pinned_conf(
-        df.sparkSession,
-        "spark.sql.sources.partitionOverwriteMode",
-        "dynamic" if dynamic else "static",
+        df.sparkSession, "spark.sql.sources.partitionOverwriteMode", "dynamic"
     ):
-        dist.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+        dist.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)

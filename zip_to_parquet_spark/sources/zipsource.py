@@ -150,6 +150,14 @@ _PROBE_SCHEMA = "name string, source string, crc32 long, size long, csize long"
 _ARROW_TYPES = {"name": "string", "source": "string", "body": "binary", "hash": "string",
                 "crc32": "int64", "size": "int64", "csize": "int64"}
 
+# A read batch is flushed at batch_rows rows or once its member bodies
+# reach this many bytes, whichever comes first.
+_BATCH_BYTES = 32 << 20
+
+# The stream reader drops an archive whose mtime is more than this many
+# seconds behind the newest archive it has listed.
+_STREAM_LATENESS_S = 300.0
+
 
 class ZipFormatError(ValueError):
     """A member uses a compression method or a feature (encryption, patched
@@ -447,7 +455,6 @@ class ZipMembersReader(DataSourceReader):
         self.with_source = options.get("source", "true") == "true"
         self.with_hash = options.get("hash", "true") == "true"
         self.batch_rows = int(options.get("batch_rows", "1024"))
-        self.batch_bytes = int(options.get("batch_bytes", str(32 * 1024 * 1024)))
         self.on_error = options.get("on_error", "fail")
         self.strict_hash = options.get("strict_hash", "false") == "true"
         # Jumbo-archive splitting threshold (0 disables): archives whose
@@ -604,7 +611,7 @@ class ZipMembersReader(DataSourceReader):
                         row = (name, source, data if self.with_body else None, digest)
                     for v, x in zip(cols, row):
                         v.append(x)
-                    if len(cols[0]) >= self.batch_rows or pending_bytes >= self.batch_bytes:
+                    if len(cols[0]) >= self.batch_rows or pending_bytes >= _BATCH_BYTES:
                         yield flush()
         except (zipfile.BadZipFile, ZipFormatError, OSError, tarfile.TarError,
                 EOFError, zlib.error, lzma.LZMAError, UnicodeError) as exc:
@@ -620,7 +627,7 @@ class ZipMembersReader(DataSourceReader):
                 # partial batch is discarded, so an archive smaller than one
                 # batch (the common case) contributes zero rows. Best-effort
                 # caveat: batches already yielded for an archive larger than
-                # batch_rows/batch_bytes before a mid-read CRC failure cannot
+                # batch_rows/_BATCH_BYTES before a mid-read CRC failure cannot
                 # be retracted under bounded-memory streaming — use
                 # on_error='fail' (default) where atomicity matters.
                 import sys
@@ -650,12 +657,12 @@ class ZipMembersStreamReader(DataSourceStreamReader):
     Offsets are an (mtime high-watermark, recent-file list) pair — bounded
     steady-state, unlike a grow-forever processed-path list. ``wm`` is the
     max mtime listed; ``seen`` holds ``[mtime, path]`` pairs for files
-    within ``stream_lateness`` seconds (default 300) of the watermark. A
-    batch processes the files of ``end.seen`` that are neither in
-    ``start.seen`` nor older than ``start``'s lateness horizon — so an
-    archive landing with an mtime more than ``stream_lateness`` behind the
-    newest file is dropped as too late (raise the allowance for laggy copy
-    jobs / object stores), and at a million archives the offset stays
+    within _STREAM_LATENESS_S (300) seconds of the watermark. A batch
+    processes the files of ``end.seen`` that are neither in ``start.seen``
+    nor older than ``start``'s lateness horizon — so an archive landing
+    with an mtime more than 300 s behind the newest file is dropped as
+    too late (copy jobs and object stores that lag further lose
+    archives), and at a million archives the offset stays
     O(arrival-rate × lateness) instead of O(all files ever).
 
     Two deliberately-unbounded moments: the first offset of a fresh query
@@ -675,10 +682,9 @@ class ZipMembersStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict, skip_acc=None, columns=_MEMBER_COLUMNS):
         self._batch = ZipMembersReader(options, skip_acc=skip_acc, columns=columns)
         self.pattern: str = options["stream_glob"]
-        self.lateness: float = float(options.get("stream_lateness", "300"))
         # Listing horizon; None = enumerate everything (fresh query or
-        # just-restarted driver). Ratchets to wm - lateness after each
-        # listing, which keeps steady-state offsets bounded.
+        # just-restarted driver). Ratchets to wm - _STREAM_LATENESS_S after
+        # each listing, which keeps steady-state offsets bounded.
         self._horizon: float | None = None
 
     def _snapshot(self) -> list[tuple[float, str]]:
@@ -698,14 +704,14 @@ class ZipMembersStreamReader(DataSourceStreamReader):
         wm = max((mt for mt, _ in files), default=0.0)
         if self._horizon is not None:
             files = [(mt, p) for mt, p in files if mt >= self._horizon]
-        self._horizon = max(self._horizon or float("-inf"), wm - self.lateness)
+        self._horizon = max(self._horizon or float("-inf"), wm - _STREAM_LATENESS_S)
         return {"wm": wm, "seen": sorted([mt, p] for mt, p in files)}
 
     def partitions(self, start: dict, end: dict):
         done = {p for _, p in start["seen"]}
         # start.wm == 0 ⇒ start is the initial offset: no horizon,
         # everything unseen is new.
-        horizon = start["wm"] - self.lateness if start["wm"] else float("-inf")
+        horizon = start["wm"] - _STREAM_LATENESS_S if start["wm"] else float("-inf")
         new = sorted(p for mt, p in end["seen"] if p not in done and mt >= horizon)
         return [_ZipPartition([_ZipSlice(p)]) for p in new]
 

@@ -93,27 +93,21 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _events_stream(spark, f"{sf_dir}/events.parquet")
 
 
-def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation — the canonical late-data-
-    tolerant streaming agg. State is keyed on (window, event_type); the
-    watermark lets Spark drop windows older than max(event time) - delay.
+def windowed_counts(events: DataFrame, slide: str | None = None) -> DataFrame:
+    """Watermarked 1-hour tumbling-window aggregation — the canonical
+    late-data-tolerant streaming agg. State is keyed on (window,
+    event_type); the 10-minute watermark lets Spark drop windows older
+    than max(event time) - delay.
 
-    ``slide`` < ``window`` turns this into a HOPPING window: each event
-    lands in window/slide overlapping windows (state grows by the same
-    factor — the watermark bound still caps it). Spark aligns hop starts
+    A ``slide`` under the hour turns this into a HOPPING window: each
+    event lands in window/slide overlapping windows (state grows by the
+    same factor — the watermark bound still caps it). Spark aligns hop starts
     to epoch multiples of ``slide``, which the oracle mirrors with
     ``time_bucket(slide)`` minus hop offsets (both 30-minute-aligned
     origins)."""
-    win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
+    win = F.window("ts", "1 hour", slide) if slide else F.window("ts", "1 hour")
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "10 minutes")
         .groupBy(win.alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -131,16 +125,15 @@ def windowed_counts(
     )
 
 
-def sessionized_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
+def sessionized_stream(events: DataFrame) -> DataFrame:
     """Native streaming sessionization: ``session_window`` merges events
-    within ``gap`` of each other into one growing window per user. The
+    within 30 minutes of each other into one growing window per user
+    (10-minute watermark). The
     batch twin (plans.relational.events_sessionize) does the same with
     lag/running-sum; this is the incremental form with keyed session state."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # Exact decimal sum — see windowed_counts.
@@ -205,16 +198,14 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
 def clicks_to_purchases_join(
     clicks: DataFrame,
     purchases: DataFrame,
-    within: str = "30 minutes",
-    watermark: str = "10 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream interval join: each purchase matches the same user's
-    clicks from the preceding ``within`` window.
+    clicks from the preceding 30 minutes.
 
-    Both sides carry watermarks and the join condition bounds event-time
-    distance, so Spark can expire join state (clicks older than
-    watermark + within are dropped) — the canonical bounded-state
+    Both sides carry 10-minute watermarks and the join condition bounds
+    event-time distance, so Spark can expire join state (clicks older
+    than watermark + 30 minutes are dropped) — the canonical bounded-state
     stream-stream join. Inner join ⇒ append-mode emissions on a bounded
     drain equal the complete batch answer.
 
@@ -228,17 +219,17 @@ def clicks_to_purchases_join(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_event_id"),
         F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
+    ).withWatermark("click_ts", "10 minutes")
     p = purchases.select(
         "user_id",
         F.col("event_id").alias("purchase_event_id"),
         F.col("ts").alias("purchase_ts"),
-    ).withWatermark("purchase_ts", watermark)
+    ).withWatermark("purchase_ts", "10 minutes")
     return p.join(
         c,
         (F.col("c_user") == F.col("user_id"))
         & (F.col("click_ts") < F.col("purchase_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 minutes")),
         how,
     ).select(
         "user_id", "click_event_id", "click_ts", "purchase_event_id", "purchase_ts"
