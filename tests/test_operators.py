@@ -2244,7 +2244,7 @@ def test_simhash_params_corpus_sized():
     for n in (5_000, 3_000_000, 2_000_000_000):
         b = simhash_params_for(n)["blocks"]
         width = 60 * (b - 3) // b
-        combos = simhash_tables(60, b, 3)
+        combos = simhash_tables(b, 3)
         assert len(combos) == math.comb(b, 3)
         assert all(len(c) == b - 3 for c in combos)
         assert b > 3  # pigeonhole guarantee
@@ -2254,6 +2254,6 @@ def test_simhash_params_corpus_sized():
     import pytest
 
     with pytest.raises(ValueError):
-        simhash_tables(60, 3, 3)  # blocks must exceed max_hamming
+        simhash_tables(3, 3)  # blocks must exceed max_hamming
     with pytest.raises(ValueError):
-        simhash_tables(60, 7, 3)  # blocks must divide bits
+        simhash_tables(7, 3)  # blocks must divide bits

@@ -60,37 +60,49 @@ def _git(*args: str) -> str:
     ).stdout
 
 
-def _module_file(dotted: str) -> str | None:
-    """'zip_to_parquet_spark.operators.vectors' → repo-relative file."""
+def _module_file(dotted: str, known: set[str] | None = None) -> str | None:
+    """'zip_to_parquet_spark.operators.vectors' → repo-relative file; with
+    ``known``, looked up in that set of files instead of the working tree."""
     rel = Path(dotted.replace(".", "/"))
-    if (REPO / rel).with_suffix(".py").exists():
-        return str(rel.with_suffix(".py"))
-    if (REPO / rel / "__init__.py").exists():
-        return str(rel / "__init__.py")
+    for cand in (rel.with_suffix(".py"), rel / "__init__.py"):
+        found = str(cand) in known if known is not None else (REPO / cand).exists()
+        if found:
+            return str(cand)
     return None
 
 
-def _import_closure() -> dict[str, set[str]]:
+def _package_sources(rev: str | None = None) -> dict[str, str]:
+    """Repo-relative file → source of every package module, from the
+    working tree, or from commit ``rev``."""
+    if rev is None:
+        return {
+            str(f.relative_to(REPO)): f.read_text() for f in (REPO / PKG).rglob("*.py")
+        }
+    files = _git("ls-tree", "-r", "--name-only", rev, "--", PKG).splitlines()
+    return {rel: _git_blob(rev, rel) for rel in files if rel.endswith(".py")}
+
+
+def _import_closure(rev: str | None = None) -> dict[str, set[str]]:
     """file → transitive set of package files it imports (itself included)."""
+    sources = _package_sources(rev)
+    known = set(sources)
     edges: dict[str, set[str]] = {}
-    for f in (REPO / PKG).rglob("*.py"):
-        rel = str(f.relative_to(REPO))
-        src = f.read_text()
+    for rel, src in sources.items():
         deps: set[str] = set()
         for m in re.finditer(
             rf"^\s*from\s+({PKG}[.\w]*)\s+import\s+([^\n]+)", src, re.M
         ):
             base, names = m.group(1), m.group(2)
-            bf = _module_file(base)
+            bf = _module_file(base, known)
             if bf:
                 deps.add(bf)
             # `from pkg.plans import llm, relational` imports submodules.
             for name in re.findall(r"\w+", names.split("#")[0]):
-                sub = _module_file(f"{base}.{name}")
+                sub = _module_file(f"{base}.{name}", known)
                 if sub:
                     deps.add(sub)
         for m in re.finditer(rf"^\s*import\s+({PKG}[.\w]*)", src, re.M):
-            bf = _module_file(m.group(1))
+            bf = _module_file(m.group(1), known)
             if bf:
                 deps.add(bf)
         edges[rel] = deps
@@ -267,18 +279,54 @@ def _ast_ref_names(node: ast.AST) -> set[str]:
     return names
 
 
-class _RefGraph:
-    """Name-reference graph over the working tree: which defs does a key's
-    registered function transitively reference?  AST-name matching (r11,
-    was raw-text tokens) is a sound over-approximation — see
-    _ast_ref_names; a name collision adds edges, never removes them."""
+def _import_edges(
+    nodes: list[ast.AST], known: set[str]
+) -> tuple[dict[str, set[tuple[str, str]]], dict[str, str]]:
+    """Package imports anywhere inside ``nodes`` → ``(names, modules)``:
+    ``names`` maps a bound name to the (file, name) pairs it is imported
+    from (``from pkg.mod import orig as name``); ``modules`` maps an alias
+    bound to a package module (``from pkg import mod``, ``import pkg.mod``)
+    to that module's file."""
+    names: dict[str, set[tuple[str, str]]] = {}
+    modules: dict[str, str] = {}
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.ImportFrom) and not n.level and n.module:
+                base = _module_file(n.module, known)
+                for a in n.names:
+                    sub = _module_file(f"{n.module}.{a.name}", known)
+                    if sub:
+                        modules[a.asname or a.name] = sub
+                    elif base:
+                        names.setdefault(a.asname or a.name, set()).add(
+                            (base, a.name)
+                        )
+            elif isinstance(n, ast.Import):
+                for a in n.names:
+                    f = _module_file(a.name, known)
+                    if f:
+                        modules[a.asname or a.name.split(".")[0]] = f
+    return names, modules
 
-    def __init__(self) -> None:
+
+class _RefGraph:
+    """Name-reference graph over the working tree (or commit ``rev``):
+    which defs does a key's registered function transitively reference?
+    AST-name matching (r11, was raw-text tokens) is a sound
+    over-approximation — see _ast_ref_names; a name collision adds edges,
+    never removes them."""
+
+    def __init__(self, rev: str | None = None) -> None:
         self.units: dict[str, tuple[dict[str, str], dict[str, str], list[str]]] = {}
         asts: dict[str, ast.Module | None] = {}
-        for f in (REPO / PKG).rglob("*.py"):
-            rel = str(f.relative_to(REPO))
-            src = f.read_text()
+        sources = _package_sources(rev)
+        known = set(sources)
+        # Where a module-level name comes from, per file, and which names
+        # alias package modules; the same per def for its local imports.
+        self.imports: dict[str, dict[str, set[tuple[str, str]]]] = {}
+        self.modules: dict[str, dict[str, str]] = {}
+        self.local: dict[tuple[str, str], tuple[dict, dict]] = {}
+        for rel, src in sources.items():
             try:
                 self.units[rel] = parse_units(src)
                 asts[rel] = ast.parse(src)
@@ -292,6 +340,7 @@ class _RefGraph:
             ref_names: dict[str, set[str]] = {}
             tree = asts[rel]
             if tree is not None:
+                top = []
                 for node in tree.body:
                     if isinstance(
                         node,
@@ -300,6 +349,10 @@ class _RefGraph:
                         ref_names.setdefault(node.name, set()).update(
                             _ast_ref_names(node)
                         )
+                        self.local[(rel, node.name)] = _import_edges([node], known)
+                    else:
+                        top.append(node)
+                self.imports[rel], self.modules[rel] = _import_edges(top, known)
             for name, segment in defs.items():
                 self.def_index.setdefault(name, []).append((rel, name))
                 # Fallback to raw-text tokens when the AST is unavailable
@@ -308,6 +361,41 @@ class _RefGraph:
                     name, set(_WORD.findall(segment))
                 )
         self._reach_cache: dict[tuple[str, str], tuple[set, set]] = {}
+        self._resolve_cache: dict[tuple[str, str], set[str]] = {}
+
+    def _resolve(self, rel: str, name: str) -> set[str]:
+        """Files whose module-level binding of ``name`` a read of it in
+        ``rel``'s namespace goes through: ``rel`` itself, then the files
+        ``rel`` imports the name from, transitively."""
+        key = (rel, name)
+        if key not in self._resolve_cache:
+            self._resolve_cache[key] = {rel}  # cycle guard
+            out = {rel}
+            for src, orig in self.imports.get(rel, {}).get(name, ()):
+                out |= self._resolve(src, orig)
+            self._resolve_cache[key] = out
+        return self._resolve_cache[key]
+
+    def reads_from(self, visited: set[tuple[str, str]], name: str) -> set[str]:
+        """Files whose module-level binding of ``name`` the defs in
+        ``visited`` may read: the def's own module (and where that module
+        imports the name from), the def's local ``from ... import name``,
+        and ``alias.name`` through any package-module alias the def
+        mentions."""
+        out: set[str] = set()
+        for node in visited:
+            toks = self.tokens[node]
+            if name not in toks:
+                continue
+            rel = node[0]
+            out |= self._resolve(rel, name)
+            lnames, lmods = self.local.get(node, ({}, {}))
+            for src, orig in lnames.get(name, ()):
+                out |= self._resolve(src, orig)
+            for alias, mod in (*self.modules.get(rel, {}).items(), *lmods.items()):
+                if alias in toks:
+                    out |= self._resolve(mod, name)
+        return out
 
     def reach(self, rel: str, fn_name: str) -> tuple[set, set] | None:
         """→ (visited def (file,name) pairs, union of referenced tokens),
@@ -332,6 +420,89 @@ class _RefGraph:
                         stack.append(target)
         self._reach_cache[(rel, fn_name)] = (visited, toks)
         return visited, toks
+
+
+def changed_units(
+    sha: str, rev: str | None = None
+) -> tuple[set[tuple[str, str]], set[tuple[str, str]], set[str], set[str]]:
+    """Units that changed between commit ``sha`` and the working tree (or
+    commit ``rev``): ``(changed (file, def), changed (file, bind),
+    loose-dirty files, files git says differ)``, over files git says
+    differ at all."""
+    files = set(_git("diff", "--name-only", sha, *([rev] if rev else []), "--", PKG)
+                .splitlines())
+    cdefs: set[tuple[str, str]] = set()
+    cbinds: set[tuple[str, str]] = set()
+    dirty_files: set[str] = set()
+    for rel in files:
+        if not rel.endswith(".py"):
+            dirty_files.add(rel)
+            continue
+        if rev is None:
+            new = (REPO / rel).read_text() if (REPO / rel).exists() else None
+        else:
+            new = _git_blob(rev, rel)
+        old = _git_blob(sha, rel)
+        if old is None and new is not None:
+            # File CREATED since the round: a key whose own code is
+            # unchanged since its green row cannot have depended on a
+            # file that did not exist then — Python has no cross-file
+            # shadowing, so new top-level defs/binds only matter to
+            # callers, and any real caller changed its OWN units (an
+            # import line or a def edit), which flags it directly.
+            # What a new file CAN do to old keys is import-time side
+            # effects, i.e. effective loose statements — only those
+            # dirty the file (same risk class the function-granular
+            # design already accepts for appended defs).
+            try:
+                _nd, _nb, new_loose = parse_units(new)
+            except SyntaxError:
+                dirty_files.add(rel)
+                continue
+            if new_loose:
+                dirty_files.add(rel)
+            continue
+        d, b, loose = diff_units(old, new)
+        cdefs |= {(rel, n) for n in d}
+        cbinds |= {(rel, n) for n in b}
+        if loose:
+            dirty_files.add(rel)
+    return cdefs, cbinds, dirty_files, files
+
+
+def key_reasons(
+    mod_file: str,
+    fn_name: str,
+    units: tuple,
+    closure: dict[str, set[str]],
+    graph: _RefGraph,
+) -> list[tuple]:
+    """The changed units (``changed_units``) that flag the key registered
+    as ``fn_name`` in ``mod_file`` — empty when its code is unchanged."""
+    cdefs, cbinds, dirty_files, git_files = units
+    files = closure.get(mod_file, {mod_file})
+    if files & dirty_files:
+        # loose module-level change → file fallback
+        return [("file", f, "") for f in sorted(files & dirty_files)]
+    reach = graph.reach(mod_file, fn_name)
+    if reach is None:
+        # Registered function is not a top-level def we can segment →
+        # file-level fallback (loud, never silent).
+        return [("file", f, "") for f in sorted(files & git_files)]
+    visited, toks = reach
+    # A changed module-level binding (constant / import alias) counts
+    # only when it lives in a file of the key's import closure AND a
+    # reachable def reads the name through that file's binding — a
+    # reshuffled import block in an unrelated module, or a module that
+    # re-imports a name the key reads from elsewhere, must not flag it.
+    bind_hits = [
+        (f, n)
+        for f, n in cbinds
+        if f in files and n in toks and f in graph.reads_from(visited, n)
+    ]
+    return [("def", f, n) for f, n in sorted(visited & cdefs)] + [
+        ("bind", f, n) for f, n in sorted(bind_hits)
+    ]
 
 
 def compute_changed_keys(
@@ -362,50 +533,11 @@ def compute_changed_keys(
     graph = _RefGraph()
 
     # Per round: which units changed between the round's driver commit and
-    # the WORKING TREE — (set[(file, def)], set[bind name], set[loose-dirty
-    # file]) — computed once per distinct round, only over files git says
-    # differ at all.
+    # the WORKING TREE, computed once per distinct round.
     round_units: dict[int, object] = {}
     for rnd in set(green.values()):
         sha = _round_commit(rnd)
-        if sha is None:
-            round_units[rnd] = _ALL_CHANGED
-            continue
-        files = set(_git("diff", "--name-only", sha, "--", PKG).splitlines())
-        cdefs: set[tuple[str, str]] = set()
-        cbinds: set[str] = set()
-        dirty_files: set[str] = set()
-        for rel in files:
-            if not rel.endswith(".py"):
-                dirty_files.add(rel)
-                continue
-            wt = (REPO / rel).read_text() if (REPO / rel).exists() else None
-            old = _git_blob(sha, rel)
-            if old is None and wt is not None:
-                # File CREATED since the round: a key whose own code is
-                # unchanged since its green row cannot have depended on a
-                # file that did not exist then — Python has no cross-file
-                # shadowing, so new top-level defs/binds only matter to
-                # callers, and any real caller changed its OWN units (an
-                # import line or a def edit), which flags it directly.
-                # What a new file CAN do to old keys is import-time side
-                # effects, i.e. effective loose statements — only those
-                # dirty the file (same risk class the function-granular
-                # design already accepts for appended defs).
-                try:
-                    _nd, _nb, new_loose = parse_units(wt)
-                except SyntaxError:
-                    dirty_files.add(rel)
-                    continue
-                if new_loose:
-                    dirty_files.add(rel)
-                continue
-            d, b, loose = diff_units(old, wt)
-            cdefs |= {(rel, n) for n in d}
-            cbinds |= {(rel, n) for n in b}
-            if loose:
-                dirty_files.add(rel)
-        round_units[rnd] = (cdefs, cbinds, dirty_files, files)
+        round_units[rnd] = _ALL_CHANGED if sha is None else changed_units(sha)
 
     changed: set[str] = set()
     reasons: dict[str, list[tuple]] = {}
@@ -420,34 +552,10 @@ def compute_changed_keys(
             changed.add(key)  # round commit unknown → assume changed (loud)
             reasons[key] = [("no-round-commit", f"r{green[key]}", "")]
             continue
-        cdefs, cbinds, dirty_files, git_files = units
-        files = closure.get(mod_file, {mod_file})
-        if files & dirty_files:
-            changed.add(key)  # loose module-level change → file fallback
-            reasons[key] = [("file", f, "") for f in sorted(files & dirty_files)]
-            continue
-        reach = graph.reach(mod_file, qs[key].__name__)
-        if reach is None:
-            # Registered function is not a top-level def we can segment →
-            # file-level fallback (loud, never silent).
-            if files & git_files:
-                changed.add(key)
-                reasons[key] = [
-                    ("file", f, "") for f in sorted(files & git_files)
-                ]
-            continue
-        visited, toks = reach
-        # A changed module-level binding (constant / import alias) counts
-        # only when it lives in a file of the key's import closure AND a
-        # reachable def references its name — a reshuffled import block in
-        # an unrelated module must not flag the whole registry.
-        bind_hits = [(f, n) for f, n in cbinds if f in files and n in toks]
-        def_hits = sorted(visited & cdefs)
-        if def_hits or bind_hits:
+        got = key_reasons(mod_file, qs[key].__name__, units, closure, graph)
+        if got:
             changed.add(key)
-            reasons[key] = [("def", f, n) for f, n in def_hits] + [
-                ("bind", f, n) for f, n in sorted(bind_hits)
-            ]
+            reasons[key] = got
     if detail:
         return changed, green, keys, reasons
     return changed, green, keys
@@ -782,3 +890,37 @@ def test_created_file_with_only_defs_does_not_dirty(monkeypatch):
     for src, expect_dirty in ((clean, False), (effectful, True)):
         _d, _b, loose = parse_units(src)
         assert bool(loose) == expect_dirty
+
+
+def test_rebinding_flags_only_keys_that_read_the_name_through_it():
+    """A module that rebinds a name flags a key only when the key's
+    reachable code reads the name through that module's binding.
+
+    ``operators/pipeline.py`` gained ``from runtime import size_aware_side``
+    in 0b54080 (parent c79b261). ``tfidf_topk_terms`` mentions the name but
+    reads it from ``runtime`` through ``operators/retrieval.py``, and
+    pipeline.py is in its import closure only through other helpers; in
+    0b54080 → 849fcd4 ``schema.py`` rebinds ``Column``, which the key reads
+    from pyspark. Neither rebinding may flag it. A rebinding the key does
+    read still flags it, also through an import chain: ``tpch2`` imports
+    ``_cents`` from ``tpch_deco``, which turned it from a def into an
+    import in 849fcd4."""
+    pipeline = (f"{PKG}/operators/pipeline.py", "size_aware_side")
+    tfidf = (f"{PKG}/plans/analytics.py", "tfidf_topk_terms_q")
+    for old, new, rebound in (
+        ("c79b261", "0b54080", pipeline),
+        ("0b54080", "849fcd4", (f"{PKG}/schema.py", "Column")),
+    ):
+        units = changed_units(old, new)
+        graph = _RefGraph(new)
+        closure = _import_closure(new)
+        assert rebound in units[1]
+        visited, toks = graph.reach(*tfidf)
+        assert rebound[0] in closure[tfidf[0]] and rebound[1] in toks
+        reasons = key_reasons(*tfidf, units, closure, graph)
+        assert ("bind", *rebound) not in reasons, reasons
+    assert key_reasons(*tfidf, changed_units("c79b261", "0b54080"),
+                       _import_closure("0b54080"), _RefGraph("0b54080")) == []
+    q2 = key_reasons(f"{PKG}/plans/tpch2.py", "q2_min_cost_supplier",
+                     units, closure, graph)
+    assert ("bind", f"{PKG}/plans/tpch_deco.py", "_cents") in q2

@@ -292,6 +292,96 @@ def test_single_file_row_groups_are_full_but_the_last(spark, tmp_path, n):
     md = pq.ParquetFile(out).metadata
     groups = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
     assert groups == [cap] * (n // cap) + ([n % cap] if n % cap else [])
+    assert open(out, "rb").read() == _row_funnel_bytes(df, tmp_path, cap)
+
+
+def _row_funnel_bytes(df, tmp_path, row_group_rows):
+    """The single-file format as the row funnel wrote it: the rows of
+    ``df.collect()`` rebuilt into pyarrow arrays from Python lists, one
+    snappy row group per ``row_group_rows`` rows. The Arrow sink must
+    write these bytes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    types = {"string": pa.string(), "binary": pa.binary(), "bigint": pa.int64()}
+    schema = pa.schema(
+        [pa.field(f.name, types[f.dataType.simpleString()], f.nullable)
+         for f in df.schema.fields]
+    )
+    rows = df.collect()
+    path = str(tmp_path / "row_funnel.parquet")
+    with pq.ParquetWriter(path, schema, compression="snappy") as writer:
+        for at in range(0, len(rows), row_group_rows):
+            group = rows[at : at + row_group_rows]
+            writer.write_batch(pa.RecordBatch.from_arrays(
+                [pa.array([r[i] for r in group], type=f.type)
+                 for i, f in enumerate(schema)],
+                schema=schema,
+            ))
+    with open(path, "rb") as fh:
+        return fh.read()
+
+
+@pytest.mark.parametrize(
+    "case", ["null_bodies", "no_rows", "central_directory", "large_var_types"]
+)
+def test_single_file_bytes_match_the_row_funnel(spark, tmp_path, case):
+    """The Arrow sink writes the row funnel's bytes on null values, on zero
+    rows (no row group at all), on the probe's long columns, and when Spark
+    encodes its Arrow batches with large var types."""
+    import contextlib
+
+    from zip_to_parquet_spark.runtime import pinned_conf
+    from zip_to_parquet_spark.sinks import write_single_parquet_file
+    from zip_to_parquet_spark.sources.zipsource import read_zip_central_directory
+
+    for i in range(3):
+        make_zip(tmp_path / f"a{i}.zip",
+                 [(f"a{i}/m{j:02d}.txt", b"y" * j) for j in range(20 + 7 * i)])
+    paths = str(tmp_path / "*.zip")
+    pinned = contextlib.nullcontext()
+    if case == "null_bodies":
+        df = read_zip_members(spark, paths, body=False, batch_rows=13)
+    elif case == "no_rows":
+        df = read_zip_members(spark, paths, member_glob="**/*.none")
+    elif case == "central_directory":
+        df = read_zip_central_directory(spark, paths)
+    else:
+        df = read_zip_members(spark, paths, batch_rows=13)
+        pinned = pinned_conf(spark, "spark.sql.execution.arrow.useLargeVarTypes", "true")
+    out = str(tmp_path / "out.parquet")
+    with pinned:
+        n = write_single_parquet_file(df, out, row_group_rows=10)
+    expected = _row_funnel_bytes(df, tmp_path, 10)
+    assert n == (0 if case == "no_rows" else 81)
+    assert open(out, "rb").read() == expected
+
+
+def test_stdout_sink_writes_the_single_file_bytes(spark, tmp_path, monkeypatch):
+    import types
+
+    from zip_to_parquet_spark.sinks import write_parquet_stdout, write_single_parquet_file
+
+    members = [(f"m{i:03d}.txt", f"data-{i}".encode()) for i in range(150)]
+    df = read_zip_members(spark, make_zip(tmp_path / "s.zip", members))
+    out = str(tmp_path / "out.parquet")
+    assert write_single_parquet_file(df, out, row_group_rows=40) == 150
+    stdout = types.SimpleNamespace(buffer=io.BytesIO())
+    monkeypatch.setattr("sys.stdout", stdout)
+    assert write_parquet_stdout(df, row_group_rows=40) == 150
+    assert stdout.buffer.getvalue() == open(out, "rb").read()
+
+
+def test_single_file_raises_on_a_damaged_archive(spark, tmp_path):
+    """on_error='fail' (the default): a damaged archive fails the write;
+    the sink never returns a short file as a success."""
+    from zip_to_parquet_spark.sinks import write_single_parquet_file
+
+    make_zip(tmp_path / "good.zip", BASIC)
+    open(tmp_path / "bad.zip", "wb").write(b"this is not a zip file")
+    df = read_zip_members(spark, str(tmp_path / "*.zip"))
+    with pytest.raises(Exception, match="not a zip file"):
+        write_single_parquet_file(df, str(tmp_path / "out.parquet"))
 
 
 def test_empty_input_glob_raises(spark, tmp_path):

@@ -437,13 +437,11 @@ def simhash(df: DataFrame) -> DataFrame:
 SIMHASH_BUCKET_CAP = 1024
 
 
-def simhash_tables(
-    bits: int = SIMHASH_BITS, blocks: int = 4, max_hamming: int = 3
-) -> list[tuple[int, ...]]:
+def simhash_tables(blocks: int = 4, max_hamming: int = 3) -> list[tuple[int, ...]]:
     """Block combinations for the exact Hamming-≤k table scheme.
 
     Manku, Jain & Das Sarma, "Detecting Near-Duplicates for Web Crawling"
-    (WWW 2007), §3: split the ``bits``-bit signature into ``blocks`` equal
+    (WWW 2007), §3: split the SIMHASH_BITS-bit signature into ``blocks`` equal
     blocks and build one bucket table per combination of
     ``blocks - max_hamming`` blocks (the table's key is those blocks'
     bits).  A pair within Hamming distance ``max_hamming`` differs in at
@@ -462,8 +460,8 @@ def simhash_tables(
             f"blocks={blocks} must exceed max_hamming={max_hamming} "
             "(pigeonhole completeness needs one untouched combination)"
         )
-    if bits % blocks:
-        raise ValueError(f"blocks={blocks} must divide bits={bits} evenly")
+    if SIMHASH_BITS % blocks:
+        raise ValueError(f"blocks={blocks} must divide bits={SIMHASH_BITS} evenly")
     import itertools
 
     return list(itertools.combinations(range(blocks), blocks - max_hamming))
@@ -512,7 +510,6 @@ def simhash_pairs(
     simhashed: DataFrame,
     max_hamming: int = 3,
     blocks: int = 4,
-    bits: int = 60,
     bucket_cap: int = SIMHASH_BUCKET_CAP,
 ) -> DataFrame:
     """Pairs with Hamming(simhash) ≤ max_hamming via block-combination
@@ -540,9 +537,9 @@ def simhash_pairs(
     every bucket is ≤ cap — true on every fixture (cap 1024 > the 501
     max, so oracle hashes are unchanged).
     """
-    width = bits // blocks
+    width = SIMHASH_BITS // blocks
     mask = (1 << width) - 1
-    combos = simhash_tables(bits, blocks, max_hamming)
+    combos = simhash_tables(blocks, max_hamming)
 
     def _key(combo: tuple[int, ...]) -> Column:
         # Pack the combo's blocks (ascending) into one ≤60-bit bucket key.

@@ -37,8 +37,10 @@ from zip_to_parquet_spark.plans import experiments  # noqa: E402,F401
 # changed key.
 #
 # Pin basis: ``python scripts/window_pin.py --list`` on the tree that
-# folds every parameter its callers set to one value into a literal or a
-# module constant; its list equals the pin taken on the tree that folds
+# streams the single-file sink as Arrow batches and counts a module-level
+# rebinding only for keys that read the name through it; its list equals
+# the pin taken on the tree that folds every parameter its callers set to
+# one value into a literal or a module constant, on the tree that folds
 # the copied key stages into one function each, on the tree that reads
 # the central-directory probe through the one archive reader, and on the
 # tree that deleted the text_chunk_windows_udtf and

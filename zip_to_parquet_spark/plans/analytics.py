@@ -13,8 +13,6 @@ exact DECIMAL sums cast to double at the very end.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

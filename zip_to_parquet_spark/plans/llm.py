@@ -39,6 +39,7 @@ from zip_to_parquet_spark.operators.dedupe import (
 # closure delta to the keys that actually use the new helpers.
 from zip_to_parquet_spark.operators.dedupe import (  # noqa: E402
     DUCK_HOT_HAVING_SQL,
+    SIMHASH_BITS,
     simhash_params_for,
     simhash_tables,
 )
@@ -53,7 +54,6 @@ from zip_to_parquet_spark.operators.multimodal import (
     synth_wav,
 )
 from zip_to_parquet_spark.operators.vectors import (
-    cosine,
     cosine_lsh_pairs,
     deterministic_training_sample,
     dot,
@@ -329,14 +329,14 @@ def dedup_incremental_vs_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _simhash_oracle(bits: int = 60, blocks: int = 4, max_hamming: int = 3) -> str:
+def _simhash_oracle(blocks: int = 4, max_hamming: int = 3) -> str:
     """DuckDB restatement of the SimHash block-table pair search, generated
     from the SAME operators.dedupe.simhash_tables combinations the Spark
     plan banks on — engine and oracle cannot desync on the table scheme.
     Pinned at blocks=4, the value simhash_params_for resolves to at every
     fixture scale (the dial moves only past ~2.1M docs; the driver runs
     the oracle at sf0.01's 500 docs)."""
-    width = bits // blocks
+    width = SIMHASH_BITS // blocks
     mask = (1 << width) - 1
     combo_selects = " UNION ALL ".join(
         "SELECT doc_id, simhash, {i} AS band, {bv} AS bv FROM sig".format(
@@ -346,12 +346,12 @@ def _simhash_oracle(bits: int = 60, blocks: int = 4, max_hamming: int = 3) -> st
                 for pos, blk in enumerate(combo)
             ),
         )
-        for i, combo in enumerate(simhash_tables(bits, blocks, max_hamming))
+        for i, combo in enumerate(simhash_tables(blocks, max_hamming))
     )
     return f"""
     WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
     h AS (SELECT doc_id, md5_number_lower(w) AS h FROM tok),
-    bits AS (SELECT range AS b FROM range(0, {bits})),
+    bits AS (SELECT range AS b FROM range(0, {SIMHASH_BITS})),
     v AS (
       SELECT h.doc_id, bits.b,
              SUM(CASE WHEN (h.h >> bits.b::INT) & 1 = 1 THEN 1 ELSE -1 END) AS vote

@@ -188,7 +188,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
       (ANSI cast) rather than silently diverging.
 
     Scale shape: the single-file mode is the reference-parity path (a
-    deliberate driver funnel through toLocalIterator's bounded stream);
+    deliberate driver funnel through the sink's bounded Arrow stream);
     the 100 TB sink is ``write_parquet`` — same commit-protocol write,
     one file per partition — exercised by the distributed-write pytest
     battery. The verification aggregate itself is one map-side-combinable

@@ -9,14 +9,26 @@ builder.rs:294-322) for free.
 ``write_single_parquet_file`` / ``write_parquet_stdout`` are the
 byte-faithful single-file modes (the reference always writes exactly one
 file or stdout, builder.rs:232-278). A single file is inherently a driver
-funnel, so these stream ``toLocalIterator()`` through a pyarrow writer with
-an exact row-group row cap (the reference's ``--row-group-size``, default
-100, main.rs:41-43) instead of silently ``coalesce(1)``-ing the cluster —
-opt-in only, never the default (SURVEY §7 risk 4). ``toLocalIterator()``
-holds one partition at a time in the driver JVM; over the zip source that
-is one *packed* partition, the members of at most
-``spark.sql.files.maxPartitionBytes`` of compressed archives unless a
-single archive is larger (``sources/zipsource.py`` scale notes).
+funnel, so these stream the DataFrame's per-partition Arrow record batches
+through a pyarrow writer with an exact row-group row cap (the reference's
+``--row-group-size``, default 100, main.rs:41-43) instead of silently
+``coalesce(1)``-ing the cluster — opt-in only, never the default (SURVEY §7
+risk 4).
+
+The funnel serves Spark's own Arrow batches (``Dataset.toArrowBatchRdd``)
+through ``PythonRDD.toLocalIteratorAndServe`` with prefetch on, so the job
+for partition k+1 runs while the driver writes partition k, and rows stay
+in Arrow from the executor to the file. Memory bound: the driver JVM holds
+at most two partitions (the one being served and the one prefetched); the
+Python side holds one Arrow batch plus fewer than ``row_group_rows``
+pending rows (slices that keep the batch they came from alive until their
+group is written). Over the zip source a partition is one *packed*
+partition, the members of at most ``spark.sql.files.maxPartitionBytes`` of
+compressed archives unless a single archive is larger
+(``sources/zipsource.py`` scale notes). The funnel relies on private
+PySpark calls (``DataFrame._jdf``, ``PythonRDD.toLocalIteratorAndServe``,
+``pyspark.util._local_iterator_from_socket``), so it takes classic
+sessions only: a Spark Connect DataFrame has no ``_jdf``.
 """
 
 from __future__ import annotations
@@ -101,30 +113,48 @@ def _stream_to_pyarrow(
     schema = pa.schema(fields)
 
     import pyarrow.parquet as pq
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.util import _local_iterator_from_socket
+
+    # Spark encodes with its own Arrow schema (large_string/large_binary
+    # under spark.sql.execution.arrow.useLargeVarTypes); decode with that
+    # schema, then cast to the sink's.
+    session = df.sparkSession
+    spark_schema = to_arrow_schema(
+        df.schema, prefers_large_types=session._jconf.arrowUseLargeVarTypes()
+    )
+    # Prefetch on: the job for the next partition runs while this one is
+    # written, so the driver JVM holds at most two partitions — bounded
+    # driver memory, like the reference's single-consumer bounded channel
+    # (builder.rs:53,85-102). Private PySpark calls, classic sessions only
+    # (module docstring).
+    sock_info = session.sparkContext._jvm.PythonRDD.toLocalIteratorAndServe(
+        df._jdf.toArrowBatchRdd(), True
+    )
 
     total = 0
-    buf: list[list] = [[] for _ in fields]
+    pending: list = []
+    n_pending = 0
     with pq.ParquetWriter(sink, schema, compression=compression) as writer:
 
         def flush():
-            nonlocal buf
-            arrays = [pa.array(col, type=fields[i].type) for i, col in enumerate(buf)]
-            writer.write_batch(pa.RecordBatch.from_arrays(arrays, schema=schema))
-            buf = [[] for _ in fields]
+            nonlocal pending, n_pending
+            group = pa.Table.from_batches(pending, schema=spark_schema)
+            writer.write_table(group.combine_chunks().cast(schema))
+            pending, n_pending = [], 0
 
-        # toLocalIterator streams one partition at a time to the driver —
-        # bounded driver memory, matching the reference's single-consumer
-        # bounded channel (builder.rs:53,85-102).
-        n = 0
-        for row in df.toLocalIterator():
-            for i, v in enumerate(row):
-                buf[i].append(v)
-            n += 1
-            total += 1
-            if n >= row_group_rows:
-                flush()
-                n = 0
-        if n:
+        for payload in _local_iterator_from_socket(sock_info, NoOpSerializer()):
+            batch = pa.ipc.read_record_batch(pa.py_buffer(payload), spark_schema)
+            total += batch.num_rows
+            while batch.num_rows:
+                take = min(row_group_rows - n_pending, batch.num_rows)
+                pending.append(batch.slice(0, take))
+                n_pending += take
+                batch = batch.slice(take)
+                if n_pending == row_group_rows:
+                    flush()
+        if n_pending:
             flush()
     return total
 
